@@ -381,6 +381,8 @@ def _scaling_pair(lo: int, hi: int, scaling_docs: str, repeats: int,
                   warm_runs: str, weights_path: str) -> dict:
     """Run the identical extraction at local[lo] and local[hi],
     interleaved min-of-k; returns {lo: best, hi: best, 'runs': {...}}."""
+    from obiemachinelearningframework_spark.session import driver_memory
+
     runs: dict[int, list] = {lo: [], hi: []}
     # interleave the two configs and repeat: the sandbox VM suffers bursty
     # hypervisor steal (3-4x wall-time swings), so a single A-then-B pass
@@ -392,11 +394,12 @@ def _scaling_pair(lo: int, hi: int, scaling_docs: str, repeats: int,
                 os.environ, SPARK_GRAFT_CPUS=str(cpus),
                 OBIE_BENCH_DOCS=scaling_docs, OBIE_SCALING_ONLY="1",
                 OBIE_WEIGHTS_PATH=weights_path, OBIE_WARM_RUNS=warm_runs,
-                # pre-size the heap: growing 16g on first allocation storm
-                # hits the 32-thread config hardest (observed 2-3x first-run
-                # penalty); a steady-state job runs at full heap from task 1
+                # pre-size the heap (-Xms = the child's -Xmx): growing it on
+                # the first allocation storm hits the 32-thread config
+                # hardest (observed 2-3x first-run penalty); a steady-state
+                # job runs at full heap from task 1
                 OBIE_DRIVER_JAVA_OPTS=os.environ.get(
-                    "OBIE_DRIVER_JAVA_OPTS", "-Xms16g"
+                    "OBIE_DRIVER_JAVA_OPTS", f"-Xms{driver_memory()}"
                 ),
             )
             before = _read_cpu_times()
@@ -582,8 +585,8 @@ def scaling() -> None:
             "the minimum estimates each config's uncontended capability.\n"
             "Caveats: (1) one JVM shares memory bandwidth across threads — a\n"
             "real 4x executor group scales I/O and memory bandwidth too; (2)\n"
-            "driver heap is 16g: a 48g heap regressed local[32] extraction 4-5x\n"
-            "via G1 page churn (kernel time), see session.py.\n"
+            "driver heap is 16g, capped at 75% of the machine's memory: a 48g heap\n"
+            "regressed local[32] extraction 4-5x via G1 page churn (kernel time), see session.py.\n"
         )
         for pr in results:
             rlo2, rhi2 = pr["best"][pr["lo"]], pr["best"][pr["hi"]]

@@ -12,6 +12,42 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Heap ceiling: a 48g heap regressed local[32] extraction 4-5x (G1 region
+# management / page churn dominated as system time); 16g kept GC flat at
+# every parallelism measured.
+DRIVER_MEM_CEILING_MB = 16 * 1024
+# Spark's hardware-provisioning guidance: give Spark at most 75% of the
+# machine's memory and leave the rest to the OS and buffer cache. A heap
+# above physical memory never feels GC pressure; the kernel OOM-kills it.
+DRIVER_MEM_FRACTION = 0.75
+# cgroup v2 and v1 limit files; "max" or a near-2^63 value means unlimited
+_CGROUP_LIMITS = (
+    "/sys/fs/cgroup/memory.max",
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+)
+
+
+def machine_memory_bytes() -> int:
+    """Physical RAM, or the cgroup memory limit where one is set, readable
+    and smaller."""
+    mem = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    for path in _CGROUP_LIMITS:
+        try:
+            with open(path) as f:
+                mem = min(mem, int(f.read().strip()))
+        except (OSError, ValueError):
+            pass  # absent, unreadable, or "max"
+    return mem
+
+
+def driver_memory() -> str:
+    """Driver heap size: ``OBIE_DRIVER_MEM`` if set, else the 16g ceiling
+    capped at 75% of the machine's memory."""
+    if os.environ.get("OBIE_DRIVER_MEM"):
+        return os.environ["OBIE_DRIVER_MEM"]
+    mb = int(DRIVER_MEM_FRACTION * machine_memory_bytes()) >> 20
+    return f"{min(DRIVER_MEM_CEILING_MB, mb)}m"
+
 
 def get_spark(
     app_name: str = "obie_spark",
@@ -39,11 +75,10 @@ def get_spark(
         .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # NOTE: a 48g heap regressed local[32] extraction 4-5x (G1 region
-        # management / page churn dominated as system time); 16g keeps GC
-        # flat at every parallelism this sandbox runs. On a real cluster
-        # this is per-executor memory and sized to partition volume.
-        .config("spark.driver.memory", os.environ.get("OBIE_DRIVER_MEM", "16g"))
+        # 16g, capped at 75% of the machine's memory (see driver_memory).
+        # On a real cluster this is per-executor memory and sized to
+        # partition volume.
+        .config("spark.driver.memory", driver_memory())
         .config("spark.driver.extraJavaOptions", os.environ.get("OBIE_DRIVER_JAVA_OPTS", ""))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

@@ -179,6 +179,8 @@ def worker(cpus: int) -> None:
 
 
 def main() -> None:
+    from obiemachinelearningframework_spark.session import driver_memory
+
     build_corpus()
     lo, hi = PAIR
     runs: dict[int, list] = {lo: [], hi: []}
@@ -191,7 +193,8 @@ def main() -> None:
                 capture_output=True, text=True, timeout=3600, cwd=REPO,
                 env=dict(os.environ,
                          OBIE_DRIVER_JAVA_OPTS=os.environ.get(
-                             "OBIE_DRIVER_JAVA_OPTS", "-Xms16g")),
+                             "OBIE_DRIVER_JAVA_OPTS",
+                             f"-Xms{driver_memory()}")),
             )
             steal = machine_control.steal_pct(
                 before, machine_control.read_cpu_times())
