@@ -252,11 +252,12 @@ def run_obie_extract(spark, n_docs: int, train_docs: int = OBIE_TRAIN_DOCS,
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = sf_dir.rstrip("/").split("sf")[-1]
 
-    from obiemachinelearningframework_spark.session import get_spark
+    from obiemachinelearningframework_spark.session import get_spark, local_cpus
     from obiemachinelearningframework_spark import queries as Q
+
+    cpus = local_cpus()
 
     spark = get_spark("bench", master=f"local[{cpus}]", shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")

@@ -270,6 +270,17 @@ def _decode_jpeg(payload: bytes) -> np.ndarray:
     nc = len(comps)
     if nc not in (1, 3) or len(scan_comps) != nc:
         raise NotImplementedError(f"{nc}-component scan")
+    # SOS table ids per component (dc table high nibble, ac low)
+    tsel = {cid: (t >> 4, t & 0x0F) for cid, t in scan_comps}
+    for cid, tq in comps:
+        if tq not in qtables:
+            raise ValueError(f"corrupt JPEG: undefined quantization table {tq}")
+        if cid not in tsel:
+            raise ValueError(f"corrupt JPEG: undefined scan component {cid}")
+        td, ta = tsel[cid]
+        if (0, td) not in huff or (1, ta) not in huff:
+            raise ValueError(
+                f"corrupt JPEG: undefined Huffman table (dc {td}, ac {ta})")
 
     # strip the entropy-coded segment: unstuff 0xFF00, stop at a marker
     ecs = bytearray()
@@ -320,8 +331,6 @@ def _decode_jpeg(payload: bytes) -> np.ndarray:
     planes = [np.zeros((by * 8, bx * 8)) for _ in range(nc)]
     bits = _Bits(bytes(ecs))
     prev_dc = [0] * nc
-    # SOS table ids per component (dc table high nibble, ac low)
-    tsel = {cid: (t >> 4, t & 0x0F) for cid, t in scan_comps}
     try:
         for y in range(by):
             for x in range(bx):

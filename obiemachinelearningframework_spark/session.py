@@ -49,12 +49,20 @@ def driver_memory() -> str:
     return f"{min(DRIVER_MEM_CEILING_MB, mb)}m"
 
 
+def local_cpus() -> int:
+    """Local-mode parallelism: ``SPARK_GRAFT_CPUS`` if set, else the CPUs
+    this process may run on."""
+    if os.environ.get("SPARK_GRAFT_CPUS"):
+        return int(os.environ["SPARK_GRAFT_CPUS"])
+    return len(os.sched_getaffinity(0))
+
+
 def get_spark(
     app_name: str = "obie_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = local_cpus()
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         # local[N] → N-ish shuffle partitions; a real cluster sets this to

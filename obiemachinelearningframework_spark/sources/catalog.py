@@ -17,8 +17,10 @@ catalog emulates the same contract over parquet:
 
 Resume = ``exists()`` checks the manifest; an interrupted write leaves no
 manifest, so the stage re-runs — same idempotence contract as an Iceberg
-snapshot commit. The reference's analog is its Java-serialized corpus /
-model files (``corpus/BigramCorpusProvider.java:116-131``,
+snapshot commit. The manifest is published by the atomic text write of
+sources/commit.py, which also refuses non-local URIs. The reference's
+analog is its Java-serialized corpus / model files
+(``corpus/BigramCorpusProvider.java:116-131``,
 ``scorer/LibLinearScorer.java:93-105``) which have no lineage or
 atomicity; this is the part the north rule adds beyond the reference.
 """
@@ -30,12 +32,13 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from . import commit
+
 
 class Checkpointer:
     def __init__(self, spark: SparkSession, base: str):
         self.spark = spark
-        self.base = base.rstrip("/")
-        os.makedirs(self.base, exist_ok=True)
+        self.base = commit.local_dir(base).rstrip("/")
 
     def _dir(self, stage: str) -> str:
         return f"{self.base}/{stage}"
@@ -73,10 +76,7 @@ class Checkpointer:
             "partition_by": partition_by or [],
             "meta": meta or {},
         }
-        tmp = self._manifest(stage) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._manifest(stage))
+        commit.write_text(self._manifest(stage), json.dumps(manifest))
         return back
 
     def read(self, stage: str) -> DataFrame:

@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 from pyspark.sql import types as T
 
 from ..operators.ivf import _cos_expr, train_codebook
-from .cms_stream import _run_id, assert_sink_run_identity
+from ..sources import commit
 
 __all__ = [
     "QUERY_SCHEMA",
@@ -93,14 +93,9 @@ def load_lists(spark: SparkSession, index_dir: str) -> DataFrame:
     nid-dedup makes every read path idempotent under the one crash window
     compaction has (flip committed, delta not yet cleared): a vector
     present in both base and delta resolves to one identical row."""
-    ptr = os.path.join(index_dir, "CURRENT")
-    if os.path.exists(ptr):
-        with open(ptr) as f:
-            side = f.read().strip()
-        base = spark.read.parquet(os.path.join(index_dir, side))
-    else:
-        base = spark.read.parquet(os.path.join(index_dir, "lists"))
-    base = base.select("cid", "nid", "nv")
+    index_dir = commit.local_path(index_dir)
+    base = commit.current(index_dir) or os.path.join(index_dir, "lists")
+    base = spark.read.parquet(base).select("cid", "nid", "nv")
     delta_dir = os.path.join(index_dir, "lists_delta")
     if os.path.isdir(delta_dir) and any(
         not e.startswith((".", "_")) for e in os.listdir(delta_dir)
@@ -115,7 +110,6 @@ def stream_ann_index_update(
     input_dir: str,
     index_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """Index MAINTENANCE: new corpus vectors landing in ``input_dir`` are
     assigned to their nearest centroid (broadcast codebook — the codebook
@@ -129,7 +123,7 @@ def stream_ann_index_update(
     delta_dir = os.path.join(index_dir, "lists_delta")
 
     def _write(batch: DataFrame, epoch_id: int) -> None:
-        assert_sink_run_identity(delta_dir, _run_id(checkpoint_dir))
+        commit.assert_sink_run_identity(delta_dir, commit.run_id(checkpoint_dir))
         e = batch.select(
             "vec_id", F.col("embedding").cast("array<double>").alias("v")
         )
@@ -155,33 +149,28 @@ def stream_ann_index_update(
         src.writeStream.foreachBatch(_write)
         .option("checkpointLocation", checkpoint_dir)
     )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.trigger(processingTime="10 seconds").start()
+    q = writer.trigger(availableNow=True).start()
+    q.awaitTermination()
+    return q
 
 
 def compact_ann_index(spark: SparkSession, index_dir: str) -> None:
     """Fold the streamed delta into the base lists: write the merged
-    lists to the non-current A/B side, atomically flip the CURRENT
-    pointer (the kg_stream/catalog.py write-then-commit discipline —
-    a crash mid-write leaves the previous base intact), then clear the
-    delta. A crash AFTER the flip but BEFORE the clear is harmless:
-    load_lists() dedups on nid, so leftover delta rows are no-ops."""
+    lists to the non-current side (``lists_a``, ``lists_b``; the original
+    build is ``lists``), then flip the pointer — the write-then-flip
+    commit of sources/commit.py, so a crash before the flip leaves the
+    previous base intact — then clear the delta. A crash AFTER the flip
+    but BEFORE the clear is harmless: load_lists() dedups on nid, so
+    leftover delta rows are no-ops."""
     import shutil
 
+    index_dir = commit.local_path(index_dir)
     merged = load_lists(spark, index_dir).localCheckpoint()
-    ptr = os.path.join(index_dir, "CURRENT")
-    cur = open(ptr).read().strip() if os.path.exists(ptr) else "lists"
-    nxt = "lists_a" if cur in ("lists", "lists_b") else "lists_b"
-    merged.write.mode("overwrite").partitionBy("cid").parquet(
-        os.path.join(index_dir, nxt)
+    commit.flip(
+        index_dir,
+        lambda path: merged.write.mode("overwrite").partitionBy("cid").parquet(path),
+        sides=("lists_a", "lists_b"),
     )
-    tmp = ptr + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(nxt)
-    os.replace(tmp, ptr)  # atomic flip = the commit
     delta_dir = os.path.join(index_dir, "lists_delta")
     if os.path.isdir(delta_dir):
         shutil.rmtree(delta_dir)
@@ -228,17 +217,16 @@ def stream_ann_topk(
     checkpoint_dir: str,
     k: int = 3,
     nprobe: int = 2,
-    available_now: bool = True,
 ):
-    """Query vectors landing in ``input_dir`` -> their top-k neighbors
-    vs the static index in ``output_dir``, partitioned by batch_id with
-    dynamic-overwrite idempotency. Returns the StreamingQuery (drained
-    when ``available_now``)."""
+    """Drain the query vectors in ``input_dir`` into their top-k
+    neighbors vs the static index in ``output_dir``, partitioned by
+    batch_id with dynamic-overwrite idempotency. Returns the finished
+    StreamingQuery."""
     codebook = spark.read.parquet(os.path.join(index_dir, "codebook"))
     lists = load_lists(spark, index_dir)
 
     def _write(batch: DataFrame, epoch_id: int) -> None:
-        assert_sink_run_identity(output_dir, _run_id(checkpoint_dir))
+        commit.assert_sink_run_identity(output_dir, commit.run_id(checkpoint_dir))
         (
             annotate_queries(batch, codebook, lists, k=k, nprobe=nprobe)
             .withColumn("batch_id", F.lit(int(epoch_id)))
@@ -253,8 +241,6 @@ def stream_ann_topk(
         src.writeStream.foreachBatch(_write)
         .option("checkpointLocation", checkpoint_dir)
     )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.trigger(processingTime="10 seconds").start()
+    q = writer.trigger(availableNow=True).start()
+    q.awaitTermination()
+    return q

@@ -12,8 +12,8 @@ comes only from bucket collisions, which are identical either way since
 both sides use queries.cms_bucket_array). Each micro-batch folds its
 {CMS_D}x{CMS_W}-integer batch sketch into a persistent running sketch in
 ``foreachBatch`` (the merge must read current state, which a plain
-streaming sink cannot), committed with the same A/B write-then-flip
-discipline as kg_stream — a crash mid-batch leaves the previous sketch
+streaming sink cannot), committed by the A/B write-then-flip of
+sources/commit.py — a crash mid-batch leaves the previous sketch
 intact and the restarted drain re-applies the batch from the streaming
 checkpoint. Because counter addition is not idempotent, the epoch id is
 committed atomically with the flip and a replayed epoch is skipped —
@@ -28,11 +28,10 @@ cheap makes the streaming state O(1) in stream length.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..queries import cms_bucket_array
+from ..sources import commit
 from .dedup_stream import DOC_SCHEMA
 
 SKETCH_SCHEMA = T.StructType([
@@ -60,134 +59,12 @@ def batch_sketch(docs: DataFrame) -> DataFrame:
     )
 
 
-def _run_id(checkpoint_dir: str) -> str:
-    """Identity of the streaming checkpoint whose epoch counter the
-    replay guard trusts. Epoch ids only grow WITHIN one checkpoint; if
-    the checkpoint is deleted (even at the SAME path) or repointed while
-    the state dir persists, epochs restart at 0 and the bare
-    `epoch <= applied` guard would silently skip every new batch forever.
-    The identity is therefore the UNIQUE QUERY ID Structured Streaming
-    writes into the checkpoint's own ``metadata`` file at start — a
-    recreated checkpoint gets a fresh id even at the old path, so the
-    guard fails loudly in every restart-mismatch scenario. Read inside
-    foreachBatch (the metadata file exists once the stream has started)."""
-    import json
-
-    with open(os.path.join(checkpoint_dir, "metadata")) as f:
-        return json.load(f)["id"]
-
-
-def _read_commit(state_dir: str) -> tuple[str | None, int, str | None]:
-    """(side, last_applied_epoch, run_id) from the CURRENT pointer;
-    (None, -1, None) before the first commit."""
-    ptr = os.path.join(state_dir, "CURRENT")
-    if not os.path.exists(ptr):
-        return None, -1, None
-    with open(ptr) as f:
-        parts = f.read().strip().split()
-    side = parts[0]
-    epoch = int(parts[1]) if len(parts) > 1 else -1
-    run = parts[2] if len(parts) > 2 else None
-    return side, epoch, run
-
-
-def guard_replay(state_dir: str, epoch_id: int, run_id: str) -> tuple:
-    """Shared admission decision for NON-IDEMPOTENT streaming state
-    (counter addition): returns ``(apply, current_side)`` — apply=False
-    means replay no-op; current_side is the committed A/B side already
-    read from the pointer (so callers need not re-read it).
-
-    * run id recorded and different from the current checkpoint's ->
-      loud error (a recreated/repointed checkpoint restarts epochs at 0;
-      its counter cannot distinguish replays from new batches);
-    * same run -> the bare ``epoch <= applied`` replay skip is safe;
-    * LEGACY pointer (committed before run ids were stamped, run=None):
-      trusted only while the epoch stream is plausibly continuous
-      (epoch_id > applied, in which case the very next commit stamps the
-      current run id after a logged migration warning). A legacy pointer
-      with epoch_id <= applied is indistinguishable from a recreated
-      checkpoint and refuses loudly instead of silently dropping every
-      new batch forever (ADVICE r4)."""
-    import warnings
-
-    cur, applied, run = _read_commit(state_dir)
-    if run is not None and run != run_id:
-        raise ValueError(
-            f"state dir {state_dir!r} was built under a different streaming "
-            f"checkpoint (run {run}, now {run_id}): its epoch counter "
-            "cannot distinguish replays from new batches. Resume with the "
-            "original checkpointLocation, or start a fresh state dir."
-        )
-    if epoch_id <= applied:
-        if run is None and cur is not None:
-            raise ValueError(
-                f"state dir {state_dir!r} carries a LEGACY commit pointer "
-                f"(no run id) at epoch {applied} and the arriving batch "
-                f"has epoch {epoch_id} <= {applied}: a genuine replay and "
-                "a recreated checkpoint (epochs restarted at 0) are "
-                "indistinguishable without a run id. If this is the "
-                "original checkpoint, its next NEW epoch migrates the "
-                "pointer automatically; otherwise start a fresh state dir."
-            )
-        return False, cur
-    if run is None and cur is not None:
-        warnings.warn(
-            f"state dir {state_dir!r}: migrating legacy commit pointer "
-            f"(epoch {applied}) to run {run_id} on this commit",
-            stacklevel=2,
-        )
-    return True, cur
-
-
-def assert_sink_run_identity(out_dir: str, run_id: str) -> None:
-    """Run-identity guard for the PARTITION-OVERWRITE sinks
-    (``batch_id=<epoch>`` layout, round-4 verdict #8): those sinks are
-    idempotent against replays (a replayed epoch overwrites its own
-    partition) but NOT against a deleted-and-recreated checkpoint —
-    epochs restart at 0 and the new run's batches would silently CLOBBER
-    the old run's partitions with differently-bucketed data (availableNow
-    batch boundaries are not stable across runs). The sink therefore
-    stamps its owning streaming-run id (the checkpoint's metadata query
-    id, ``_run_id``) into the output dir on first write and refuses
-    loudly on a mismatch. Legacy dirs (partitions but no marker) are
-    stamped with a migration warning — unlike the counter sinks there is
-    no epoch continuity to check, and the stamp makes the NEXT mismatch
-    loud. The marker filename starts with ``_`` so parquet readers
-    ignore it."""
-    import warnings
-
-    os.makedirs(out_dir, exist_ok=True)
-    marker = os.path.join(out_dir, "_STREAM_RUN_ID")
-    if os.path.exists(marker):
-        with open(marker) as f:
-            prev = f.read().strip()
-        if prev != run_id:
-            raise ValueError(
-                f"output dir {out_dir!r} was written by streaming run "
-                f"{prev} (now {run_id}): a recreated/repointed checkpoint "
-                "restarts epochs at 0 and would overwrite that run's "
-                "batch_id partitions. Clear the output dir or resume the "
-                "original checkpointLocation."
-            )
-        return
-    if any(n.startswith("batch_id=") for n in os.listdir(out_dir)):
-        warnings.warn(
-            f"output dir {out_dir!r}: stamping pre-existing batch_id "
-            f"partitions with streaming run {run_id}",
-            stacklevel=2,
-        )
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(run_id)
-    os.replace(tmp, marker)
-
-
 def read_sketch(spark: SparkSession, state_dir: str) -> DataFrame:
     """Current committed running sketch (empty if none committed yet)."""
-    side, _, _ = _read_commit(state_dir)
-    if side is None:
+    path = commit.current(state_dir)
+    if path is None:
         return spark.createDataFrame([], SKETCH_SCHEMA)
-    return spark.read.parquet(os.path.join(state_dir, side))
+    return spark.read.parquet(path)
 
 
 def estimate(sketch: DataFrame, tokens: list[str]) -> dict[str, int]:
@@ -222,10 +99,8 @@ def _merge_batch(
     # would double-count. The epoch id therefore commits WITH the flip:
     # a replayed epoch <= the committed one is a no-op — but only within
     # the SAME streaming checkpoint (run_id); a fresh checkpoint restarts
-    # epochs at 0 and must not be mistaken for a replay (guard_replay,
-    # incl. the legacy-pointer refusal).
-    apply, cur = guard_replay(state_dir, epoch_id, run_id)
-    if not apply:
+    # epochs at 0 and must not be mistaken for a replay (guard_replay).
+    if not commit.guard_replay(state_dir, epoch_id, run_id):
         return
     merged = (
         read_sketch(spark, state_dir)
@@ -233,13 +108,8 @@ def _merge_batch(
         .groupBy("r", "bucket")
         .agg(F.sum("cnt").alias("cnt"))
     )
-    nxt = "a" if (cur or "b") == "b" else "b"
-    merged.write.mode("overwrite").parquet(os.path.join(state_dir, nxt))
-    ptr = os.path.join(state_dir, "CURRENT")
-    tmp = ptr + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(f"{nxt} {epoch_id} {run_id}")
-    os.replace(tmp, ptr)  # atomic flip = the commit
+    commit.flip(state_dir, lambda path: merged.write.mode("overwrite").parquet(path),
+                epoch=epoch_id, run=run_id)
 
 
 def stream_cms(
@@ -247,12 +117,10 @@ def stream_cms(
     input_dir: str,
     state_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
-    """Document files landing in ``input_dir`` -> continuously merged
-    running CMS under ``state_dir``. Returns the StreamingQuery (drained
-    when ``available_now``)."""
-    os.makedirs(state_dir, exist_ok=True)
+    """Drain the document files in ``input_dir`` into the running CMS
+    under ``state_dir``. Returns the finished StreamingQuery."""
+    state_dir = commit.local_dir(state_dir)
     src = spark.readStream.schema(DOC_SCHEMA).parquet(input_dir)
     # run identity resolves INSIDE foreachBatch: the checkpoint's metadata
     # (and its unique query id) exists only once the stream has started
@@ -260,11 +128,9 @@ def stream_cms(
         src.writeStream
         .foreachBatch(
             lambda batch, bid: _merge_batch(
-                spark, batch, state_dir, bid, _run_id(checkpoint_dir)))
+                spark, batch, state_dir, bid, commit.run_id(checkpoint_dir)))
         .option("checkpointLocation", checkpoint_dir)
     )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.start()
+    q = writer.trigger(availableNow=True).start()
+    q.awaitTermination()
+    return q

@@ -38,12 +38,12 @@ def stream_dedup_exact(
     output_dir: str,
     checkpoint_dir: str,
     watermark: str = "1 hour",
-    available_now: bool = True,
 ):
-    """Documents landing in ``input_dir`` -> first-seen-only documents in
-    ``output_dir``. A duplicate text arriving within ``watermark`` of the
-    original's event time is dropped, across files AND across drains (the
-    dedup state is checkpointed). Returns the StreamingQuery."""
+    """Drain the documents in ``input_dir`` into first-seen-only documents
+    in ``output_dir``. A duplicate text arriving within ``watermark`` of
+    the original's event time is dropped, across files AND across drains
+    (the dedup state is checkpointed). Returns the finished
+    StreamingQuery."""
     src = spark.readStream.schema(DOC_SCHEMA).parquet(input_dir)
     deduped = (
         src.withColumn("content_sha", F.sha2("text", 256))
@@ -56,8 +56,6 @@ def stream_dedup_exact(
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
     )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.trigger(processingTime="10 seconds").start()
+    q = writer.trigger(availableNow=True).start()
+    q.awaitTermination()
+    return q

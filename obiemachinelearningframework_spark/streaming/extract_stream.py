@@ -35,11 +35,9 @@ def stream_extract(
     output_dir: str,
     checkpoint_dir: str,
     link_map_df: DataFrame | None = None,
-    available_now: bool = True,
 ):
-    """source files landing in ``input_dir`` -> exactly-once triples in
-    ``output_dir``. Returns the StreamingQuery (drained when
-    ``available_now``)."""
+    """Drain the source files in ``input_dir`` into exactly-once triples
+    in ``output_dir``. Returns the finished StreamingQuery."""
     src = spark.readStream.schema(SOURCE_SCHEMA).parquet(input_dir)
     inst = prepare_instances(src)
     triples = extract_fused(
@@ -52,8 +50,6 @@ def stream_extract(
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
     )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.trigger(processingTime="10 seconds").start()
+    q = writer.trigger(availableNow=True).start()
+    q.awaitTermination()
+    return q

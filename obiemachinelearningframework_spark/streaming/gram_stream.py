@@ -13,7 +13,7 @@ bit-exactly — entries are integer-micro products (no float summation
 order anywhere), so merging loses nothing and the streamed state equals
 the at-rest Gram counter-for-counter. Each micro-batch's d(d+1)/2
 partial rows fold into the persistent state in ``foreachBatch`` under
-the same A/B write-then-flip commit as cms_stream, with the epoch id
+the A/B write-then-flip commit of sources/commit.py, with the epoch id
 committed atomically with the flip (addition is not idempotent; a
 replayed epoch is a no-op). State is O(d^2) regardless of stream
 length; PCA of the running state is the same constant-cost driver eigen
@@ -27,11 +27,10 @@ and 1-sized — both exactly mergeable for free).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..operators.pca import MICRO, gram_micro
+from ..sources import commit
 
 VEC_SCHEMA = T.StructType([
     T.StructField("vec_id", T.LongType()),
@@ -73,16 +72,11 @@ def batch_state(vecs: DataFrame) -> DataFrame:
     return g.unionByName(sums).unionByName(n)
 
 
-# commit-pointer discipline shared with cms_stream (same A/B flip, same
-# epoch+run-identity replay guard)
-from .cms_stream import _read_commit, _run_id, guard_replay  # noqa: E402
-
-
 def read_state(spark: SparkSession, state_dir: str) -> DataFrame:
-    side, _, _ = _read_commit(state_dir)
-    if side is None:
+    path = commit.current(state_dir)
+    if path is None:
         return spark.createDataFrame([], STATE_SCHEMA)
-    return spark.read.parquet(os.path.join(state_dir, side))
+    return spark.read.parquet(path)
 
 
 def running_pca(spark: SparkSession, state_dir: str, d: int, k: int):
@@ -113,12 +107,11 @@ def _merge_batch(
     run_id: str,
 ) -> None:
     # addition is not idempotent: the epoch id commits WITH the flip so
-    # a crash-replayed batch is a no-op (cms_stream.py discipline). The
-    # guard only holds within one streaming checkpoint — a repointed
+    # a crash-replayed batch is a no-op (sources/commit.guard_replay).
+    # The guard only holds within one streaming checkpoint — a repointed
     # checkpoint restarts epochs at 0, so a run-identity mismatch is a
     # loud error, not a silent skip.
-    apply, cur = guard_replay(state_dir, epoch_id, run_id)
-    if not apply:
+    if not commit.guard_replay(state_dir, epoch_id, run_id):
         return
     merged = (
         read_state(spark, state_dir)
@@ -126,13 +119,8 @@ def _merge_batch(
         .groupBy("kind", "i", "j")
         .agg(F.sum("v").cast("decimal(38,0)").alias("v"))
     )
-    nxt = "a" if (cur or "b") == "b" else "b"
-    merged.write.mode("overwrite").parquet(os.path.join(state_dir, nxt))
-    ptr = os.path.join(state_dir, "CURRENT")
-    tmp = ptr + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(f"{nxt} {epoch_id} {run_id}")
-    os.replace(tmp, ptr)
+    commit.flip(state_dir, lambda path: merged.write.mode("overwrite").parquet(path),
+                epoch=epoch_id, run=run_id)
 
 
 def stream_gram(
@@ -140,22 +128,20 @@ def stream_gram(
     input_dir: str,
     state_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
-    """Vector files landing in ``input_dir`` -> continuously merged
-    running Gram/mean/count state under ``state_dir``."""
-    os.makedirs(state_dir, exist_ok=True)
+    """Drain the vector files in ``input_dir`` into the running
+    Gram/mean/count state under ``state_dir``. Returns the finished
+    StreamingQuery."""
+    state_dir = commit.local_dir(state_dir)
     src = spark.readStream.schema(VEC_SCHEMA).parquet(input_dir)
-    # run identity resolves INSIDE foreachBatch (see cms_stream._run_id)
+    # run identity resolves INSIDE foreachBatch (see commit.run_id)
     writer = (
         src.writeStream
         .foreachBatch(
             lambda b, bid: _merge_batch(
-                spark, b, state_dir, bid, _run_id(checkpoint_dir)))
+                spark, b, state_dir, bid, commit.run_id(checkpoint_dir)))
         .option("checkpointLocation", checkpoint_dir)
     )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.start()
+    q = writer.trigger(availableNow=True).start()
+    q.awaitTermination()
+    return q

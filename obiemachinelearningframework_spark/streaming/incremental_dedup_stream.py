@@ -39,8 +39,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from ..queries import INCR_EST_MIN, MAX_BUCKET_DOCS, N_MINHASH
+from ..sources import commit
 from .dedup_stream import DOC_SCHEMA
-from .cms_stream import _run_id, assert_sink_run_identity
 
 __all__ = [
     "doc_signatures",
@@ -168,17 +168,16 @@ def stream_dedup_incremental(
     index_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
-    """Documents landing in ``input_dir`` -> annotated documents
+    """Drain the documents in ``input_dir`` into annotated documents
     (dup_of / est_jaccard vs the reference index) in ``output_dir``,
     partitioned by batch_id with dynamic-overwrite idempotency. Returns
-    the StreamingQuery (drained when ``available_now``)."""
+    the finished StreamingQuery."""
     ref_sigs = spark.read.parquet(os.path.join(index_dir, "sigs"))
     ref_bands = spark.read.parquet(os.path.join(index_dir, "bands"))
 
     def _write(batch: DataFrame, epoch_id: int) -> None:
-        assert_sink_run_identity(output_dir, _run_id(checkpoint_dir))
+        commit.assert_sink_run_identity(output_dir, commit.run_id(checkpoint_dir))
         (
             annotate_batch(batch, ref_sigs, ref_bands)
             .withColumn("batch_id", F.lit(int(epoch_id)))
@@ -193,8 +192,6 @@ def stream_dedup_incremental(
         src.writeStream.foreachBatch(_write)
         .option("checkpointLocation", checkpoint_dir)
     )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.trigger(processingTime="10 seconds").start()
+    q = writer.trigger(availableNow=True).start()
+    q.awaitTermination()
+    return q

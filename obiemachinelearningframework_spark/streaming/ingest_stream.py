@@ -50,11 +50,10 @@ def stream_ingest(
     min_chars: int = 8,
     max_dup_token_frac: float = 0.9,
     langs: tuple | None = None,
-    available_now: bool = True,
 ):
-    """Source files landing in ``input_dir`` -> exactly-once triples from
-    quality-passing, first-seen-only documents in ``output_dir``. Returns
-    the StreamingQuery (drained when ``available_now``)."""
+    """Drain the source files in ``input_dir`` into exactly-once triples
+    from quality-passing, first-seen-only documents in ``output_dir``.
+    Returns the finished StreamingQuery."""
     src = spark.readStream.schema(INGEST_SCHEMA).parquet(input_dir)
 
     arr = F.expr("filter(split(content, ' '), x -> x <> '')")
@@ -87,8 +86,6 @@ def stream_ingest(
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
     )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.trigger(processingTime="10 seconds").start()
+    q = writer.trigger(availableNow=True).start()
+    q.awaitTermination()
+    return q

@@ -13,8 +13,8 @@ Why foreachBatch and not a plain streaming sink: a MERGE needs to read
 the current snapshot, which streaming sinks cannot; foreachBatch gives
 each micro-batch a consistent batch-side view plus the streaming
 checkpoint's exactly-once batch ids. The snapshot flips between two
-directories (A/B) every batch — the same write-then-commit discipline
-as sources/catalog.py, so a crash mid-batch leaves the previous
+directories (A/B) every batch — the write-then-flip commit of
+sources/commit.py, so a crash mid-batch leaves the previous
 snapshot intact and the restarted query re-applies the batch
 idempotently (last-wins per key inside a batch; anti-join + union is
 idempotent under re-application).
@@ -27,9 +27,9 @@ snapshot side.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+
+from ..sources import commit
 
 TRIPLE_OP_SCHEMA = T.StructType([
     T.StructField("subj", T.StringType()),
@@ -43,12 +43,10 @@ _KEY = ["subj", "pred", "obj"]
 
 def read_snapshot(spark: SparkSession, snapshot_dir: str) -> DataFrame:
     """Current committed snapshot (empty if none committed yet)."""
-    ptr = os.path.join(snapshot_dir, "CURRENT")
-    if not os.path.exists(ptr):
+    path = commit.current(snapshot_dir)
+    if path is None:
         return spark.createDataFrame([], T.StructType(TRIPLE_OP_SCHEMA.fields[:3]))
-    with open(ptr) as f:
-        side = f.read().strip()
-    return spark.read.parquet(os.path.join(snapshot_dir, side))
+    return spark.read.parquet(path)
 
 
 def _merge_batch(spark: SparkSession, batch: DataFrame, snapshot_dir: str) -> None:
@@ -60,15 +58,7 @@ def _merge_batch(spark: SparkSession, batch: DataFrame, snapshot_dir: str) -> No
     keys = batch.select(*_KEY).distinct()
     adds = batch.filter(F.col("op") == "add").select(*_KEY).distinct()
     merged = snap.join(keys, _KEY, "left_anti").unionByName(adds)
-
-    ptr = os.path.join(snapshot_dir, "CURRENT")
-    cur = open(ptr).read().strip() if os.path.exists(ptr) else "b"
-    nxt = "a" if cur == "b" else "b"
-    merged.write.mode("overwrite").parquet(os.path.join(snapshot_dir, nxt))
-    tmp = ptr + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(nxt)
-    os.replace(tmp, ptr)  # atomic flip = the commit
+    commit.flip(snapshot_dir, lambda path: merged.write.mode("overwrite").parquet(path))
 
 
 def stream_kg_merge(
@@ -76,20 +66,17 @@ def stream_kg_merge(
     input_dir: str,
     snapshot_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
-    """Triple-op files landing in ``input_dir`` -> continuously MERGEd
-    snapshot under ``snapshot_dir``. Returns the StreamingQuery (drained
-    when ``available_now``)."""
-    os.makedirs(snapshot_dir, exist_ok=True)
+    """Drain the triple-op files in ``input_dir`` into the MERGEd
+    snapshot under ``snapshot_dir``. Returns the finished
+    StreamingQuery."""
+    snapshot_dir = commit.local_dir(snapshot_dir)
     src = spark.readStream.schema(TRIPLE_OP_SCHEMA).parquet(input_dir)
     writer = (
         src.writeStream
         .foreachBatch(lambda batch, _bid: _merge_batch(spark, batch, snapshot_dir))
         .option("checkpointLocation", checkpoint_dir)
     )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.start()
+    q = writer.trigger(availableNow=True).start()
+    q.awaitTermination()
+    return q

@@ -33,10 +33,9 @@ def stream_mentions(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
-    """Start (and for available_now=True, drain) the streaming mention job.
-    Returns the StreamingQuery."""
+    """Drain the streaming mention job. Returns the finished
+    StreamingQuery."""
     from ..operators.mentions import prepare_instances
 
     src = spark.readStream.schema(SOURCE_SCHEMA).parquet(input_dir)
@@ -48,8 +47,6 @@ def stream_mentions(
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
     )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.trigger(processingTime="10 seconds").start()
+    q = writer.trigger(availableNow=True).start()
+    q.awaitTermination()
+    return q

@@ -161,21 +161,19 @@ def test_recreated_checkpoint_at_same_path_rejected(spark, tmp_path):
         stream_cms(spark, in_dir, state, ck)
 
 
-def test_legacy_pointer_migrates_or_refuses(spark, tmp_path):
-    """ADVICE r4: a CURRENT pointer committed before run ids existed
-    (two-field format) used to fall through to the bare epoch guard —
-    a recreated checkpoint attached to such a state dir silently dropped
-    every new batch. Now: a legacy pointer with a plausibly-continuous
-    epoch stream (arriving epoch > applied) migrates (stamps the run id,
-    with a warning); an arriving epoch <= applied refuses loudly."""
+def test_pointer_without_run_id_is_refused(spark, tmp_path):
+    """ADVICE r4/r5: a CURRENT pointer committed before run ids existed
+    (two-field format) cannot tell a replay from a recreated checkpoint
+    (epochs restarted at 0), whatever epoch arrives. It is refused loudly
+    with the state untouched, never migrated (a migration that waits for
+    a new epoch wedges the stream when the crash window replays the old
+    one)."""
     import os
-    import warnings
 
     import pytest
 
-    from obiemachinelearningframework_spark.streaming.cms_stream import (
-        _merge_batch, _read_commit,
-    )
+    from obiemachinelearningframework_spark.sources import commit
+    from obiemachinelearningframework_spark.streaming.cms_stream import _merge_batch
 
     state = str(tmp_path / "state_legacy")
     os.makedirs(state, exist_ok=True)
@@ -184,26 +182,12 @@ def test_legacy_pointer_migrates_or_refuses(spark, tmp_path):
     _merge_batch(spark, docs, state, epoch_id=3, run_id="runA")
     once = {(r.r, r.bucket): r.cnt for r in read_sketch(spark, state).collect()}
     # rewrite the pointer in the LEGACY two-field format (no run id)
-    side, epoch, _ = _read_commit(state)
-    with open(os.path.join(state, "CURRENT"), "w") as f:
+    side, epoch, _ = commit.read_pointer(state)
+    with open(os.path.join(state, commit.POINTER), "w") as f:
         f.write(f"{side} {epoch}")
 
-    # epoch <= applied without a run id: replay and recreated-checkpoint
-    # are indistinguishable -> loud refusal, state untouched
-    with pytest.raises(ValueError, match="LEGACY commit pointer"):
-        _merge_batch(spark, docs, state, epoch_id=0, run_id="runB")
+    for epoch_id in (0, 3, 4):
+        with pytest.raises(ValueError, match="start a fresh state dir"):
+            _merge_batch(spark, docs, state, epoch_id=epoch_id, run_id="runA")
     assert {(r.r, r.bucket): r.cnt
             for r in read_sketch(spark, state).collect()} == once
-
-    # continuous epoch stream: applies, warns, and stamps the run id
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        _merge_batch(spark, docs, state, epoch_id=4, run_id="runA")
-    assert any("legacy" in str(x.message).lower() for x in w)
-    assert _read_commit(state)[2] == "runA"
-    assert {(r.r, r.bucket): r.cnt
-            for r in read_sketch(spark, state).collect()} == {
-        k: 2 * v for k, v in once.items()}
-    # and from here the normal foreign-checkpoint rejection applies
-    with pytest.raises(ValueError, match="different streaming checkpoint"):
-        _merge_batch(spark, docs, state, epoch_id=0, run_id="runB")

@@ -201,3 +201,19 @@ def test_jpeg_fill_bytes_before_marker_decode():
     padded = p[:i] + b"\xff\xff\xff" + p[i:]
     dec = _decode_jpeg(padded)
     assert np.array_equal(dec[..., 0], jpeg_block_pixels(9))
+
+
+def test_jpeg_undefined_table_ids_raise_value_error():
+    """A frame or scan that names a quantization table, Huffman table or
+    component the file never defined is corrupt: ValueError, like every
+    other corruption path, before entropy decoding starts."""
+    import pytest
+
+    enc = encode_jpeg(3)
+    sof = enc.index(b"\xff\xc0") + 4   # body: precision, h, w, nc, (cid, hv, tq)
+    sos = enc.index(b"\xff\xda") + 4   # body: ns, (cid, dc << 4 | ac), ...
+    for at, value in ((sof + 8, 1), (sos + 2, 0x11), (sos + 2, 0x01), (sos + 1, 2)):
+        bad = bytearray(enc)
+        bad[at] = value
+        with pytest.raises(ValueError, match="corrupt JPEG: undefined"):
+            _decode_jpeg(bytes(bad))

@@ -53,7 +53,7 @@ def test_streaming_mentions_match_batch(spark, tmp_path):
     ck_dir = str(tmp_path / "ck")
     spark.createDataFrame(c["source"]).write.parquet(src_dir)
 
-    stream_mentions(spark, c["ontology"], src_dir, out_dir, ck_dir, available_now=True)
+    stream_mentions(spark, c["ontology"], src_dir, out_dir, ck_dir)
     streamed = spark.read.parquet(out_dir)
 
     inst = prepare_instances(spark.read.parquet(src_dir))

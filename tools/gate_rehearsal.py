@@ -194,8 +194,9 @@ def rehearse_ann_bits(out: dict) -> None:
 
 
 def main() -> None:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    from obiemachinelearningframework_spark.session import get_spark
+    from obiemachinelearningframework_spark.session import get_spark, local_cpus
+
+    cpus = local_cpus()
 
     spark = get_spark("gates", master=f"local[{cpus}]", shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")
