@@ -513,7 +513,8 @@ def _derived_assets(docs: DataFrame, encode_fn, kind: str, meta: dict) -> DataFr
     # parallelism must not be an accident of the source file count (a
     # single-file corpus serialized the whole multimodal family onto one
     # core — round-5 plan audit). The exchange moves id-only rows: free.
-    par = docs.sparkSession.sparkContext.defaultParallelism
+    # A source already split wider than the cluster keeps its width.
+    par = max(docs.sparkSession.sparkContext.defaultParallelism, docs.rdd.getNumPartitions())
     ids = docs.select(F.col("doc_id").cast("long").alias("id")).repartition(par)
 
     def gen(batches):

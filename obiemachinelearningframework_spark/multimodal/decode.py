@@ -283,13 +283,17 @@ def _decode_jpeg(payload: bytes) -> np.ndarray:
                 f"corrupt JPEG: undefined Huffman table (dc {td}, ac {ta})")
 
     # strip the entropy-coded segment: unstuff 0xFF00, stop at a marker
+    # (0xFF fill bytes may pad before it, T.81 B.1.1.2)
     ecs = bytearray()
     i, ended = 0, False
     while i < len(data):
         b = data[i]
         if b == 0xFF:
-            nxt = data[i + 1] if i + 1 < len(data) else None
-            if nxt == 0x00:
+            j = i + 1
+            while j < len(data) and data[j] == 0xFF:
+                j += 1
+            nxt = data[j] if j < len(data) else None
+            if nxt == 0x00 and j == i + 1:
                 ecs.append(0xFF)
                 i += 2
                 continue

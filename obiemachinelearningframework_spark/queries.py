@@ -8,6 +8,10 @@ ANSI-SQL engine. The OBIE fixture pipeline itself is verified by pytest
 the *relational building blocks* the pipeline is made of, plus the
 training-data-pipeline operators (dedup, similarity search, text stats).
 
+Each ``q_*`` function registers itself with ``@query(name, oracle=SQL)``,
+right under the oracle SQL it is checked against; ``_CHEAP_FIRST`` at the
+end of the module sets the order the harness runs them in.
+
 Conventions:
 * every computed column is aliased identically in Spark and SQL;
 * doubles are rounded (6 dp) on both sides before comparison;
@@ -20,6 +24,24 @@ import hashlib
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
+
+# name -> Spark query and name -> DuckDB oracle SQL, filled by ``@query``
+# at each definition and put in harness order at the end of this module
+QUERIES: dict = {}
+ORACLES: dict = {}
+
+
+def query(name: str, oracle: str):
+    """Register the decorated ``q_*`` function as registry query ``name``
+    with its DuckDB ``oracle`` SQL; the function is returned unchanged."""
+    def register(fn):
+        if name in QUERIES:
+            raise ValueError(f"registry query {name!r} is registered twice")
+        QUERIES[name] = fn
+        ORACLES[name] = oracle
+        return fn
+    return register
+
 
 # ---------------------------------------------------------------------------
 # shared inline dictionary: surface form -> ontology type (mirrors the OBIE
@@ -161,21 +183,13 @@ _TOKENS_SQL = """
 
 # ------------------------------------------------------------------ queries
 
-def q_doc_sha256(spark, sf_dir):
-    """Per-row content invariant (BASELINE input_hint: sha256 equality)."""
-    return _docs(spark, sf_dir).select("doc_id", F.sha2(F.col("text"), 256).alias("sha"))
-
-
 SQL_DOC_SHA256 = "SELECT doc_id, sha256(text) AS sha FROM documents"
 
 
-def q_token_stats(spark, sf_dir):
-    """Tokenizer stage product: token/distinct counts per document."""
-    t = _tokens(spark, sf_dir)
-    return t.groupBy("doc_id").agg(
-        F.count("*").alias("n_tokens"),
-        F.countDistinct("token").alias("n_distinct"),
-    )
+@query("doc_sha256", oracle=SQL_DOC_SHA256)
+def q_doc_sha256(spark, sf_dir):
+    """Per-row content invariant (BASELINE input_hint: sha256 equality)."""
+    return _docs(spark, sf_dir).select("doc_id", F.sha2(F.col("text"), 256).alias("sha"))
 
 
 SQL_TOKEN_STATS = f"""
@@ -185,12 +199,13 @@ SQL_TOKEN_STATS = f"""
 """
 
 
-def q_mentions_dict(spark, sf_dir):
-    """Dictionary NER: broadcast-join tokens x surface forms
-    (AbstractDictionary gating; mention = token occurrence with position)."""
+@query("token_stats", oracle=SQL_TOKEN_STATS)
+def q_token_stats(spark, sf_dir):
+    """Tokenizer stage product: token/distinct counts per document."""
     t = _tokens(spark, sf_dir)
-    return t.join(F.broadcast(_dict_df(spark)), t.token == F.col("surface")).select(
-        "doc_id", "pos", "token", "type_id"
+    return t.groupBy("doc_id").agg(
+        F.count("*").alias("n_tokens"),
+        F.countDistinct("token").alias("n_distinct"),
     )
 
 
@@ -201,13 +216,14 @@ SQL_MENTIONS_DICT = f"""
 """
 
 
-def q_high_frequency(spark, sf_dir):
-    """HighFrequencyUtils / HighFrequencyBaseline: most frequent type per
-    document (groupBy count + window row_number = 1)."""
-    m = q_mentions_dict(spark, sf_dir)
-    c = m.groupBy("doc_id", "type_id").agg(F.count("*").alias("n"))
-    w = W.partitionBy("doc_id").orderBy(F.desc("n"), F.asc("type_id"))
-    return c.withColumn("rn", F.row_number().over(w)).filter("rn = 1").select("doc_id", "type_id", "n")
+@query("mentions_dict", oracle=SQL_MENTIONS_DICT)
+def q_mentions_dict(spark, sf_dir):
+    """Dictionary NER: broadcast-join tokens x surface forms
+    (AbstractDictionary gating; mention = token occurrence with position)."""
+    t = _tokens(spark, sf_dir)
+    return t.join(F.broadcast(_dict_df(spark)), t.token == F.col("surface")).select(
+        "doc_id", "pos", "token", "type_id"
+    )
 
 
 SQL_HIGH_FREQUENCY = f"""
@@ -222,13 +238,14 @@ SQL_HIGH_FREQUENCY = f"""
 """
 
 
-def q_evidence_frequency(spark, sf_dir):
-    """FrequencyTemplate: per (doc, type) evidence counts with a
-    has-max-evidence flag (window max)."""
+@query("high_frequency", oracle=SQL_HIGH_FREQUENCY)
+def q_high_frequency(spark, sf_dir):
+    """HighFrequencyUtils / HighFrequencyBaseline: most frequent type per
+    document (groupBy count + window row_number = 1)."""
     m = q_mentions_dict(spark, sf_dir)
     c = m.groupBy("doc_id", "type_id").agg(F.count("*").alias("n"))
-    w = W.partitionBy("doc_id")
-    return c.withColumn("is_max", (F.col("n") == F.max("n").over(w)).cast("int"))
+    w = W.partitionBy("doc_id").orderBy(F.desc("n"), F.asc("type_id"))
+    return c.withColumn("rn", F.row_number().over(w)).filter("rn = 1").select("doc_id", "type_id", "n")
 
 
 SQL_EVIDENCE_FREQUENCY = f"""
@@ -242,6 +259,27 @@ SQL_EVIDENCE_FREQUENCY = f"""
 """
 
 
+@query("evidence_frequency", oracle=SQL_EVIDENCE_FREQUENCY)
+def q_evidence_frequency(spark, sf_dir):
+    """FrequencyTemplate: per (doc, type) evidence counts with a
+    has-max-evidence flag (window max)."""
+    m = q_mentions_dict(spark, sf_dir)
+    c = m.groupBy("doc_id", "type_id").agg(F.count("*").alias("n"))
+    w = W.partitionBy("doc_id")
+    return c.withColumn("is_max", (F.col("n") == F.max("n").over(w)).cast("int"))
+
+
+SQL_COOCCURRENCE = f"""
+  WITH dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
+       toks AS ({_TOKENS_SQL}),
+       m AS (SELECT DISTINCT doc_id, type_id FROM toks JOIN dict ON token = surface)
+  SELECT a.type_id AS type_a, b.type_id AS type_b, count(*) AS n_docs
+  FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.type_id < b.type_id
+  GROUP BY a.type_id, b.type_id
+"""
+
+
+@query("cooccurrence", oracle=SQL_COOCCURRENCE)
 def q_cooccurrence(spark, sf_dir):
     """CooccurrenceTemplate: ordered type-pair counts within a document
     (self-join on doc)."""
@@ -256,16 +294,20 @@ def q_cooccurrence(spark, sf_dir):
     )
 
 
-SQL_COOCCURRENCE = f"""
-  WITH dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
-       toks AS ({_TOKENS_SQL}),
-       m AS (SELECT DISTINCT doc_id, type_id FROM toks JOIN dict ON token = surface)
-  SELECT a.type_id AS type_a, b.type_id AS type_b, count(*) AS n_docs
-  FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.type_id < b.type_id
-  GROUP BY a.type_id, b.type_id
+SQL_QUALITY_SCORE = f"""
+  WITH toks AS ({_TOKENS_SQL}),
+       agg AS (
+         SELECT doc_id, count(*) AS n_tokens, count(DISTINCT token) AS n_distinct,
+                sum(CASE WHEN token IN ({_STOP_SQL}) THEN 1 ELSE 0 END) AS n_stop
+         FROM toks GROUP BY doc_id)
+  SELECT d.doc_id, d.n_chars, agg.n_tokens,
+         round(CAST(n_distinct AS DOUBLE) / n_tokens, 6) AS distinct_ratio,
+         round(CAST(n_stop AS DOUBLE) / n_tokens, 6) AS stopword_ratio
+  FROM documents d JOIN agg ON d.doc_id = agg.doc_id
 """
 
 
+@query("quality_score", oracle=SQL_QUALITY_SCORE)
 def q_quality_score(spark, sf_dir):
     """Text-quality scoring: length, stopword ratio, distinct-token ratio —
     the document quality stage of a training-data pipeline."""
@@ -284,19 +326,14 @@ def q_quality_score(spark, sf_dir):
     )
 
 
-SQL_QUALITY_SCORE = f"""
-  WITH toks AS ({_TOKENS_SQL}),
-       agg AS (
-         SELECT doc_id, count(*) AS n_tokens, count(DISTINCT token) AS n_distinct,
-                sum(CASE WHEN token IN ({_STOP_SQL}) THEN 1 ELSE 0 END) AS n_stop
-         FROM toks GROUP BY doc_id)
-  SELECT d.doc_id, d.n_chars, agg.n_tokens,
-         round(CAST(n_distinct AS DOUBLE) / n_tokens, 6) AS distinct_ratio,
-         round(CAST(n_stop AS DOUBLE) / n_tokens, 6) AS stopword_ratio
-  FROM documents d JOIN agg ON d.doc_id = agg.doc_id
+SQL_DEDUP_EXACT = """
+  WITH d AS (SELECT doc_id, sha256(text) AS sha FROM documents),
+       g AS (SELECT sha, min(doc_id) AS canonical_id, count(*) AS n_copies FROM d GROUP BY sha)
+  SELECT doc_id, canonical_id, n_copies FROM d JOIN g USING (sha)
 """
 
 
+@query("dedup_exact", oracle=SQL_DEDUP_EXACT)
 def q_dedup_exact(spark, sf_dir):
     """Exact dedup: hash-groupBy on content, keep min doc_id as canonical."""
     d = _docs(spark, sf_dir).select("doc_id", F.sha2(F.col("text"), 256).alias("sha"))
@@ -304,12 +341,17 @@ def q_dedup_exact(spark, sf_dir):
     return d.join(g, "sha").select("doc_id", "canonical_id", "n_copies")
 
 
-SQL_DEDUP_EXACT = """
-  WITH d AS (SELECT doc_id, sha256(text) AS sha FROM documents),
-       g AS (SELECT sha, min(doc_id) AS canonical_id, count(*) AS n_copies FROM d GROUP BY sha)
-  SELECT doc_id, canonical_id, n_copies FROM d JOIN g USING (sha)
+SQL_TRIPLES_KG = f"""
+  WITH dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
+       toks AS ({_TOKENS_SQL})
+  SELECT DISTINCT 'doc_' || CAST(doc_id AS VARCHAR) AS subj,
+         'mentions_' || type_id AS pred,
+         token AS obj
+  FROM toks JOIN dict ON token = surface
 """
 
+
+@query("triples_kg", oracle=SQL_TRIPLES_KG)
 def q_triples_kg(spark, sf_dir):
     """Triple materialization (mini KG over documents): every distinct
     dictionary mention becomes a (doc, 'mentions_<Type>', surface) triple —
@@ -323,41 +365,6 @@ def q_triples_kg(spark, sf_dir):
             F.col("token").alias("obj"),
         ).distinct(),
     )
-
-
-SQL_TRIPLES_KG = f"""
-  WITH dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
-       toks AS ({_TOKENS_SQL})
-  SELECT DISTINCT 'doc_' || CAST(doc_id AS VARCHAR) AS subj,
-         'mentions_' || type_id AS pred,
-         token AS obj
-  FROM toks JOIN dict ON token = surface
-"""
-
-
-QUERIES = {
-    "doc_sha256": q_doc_sha256,
-    "token_stats": q_token_stats,
-    "mentions_dict": q_mentions_dict,
-    "high_frequency": q_high_frequency,
-    "evidence_frequency": q_evidence_frequency,
-    "cooccurrence": q_cooccurrence,
-    "quality_score": q_quality_score,
-    "dedup_exact": q_dedup_exact,
-    "triples_kg": q_triples_kg,
-}
-
-ORACLES = {
-    "doc_sha256": SQL_DOC_SHA256,
-    "token_stats": SQL_TOKEN_STATS,
-    "mentions_dict": SQL_MENTIONS_DICT,
-    "high_frequency": SQL_HIGH_FREQUENCY,
-    "evidence_frequency": SQL_EVIDENCE_FREQUENCY,
-    "cooccurrence": SQL_COOCCURRENCE,
-    "quality_score": SQL_QUALITY_SCORE,
-    "dedup_exact": SQL_DEDUP_EXACT,
-    "triples_kg": SQL_TRIPLES_KG,
-}
 
 
 # ----------------------------------------------------- dedup / similarity
@@ -387,6 +394,14 @@ _SHINGLES_SQL = f"""
 """
 
 
+SQL_MINHASH_SIGNATURE = f"""
+  WITH sh AS (SELECT DISTINCT doc_id, shingle FROM ({_SHINGLES_SQL}))
+  SELECT doc_id, {", ".join(f"min(md5('{i}:' || shingle)) AS h{i}" for i in range(N_MINHASH))}
+  FROM sh GROUP BY doc_id
+"""
+
+
+@query("minhash_signature", oracle=SQL_MINHASH_SIGNATURE)
 def q_minhash_signature(spark, sf_dir):
     """MinHash signatures over 3-token shingles. The hash family is
     md5(seed || ':' || shingle); taking the MIN of the hex string is
@@ -398,13 +413,6 @@ def q_minhash_signature(spark, sf_dir):
         for i in range(N_MINHASH)
     ]
     return sh.groupBy("doc_id").agg(*aggs)
-
-
-SQL_MINHASH_SIGNATURE = f"""
-  WITH sh AS (SELECT DISTINCT doc_id, shingle FROM ({_SHINGLES_SQL}))
-  SELECT doc_id, {", ".join(f"min(md5('{i}:' || shingle)) AS h{i}" for i in range(N_MINHASH))}
-  FROM sh GROUP BY doc_id
-"""
 
 
 def _intra_bucket_pairs(a_name: str, b_name: str, both_directions: bool = False):
@@ -485,6 +493,25 @@ MAX_BUCKET_DOCS = 50   # LSH hot-bucket cap: a band bucket holding > N docs
                        # identically in Spark and the SQL oracle.
 
 
+SQL_DEDUP_MINHASH_LSH = f"""
+  WITH sh AS (SELECT DISTINCT doc_id, shingle FROM ({_SHINGLES_SQL})),
+  sig AS (
+    SELECT doc_id, {", ".join(f"min(md5('{i}:' || shingle)) AS h{i}" for i in range(N_MINHASH))}
+    FROM sh GROUP BY doc_id),
+  bands0 AS (
+    {" UNION ALL ".join(f"SELECT doc_id, {b} AS band, md5(h{2 * b} || '|' || h{2 * b + 1}) AS bucket FROM sig" for b in range(N_MINHASH // 2))}
+  ),
+  bands AS (
+    SELECT bands0.* FROM bands0
+    JOIN (SELECT band, bucket FROM bands0 GROUP BY band, bucket
+          HAVING count(*) <= {MAX_BUCKET_DOCS}) ok USING (band, bucket)
+  )
+  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+  FROM bands a JOIN bands b ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
+"""
+
+
+@query("dedup_minhash_lsh", oracle=SQL_DEDUP_MINHASH_LSH)
 def q_dedup_minhash_lsh(spark, sf_dir):
     """MinHash + LSH banding: 4 bands x 2 rows; near-duplicate candidate
     pairs = docs sharing any band bucket (shingle -> minhash -> band ->
@@ -516,44 +543,26 @@ def q_dedup_minhash_lsh(spark, sf_dir):
     )
 
 
-SQL_DEDUP_MINHASH_LSH = f"""
-  WITH sh AS (SELECT DISTINCT doc_id, shingle FROM ({_SHINGLES_SQL})),
-  sig AS (
-    SELECT doc_id, {", ".join(f"min(md5('{i}:' || shingle)) AS h{i}" for i in range(N_MINHASH))}
-    FROM sh GROUP BY doc_id),
-  bands0 AS (
-    {" UNION ALL ".join(f"SELECT doc_id, {b} AS band, md5(h{2 * b} || '|' || h{2 * b + 1}) AS bucket FROM sig" for b in range(N_MINHASH // 2))}
-  ),
-  bands AS (
-    SELECT bands0.* FROM bands0
-    JOIN (SELECT band, bucket FROM bands0 GROUP BY band, bucket
-          HAVING count(*) <= {MAX_BUCKET_DOCS}) ok USING (band, bucket)
-  )
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-"""
-
-
-def q_simhash(spark, sf_dir):
-    """16-bit SimHash per document: per bit b, the parity of md5-hex char
-    b of each token votes +/-1; bit set iff the vote sum is positive.
-    ascii() parity is engine-portable. Column-wise vote sums (16 aggregate
-    expressions, one doc_id groupBy, map-side partial agg) instead of a
-    16x bit explode — integer sums, so identical to the exploded form the
-    SQL oracle uses."""
+def _simhash_signature(spark, sf_dir, bits: int, name: str) -> DataFrame:
+    """(doc_id, <name>): a ``bits``-wide SimHash per document. Per bit b,
+    the parity of md5-hex char b of each token votes +/-1; the bit is set
+    iff the vote sum is positive. ascii() parity is engine-portable.
+    Column-wise vote sums (``bits`` aggregate expressions, one doc_id
+    groupBy, map-side partial agg) instead of a ``bits``-fold explode —
+    integer sums, so identical to the exploded form the SQL oracles use."""
     t = _tokens(spark, sf_dir).select("doc_id", F.md5("token").alias("h"))
     votes = [
         F.sum(
             F.when(F.ascii(F.substring("h", b + 1, 1)) % 2 == 1, 1).otherwise(-1)
         ).alias(f"_v{b}")
-        for b in range(16)
+        for b in range(bits)
     ]
     per_doc = t.groupBy("doc_id").agg(*votes)
     sim = None
-    for b in range(16):
+    for b in range(bits):
         term = F.when(F.col(f"_v{b}") > 0, F.lit(float(2 ** b))).otherwise(F.lit(0.0))
         sim = term if sim is None else sim + term
-    return per_doc.select("doc_id", sim.cast("long").alias("simhash"))
+    return per_doc.select("doc_id", sim.cast("long").alias(name))
 
 
 SQL_SIMHASH = f"""
@@ -568,6 +577,12 @@ SQL_SIMHASH = f"""
 """
 
 
+@query("simhash", oracle=SQL_SIMHASH)
+def q_simhash(spark, sf_dir):
+    """16-bit SimHash per document (md5-hex chars 1-16)."""
+    return _simhash_signature(spark, sf_dir, 16, "simhash")
+
+
 SHINGLE_DF_CAP = 100   # hot-shingle cap: a shingle present in > N docs is
                        # boilerplate and explodes the self-join (N^2 rows per
                        # shingle) while adding no discriminative signal —
@@ -575,6 +590,25 @@ SHINGLE_DF_CAP = 100   # hot-shingle cap: a shingle present in > N docs is
                        # document-frequency pruning).
 
 
+SQL_DEDUP_NGRAM_JACCARD = f"""
+  WITH sh0 AS (SELECT DISTINCT doc_id, shingle FROM ({_SHINGLES_SQL})),
+  sh AS (SELECT * FROM sh0 WHERE shingle IN (
+           SELECT shingle FROM sh0 GROUP BY shingle HAVING count(*) <= {SHINGLE_DF_CAP})),
+  size_ AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+  common AS (
+    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS common
+    FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+    GROUP BY a.doc_id, b.doc_id)
+  SELECT doc_a, doc_b,
+         round(CAST(common AS DOUBLE) / (na.n + nb.n - common), 6) AS jaccard
+  FROM common
+  JOIN size_ na ON na.doc_id = doc_a
+  JOIN size_ nb ON nb.doc_id = doc_b
+  WHERE round(CAST(common AS DOUBLE) / (na.n + nb.n - common), 6) >= 0.8
+"""
+
+
+@query("dedup_ngram_jaccard", oracle=SQL_DEDUP_NGRAM_JACCARD)
 def q_dedup_ngram_jaccard(spark, sf_dir):
     """Exact n-gram Jaccard near-dup pairs (>= 0.8) — the verify stage that
     follows LSH candidate generation (JaccardRetrieval semantics applied
@@ -607,41 +641,18 @@ def q_dedup_ngram_jaccard(spark, sf_dir):
     return j.filter(F.col("jaccard") >= 0.8).select("doc_a", "doc_b", "jaccard")
 
 
-SQL_DEDUP_NGRAM_JACCARD = f"""
-  WITH sh0 AS (SELECT DISTINCT doc_id, shingle FROM ({_SHINGLES_SQL})),
-  sh AS (SELECT * FROM sh0 WHERE shingle IN (
-           SELECT shingle FROM sh0 GROUP BY shingle HAVING count(*) <= {SHINGLE_DF_CAP})),
-  size_ AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-  common AS (
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS common
-    FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-    GROUP BY a.doc_id, b.doc_id)
-  SELECT doc_a, doc_b,
-         round(CAST(common AS DOUBLE) / (na.n + nb.n - common), 6) AS jaccard
-  FROM common
-  JOIN size_ na ON na.doc_id = doc_a
-  JOIN size_ nb ON nb.doc_id = doc_b
-  WHERE round(CAST(common AS DOUBLE) / (na.n + nb.n - common), 6) >= 0.8
-"""
-
-
-QUERIES.update({
-    "minhash_signature": q_minhash_signature,
-    "dedup_minhash_lsh": q_dedup_minhash_lsh,
-    "simhash": q_simhash,
-    "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-})
-ORACLES.update({
-    "minhash_signature": SQL_MINHASH_SIGNATURE,
-    "dedup_minhash_lsh": SQL_DEDUP_MINHASH_LSH,
-    "simhash": SQL_SIMHASH,
-    "dedup_ngram_jaccard": SQL_DEDUP_NGRAM_JACCARD,
-})
-
-
 BPE_RE = "[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 ]"
 
 
+SQL_TOKEN_COUNT_BPE = f"""
+  SELECT doc_id,
+         CAST(len(string_split(text, ' ')) AS INT) AS ws_tokens,
+         CAST(len(regexp_extract_all(text, '{BPE_RE}')) AS INT) AS bpe_tokens
+  FROM documents
+"""
+
+
+@query("token_count_bpe", oracle=SQL_TOKEN_COUNT_BPE)
 def q_token_count_bpe(spark, sf_dir):
     """Token counting with a BPE-ish pre-tokenizer regex (letters runs /
     digit runs / single punctuation) next to the whitespace count — the
@@ -654,34 +665,42 @@ def q_token_count_bpe(spark, sf_dir):
     )
 
 
-SQL_TOKEN_COUNT_BPE = f"""
-  SELECT doc_id,
-         CAST(len(string_split(text, ' ')) AS INT) AS ws_tokens,
-         CAST(len(regexp_extract_all(text, '{BPE_RE}')) AS INT) AS bpe_tokens
-  FROM documents
-"""
+# The codec queries decode one md5-derived stream per document through a
+# container's decoder (RAW, PNG, JPEG, WAV, MP4) and roll the features up
+# per 16-bucket asset_id band; containers carrying the same stream share
+# their rollup and their oracle.
 
-QUERIES["token_count_bpe"] = q_token_count_bpe
-ORACLES["token_count_bpe"] = SQL_TOKEN_COUNT_BPE
+def _band_brightness(images: DataFrame) -> DataFrame:
+    """Decoded images -> per band: asset count and mean brightness."""
+    from .multimodal import image_features
 
-
-def q_multimodal_image_stats(spark, sf_dir):
-    """Multimodal decode path, oracle-verified end-to-end: derive a
-    deterministic RAW image asset per document (pixels = md5(asset_id:blk)
-    byte stream), decode via the binary-column mapInPandas codec, extract
-    brightness, aggregate per 16-bucket asset_id band. The DuckDB oracle
-    recomputes the same brightness from md5 hex digits — the Spark side
-    exercises the real binary plumbing, the oracle checks the values."""
-    from .multimodal import assets_from_documents, decode_images, image_features
-
-    assets = assets_from_documents(_docs(spark, sf_dir), seed=7)
-    feats = image_features(decode_images(assets))
     return (
-        feats.groupBy((F.col("asset_id") % 16).alias("band"))
-        .agg(
-            F.count("*").alias("n"),
-            F.round(F.avg("brightness"), 4).alias("avg_brightness"),
-        )
+        image_features(images)
+        .groupBy((F.col("asset_id") % 16).alias("band"))
+        .agg(F.count("*").alias("n"), F.round(F.avg("brightness"), 4).alias("avg_brightness"))
+    )
+
+
+def _band_rms(assets: DataFrame) -> DataFrame:
+    """Audio assets -> per band: asset count and mean RMS energy."""
+    from .multimodal import audio_features
+
+    return (
+        audio_features(assets)
+        .groupBy((F.col("asset_id") % 16).alias("band"))
+        .agg(F.count("*").alias("n"), F.round(F.avg("rms"), 4).alias("avg_rms"))
+    )
+
+
+def _band_frames(assets: DataFrame) -> DataFrame:
+    """Video assets -> every 4th frame -> per (band, frame_idx): frame count
+    and mean brightness."""
+    from .multimodal import frame_features, frame_sample
+
+    return (
+        frame_features(frame_sample(assets, every_k=4))
+        .groupBy((F.col("asset_id") % 16).alias("band"), "frame_idx")
+        .agg(F.count("*").alias("n"), F.round(F.avg("brightness"), 4).alias("avg_brightness"))
     )
 
 
@@ -702,29 +721,19 @@ SQL_MULTIMODAL_IMAGE_STATS = """
   FROM bright GROUP BY band
 """
 
-QUERIES["multimodal_image_stats"] = q_multimodal_image_stats
-ORACLES["multimodal_image_stats"] = SQL_MULTIMODAL_IMAGE_STATS
 
+@query("multimodal_image_stats", oracle=SQL_MULTIMODAL_IMAGE_STATS)
+def q_multimodal_image_stats(spark, sf_dir):
+    """Multimodal decode path, oracle-verified end-to-end: derive a
+    deterministic RAW image asset per document (pixels = md5(asset_id:blk)
+    byte stream), decode via the binary-column mapInPandas codec, extract
+    brightness, aggregate per 16-bucket asset_id band. The DuckDB oracle
+    recomputes the same brightness from md5 hex digits — the Spark side
+    exercises the real binary plumbing, the oracle checks the values."""
+    from .multimodal import assets_from_documents, decode_images
 
-def q_multimodal_audio_stats(spark, sf_dir):
-    """Audio twin of the image decode path, oracle-verified end-to-end:
-    derive a deterministic PCM16 asset per document (samples =
-    md5('a<asset_id>:<blk>') byte stream, little-endian int16), decode via
-    the binary-column mapInPandas codec, extract RMS energy, aggregate per
-    16-bucket asset_id band. The DuckDB oracle reassembles the same int16
-    samples from md5 hex digits."""
-    from .multimodal import audio_assets_from_documents
-    from .multimodal.decode import audio_features
-
-    assets = audio_assets_from_documents(_docs(spark, sf_dir), seed=7)
-    feats = audio_features(assets)
-    return (
-        feats.groupBy((F.col("asset_id") % 16).alias("band"))
-        .agg(
-            F.count("*").alias("n"),
-            F.round(F.avg("rms"), 4).alias("avg_rms"),
-        )
-    )
+    assets = assets_from_documents(_docs(spark, sf_dir), seed=7)
+    return _band_brightness(decode_images(assets))
 
 
 # RMS of an md5-PCM16 asset: byte k is hex pair (k % 16) of
@@ -751,31 +760,18 @@ SQL_MULTIMODAL_AUDIO_STATS = """
   FROM rms GROUP BY band
 """
 
-QUERIES["multimodal_audio_stats"] = q_multimodal_audio_stats
-ORACLES["multimodal_audio_stats"] = SQL_MULTIMODAL_AUDIO_STATS
 
+@query("multimodal_audio_stats", oracle=SQL_MULTIMODAL_AUDIO_STATS)
+def q_multimodal_audio_stats(spark, sf_dir):
+    """Audio twin of the image decode path, oracle-verified end-to-end:
+    derive a deterministic PCM16 asset per document (samples =
+    md5('a<asset_id>:<blk>') byte stream, little-endian int16), decode via
+    the binary-column mapInPandas codec, extract RMS energy, aggregate per
+    16-bucket asset_id band. The DuckDB oracle reassembles the same int16
+    samples from md5 hex digits."""
+    from .multimodal import audio_assets_from_documents
 
-def q_multimodal_video_frames(spark, sf_dir):
-    """Video twin of the image/audio decode paths, oracle-verified
-    end-to-end: derive a deterministic RAW video per document (12 frames
-    of 8x8 grayscale, pixels = md5('v<asset_id>:<blk>') byte stream),
-    sample every 4th frame through the one-to-many frame_sample
-    mapInPandas stage, extract per-frame brightness, aggregate per
-    (16-bucket asset_id band, frame_idx). The DuckDB oracle recomputes
-    the same sampled-frame brightness from md5 hex digits."""
-    from .multimodal import video_assets_from_documents, frame_sample, frame_features
-
-    assets = video_assets_from_documents(_docs(spark, sf_dir), seed=7)
-    feats = frame_features(frame_sample(assets, every_k=4))
-    return (
-        feats.groupBy(
-            (F.col("asset_id") % 16).alias("band"), F.col("frame_idx")
-        )
-        .agg(
-            F.count("*").alias("n"),
-            F.round(F.avg("brightness"), 4).alias("avg_brightness"),
-        )
-    )
+    return _band_rms(audio_assets_from_documents(_docs(spark, sf_dir), seed=7))
 
 
 # brightness of sampled frame i of an md5-frame video = mean of payload
@@ -800,8 +796,19 @@ SQL_MULTIMODAL_VIDEO_FRAMES = """
   FROM sampled GROUP BY band, frame_idx
 """
 
-QUERIES["multimodal_video_frames"] = q_multimodal_video_frames
-ORACLES["multimodal_video_frames"] = SQL_MULTIMODAL_VIDEO_FRAMES
+
+@query("multimodal_video_frames", oracle=SQL_MULTIMODAL_VIDEO_FRAMES)
+def q_multimodal_video_frames(spark, sf_dir):
+    """Video twin of the image/audio decode paths, oracle-verified
+    end-to-end: derive a deterministic RAW video per document (12 frames
+    of 8x8 grayscale, pixels = md5('v<asset_id>:<blk>') byte stream),
+    sample every 4th frame through the one-to-many frame_sample
+    mapInPandas stage, extract per-frame brightness, aggregate per
+    (16-bucket asset_id band, frame_idx). The DuckDB oracle recomputes
+    the same sampled-frame brightness from md5 hex digits."""
+    from .multimodal import video_assets_from_documents
+
+    return _band_frames(video_assets_from_documents(_docs(spark, sf_dir), seed=7))
 
 
 # ------------------- REAL-format codec paths (oracled), round 4
@@ -813,64 +820,26 @@ ORACLES["multimodal_video_frames"] = SQL_MULTIMODAL_VIDEO_FRAMES
 # oracle values — a full-stack proof that container parsing, inflation,
 # unfiltering, and the downstream feature kernels compose correctly.
 
+@query("multimodal_png_stats", oracle=SQL_MULTIMODAL_IMAGE_STATS)
 def q_multimodal_png_stats(spark, sf_dir):
     """Image-stats rollup through the REAL PNG decoder
     (multimodal/decode._decode_png). Oracle identical to
     multimodal_image_stats by construction: decoding the PNG of the md5
     pixel stream must reproduce the md5 pixel stream."""
-    from .multimodal import decode_images, image_features, png_assets_from_documents
+    from .multimodal import decode_images, png_assets_from_documents
 
     assets = png_assets_from_documents(_docs(spark, sf_dir), seed=7)
-    feats = image_features(decode_images(assets))
-    return (
-        feats.groupBy((F.col("asset_id") % 16).alias("band"))
-        .agg(
-            F.count("*").alias("n"),
-            F.round(F.avg("brightness"), 4).alias("avg_brightness"),
-        )
-    )
+    return _band_brightness(decode_images(assets))
 
 
+@query("multimodal_wav_stats", oracle=SQL_MULTIMODAL_AUDIO_STATS)
 def q_multimodal_wav_stats(spark, sf_dir):
     """Audio-stats rollup through the REAL WAV decoder
     (multimodal/decode._decode_wav). Oracle identical to
     multimodal_audio_stats by construction."""
     from .multimodal import wav_assets_from_documents
-    from .multimodal.decode import audio_features
 
-    assets = wav_assets_from_documents(_docs(spark, sf_dir), seed=7)
-    feats = audio_features(assets)
-    return (
-        feats.groupBy((F.col("asset_id") % 16).alias("band"))
-        .agg(
-            F.count("*").alias("n"),
-            F.round(F.avg("rms"), 4).alias("avg_rms"),
-        )
-    )
-
-
-def q_multimodal_jpeg_stats(spark, sf_dir):
-    """Image-stats rollup through the REAL baseline JPEG decoder
-    (multimodal/decode._decode_jpeg: marker walk, Huffman entropy decode,
-    dequant, IDCT — round-4 verdict next-round #4). JPEG is lossy, so the
-    oracle trick differs from PNG/WAV: the assets' 8x8 blocks are FLAT
-    md5-derived values (assets.jpeg_block_pixels), for which the DCT
-    round-trip is exact (DC-only blocks, all-ones quant table) — decoding
-    the genuine JFIF container must reproduce the block values bit-exactly,
-    and the DuckDB oracle recomputes the same statistics from md5 hex
-    digits."""
-    from .multimodal import jpeg_assets_from_documents
-    from .multimodal.decode import decode_images, image_features
-
-    assets = jpeg_assets_from_documents(_docs(spark, sf_dir), seed=7)
-    feats = image_features(decode_images(assets))
-    return (
-        feats.groupBy((F.col("asset_id") % 16).alias("band"))
-        .agg(
-            F.count("*").alias("n"),
-            F.round(F.avg("brightness"), 4).alias("avg_brightness"),
-        )
-    )
+    return _band_rms(wav_assets_from_documents(_docs(spark, sf_dir), seed=7))
 
 
 SQL_MULTIMODAL_JPEG_STATS = """
@@ -888,10 +857,24 @@ SQL_MULTIMODAL_JPEG_STATS = """
 """
 
 
-QUERIES["multimodal_png_stats"] = q_multimodal_png_stats
-ORACLES["multimodal_png_stats"] = SQL_MULTIMODAL_IMAGE_STATS
-QUERIES["multimodal_wav_stats"] = q_multimodal_wav_stats
-ORACLES["multimodal_wav_stats"] = SQL_MULTIMODAL_AUDIO_STATS
+@query("multimodal_jpeg_stats", oracle=SQL_MULTIMODAL_JPEG_STATS)
+def q_multimodal_jpeg_stats(spark, sf_dir):
+    """Image-stats rollup through the REAL baseline JPEG decoder
+    (multimodal/decode._decode_jpeg: marker walk, Huffman entropy decode,
+    dequant, IDCT — round-4 verdict next-round #4). JPEG is lossy, so the
+    oracle trick differs from PNG/WAV: the assets' 8x8 blocks are FLAT
+    md5-derived values (assets.jpeg_block_pixels), for which the DCT
+    round-trip is exact (DC-only blocks, all-ones quant table) — decoding
+    the genuine JFIF container must reproduce the block values bit-exactly,
+    and the DuckDB oracle recomputes the same statistics from md5 hex
+    digits."""
+    from .multimodal import decode_images, jpeg_assets_from_documents
+
+    assets = jpeg_assets_from_documents(_docs(spark, sf_dir), seed=7)
+    return _band_brightness(decode_images(assets))
+
+
+@query("multimodal_mp4_frames", oracle=SQL_MULTIMODAL_VIDEO_FRAMES)
 def q_multimodal_mp4_frames(spark, sf_dir):
     """Frame-sampling rollup through the REAL ISO-BMFF demuxer
     (multimodal/decode._decode_mp4: full box walk, stsd/stsz/stsc/stco
@@ -901,27 +884,29 @@ def q_multimodal_mp4_frames(spark, sf_dir):
     real-container trick as wav/png, completing the seam: every codec
     key in DECODERS now has a genuine decoder behind it except the
     compressed mp4 bitstreams (avc1/hvc1), which refuse loudly."""
-    from .multimodal import frame_features, frame_sample, mp4_assets_from_documents
+    from .multimodal import mp4_assets_from_documents
 
-    assets = mp4_assets_from_documents(_docs(spark, sf_dir), seed=7)
-    feats = frame_features(frame_sample(assets, every_k=4))
-    return (
-        feats.groupBy(
-            (F.col("asset_id") % 16).alias("band"), F.col("frame_idx")
-        )
-        .agg(
-            F.count("*").alias("n"),
-            F.round(F.avg("brightness"), 4).alias("avg_brightness"),
-        )
-    )
+    return _band_frames(mp4_assets_from_documents(_docs(spark, sf_dir), seed=7))
 
 
-QUERIES["multimodal_jpeg_stats"] = q_multimodal_jpeg_stats
-ORACLES["multimodal_jpeg_stats"] = SQL_MULTIMODAL_JPEG_STATS
-QUERIES["multimodal_mp4_frames"] = q_multimodal_mp4_frames
-ORACLES["multimodal_mp4_frames"] = SQL_MULTIMODAL_VIDEO_FRAMES
+# content key of doc d = sha256(lowercase-hex of its 576 md5 pixel bytes)
+# = sha256(concat of the 36 md5 hex digests) — the RAW and PNG containers
+# both decode to exactly that byte stream, so every group has 2 members
+SQL_MULTIMODAL_DEDUP_EXACT = """
+  WITH ids AS (SELECT CAST(doc_id AS BIGINT) AS asset_id FROM documents),
+  hx AS (SELECT asset_id,
+                string_agg(md5(CAST(asset_id AS VARCHAR) || ':'
+                               || CAST(blk AS VARCHAR)), '' ORDER BY blk)
+                AS hexes
+         FROM (SELECT asset_id, unnest(range(0, 36)) AS blk FROM ids)
+         GROUP BY asset_id)
+  SELECT sha256(hexes) AS content_sha, asset_id AS canonical_id,
+         CAST(2 AS BIGINT) AS n_copies
+  FROM hx
+"""
 
 
+@query("multimodal_dedup_exact", oracle=SQL_MULTIMODAL_DEDUP_EXACT)
 def q_multimodal_dedup_exact(spark, sf_dir):
     """Cross-container content-addressed dedup — the multimodal twin of
     dedup_exact and a real curation task: the SAME logical image stored
@@ -957,51 +942,6 @@ def q_multimodal_dedup_exact(spark, sf_dir):
     )
 
 
-# content key of doc d = sha256(lowercase-hex of its 576 md5 pixel bytes)
-# = sha256(concat of the 36 md5 hex digests) — the RAW and PNG containers
-# both decode to exactly that byte stream, so every group has 2 members
-SQL_MULTIMODAL_DEDUP_EXACT = """
-  WITH ids AS (SELECT CAST(doc_id AS BIGINT) AS asset_id FROM documents),
-  hx AS (SELECT asset_id,
-                string_agg(md5(CAST(asset_id AS VARCHAR) || ':'
-                               || CAST(blk AS VARCHAR)), '' ORDER BY blk)
-                AS hexes
-         FROM (SELECT asset_id, unnest(range(0, 36)) AS blk FROM ids)
-         GROUP BY asset_id)
-  SELECT sha256(hexes) AS content_sha, asset_id AS canonical_id,
-         CAST(2 AS BIGINT) AS n_copies
-  FROM hx
-"""
-
-QUERIES["multimodal_dedup_exact"] = q_multimodal_dedup_exact
-ORACLES["multimodal_dedup_exact"] = SQL_MULTIMODAL_DEDUP_EXACT
-
-
-def q_multimodal_resize_stats(spark, sf_dir):
-    """The RESIZE operator oracle-registered (it was pytest-only):
-    nearest-neighbor downsample 16x12 -> 4x3, then brightness per asset,
-    banded rollup. Nearest-neighbor picks pixels at rows r*12//3 and
-    cols c*16//4, so the resized brightness is the mean of 36 exactly
-    addressable bytes of the md5 pixel stream — SQL-recomputable like the
-    full-image stats."""
-    from .multimodal import (
-        assets_from_documents,
-        decode_images,
-        image_features,
-        resize_images,
-    )
-
-    assets = assets_from_documents(_docs(spark, sf_dir), seed=7)
-    feats = image_features(resize_images(decode_images(assets), 4, 3))
-    return (
-        feats.groupBy((F.col("asset_id") % 16).alias("band"))
-        .agg(
-            F.count("*").alias("n"),
-            F.round(F.avg("brightness"), 4).alias("avg_brightness"),
-        )
-    )
-
-
 # resized pixel (r, c, ch) of the md5-pixel 16x12x3 image is byte
 # k = ((r*4)*16 + c*4)*3 + ch of the stream; byte k = hex pair (k % 16)
 # of md5('<asset_id>:<k // 16>')
@@ -1031,8 +971,19 @@ SQL_MULTIMODAL_RESIZE_STATS = """
   FROM bright GROUP BY band
 """
 
-QUERIES["multimodal_resize_stats"] = q_multimodal_resize_stats
-ORACLES["multimodal_resize_stats"] = SQL_MULTIMODAL_RESIZE_STATS
+
+@query("multimodal_resize_stats", oracle=SQL_MULTIMODAL_RESIZE_STATS)
+def q_multimodal_resize_stats(spark, sf_dir):
+    """The RESIZE operator oracle-registered (it was pytest-only):
+    nearest-neighbor downsample 16x12 -> 4x3, then brightness per asset,
+    banded rollup. Nearest-neighbor picks pixels at rows r*12//3 and
+    cols c*16//4, so the resized brightness is the mean of 36 exactly
+    addressable bytes of the md5 pixel stream — SQL-recomputable like the
+    full-image stats."""
+    from .multimodal import assets_from_documents, decode_images, resize_images
+
+    assets = assets_from_documents(_docs(spark, sf_dir), seed=7)
+    return _band_brightness(resize_images(decode_images(assets), 4, 3))
 
 
 # ------------------------------------------------- similarity search (ANN)
@@ -1083,17 +1034,6 @@ _EMB_PAIRS_SQL = """
 """
 
 
-def q_cosine_topk(spark, sf_dir):
-    """Brute-force cosine top-5 neighbors for query vectors (vec_id < 20)."""
-    pairs = _emb_pairs_cosine(spark, sf_dir, query_filter=lambda q: q < 20)
-    w = W.partitionBy("qid").orderBy(F.desc(F.round("cos", 6)), F.asc("nid"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select("qid", "nid", "rank", F.round("cos", 4).alias("cos"))
-    )
-
-
 SQL_COSINE_TOPK = (
     _EMB_PAIRS_SQL.replace("{QFILTER}", "AND a.vec_id < 20")
     + """
@@ -1105,17 +1045,15 @@ SQL_COSINE_TOPK = (
 )
 
 
-def q_cosine_pairs_threshold(spark, sf_dir):
-    """Near-duplicate detection in embedding space, CORPUS-WIDE form: pairs
-    above 0.35 among the LSH multiprobe bucketed candidates
-    (_ann_bucketed_cos — the same admission as dedup_embedding; never
-    all-pairs, so the plan survives 100 TB). The exact all-pairs scan
-    stays available as the bounded-slice query below
-    (cosine_pairs_exact_slice) and per-bucket inside the ANN kernel."""
-    cos = _ann_bucketed_cos(spark, sf_dir)
+@query("cosine_topk", oracle=SQL_COSINE_TOPK)
+def q_cosine_topk(spark, sf_dir):
+    """Brute-force cosine top-5 neighbors for query vectors (vec_id < 20)."""
+    pairs = _emb_pairs_cosine(spark, sf_dir, query_filter=lambda q: q < 20)
+    w = W.partitionBy("qid").orderBy(F.desc(F.round("cos", 6)), F.asc("nid"))
     return (
-        cos.filter((F.col("qid") < F.col("nid")) & (F.round("cos", 6) >= 0.35))
-        .select("qid", "nid", F.round("cos", 4).alias("cos"))
+        pairs.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= 5)
+        .select("qid", "nid", "rank", F.round("cos", 4).alias("cos"))
     )
 
 
@@ -1125,6 +1063,16 @@ EXACT_SLICE_MAX_QID = 50   # the brute-force all-pairs scan is only ever run
                            # LSH-bucketed kernel
 
 
+SQL_COSINE_PAIRS_EXACT_SLICE = (
+    _EMB_PAIRS_SQL.replace("{QFILTER}", f"AND a.vec_id < {EXACT_SLICE_MAX_QID}")
+    + """
+  SELECT qid, nid, round(cos, 4) AS cos FROM pairs
+  WHERE qid <> nid AND round(cos, 6) >= 0.35
+"""
+)
+
+
+@query("cosine_pairs_exact_slice", oracle=SQL_COSINE_PAIRS_EXACT_SLICE)
 def q_cosine_pairs_exact_slice(spark, sf_dir):
     """Exact cosine pairs >= 0.35 for a BOUNDED query slice (qid <
     EXACT_SLICE_MAX_QID) against the full corpus — O(slice x N), the
@@ -1139,18 +1087,27 @@ def q_cosine_pairs_exact_slice(spark, sf_dir):
     )
 
 
-SQL_COSINE_PAIRS_EXACT_SLICE = (
-    _EMB_PAIRS_SQL.replace("{QFILTER}", f"AND a.vec_id < {EXACT_SLICE_MAX_QID}")
-    + """
-  SELECT qid, nid, round(cos, 4) AS cos FROM pairs
-  WHERE qid <> nid AND round(cos, 6) >= 0.35
-"""
-)
-
-
 N_PLANES = 8
 
 
+SQL_ANN_LSH_BUCKETS = f"""
+  WITH e AS (
+    SELECT vec_id, CAST(i - 1 AS INT) AS d, CAST(embedding[i] AS DOUBLE) AS v
+    FROM (SELECT vec_id, embedding, unnest(range(1, len(embedding) + 1)) AS i FROM embeddings)),
+  planes AS (SELECT vec_id, d, v, unnest(range(0, {N_PLANES})) AS p FROM e),
+  proj AS (
+    SELECT vec_id, p,
+           sum(v * ((ascii(substring(md5(p || ':' || d), 1, 1)) * 256
+                     + ascii(substring(md5(p || ':' || d), 2, 1))) / 65536.0 - 0.5)) AS proj
+    FROM planes GROUP BY vec_id, p),
+  bucket AS (
+    SELECT vec_id, CAST(sum(CASE WHEN proj > 0 THEN pow(2, p) ELSE 0 END) AS BIGINT) AS bucket
+    FROM proj WHERE abs(proj) > 1e-6 GROUP BY vec_id)
+  SELECT bucket, count(*) AS n_vectors FROM bucket GROUP BY bucket
+"""
+
+
+@query("ann_lsh_buckets", oracle=SQL_ANN_LSH_BUCKETS)
 def q_ann_lsh_buckets(spark, sf_dir):
     """Random-hyperplane LSH bucketing (the scale path for ANN): plane
     weights derived deterministically from md5(plane:dim) ascii codes, sign
@@ -1172,25 +1129,19 @@ def q_ann_lsh_buckets(spark, sf_dir):
     return bucket.groupBy("bucket").agg(F.count("*").alias("n_vectors"))
 
 
-SQL_ANN_LSH_BUCKETS = f"""
-  WITH e AS (
-    SELECT vec_id, CAST(i - 1 AS INT) AS d, CAST(embedding[i] AS DOUBLE) AS v
-    FROM (SELECT vec_id, embedding, unnest(range(1, len(embedding) + 1)) AS i FROM embeddings)),
-  planes AS (SELECT vec_id, d, v, unnest(range(0, {N_PLANES})) AS p FROM e),
-  proj AS (
-    SELECT vec_id, p,
-           sum(v * ((ascii(substring(md5(p || ':' || d), 1, 1)) * 256
-                     + ascii(substring(md5(p || ':' || d), 2, 1))) / 65536.0 - 0.5)) AS proj
-    FROM planes GROUP BY vec_id, p),
-  bucket AS (
-    SELECT vec_id, CAST(sum(CASE WHEN proj > 0 THEN pow(2, p) ELSE 0 END) AS BIGINT) AS bucket
-    FROM proj WHERE abs(proj) > 1e-6 GROUP BY vec_id)
-  SELECT bucket, count(*) AS n_vectors FROM bucket GROUP BY bucket
+# ---------------------------------------------------------- text analysis
+
+SQL_DOC_FINGERPRINT = f"""
+  WITH sh AS (SELECT doc_id, pos, substring(md5(shingle), 1, 16) AS h FROM ({_SHINGLES_SQL})),
+  fp AS (SELECT doc_id,
+                min(h) OVER (PARTITION BY doc_id ORDER BY pos ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp
+         FROM sh)
+  SELECT doc_id, count(DISTINCT fp) AS n_fingerprints, min(fp) AS min_fp, max(fp) AS max_fp
+  FROM fp GROUP BY doc_id
 """
 
 
-# ---------------------------------------------------------- text analysis
-
+@query("doc_fingerprint", oracle=SQL_DOC_FINGERPRINT)
 def q_doc_fingerprint(spark, sf_dir):
     """Winnowing document fingerprints: shingle hashes, rolling window-4
     minimum, distinct fingerprints per doc (rolling-hash fingerprinting for
@@ -1205,16 +1156,27 @@ def q_doc_fingerprint(spark, sf_dir):
     )
 
 
-SQL_DOC_FINGERPRINT = f"""
-  WITH sh AS (SELECT doc_id, pos, substring(md5(shingle), 1, 16) AS h FROM ({_SHINGLES_SQL})),
-  fp AS (SELECT doc_id,
-                min(h) OVER (PARTITION BY doc_id ORDER BY pos ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp
-         FROM sh)
-  SELECT doc_id, count(DISTINCT fp) AS n_fingerprints, min(fp) AS min_fp, max(fp) AS max_fp
-  FROM fp GROUP BY doc_id
+_MARKERS_SQL = "('the','en'),('a','en'),('data','en'),('der','de'),('und','de'),('le','fr'),('et','fr'),('el','es'),('y','es')"
+
+
+SQL_LANG_ID = f"""
+  WITH markers(marker, marker_lang) AS (VALUES {_MARKERS_SQL}),
+  toks AS ({_TOKENS_SQL}),
+  hits AS (
+    SELECT doc_id, marker_lang, count(*) AS hits
+    FROM toks JOIN markers ON token = marker GROUP BY doc_id, marker_lang),
+  best AS (
+    SELECT doc_id, marker_lang, hits,
+           row_number() OVER (PARTITION BY doc_id ORDER BY hits DESC, marker_lang ASC) AS rn
+    FROM hits)
+  SELECT d.doc_id, d.lang,
+         coalesce(b.marker_lang, 'unknown') AS predicted_lang,
+         coalesce(b.hits, 0) AS hits
+  FROM documents d LEFT JOIN (SELECT * FROM best WHERE rn = 1) b ON d.doc_id = b.doc_id
 """
 
 
+@query("lang_id", oracle=SQL_LANG_ID)
 def q_lang_id(spark, sf_dir):
     """Language-ID heuristic: per-language marker-token hit rates (n-gram
     scoring over an inline marker table), predicted language = argmax."""
@@ -1235,41 +1197,8 @@ def q_lang_id(spark, sf_dir):
     )
 
 
-_MARKERS_SQL = "('the','en'),('a','en'),('data','en'),('der','de'),('und','de'),('le','fr'),('et','fr'),('el','es'),('y','es')"
-
-SQL_LANG_ID = f"""
-  WITH markers(marker, marker_lang) AS (VALUES {_MARKERS_SQL}),
-  toks AS ({_TOKENS_SQL}),
-  hits AS (
-    SELECT doc_id, marker_lang, count(*) AS hits
-    FROM toks JOIN markers ON token = marker GROUP BY doc_id, marker_lang),
-  best AS (
-    SELECT doc_id, marker_lang, hits,
-           row_number() OVER (PARTITION BY doc_id ORDER BY hits DESC, marker_lang ASC) AS rn
-    FROM hits)
-  SELECT d.doc_id, d.lang,
-         coalesce(b.marker_lang, 'unknown') AS predicted_lang,
-         coalesce(b.hits, 0) AS hits
-  FROM documents d LEFT JOIN (SELECT * FROM best WHERE rn = 1) b ON d.doc_id = b.doc_id
-"""
-
-
-def q_levenshtein_linking(spark, sf_dir):
-    """Fuzzy dictionary linking (LuceneRetrieval/Levenshtein semantics):
-    misspelled dictionary surfaces linked to in-corpus tokens by edit
-    similarity >= 0.7, top-3 per surface."""
-    typos = [("tabel",), ("custmer",), ("windoww",), ("fliter",), ("streem",), ("sparkk",)]
-    ty = spark.createDataFrame(typos, ["surface"])
-    toks = _tokens(spark, sf_dir).select("token").distinct()
-    sim = 1.0 - F.levenshtein("surface", "token") / F.greatest(F.length("surface"), F.length("token"))
-    pairs = ty.crossJoin(toks).withColumn("sim", F.round(sim, 6)).filter(F.col("sim") >= 0.7)
-    w = W.partitionBy("surface").orderBy(F.desc("sim"), F.asc("token"))
-    return pairs.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= 3).select(
-        "surface", "token", "sim", "rank"
-    )
-
-
 _TYPOS_SQL = "('tabel'),('custmer'),('windoww'),('fliter'),('streem'),('sparkk')"
+
 
 SQL_LEVENSHTEIN_LINKING = f"""
   WITH typos(surface) AS (VALUES {_TYPOS_SQL}),
@@ -1287,8 +1216,35 @@ SQL_LEVENSHTEIN_LINKING = f"""
 """
 
 
+@query("levenshtein_linking", oracle=SQL_LEVENSHTEIN_LINKING)
+def q_levenshtein_linking(spark, sf_dir):
+    """Fuzzy dictionary linking (LuceneRetrieval/Levenshtein semantics):
+    misspelled dictionary surfaces linked to in-corpus tokens by edit
+    similarity >= 0.7, top-3 per surface."""
+    typos = [("tabel",), ("custmer",), ("windoww",), ("fliter",), ("streem",), ("sparkk",)]
+    ty = spark.createDataFrame(typos, ["surface"])
+    toks = _tokens(spark, sf_dir).select("token").distinct()
+    sim = 1.0 - F.levenshtein("surface", "token") / F.greatest(F.length("surface"), F.length("token"))
+    pairs = ty.crossJoin(toks).withColumn("sim", F.round(sim, 6)).filter(F.col("sim") >= 0.7)
+    w = W.partitionBy("surface").orderBy(F.desc("sim"), F.asc("token"))
+    return pairs.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= 3).select(
+        "surface", "token", "sim", "rank"
+    )
+
+
 # ------------------------------------------------------- relational layer
 
+SQL_PRICING_SUMMARY = """
+  SELECT l_returnflag, l_linestatus,
+         round(sum(l_quantity), 2) AS sum_qty,
+         round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+         count(*) AS n_rows
+  FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
+  GROUP BY l_returnflag, l_linestatus
+"""
+
+
+@query("pricing_summary", oracle=SQL_PRICING_SUMMARY)
 def q_pricing_summary(spark, sf_dir):
     """Hash-aggregate layer (TPC-H Q1 shape) over lineitem."""
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
@@ -1303,16 +1259,16 @@ def q_pricing_summary(spark, sf_dir):
     )
 
 
-SQL_PRICING_SUMMARY = """
-  SELECT l_returnflag, l_linestatus,
-         round(sum(l_quantity), 2) AS sum_qty,
-         round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-         count(*) AS n_rows
-  FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-  GROUP BY l_returnflag, l_linestatus
+SQL_TOP_CUSTOMERS = """
+  WITH rev AS (SELECT o_custkey, round(sum(o_totalprice), 2) AS revenue FROM orders GROUP BY o_custkey),
+  j AS (SELECT c_custkey, c_name, revenue FROM rev JOIN customer ON o_custkey = c_custkey)
+  SELECT c_custkey, c_name, revenue,
+         CAST(row_number() OVER (ORDER BY revenue DESC, c_custkey ASC) AS INT) AS rank
+  FROM j QUALIFY rank <= 10
 """
 
 
+@query("top_customers", oracle=SQL_TOP_CUSTOMERS)
 def q_top_customers(spark, sf_dir):
     """Join + top-k: top-10 customers by order value. The cut is
     orderBy().limit() — Spark plans TakeOrderedAndProject (per-partition
@@ -1329,15 +1285,18 @@ def q_top_customers(spark, sf_dir):
     return top.withColumn("rank", F.row_number().over(w))
 
 
-SQL_TOP_CUSTOMERS = """
-  WITH rev AS (SELECT o_custkey, round(sum(o_totalprice), 2) AS revenue FROM orders GROUP BY o_custkey),
-  j AS (SELECT c_custkey, c_name, revenue FROM rev JOIN customer ON o_custkey = c_custkey)
-  SELECT c_custkey, c_name, revenue,
-         CAST(row_number() OVER (ORDER BY revenue DESC, c_custkey ASC) AS INT) AS rank
-  FROM j QUALIFY rank <= 10
+SQL_SESSIONIZE_EVENTS = """
+  WITH s AS (
+    SELECT user_id,
+           CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
+                     OR date_diff('second', lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id), ts) > 1800
+                THEN 1 ELSE 0 END AS new_session
+    FROM events)
+  SELECT user_id, CAST(sum(new_session) AS BIGINT) AS n_sessions, count(*) AS n_events FROM s GROUP BY user_id
 """
 
 
+@query("sessionize_events", oracle=SQL_SESSIONIZE_EVENTS)
 def q_sessionize_events(spark, sf_dir):
     """Event sessionization (lag + cumulative window): sessions split at
     30-minute gaps; per-user session counts."""
@@ -1351,25 +1310,6 @@ def q_sessionize_events(spark, sf_dir):
     )
 
 
-SQL_SESSIONIZE_EVENTS = """
-  WITH s AS (
-    SELECT user_id,
-           CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-                     OR date_diff('second', lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id), ts) > 1800
-                THEN 1 ELSE 0 END AS new_session
-    FROM events)
-  SELECT user_id, CAST(sum(new_session) AS BIGINT) AS n_sessions, count(*) AS n_events FROM s GROUP BY user_id
-"""
-
-
-def q_customers_without_orders(spark, sf_dir):
-    """Anti-join (NOT EXISTS) — the dedup/overlap-filter primitive:
-    customers with no URGENT-priority order."""
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").filter(F.col("o_orderpriority") == "1-URGENT")
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    return c.join(o, c.c_custkey == o.o_custkey, "left_anti").select("c_custkey", "c_name")
-
-
 SQL_CUSTOMERS_WITHOUT_ORDERS = """
   SELECT c_custkey, c_name FROM customer
   WHERE NOT EXISTS (SELECT 1 FROM orders
@@ -1377,31 +1317,13 @@ SQL_CUSTOMERS_WITHOUT_ORDERS = """
 """
 
 
-QUERIES.update({
-    "cosine_topk": q_cosine_topk,
-    "cosine_pairs_threshold": q_cosine_pairs_threshold,
-    "cosine_pairs_exact_slice": q_cosine_pairs_exact_slice,
-    "ann_lsh_buckets": q_ann_lsh_buckets,
-    "doc_fingerprint": q_doc_fingerprint,
-    "lang_id": q_lang_id,
-    "levenshtein_linking": q_levenshtein_linking,
-    "pricing_summary": q_pricing_summary,
-    "top_customers": q_top_customers,
-    "sessionize_events": q_sessionize_events,
-    "customers_without_orders": q_customers_without_orders,
-})
-ORACLES.update({
-    "cosine_topk": SQL_COSINE_TOPK,
-    "cosine_pairs_exact_slice": SQL_COSINE_PAIRS_EXACT_SLICE,
-    "ann_lsh_buckets": SQL_ANN_LSH_BUCKETS,
-    "doc_fingerprint": SQL_DOC_FINGERPRINT,
-    "lang_id": SQL_LANG_ID,
-    "levenshtein_linking": SQL_LEVENSHTEIN_LINKING,
-    "pricing_summary": SQL_PRICING_SUMMARY,
-    "top_customers": SQL_TOP_CUSTOMERS,
-    "sessionize_events": SQL_SESSIONIZE_EVENTS,
-    "customers_without_orders": SQL_CUSTOMERS_WITHOUT_ORDERS,
-})
+@query("customers_without_orders", oracle=SQL_CUSTOMERS_WITHOUT_ORDERS)
+def q_customers_without_orders(spark, sf_dir):
+    """Anti-join (NOT EXISTS) — the dedup/overlap-filter primitive:
+    customers with no URGENT-priority order."""
+    o = spark.read.parquet(f"{sf_dir}/orders.parquet").filter(F.col("o_orderpriority") == "1-URGENT")
+    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    return c.join(o, c.c_custkey == o.o_custkey, "left_anti").select("c_custkey", "c_name")
 
 
 # ------------------------------------------- OBIE-core operators as queries
@@ -1412,18 +1334,6 @@ ORACLES.update({
 # harness ALSO verifies them (VERDICT round 1, "register oracle-paired
 # queries for the OBIE core operators").
 
-def q_candidates_evidence(spark, sf_dir):
-    """Evidence-pruned candidate counts per (doc, slot-range type): a
-    candidate exists ONLY where a text mention exists (the inner join IS
-    ExplorationUtils' early pruning, ExplorationUtils.java:487-489) —
-    per type: mention count and distinct-surface count."""
-    m = q_mentions_dict(spark, sf_dir)
-    return m.groupBy("doc_id", "type_id").agg(
-        F.count("*").alias("n_mentions"),
-        F.countDistinct("token").alias("n_surfaces"),
-    )
-
-
 SQL_CANDIDATES_EVIDENCE = f"""
   WITH dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
        toks AS ({_TOKENS_SQL})
@@ -1433,18 +1343,16 @@ SQL_CANDIDATES_EVIDENCE = f"""
 """
 
 
-def q_greedy_fill_top1(spark, sf_dir):
-    """Greedy slot filling, relational form: per (doc, slot-range type)
-    rank distinct fillers by evidence frequency and keep the top one —
-    the w_slot window of operators/filler.greedy_fill with frequency as
-    the score (HighFrequencyBaseline semantics per slot)."""
+@query("candidates_evidence", oracle=SQL_CANDIDATES_EVIDENCE)
+def q_candidates_evidence(spark, sf_dir):
+    """Evidence-pruned candidate counts per (doc, slot-range type): a
+    candidate exists ONLY where a text mention exists (the inner join IS
+    ExplorationUtils' early pruning, ExplorationUtils.java:487-489) —
+    per type: mention count and distinct-surface count."""
     m = q_mentions_dict(spark, sf_dir)
-    c = m.groupBy("doc_id", "type_id", "token").agg(F.count("*").alias("n"))
-    w = W.partitionBy("doc_id", "type_id").orderBy(F.desc("n"), F.asc("token"))
-    return (
-        c.withColumn("rn", F.row_number().over(w))
-        .filter("rn = 1")
-        .select("doc_id", "type_id", F.col("token").alias("filler"), "n")
+    return m.groupBy("doc_id", "type_id").agg(
+        F.count("*").alias("n_mentions"),
+        F.countDistinct("token").alias("n_surfaces"),
     )
 
 
@@ -1462,18 +1370,20 @@ SQL_GREEDY_FILL_TOP1 = f"""
 """
 
 
-def q_connected_components(spark, sf_dir):
-    """Cross-document canonicalization: connected components (iterative
-    min-id label propagation, operators/canonicalize.connected_components)
-    over the MinHash-LSH near-duplicate pair graph. The oracle recomputes
-    components with a recursive CTE."""
-    from .operators.canonicalize import connected_components
-
-    edges = q_dedup_minhash_lsh(spark, sf_dir).select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
+@query("greedy_fill_top1", oracle=SQL_GREEDY_FILL_TOP1)
+def q_greedy_fill_top1(spark, sf_dir):
+    """Greedy slot filling, relational form: per (doc, slot-range type)
+    rank distinct fillers by evidence frequency and keep the top one —
+    the w_slot window of operators/filler.greedy_fill with frequency as
+    the score (HighFrequencyBaseline semantics per slot)."""
+    m = q_mentions_dict(spark, sf_dir)
+    c = m.groupBy("doc_id", "type_id", "token").agg(F.count("*").alias("n"))
+    w = W.partitionBy("doc_id", "type_id").orderBy(F.desc("n"), F.asc("token"))
+    return (
+        c.withColumn("rn", F.row_number().over(w))
+        .filter("rn = 1")
+        .select("doc_id", "type_id", F.col("token").alias("filler"), "n")
     )
-    comp = connected_components(edges)
-    return comp.select(F.col("id").alias("doc_id"), "component")
 
 
 SQL_CONNECTED_COMPONENTS = f"""
@@ -1503,6 +1413,21 @@ SQL_CONNECTED_COMPONENTS = f"""
     SELECT reach.id, edges.dst AS r FROM reach JOIN edges ON reach.r = edges.src)
   SELECT id AS doc_id, min(r) AS component FROM reach GROUP BY id
 """
+
+
+@query("connected_components", oracle=SQL_CONNECTED_COMPONENTS)
+def q_connected_components(spark, sf_dir):
+    """Cross-document canonicalization: connected components (iterative
+    min-id label propagation, operators/canonicalize.connected_components)
+    over the MinHash-LSH near-duplicate pair graph. The oracle recomputes
+    components with a recursive CTE."""
+    from .operators.canonicalize import connected_components
+
+    edges = q_dedup_minhash_lsh(spark, sf_dir).select(
+        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
+    )
+    comp = connected_components(edges)
+    return comp.select(F.col("id").alias("doc_id"), "component")
 
 
 # perturbed prediction dictionary for the evaluator queries: two misses
@@ -1544,32 +1469,6 @@ def _eval_triple_flags(spark, sf_dir):
     )
 
 
-def q_eval_per_slot_prf(spark, sf_dir):
-    """EvaluatePrediction per-slot breakdown (run/eval/EvaluatePrediction
-    .java:150+): per-predicate tp/fp/fn and derived rates, folded into ONE
-    aggregation over the shared flags table (semantically identical to
-    operators/evaluator.per_slot_prf, which pytest exercises directly —
-    per_slot_prf's full-outer join over separate gold/pred sides is
-    subsumed because flags holds every (subj, pred, obj) of EITHER side)."""
-    flags = _eval_triple_flags(spark, sf_dir)
-    j = flags.groupBy("pred").agg(
-        F.sum(F.col("_g") * F.col("_p")).alias("tp"),
-        F.sum("_p").alias("n_pred"),
-        F.sum("_g").alias("n_gold"),
-    )
-    prec = F.when(F.col("n_pred") > 0, F.col("tp") / F.col("n_pred")).otherwise(F.lit(0.0))
-    rec = F.when(F.col("n_gold") > 0, F.col("tp") / F.col("n_gold")).otherwise(F.lit(0.0))
-    f1 = F.when(prec + rec > 0, 2 * prec * rec / (prec + rec)).otherwise(F.lit(0.0))
-    return j.select(
-        "pred", "tp",
-        (F.col("n_pred") - F.col("tp")).alias("fp"),
-        (F.col("n_gold") - F.col("tp")).alias("fn"),
-        F.round(prec, 6).alias("precision"),
-        F.round(rec, 6).alias("recall"),
-        F.round(f1, 6).alias("f1"),
-    )
-
-
 _EVAL_TRIPLES_SQL = f"""
   gold AS (
     SELECT DISTINCT 'doc_' || CAST(doc_id AS VARCHAR) AS subj,
@@ -1580,6 +1479,7 @@ _EVAL_TRIPLES_SQL = f"""
            'mentions_' || type_id AS pred, token AS obj
     FROM toks JOIN pdict ON token = pdict.surface)
 """
+
 
 SQL_EVAL_PER_SLOT_PRF = f"""
   WITH gdict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
@@ -1609,6 +1509,52 @@ SQL_EVAL_PER_SLOT_PRF = f"""
 """
 
 
+@query("eval_per_slot_prf", oracle=SQL_EVAL_PER_SLOT_PRF)
+def q_eval_per_slot_prf(spark, sf_dir):
+    """EvaluatePrediction per-slot breakdown (run/eval/EvaluatePrediction
+    .java:150+): per-predicate tp/fp/fn and derived rates, folded into ONE
+    aggregation over the shared flags table (semantically identical to
+    operators/evaluator.per_slot_prf, which pytest exercises directly —
+    per_slot_prf's full-outer join over separate gold/pred sides is
+    subsumed because flags holds every (subj, pred, obj) of EITHER side)."""
+    flags = _eval_triple_flags(spark, sf_dir)
+    j = flags.groupBy("pred").agg(
+        F.sum(F.col("_g") * F.col("_p")).alias("tp"),
+        F.sum("_p").alias("n_pred"),
+        F.sum("_g").alias("n_gold"),
+    )
+    prec = F.when(F.col("n_pred") > 0, F.col("tp") / F.col("n_pred")).otherwise(F.lit(0.0))
+    rec = F.when(F.col("n_gold") > 0, F.col("tp") / F.col("n_gold")).otherwise(F.lit(0.0))
+    f1 = F.when(prec + rec > 0, 2 * prec * rec / (prec + rec)).otherwise(F.lit(0.0))
+    return j.select(
+        "pred", "tp",
+        (F.col("n_pred") - F.col("tp")).alias("fp"),
+        (F.col("n_gold") - F.col("tp")).alias("fn"),
+        F.round(prec, 6).alias("precision"),
+        F.round(rec, 6).alias("recall"),
+        F.round(f1, 6).alias("f1"),
+    )
+
+
+SQL_EVAL_MICRO_PRF = f"""
+  WITH gdict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
+       pdict(surface, type_id) AS (VALUES {_PRED_DICT_VALUES_SQL}),
+       toks AS ({_TOKENS_SQL}),
+       {_EVAL_TRIPLES_SQL},
+       agg AS (SELECT
+                 (SELECT count(*) FROM (SELECT * FROM predt INTERSECT SELECT * FROM gold)) AS tp,
+                 (SELECT count(*) FROM predt) AS n_pred,
+                 (SELECT count(*) FROM gold) AS n_gold)
+  SELECT tp, n_pred - tp AS fp, n_gold - tp AS fn,
+         round(CAST(tp AS DOUBLE) / n_pred, 6) AS precision,
+         round(CAST(tp AS DOUBLE) / n_gold, 6) AS recall,
+         round(2 * (CAST(tp AS DOUBLE) / n_pred) * (CAST(tp AS DOUBLE) / n_gold)
+               / (CAST(tp AS DOUBLE) / n_pred + CAST(tp AS DOUBLE) / n_gold), 6) AS f1
+  FROM agg
+"""
+
+
+@query("eval_micro_prf", oracle=SQL_EVAL_MICRO_PRF)
 def q_eval_micro_prf(spark, sf_dir):
     """Micro-mean P/R/F1 accumulation over all docs/slots
     (EvaluatePrediction.java:39-115): one row (tp, fp, fn, precision,
@@ -1632,24 +1578,6 @@ def q_eval_micro_prf(spark, sf_dir):
         F.round(r, 6).alias("recall"),
         F.round(2 * p * r / (p + r), 6).alias("f1"),
     )
-
-
-SQL_EVAL_MICRO_PRF = f"""
-  WITH gdict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
-       pdict(surface, type_id) AS (VALUES {_PRED_DICT_VALUES_SQL}),
-       toks AS ({_TOKENS_SQL}),
-       {_EVAL_TRIPLES_SQL},
-       agg AS (SELECT
-                 (SELECT count(*) FROM (SELECT * FROM predt INTERSECT SELECT * FROM gold)) AS tp,
-                 (SELECT count(*) FROM predt) AS n_pred,
-                 (SELECT count(*) FROM gold) AS n_gold)
-  SELECT tp, n_pred - tp AS fp, n_gold - tp AS fn,
-         round(CAST(tp AS DOUBLE) / n_pred, 6) AS precision,
-         round(CAST(tp AS DOUBLE) / n_gold, 6) AS recall,
-         round(2 * (CAST(tp AS DOUBLE) / n_pred) * (CAST(tp AS DOUBLE) / n_gold)
-               / (CAST(tp AS DOUBLE) / n_pred + CAST(tp AS DOUBLE) / n_gold), 6) AS f1
-  FROM agg
-"""
 
 
 ANN_TABLES = 8      # multi-table LSH: L independent hash tables ...
@@ -1822,69 +1750,12 @@ def _ann_bucketed_cos_build(spark, sf_dir):
     )
 
 
-def q_ann_topk_bucketed(spark, sf_dir):
-    """ANN top-k via LSH buckets, wired END-TO-END (the 100-TB similarity
-    path): multi-table hyperplane buckets, cosine ONLY for pairs sharing a
-    bucket (equi-join — never all-pairs), top-3 neighbors per query
-    vector. Recall >= 0.9 vs brute force on clustered embeddings is pinned
-    in tests/test_ann_bucketed.py (on near-orthogonal vectors no
-    sub-quadratic scheme separates neighbors from noise; the testdata's
-    top-1 cos is only ~0.36)."""
-    cos = _ann_bucketed_cos(spark, sf_dir)
-    w = W.partitionBy("qid").orderBy(F.desc(F.round("cos", 6)), F.asc("nid"))
-    return (
-        cos.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("qid", "nid", "rank", F.round("cos", 4).alias("cos"))
-    )
-
-
 EMB_DEDUP_COS = 0.35  # near-duplicate threshold in embedding space: the
                       # testdata's clustered embeddings put true neighbors
                       # at cos ~0.35-0.4 and noise pairs near 0 (same
                       # threshold as cosine_pairs_threshold, whose output
                       # this operator turns into canonical ids)
 
-
-def q_dedup_embedding(spark, sf_dir):
-    """Embedding-cosine near-duplicate DEDUP wired end-to-end to the
-    canonical-id machinery (the VERDICT r01 gap): LSH multiprobe bucketed
-    candidate pairs (_ann_bucketed_cos — never all-pairs, the 100-TB path)
-    -> threshold cos >= EMB_DEDUP_COS -> undirected edge list ->
-    operators/canonicalize.connected_components (iterative min-id label
-    propagation) -> every vector labeled with its canonical vec_id and the
-    duplicate-cluster size. Singleton vectors keep their own id, so the
-    output has exactly one row per input vector (stable row count).
-    Reference anchor: the reference dedups entities only within a document
-    (dictionary caches); this extends canonicalization corpus-wide per the
-    north rule, with the same merge semantics as dedup_exact."""
-    from .operators.canonicalize import connected_components
-
-    cos = _ann_bucketed_cos(spark, sf_dir)
-    edges = (
-        cos.filter((F.col("qid") < F.col("nid")) & (F.round("cos", 6) >= EMB_DEDUP_COS))
-        .select(F.col("qid").alias("src"), F.col("nid").alias("dst"))
-    )
-    comp = connected_components(edges).select(
-        F.col("id").alias("vec_id"), F.col("component").alias("canonical_id")
-    )
-    all_vecs = _emb(spark, sf_dir).select("vec_id")
-    labeled = (
-        all_vecs.join(comp, "vec_id", "left")
-        .select(
-            "vec_id",
-            F.coalesce("canonical_id", "vec_id").alias("canonical_id"),
-        )
-    )
-    sizes = labeled.groupBy("canonical_id").agg(F.count("*").alias("n_members"))
-    return (
-        labeled.join(sizes, "canonical_id")
-        .select("vec_id", "canonical_id", "n_members")
-    )
-
-
-# SQL_ANN_TOPK_BUCKETED is defined after the shared multi-table CTE block
-# (_ANN_BUCKETED_COS_SQL) below, which it reuses verbatim.
 
 _ANN_BUCKETED_COS_SQL = f"""
   e AS (
@@ -1937,6 +1808,7 @@ _ANN_BUCKETED_COS_SQL = f"""
     FROM dot JOIN norm na ON na.vec_id = qid JOIN norm nb ON nb.vec_id = nid)
 """
 
+
 SQL_DEDUP_EMBEDDING = f"""
   WITH RECURSIVE
   {_ANN_BUCKETED_COS_SQL.strip()},
@@ -1959,6 +1831,44 @@ SQL_DEDUP_EMBEDDING = f"""
 """
 
 
+@query("dedup_embedding", oracle=SQL_DEDUP_EMBEDDING)
+def q_dedup_embedding(spark, sf_dir):
+    """Embedding-cosine near-duplicate DEDUP wired end-to-end to the
+    canonical-id machinery (the VERDICT r01 gap): LSH multiprobe bucketed
+    candidate pairs (_ann_bucketed_cos — never all-pairs, the 100-TB path)
+    -> threshold cos >= EMB_DEDUP_COS -> undirected edge list ->
+    operators/canonicalize.connected_components (iterative min-id label
+    propagation) -> every vector labeled with its canonical vec_id and the
+    duplicate-cluster size. Singleton vectors keep their own id, so the
+    output has exactly one row per input vector (stable row count).
+    Reference anchor: the reference dedups entities only within a document
+    (dictionary caches); this extends canonicalization corpus-wide per the
+    north rule, with the same merge semantics as dedup_exact."""
+    from .operators.canonicalize import connected_components
+
+    cos = _ann_bucketed_cos(spark, sf_dir)
+    edges = (
+        cos.filter((F.col("qid") < F.col("nid")) & (F.round("cos", 6) >= EMB_DEDUP_COS))
+        .select(F.col("qid").alias("src"), F.col("nid").alias("dst"))
+    )
+    comp = connected_components(edges).select(
+        F.col("id").alias("vec_id"), F.col("component").alias("canonical_id")
+    )
+    all_vecs = _emb(spark, sf_dir).select("vec_id")
+    labeled = (
+        all_vecs.join(comp, "vec_id", "left")
+        .select(
+            "vec_id",
+            F.coalesce("canonical_id", "vec_id").alias("canonical_id"),
+        )
+    )
+    sizes = labeled.groupBy("canonical_id").agg(F.count("*").alias("n_members"))
+    return (
+        labeled.join(sizes, "canonical_id")
+        .select("vec_id", "canonical_id", "n_members")
+    )
+
+
 # the corpus-wide cosine_pairs_threshold runs on the bucketed kernel; its
 # oracle reuses the shared multiprobe SQL (defined above) so DuckDB applies
 # the identical candidate admission
@@ -1967,6 +1877,22 @@ SQL_COSINE_PAIRS_THRESHOLD_BUCKETED = f"""
   SELECT qid, nid, round(cos, 4) AS cos FROM cosp
   WHERE qid < nid AND round(cos, 6) >= 0.35
 """
+
+
+@query("cosine_pairs_threshold", oracle=SQL_COSINE_PAIRS_THRESHOLD_BUCKETED)
+def q_cosine_pairs_threshold(spark, sf_dir):
+    """Near-duplicate detection in embedding space, CORPUS-WIDE form: pairs
+    above 0.35 among the LSH multiprobe bucketed candidates
+    (_ann_bucketed_cos — the same admission as dedup_embedding; never
+    all-pairs, so the plan survives 100 TB). The exact all-pairs scan
+    stays available as the bounded-slice query cosine_pairs_exact_slice
+    and per-bucket inside the ANN kernel."""
+    cos = _ann_bucketed_cos(spark, sf_dir)
+    return (
+        cos.filter((F.col("qid") < F.col("nid")) & (F.round("cos", 6) >= 0.35))
+        .select("qid", "nid", F.round("cos", 4).alias("cos"))
+    )
+
 
 SQL_ANN_TOPK_BUCKETED = f"""
   WITH {_ANN_BUCKETED_COS_SQL.strip()},
@@ -1978,25 +1904,22 @@ SQL_ANN_TOPK_BUCKETED = f"""
 """
 
 
-QUERIES.update({
-    "candidates_evidence": q_candidates_evidence,
-    "greedy_fill_top1": q_greedy_fill_top1,
-    "connected_components": q_connected_components,
-    "eval_per_slot_prf": q_eval_per_slot_prf,
-    "eval_micro_prf": q_eval_micro_prf,
-    "ann_topk_bucketed": q_ann_topk_bucketed,
-    "dedup_embedding": q_dedup_embedding,
-})
-ORACLES.update({
-    "candidates_evidence": SQL_CANDIDATES_EVIDENCE,
-    "greedy_fill_top1": SQL_GREEDY_FILL_TOP1,
-    "connected_components": SQL_CONNECTED_COMPONENTS,
-    "eval_per_slot_prf": SQL_EVAL_PER_SLOT_PRF,
-    "eval_micro_prf": SQL_EVAL_MICRO_PRF,
-    "ann_topk_bucketed": SQL_ANN_TOPK_BUCKETED,
-    "dedup_embedding": SQL_DEDUP_EMBEDDING,
-    "cosine_pairs_threshold": SQL_COSINE_PAIRS_THRESHOLD_BUCKETED,
-})
+@query("ann_topk_bucketed", oracle=SQL_ANN_TOPK_BUCKETED)
+def q_ann_topk_bucketed(spark, sf_dir):
+    """ANN top-k via LSH buckets, wired END-TO-END (the 100-TB similarity
+    path): multi-table hyperplane buckets, cosine ONLY for pairs sharing a
+    bucket (equi-join — never all-pairs), top-3 neighbors per query
+    vector. Recall >= 0.9 vs brute force on clustered embeddings is pinned
+    in tests/test_ann_bucketed.py (on near-orthogonal vectors no
+    sub-quadratic scheme separates neighbors from noise; the testdata's
+    top-1 cos is only ~0.36)."""
+    cos = _ann_bucketed_cos(spark, sf_dir)
+    w = W.partitionBy("qid").orderBy(F.desc(F.round("cos", 6)), F.asc("nid"))
+    return (
+        cos.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= 3)
+        .select("qid", "nid", "rank", F.round("cos", 4).alias("cos"))
+    )
 
 
 # --------------------------------------------- round-3 additions
@@ -2016,30 +1939,38 @@ SIMHASH_BUCKET_CAP = 200
 
 
 def _simhash32(spark, sf_dir):
-    """32-bit SimHash per document (same md5-hex-char parity votes as
-    q_simhash, chars 1-32). Shares the engine-portable vote definition so
-    the DuckDB oracle reproduces it bit-for-bit.
-
-    No bit explode: one md5 per token occurrence and 32 aggregate
-    expressions in a single doc_id groupBy (map-side partial agg, one
-    exchange) instead of a 32x row blow-up feeding two shuffles — the
-    vote sums are integers, so the column-wise form is exactly the
-    exploded form the SQL oracle still uses."""
-    t = _tokens(spark, sf_dir).select("doc_id", F.md5("token").alias("h"))
-    votes = [
-        F.sum(
-            F.when(F.ascii(F.substring("h", b + 1, 1)) % 2 == 1, 1).otherwise(-1)
-        ).alias(f"_v{b}")
-        for b in range(SIMHASH_PAIR_BITS)
-    ]
-    per_doc = t.groupBy("doc_id").agg(*votes)
-    sim = None
-    for b in range(SIMHASH_PAIR_BITS):
-        term = F.when(F.col(f"_v{b}") > 0, F.lit(float(2 ** b))).otherwise(F.lit(0.0))
-        sim = term if sim is None else sim + term
-    return per_doc.select("doc_id", sim.cast("long").alias("simhash32"))
+    """32-bit SimHash per document (md5-hex chars 1-32), the signature
+    dedup_simhash_band splits into bands."""
+    return _simhash_signature(spark, sf_dir, SIMHASH_PAIR_BITS, "simhash32")
 
 
+SQL_DEDUP_SIMHASH_BAND = f"""
+  WITH toks AS ({_TOKENS_SQL}),
+  bits AS (SELECT doc_id, token, unnest(range(0, {SIMHASH_PAIR_BITS})) AS b FROM toks),
+  per_bit AS (
+    SELECT doc_id, b,
+           sum(CASE WHEN ascii(substring(md5(token), CAST(b + 1 AS INT), 1)) % 2 = 1
+                    THEN 1 ELSE -1 END) AS v
+    FROM bits GROUP BY doc_id, b),
+  sim AS (SELECT doc_id, CAST(sum(CASE WHEN v > 0 THEN pow(2, b) ELSE 0 END) AS BIGINT) AS h
+          FROM per_bit GROUP BY doc_id),
+  bands AS (SELECT doc_id, h, unnest(range(0, {SIMHASH_BANDS})) AS band FROM sim),
+  bv AS (SELECT doc_id, h, band,
+                CAST(floor(h / pow(2, band * {SIMHASH_BAND_BITS})) AS BIGINT)
+                  % {2 ** SIMHASH_BAND_BITS} AS bval
+         FROM bands),
+  capped AS (SELECT * FROM bv
+             QUALIFY count(*) OVER (PARTITION BY band, bval)
+                     BETWEEN 2 AND {SIMHASH_BUCKET_CAP}),
+  pairs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b, a.h AS ha, b.h AS hb
+            FROM capped a JOIN capped b ON a.band = b.band AND a.bval = b.bval
+                                       AND a.doc_id < b.doc_id)
+  SELECT doc_a, doc_b, CAST(bit_count(xor(ha, hb)) AS INT) AS hamming
+  FROM pairs WHERE bit_count(xor(ha, hb)) <= {SIMHASH_MAX_HAMMING}
+"""
+
+
+@query("dedup_simhash_band", oracle=SQL_DEDUP_SIMHASH_BAND)
 def q_dedup_simhash_band(spark, sf_dir):
     """SimHash near-duplicate pairs (hamming distance <= 3 over 32 bits)
     via LSH banding — the candidate-generation stage q_simhash's signature
@@ -2074,32 +2005,6 @@ def q_dedup_simhash_band(spark, sf_dir):
     return out.filter(F.col("hamming") <= SIMHASH_MAX_HAMMING).select("doc_a", "doc_b", "hamming")
 
 
-SQL_DEDUP_SIMHASH_BAND = f"""
-  WITH toks AS ({_TOKENS_SQL}),
-  bits AS (SELECT doc_id, token, unnest(range(0, {SIMHASH_PAIR_BITS})) AS b FROM toks),
-  per_bit AS (
-    SELECT doc_id, b,
-           sum(CASE WHEN ascii(substring(md5(token), CAST(b + 1 AS INT), 1)) % 2 = 1
-                    THEN 1 ELSE -1 END) AS v
-    FROM bits GROUP BY doc_id, b),
-  sim AS (SELECT doc_id, CAST(sum(CASE WHEN v > 0 THEN pow(2, b) ELSE 0 END) AS BIGINT) AS h
-          FROM per_bit GROUP BY doc_id),
-  bands AS (SELECT doc_id, h, unnest(range(0, {SIMHASH_BANDS})) AS band FROM sim),
-  bv AS (SELECT doc_id, h, band,
-                CAST(floor(h / pow(2, band * {SIMHASH_BAND_BITS})) AS BIGINT)
-                  % {2 ** SIMHASH_BAND_BITS} AS bval
-         FROM bands),
-  capped AS (SELECT * FROM bv
-             QUALIFY count(*) OVER (PARTITION BY band, bval)
-                     BETWEEN 2 AND {SIMHASH_BUCKET_CAP}),
-  pairs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b, a.h AS ha, b.h AS hb
-            FROM capped a JOIN capped b ON a.band = b.band AND a.bval = b.bval
-                                       AND a.doc_id < b.doc_id)
-  SELECT doc_a, doc_b, CAST(bit_count(xor(ha, hb)) AS INT) AS hamming
-  FROM pairs WHERE bit_count(xor(ha, hb)) <= {SIMHASH_MAX_HAMMING}
-"""
-
-
 # surfaces with 1-2 edits against the inline DICT — the unknown-token
 # stream the production fuzzy linker receives (mentions the NER dictionary
 # pass could not ground). Transposition-heavy entries (tabel, fliter,
@@ -2122,38 +2027,6 @@ FUZZY_DICT = DICT + [
 ]
 _FUZZY_TOKENS_SQL = ", ".join(f"('{t}')" for t in FUZZY_TOKENS)
 _DICT_TYPED_SQL = ", ".join(f"('{s}', '{t}')" for s, t in FUZZY_DICT)
-
-
-def q_fuzzy_topk_links(spark, sf_dir):
-    """The PRODUCTION fuzzy-retrieval operator, oracle-paired: calls
-    operators/linking.build_link_map (gram-bucketed similarity join,
-    Jaccard >= 0.2 prefilter, levenshtein-similarity >= 0.7 gate, top-5
-    alternatives per surface with retrieval rank — LuceneRetrieval.java:
-    39-40 semantics, the round-2 verdict Missing #2 fix) on a fixed
-    unknown-surface stream against the inline DICT as the ontology."""
-    from types import SimpleNamespace
-
-    from .operators.linking import build_link_map
-
-    onto = SimpleNamespace(
-        individuals=pd.DataFrame(
-            {"individual_id": [s for s, _ in FUZZY_DICT],
-             "class_id": [t for _, t in FUZZY_DICT]}
-        ),
-        dictionary=pd.DataFrame(
-            {
-                "type_id": [s for s, _ in FUZZY_DICT],
-                "surface_form": [s for s, _ in FUZZY_DICT],
-                "kind": "individual",
-            }
-        ),
-    )
-    unknown = spark.createDataFrame([(t,) for t in FUZZY_TOKENS], ["text"])
-    links = build_link_map(unknown, onto, spark)
-    return links.select(
-        "token", "type_id", "class_id",
-        F.round("lev_sim", 6).alias("lev_sim"), "rank",
-    )
 
 
 SQL_FUZZY_TOPK_LINKS = f"""
@@ -2187,14 +2060,37 @@ SQL_FUZZY_TOPK_LINKS = f"""
 """
 
 
-QUERIES.update({
-    "dedup_simhash_band": q_dedup_simhash_band,
-    "fuzzy_topk_links": q_fuzzy_topk_links,
-})
-ORACLES.update({
-    "dedup_simhash_band": SQL_DEDUP_SIMHASH_BAND,
-    "fuzzy_topk_links": SQL_FUZZY_TOPK_LINKS,
-})
+@query("fuzzy_topk_links", oracle=SQL_FUZZY_TOPK_LINKS)
+def q_fuzzy_topk_links(spark, sf_dir):
+    """The PRODUCTION fuzzy-retrieval operator, oracle-paired: calls
+    operators/linking.build_link_map (gram-bucketed similarity join,
+    Jaccard >= 0.2 prefilter, levenshtein-similarity >= 0.7 gate, top-5
+    alternatives per surface with retrieval rank — LuceneRetrieval.java:
+    39-40 semantics, the round-2 verdict Missing #2 fix) on a fixed
+    unknown-surface stream against the inline DICT as the ontology."""
+    from types import SimpleNamespace
+
+    from .operators.linking import build_link_map
+
+    onto = SimpleNamespace(
+        individuals=pd.DataFrame(
+            {"individual_id": [s for s, _ in FUZZY_DICT],
+             "class_id": [t for _, t in FUZZY_DICT]}
+        ),
+        dictionary=pd.DataFrame(
+            {
+                "type_id": [s for s, _ in FUZZY_DICT],
+                "surface_form": [s for s, _ in FUZZY_DICT],
+                "kind": "individual",
+            }
+        ),
+    )
+    unknown = spark.createDataFrame([(t,) for t in FUZZY_TOKENS], ["text"])
+    links = build_link_map(unknown, onto, spark)
+    return links.select(
+        "token", "type_id", "class_id",
+        F.round("lev_sim", 6).alias("lev_sim"), "rank",
+    )
 
 
 # --------------------------------------------- IVF similarity search
@@ -2228,27 +2124,6 @@ def _ivf_assign(spark, sf_dir):
     return e.crossJoin(F.broadcast(cent)).select(
         "vec_id", "cid", _cos_expr("v", "cv").alias("cos_c")
     )
-
-
-def q_ann_topk_ivf(spark, sf_dir):
-    """IVF top-3 ANN: nearest-centroid inverted lists, NPROBE-list probe
-    per query, exact cosine on probed candidates only — the production
-    operator (operators/ivf.ivf_topk) with the codebook pinned to the
-    first IVF_K corpus vectors so the DuckDB oracle sees identical
-    centroids. At scale: the codebook is broadcast (assignment is one map
-    stage), lists are partitioned by cid, and the probe join shuffles only
-    (query x NPROBE) rows — never the corpus."""
-    from .operators.ivf import ivf_topk
-
-    e = _emb(spark, sf_dir)
-    codebook = e.filter(F.col("vec_id") < IVF_K).select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").cast("array<double>").alias("cv"),
-    )
-    qids = e.filter(F.col("vec_id") < IVF_MAX_QID).select(
-        F.col("vec_id").alias("qid")
-    )
-    return ivf_topk(e, codebook, qids, k=3, nprobe=IVF_NPROBE)
 
 
 SQL_ANN_TOPK_IVF = f"""
@@ -2288,8 +2163,26 @@ SQL_ANN_TOPK_IVF = f"""
 """
 
 
-QUERIES["ann_topk_ivf"] = q_ann_topk_ivf
-ORACLES["ann_topk_ivf"] = SQL_ANN_TOPK_IVF
+@query("ann_topk_ivf", oracle=SQL_ANN_TOPK_IVF)
+def q_ann_topk_ivf(spark, sf_dir):
+    """IVF top-3 ANN: nearest-centroid inverted lists, NPROBE-list probe
+    per query, exact cosine on probed candidates only — the production
+    operator (operators/ivf.ivf_topk) with the codebook pinned to the
+    first IVF_K corpus vectors so the DuckDB oracle sees identical
+    centroids. At scale: the codebook is broadcast (assignment is one map
+    stage), lists are partitioned by cid, and the probe join shuffles only
+    (query x NPROBE) rows — never the corpus."""
+    from .operators.ivf import ivf_topk
+
+    e = _emb(spark, sf_dir)
+    codebook = e.filter(F.col("vec_id") < IVF_K).select(
+        F.col("vec_id").alias("cid"),
+        F.col("embedding").cast("array<double>").alias("cv"),
+    )
+    qids = e.filter(F.col("vec_id") < IVF_MAX_QID).select(
+        F.col("vec_id").alias("qid")
+    )
+    return ivf_topk(e, codebook, qids, k=3, nprobe=IVF_NPROBE)
 
 
 # --------------------------------------------- exact substring dedup
@@ -2319,6 +2212,41 @@ def _kgrams(spark, sf_dir, k):
     )
 
 
+SQL_DEDUP_SUBSTRING_SPANS = f"""
+  WITH toks AS ({_TOKENS_SQL}),
+  g AS (
+    SELECT doc_id, pos,
+           token || ' ' || {" || ' ' || ".join(f"t{i}" for i in range(1, SUBSTR_K))} AS gram
+    FROM (SELECT doc_id, pos, token,
+                 {", ".join(f"lead(token, {i}) OVER (PARTITION BY doc_id ORDER BY pos) AS t{i}"
+                            for i in range(1, SUBSTR_K))}
+          FROM toks)
+    WHERE t{SUBSTR_K - 1} IS NOT NULL),
+  rep AS (
+    SELECT doc_id, pos FROM g WHERE gram IN (
+      SELECT gram FROM g GROUP BY gram
+      HAVING count(DISTINCT doc_id) >= {SUBSTR_MIN_DF})),
+  isl AS (
+    SELECT doc_id, pos,
+           sum(CASE WHEN pos - lagpos > {SUBSTR_K} THEN 1 ELSE 0 END)
+             OVER (PARTITION BY doc_id ORDER BY pos) AS island
+    FROM (SELECT doc_id, pos,
+                 lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) AS lagpos
+          FROM rep)),
+  spans AS (
+    SELECT doc_id, island, min(pos) AS span_start,
+           CAST(max(pos) + {SUBSTR_K - 1} AS INT) AS span_end
+    FROM isl GROUP BY doc_id, island)
+  SELECT s.doc_id, s.span_start, s.span_end,
+         CAST(s.span_end - s.span_start + 1 AS INT) AS n_tokens,
+         string_agg(t.token, ' ' ORDER BY t.pos) AS span_text
+  FROM spans s JOIN toks t
+    ON t.doc_id = s.doc_id AND t.pos BETWEEN s.span_start AND s.span_end
+  GROUP BY s.doc_id, s.span_start, s.span_end
+"""
+
+
+@query("dedup_substring_spans", oracle=SQL_DEDUP_SUBSTRING_SPANS)
 def q_dedup_substring_spans(spark, sf_dir):
     """Maximal cross-document repeated token spans (exact-substring dedup
     candidates): every SUBSTR_K-token window of the span occurs in >=
@@ -2360,44 +2288,6 @@ def q_dedup_substring_spans(spark, sf_dir):
     ).select("doc_id", "span_start", "span_end", "n_tokens", "span_text")
 
 
-SQL_DEDUP_SUBSTRING_SPANS = f"""
-  WITH toks AS ({_TOKENS_SQL}),
-  g AS (
-    SELECT doc_id, pos,
-           token || ' ' || {" || ' ' || ".join(f"t{i}" for i in range(1, SUBSTR_K))} AS gram
-    FROM (SELECT doc_id, pos, token,
-                 {", ".join(f"lead(token, {i}) OVER (PARTITION BY doc_id ORDER BY pos) AS t{i}"
-                            for i in range(1, SUBSTR_K))}
-          FROM toks)
-    WHERE t{SUBSTR_K - 1} IS NOT NULL),
-  rep AS (
-    SELECT doc_id, pos FROM g WHERE gram IN (
-      SELECT gram FROM g GROUP BY gram
-      HAVING count(DISTINCT doc_id) >= {SUBSTR_MIN_DF})),
-  isl AS (
-    SELECT doc_id, pos,
-           sum(CASE WHEN pos - lagpos > {SUBSTR_K} THEN 1 ELSE 0 END)
-             OVER (PARTITION BY doc_id ORDER BY pos) AS island
-    FROM (SELECT doc_id, pos,
-                 lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) AS lagpos
-          FROM rep)),
-  spans AS (
-    SELECT doc_id, island, min(pos) AS span_start,
-           CAST(max(pos) + {SUBSTR_K - 1} AS INT) AS span_end
-    FROM isl GROUP BY doc_id, island)
-  SELECT s.doc_id, s.span_start, s.span_end,
-         CAST(s.span_end - s.span_start + 1 AS INT) AS n_tokens,
-         string_agg(t.token, ' ' ORDER BY t.pos) AS span_text
-  FROM spans s JOIN toks t
-    ON t.doc_id = s.doc_id AND t.pos BETWEEN s.span_start AND s.span_end
-  GROUP BY s.doc_id, s.span_start, s.span_end
-"""
-
-
-QUERIES["dedup_substring_spans"] = q_dedup_substring_spans
-ORACLES["dedup_substring_spans"] = SQL_DEDUP_SUBSTRING_SPANS
-
-
 # ------------------------------------------- corpus sampling / quality gates
 
 # per-language target keep rates: downsample the dominant language,
@@ -2405,6 +2295,27 @@ ORACLES["dedup_substring_spans"] = SQL_DEDUP_SUBSTRING_SPANS
 SAMPLE_RATES = {"en": 0.25, "de": 0.5, "es": 0.5, "fr": 0.5, "zh": 1.0}
 
 
+_SAMPLE_RATES_SQL = ", ".join(f"('{k}', {v})" for k, v in sorted(SAMPLE_RATES.items()))
+
+
+SQL_SAMPLE_STRATIFIED = f"""
+  WITH h AS (SELECT doc_id, lang,
+                    md5('s' || CAST(doc_id AS VARCHAR)) AS hh
+             FROM documents),
+  u AS (SELECT doc_id, lang, round((
+            (strpos('0123456789abcdef', substring(hh, 1, 1)) - 1) * 4096
+          + (strpos('0123456789abcdef', substring(hh, 2, 1)) - 1) * 256
+          + (strpos('0123456789abcdef', substring(hh, 3, 1)) - 1) * 16
+          + (strpos('0123456789abcdef', substring(hh, 4, 1)) - 1)) / 65536.0, 6) AS u
+        FROM h),
+  rates(lang, rate) AS (VALUES {_SAMPLE_RATES_SQL})
+  SELECT u.doc_id, u.lang, u.u
+  FROM u JOIN rates r ON u.lang = r.lang
+  WHERE u.u < r.rate
+"""
+
+
+@query("sample_stratified", oracle=SQL_SAMPLE_STRATIFIED)
 def q_sample_stratified(spark, sf_dir):
     """Deterministic stratified sampling: keep a document iff
     u(doc_id) < rate(lang), where u is a uniform [0,1) value derived from
@@ -2428,28 +2339,31 @@ def q_sample_stratified(spark, sf_dir):
     )
 
 
-_SAMPLE_RATES_SQL = ", ".join(f"('{k}', {v})" for k, v in sorted(SAMPLE_RATES.items()))
-
-SQL_SAMPLE_STRATIFIED = f"""
-  WITH h AS (SELECT doc_id, lang,
-                    md5('s' || CAST(doc_id AS VARCHAR)) AS hh
-             FROM documents),
-  u AS (SELECT doc_id, lang, round((
-            (strpos('0123456789abcdef', substring(hh, 1, 1)) - 1) * 4096
-          + (strpos('0123456789abcdef', substring(hh, 2, 1)) - 1) * 256
-          + (strpos('0123456789abcdef', substring(hh, 3, 1)) - 1) * 16
-          + (strpos('0123456789abcdef', substring(hh, 4, 1)) - 1)) / 65536.0, 6) AS u
-        FROM h),
-  rates(lang, rate) AS (VALUES {_SAMPLE_RATES_SQL})
-  SELECT u.doc_id, u.lang, u.u
-  FROM u JOIN rates r ON u.lang = r.lang
-  WHERE u.u < r.rate
+SQL_QUALITY_REPETITION = f"""
+  WITH toks AS ({_TOKENS_SQL}),
+  base AS (SELECT doc_id, count(*) AS n_tok,
+                  count(DISTINCT token) AS n_distinct
+           FROM toks GROUP BY doc_id),
+  top AS (SELECT doc_id, max(tf) AS max_tf
+          FROM (SELECT doc_id, token, count(*) AS tf
+                FROM toks GROUP BY doc_id, token)
+          GROUP BY doc_id),
+  big AS (SELECT doc_id, count(*) AS n_big,
+                 count(DISTINCT bigram) AS n_big_distinct
+          FROM (SELECT doc_id, token || ' ' ||
+                       lead(token) OVER (PARTITION BY doc_id ORDER BY pos) AS bigram
+                FROM toks)
+          WHERE bigram IS NOT NULL GROUP BY doc_id)
+  SELECT base.doc_id,
+         round(1 - CAST(n_distinct AS DOUBLE) / n_tok, 6) AS dup_token_frac,
+         round(CAST(max_tf AS DOUBLE) / n_tok, 6) AS top_token_frac,
+         round(1 - CAST(n_big_distinct AS DOUBLE) / n_big, 6) AS dup_bigram_frac
+  FROM base JOIN top ON base.doc_id = top.doc_id
+            JOIN big ON base.doc_id = big.doc_id
 """
 
-QUERIES["sample_stratified"] = q_sample_stratified
-ORACLES["sample_stratified"] = SQL_SAMPLE_STRATIFIED
 
-
+@query("quality_repetition", oracle=SQL_QUALITY_REPETITION)
 def q_quality_repetition(spark, sf_dir):
     """Repetition-ratio quality signals (the Gopher-style filters): for
     each document, the duplicate-token fraction, the most-frequent-token
@@ -2501,33 +2415,27 @@ def q_quality_repetition(spark, sf_dir):
     )
 
 
-SQL_QUALITY_REPETITION = f"""
+SQL_QUALITY_PERPLEXITY = f"""
   WITH toks AS ({_TOKENS_SQL}),
-  base AS (SELECT doc_id, count(*) AS n_tok,
-                  count(DISTINCT token) AS n_distinct
-           FROM toks GROUP BY doc_id),
-  top AS (SELECT doc_id, max(tf) AS max_tf
-          FROM (SELECT doc_id, token, count(*) AS tf
-                FROM toks GROUP BY doc_id, token)
-          GROUP BY doc_id),
-  big AS (SELECT doc_id, count(*) AS n_big,
-                 count(DISTINCT bigram) AS n_big_distinct
-          FROM (SELECT doc_id, token || ' ' ||
-                       lead(token) OVER (PARTITION BY doc_id ORDER BY pos) AS bigram
+  big AS (SELECT doc_id, token, nxt
+          FROM (SELECT doc_id, token,
+                       lead(token) OVER (PARTITION BY doc_id ORDER BY pos) AS nxt
                 FROM toks)
-          WHERE bigram IS NOT NULL GROUP BY doc_id)
-  SELECT base.doc_id,
-         round(1 - CAST(n_distinct AS DOUBLE) / n_tok, 6) AS dup_token_frac,
-         round(CAST(max_tf AS DOUBLE) / n_tok, 6) AS top_token_frac,
-         round(1 - CAST(n_big_distinct AS DOUBLE) / n_big, 6) AS dup_bigram_frac
-  FROM base JOIN top ON base.doc_id = top.doc_id
-            JOIN big ON base.doc_id = big.doc_id
+          WHERE nxt IS NOT NULL),
+  c12 AS (SELECT token, nxt, count(*) AS c12 FROM big GROUP BY token, nxt),
+  c1 AS (SELECT token, count(*) AS c1 FROM big GROUP BY token),
+  vocab AS (SELECT count(DISTINCT token) AS v FROM toks)
+  SELECT b.doc_id, count(*) AS n_bigrams,
+         round(avg(-ln((c12 + 1.0) / (c1 + v)))::DOUBLE, 6) AS avg_nll
+  FROM big b
+  JOIN c12 ON b.token = c12.token AND b.nxt = c12.nxt
+  JOIN c1 ON b.token = c1.token
+  CROSS JOIN vocab
+  GROUP BY b.doc_id
 """
 
-QUERIES["quality_repetition"] = q_quality_repetition
-ORACLES["quality_repetition"] = SQL_QUALITY_REPETITION
 
-
+@query("quality_perplexity", oracle=SQL_QUALITY_PERPLEXITY)
 def q_quality_perplexity(spark, sf_dir):
     """Model-based quality scoring: train an add-1-smoothed bigram LM on
     the corpus itself, score each document by its average negative log
@@ -2571,31 +2479,28 @@ def q_quality_perplexity(spark, sf_dir):
     )
 
 
-SQL_QUALITY_PERPLEXITY = f"""
-  WITH toks AS ({_TOKENS_SQL}),
-  big AS (SELECT doc_id, token, nxt
-          FROM (SELECT doc_id, token,
-                       lead(token) OVER (PARTITION BY doc_id ORDER BY pos) AS nxt
-                FROM toks)
-          WHERE nxt IS NOT NULL),
-  c12 AS (SELECT token, nxt, count(*) AS c12 FROM big GROUP BY token, nxt),
-  c1 AS (SELECT token, count(*) AS c1 FROM big GROUP BY token),
-  vocab AS (SELECT count(DISTINCT token) AS v FROM toks)
-  SELECT b.doc_id, count(*) AS n_bigrams,
-         round(avg(-ln((c12 + 1.0) / (c1 + v)))::DOUBLE, 6) AS avg_nll
-  FROM big b
-  JOIN c12 ON b.token = c12.token AND b.nxt = c12.nxt
-  JOIN c1 ON b.token = c1.token
-  CROSS JOIN vocab
-  GROUP BY b.doc_id
-"""
-
-QUERIES["quality_perplexity"] = q_quality_perplexity
-ORACLES["quality_perplexity"] = SQL_QUALITY_PERPLEXITY
-
-
 # ------------------------------------------------------------ KG analytics
 
+SQL_KG_DEGREE = f"""
+  WITH dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
+  toks AS ({_TOKENS_SQL}),
+  triples AS (SELECT DISTINCT 'doc_' || CAST(doc_id AS VARCHAR) AS subj,
+                     'mentions_' || type_id AS pred, token AS obj
+              FROM toks JOIN dict ON token = surface),
+  o AS (SELECT subj AS node, count(*) AS out_deg,
+               count(DISTINCT pred) AS out_preds
+        FROM triples GROUP BY subj),
+  i AS (SELECT obj AS node, count(*) AS in_deg,
+               count(DISTINCT pred) AS in_preds
+        FROM triples GROUP BY obj)
+  SELECT coalesce(o.node, i.node) AS node,
+         coalesce(out_deg, 0) AS out_deg, coalesce(out_preds, 0) AS out_preds,
+         coalesce(in_deg, 0) AS in_deg, coalesce(in_preds, 0) AS in_preds
+  FROM o FULL OUTER JOIN i ON o.node = i.node
+"""
+
+
+@query("kg_degree", oracle=SQL_KG_DEGREE)
 def q_kg_degree(spark, sf_dir):
     """Degree statistics of the materialized KG — the first quality review
     anyone runs on extracted triples: per node, out/in degree and the
@@ -2623,28 +2528,6 @@ def q_kg_degree(spark, sf_dir):
             F.coalesce("in_preds", F.lit(0)).alias("in_preds"),
         )
     )
-
-
-SQL_KG_DEGREE = f"""
-  WITH dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
-  toks AS ({_TOKENS_SQL}),
-  triples AS (SELECT DISTINCT 'doc_' || CAST(doc_id AS VARCHAR) AS subj,
-                     'mentions_' || type_id AS pred, token AS obj
-              FROM toks JOIN dict ON token = surface),
-  o AS (SELECT subj AS node, count(*) AS out_deg,
-               count(DISTINCT pred) AS out_preds
-        FROM triples GROUP BY subj),
-  i AS (SELECT obj AS node, count(*) AS in_deg,
-               count(DISTINCT pred) AS in_preds
-        FROM triples GROUP BY obj)
-  SELECT coalesce(o.node, i.node) AS node,
-         coalesce(out_deg, 0) AS out_deg, coalesce(out_preds, 0) AS out_preds,
-         coalesce(in_deg, 0) AS in_deg, coalesce(in_preds, 0) AS in_preds
-  FROM o FULL OUTER JOIN i ON o.node = i.node
-"""
-
-QUERIES["kg_degree"] = q_kg_degree
-ORACLES["kg_degree"] = SQL_KG_DEGREE
 
 
 PAGERANK_D = 0.85
@@ -2698,16 +2581,6 @@ def pagerank_kernel(edge_df, iters: int = PAGERANK_ITERS,
     return pr.select("node", F.round("pr", 6).alias("pagerank"))
 
 
-def q_kg_pagerank(spark, sf_dir):
-    """PageRank over the materialized KG (damping 0.85, 3 iterations) —
-    the pagerank_kernel applied to the extraction's triple table. At
-    scale this is the standard iterative-join PageRank — iterations are
-    bounded and the rank table stays node-sized, so lineage is shallow
-    enough to skip checkpointing at 3 rounds (canonicalize.py shows the
-    localCheckpoint pattern where rounds are data-dependent)."""
-    return pagerank_kernel(q_triples_kg(spark, sf_dir))
-
-
 def _pagerank_sql() -> str:
     head = f"""
   WITH dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
@@ -2739,13 +2612,37 @@ def _pagerank_sql() -> str:
 
 SQL_KG_PAGERANK = _pagerank_sql()
 
-QUERIES["kg_pagerank"] = q_kg_pagerank
-ORACLES["kg_pagerank"] = SQL_KG_PAGERANK
+
+@query("kg_pagerank", oracle=SQL_KG_PAGERANK)
+def q_kg_pagerank(spark, sf_dir):
+    """PageRank over the materialized KG (damping 0.85, 3 iterations) —
+    the pagerank_kernel applied to the extraction's triple table. At
+    scale this is the standard iterative-join PageRank — iterations are
+    bounded and the rank table stays node-sized, so lineage is shallow
+    enough to skip checkpointing at 3 rounds (canonicalize.py shows the
+    localCheckpoint pattern where rounds are data-dependent)."""
+    return pagerank_kernel(q_triples_kg(spark, sf_dir))
 
 
 SKEW_ROWS_PER_BUCKET = 1000  # target rows per (pred, salt) write task
 
 
+SQL_SKEW_PROFILE = f"""
+  WITH dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
+  toks AS ({_TOKENS_SQL}),
+  triples AS (SELECT DISTINCT 'doc_' || CAST(doc_id AS VARCHAR) AS subj,
+                     'mentions_' || type_id AS pred, token AS obj
+              FROM toks JOIN dict ON token = surface),
+  per AS (SELECT pred, count(*) AS n FROM triples GROUP BY pred),
+  tot AS (SELECT sum(n) AS tot FROM per)
+  SELECT pred, n, round(CAST(n AS DOUBLE) / tot, 6) AS share,
+         CAST(row_number() OVER (ORDER BY n DESC, pred ASC) AS INT) AS rank,
+         CAST(greatest(1, ceil(CAST(n AS DOUBLE) / {SKEW_ROWS_PER_BUCKET})) AS INT) AS salt_buckets
+  FROM per CROSS JOIN tot
+"""
+
+
+@query("skew_profile", oracle=SQL_SKEW_PROFILE)
 def q_skew_profile(spark, sf_dir):
     """Hot-key profile of the triple table's predicate column — the
     planning input for the salted partitioned sink (operators/triples.py:
@@ -2772,24 +2669,6 @@ def q_skew_profile(spark, sf_dir):
     )
 
 
-SQL_SKEW_PROFILE = f"""
-  WITH dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
-  toks AS ({_TOKENS_SQL}),
-  triples AS (SELECT DISTINCT 'doc_' || CAST(doc_id AS VARCHAR) AS subj,
-                     'mentions_' || type_id AS pred, token AS obj
-              FROM toks JOIN dict ON token = surface),
-  per AS (SELECT pred, count(*) AS n FROM triples GROUP BY pred),
-  tot AS (SELECT sum(n) AS tot FROM per)
-  SELECT pred, n, round(CAST(n AS DOUBLE) / tot, 6) AS share,
-         CAST(row_number() OVER (ORDER BY n DESC, pred ASC) AS INT) AS rank,
-         CAST(greatest(1, ceil(CAST(n AS DOUBLE) / {SKEW_ROWS_PER_BUCKET})) AS INT) AS salt_buckets
-  FROM per CROSS JOIN tot
-"""
-
-QUERIES["skew_profile"] = q_skew_profile
-ORACLES["skew_profile"] = SQL_SKEW_PROFILE
-
-
 # benchmark snippets to decontaminate against (inline so both engines see
 # identical inputs; in production this is a small benchmark table)
 DECON_SNIPPETS = [
@@ -2808,6 +2687,21 @@ def _snippet_shingles():
     return out
 
 
+_SNIPPET_SHINGLES_SQL = ", ".join(
+    f"('{sid}', '{sh}')" for sid, sh in _snippet_shingles()
+)
+
+
+SQL_DECONTAMINATE = f"""
+  WITH sh AS ({_SHINGLES_SQL}),
+  snips(snippet_id, shingle) AS (VALUES {_SNIPPET_SHINGLES_SQL})
+  SELECT doc_id, snippet_id, count(*) AS n_hits, min(pos) AS first_pos
+  FROM sh JOIN snips USING (shingle)
+  GROUP BY doc_id, snippet_id
+"""
+
+
+@query("decontaminate", oracle=SQL_DECONTAMINATE)
 def q_decontaminate(spark, sf_dir):
     """Benchmark decontamination: flag documents sharing any k-token
     shingle with a benchmark snippet set (the eval-leak filter every
@@ -2830,22 +2724,24 @@ def q_decontaminate(spark, sf_dir):
     )
 
 
-_SNIPPET_SHINGLES_SQL = ", ".join(
-    f"('{sid}', '{sh}')" for sid, sh in _snippet_shingles()
-)
-
-SQL_DECONTAMINATE = f"""
-  WITH sh AS ({_SHINGLES_SQL}),
-  snips(snippet_id, shingle) AS (VALUES {_SNIPPET_SHINGLES_SQL})
-  SELECT doc_id, snippet_id, count(*) AS n_hits, min(pos) AS first_pos
-  FROM sh JOIN snips USING (shingle)
-  GROUP BY doc_id, snippet_id
+SQL_KG_PMI = f"""
+  WITH dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
+  toks AS ({_TOKENS_SQL}),
+  m AS (SELECT DISTINCT doc_id, token FROM toks JOIN dict ON token = surface),
+  nd AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents),
+  dfp AS (SELECT token, count(DISTINCT doc_id) AS df FROM m GROUP BY token),
+  co AS (SELECT a.token AS tok_a, b.token AS tok_b, count(*) AS co_docs
+         FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.token < b.token
+         GROUP BY a.token, b.token)
+  SELECT tok_a, tok_b, co_docs,
+         round(ln(CAST(n_docs * co_docs AS DOUBLE) / (da.df * db.df)), 6) AS pmi
+  FROM co JOIN dfp da ON da.token = tok_a
+          JOIN dfp db ON db.token = tok_b
+          CROSS JOIN nd
 """
 
-QUERIES["decontaminate"] = q_decontaminate
-ORACLES["decontaminate"] = SQL_DECONTAMINATE
 
-
+@query("kg_pmi", oracle=SQL_KG_PMI)
 def q_kg_pmi(spark, sf_dir):
     """Entity-pair pointwise mutual information over document
     co-occurrence — the relation-discovery signal behind CooccurrenceTemplate
@@ -2881,32 +2777,33 @@ def q_kg_pmi(spark, sf_dir):
     )
 
 
-SQL_KG_PMI = f"""
-  WITH dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
-  toks AS ({_TOKENS_SQL}),
-  m AS (SELECT DISTINCT doc_id, token FROM toks JOIN dict ON token = surface),
-  nd AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents),
-  dfp AS (SELECT token, count(DISTINCT doc_id) AS df FROM m GROUP BY token),
-  co AS (SELECT a.token AS tok_a, b.token AS tok_b, count(*) AS co_docs
-         FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.token < b.token
-         GROUP BY a.token, b.token)
-  SELECT tok_a, tok_b, co_docs,
-         round(ln(CAST(n_docs * co_docs AS DOUBLE) / (da.df * db.df)), 6) AS pmi
-  FROM co JOIN dfp da ON da.token = tok_a
-          JOIN dfp db ON db.token = tok_b
-          CROSS JOIN nd
-"""
-
-QUERIES["kg_pmi"] = q_kg_pmi
-ORACLES["kg_pmi"] = SQL_KG_PMI
-
-
 # entities present in more than this many documents are hubs: they connect
 # O(df^2) document pairs, so the overlap candidate generator excludes them
 # (same reasoning as SHINGLE_DF_CAP for the jaccard verifier)
 ENTITY_DF_CAP = 50
 
 
+SQL_KG_ENTITY_OVERLAP = f"""
+  WITH dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
+  toks AS ({_TOKENS_SQL}),
+  dt AS (SELECT doc_id, pos, token FROM toks
+         WHERE token IN (SELECT surface FROM dict)),
+  bi AS (SELECT a.doc_id, a.token || ' ' || b.token AS ent
+         FROM dt a JOIN dt b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1),
+  m AS (SELECT DISTINCT doc_id, ent
+        FROM (SELECT doc_id, token AS ent FROM dt UNION ALL
+              SELECT doc_id, ent FROM bi)),
+  mk AS (SELECT doc_id, ent FROM m WHERE ent IN
+         (SELECT ent FROM m GROUP BY ent
+          HAVING count(*) <= {ENTITY_DF_CAP}))
+  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+         count(*) AS n_shared, min(a.ent) AS first_entity
+  FROM mk a JOIN mk b ON a.ent = b.ent AND a.doc_id < b.doc_id
+  GROUP BY a.doc_id, b.doc_id
+"""
+
+
+@query("kg_entity_overlap", oracle=SQL_KG_ENTITY_OVERLAP)
 def q_kg_entity_overlap(spark, sf_dir):
     """Document-pair candidates by shared entities — the KG-side analog of
     shingle-based dedup candidate generation: two documents that mention
@@ -2951,29 +2848,19 @@ def q_kg_entity_overlap(spark, sf_dir):
     )
 
 
-SQL_KG_ENTITY_OVERLAP = f"""
+SQL_KG_TRIANGLES = f"""
   WITH dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
   toks AS ({_TOKENS_SQL}),
-  dt AS (SELECT doc_id, pos, token FROM toks
-         WHERE token IN (SELECT surface FROM dict)),
-  bi AS (SELECT a.doc_id, a.token || ' ' || b.token AS ent
-         FROM dt a JOIN dt b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1),
-  m AS (SELECT DISTINCT doc_id, ent
-        FROM (SELECT doc_id, token AS ent FROM dt UNION ALL
-              SELECT doc_id, ent FROM bi)),
-  mk AS (SELECT doc_id, ent FROM m WHERE ent IN
-         (SELECT ent FROM m GROUP BY ent
-          HAVING count(*) <= {ENTITY_DF_CAP}))
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         count(*) AS n_shared, min(a.ent) AS first_entity
-  FROM mk a JOIN mk b ON a.ent = b.ent AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
+  m AS (SELECT DISTINCT doc_id, token FROM toks JOIN dict ON token = surface),
+  edges AS (SELECT DISTINCT a.token AS u, b.token AS v
+            FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.token < b.token)
+  SELECT e1.u AS na, e1.v AS nb, e2.v AS nc
+  FROM edges e1 JOIN edges e2 ON e1.v = e2.u
+       JOIN edges e3 ON e3.u = e1.u AND e3.v = e2.v
 """
 
-QUERIES["kg_entity_overlap"] = q_kg_entity_overlap
-ORACLES["kg_entity_overlap"] = SQL_KG_ENTITY_OVERLAP
 
-
+@query("kg_triangles", oracle=SQL_KG_TRIANGLES)
 def q_kg_triangles(spark, sf_dir):
     """Triangle enumeration over the entity co-occurrence graph (edge =
     two entities sharing a document) — the density signal behind relation
@@ -2994,24 +2881,27 @@ def q_kg_triangles(spark, sf_dir):
     return triangles(edges)
 
 
-SQL_KG_TRIANGLES = f"""
-  WITH dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
-  toks AS ({_TOKENS_SQL}),
-  m AS (SELECT DISTINCT doc_id, token FROM toks JOIN dict ON token = surface),
-  edges AS (SELECT DISTINCT a.token AS u, b.token AS v
-            FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.token < b.token)
-  SELECT e1.u AS na, e1.v AS nb, e2.v AS nc
-  FROM edges e1 JOIN edges e2 ON e1.v = e2.u
-       JOIN edges e3 ON e3.u = e1.u AND e3.v = e2.v
-"""
-
-QUERIES["kg_triangles"] = q_kg_triangles
-ORACLES["kg_triangles"] = SQL_KG_TRIANGLES
-
-
 TFIDF_TOPK = 3
 
 
+SQL_DOC_TFIDF_TOPK = f"""
+  WITH toks AS ({_TOKENS_SQL}),
+  tf AS (SELECT doc_id, token, count(*) AS tf FROM toks
+         WHERE token NOT IN ({_STOP_SQL}) GROUP BY doc_id, token),
+  dfv AS (SELECT token, count(*) AS df FROM tf GROUP BY token),
+  nd AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents),
+  scored AS (SELECT doc_id, tf.token, tf, df,
+                    round(tf * ln(CAST(n_docs AS DOUBLE) / df), 6) AS tfidf
+             FROM tf JOIN dfv ON tf.token = dfv.token CROSS JOIN nd)
+  SELECT doc_id, token, tf, df, tfidf,
+         CAST(row_number() OVER (PARTITION BY doc_id
+                                 ORDER BY tfidf DESC, token ASC) AS INT) AS rank
+  FROM scored
+  QUALIFY rank <= {TFIDF_TOPK}
+"""
+
+
+@query("doc_tfidf_topk", oracle=SQL_DOC_TFIDF_TOPK)
 def q_doc_tfidf_topk(spark, sf_dir):
     """Top-{TFIDF_TOPK} TF-IDF terms per document — the standard keyword /
     topic-signal extraction stage of a text pipeline. Two keyed
@@ -3040,26 +2930,16 @@ def q_doc_tfidf_topk(spark, sf_dir):
     )
 
 
-SQL_DOC_TFIDF_TOPK = f"""
-  WITH toks AS ({_TOKENS_SQL}),
-  tf AS (SELECT doc_id, token, count(*) AS tf FROM toks
-         WHERE token NOT IN ({_STOP_SQL}) GROUP BY doc_id, token),
-  dfv AS (SELECT token, count(*) AS df FROM tf GROUP BY token),
-  nd AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents),
-  scored AS (SELECT doc_id, tf.token, tf, df,
-                    round(tf * ln(CAST(n_docs AS DOUBLE) / df), 6) AS tfidf
-             FROM tf JOIN dfv ON tf.token = dfv.token CROSS JOIN nd)
-  SELECT doc_id, token, tf, df, tfidf,
-         CAST(row_number() OVER (PARTITION BY doc_id
-                                 ORDER BY tfidf DESC, token ASC) AS INT) AS rank
-  FROM scored
-  QUALIFY rank <= {TFIDF_TOPK}
+SQL_DEDUP_CLUSTER_SIZES = f"""
+  SELECT size, count(*) AS n_components FROM (
+    SELECT component, count(*) AS size FROM (
+      {SQL_CONNECTED_COMPONENTS}
+    ) cc GROUP BY component
+  ) s GROUP BY size
 """
 
-QUERIES["doc_tfidf_topk"] = q_doc_tfidf_topk
-ORACLES["doc_tfidf_topk"] = SQL_DOC_TFIDF_TOPK
 
-
+@query("dedup_cluster_sizes", oracle=SQL_DEDUP_CLUSTER_SIZES)
 def q_dedup_cluster_sizes(spark, sf_dir):
     """Near-duplicate cluster-size histogram — the acceptance report for a
     dedup run (how much of the corpus collapses, and into how many
@@ -3070,18 +2950,6 @@ def q_dedup_cluster_sizes(spark, sf_dir):
     comp = q_connected_components(spark, sf_dir)
     sizes = comp.groupBy("component").agg(F.count("*").alias("size"))
     return sizes.groupBy("size").agg(F.count("*").alias("n_components"))
-
-
-SQL_DEDUP_CLUSTER_SIZES = f"""
-  SELECT size, count(*) AS n_components FROM (
-    SELECT component, count(*) AS size FROM (
-      {SQL_CONNECTED_COMPONENTS}
-    ) cc GROUP BY component
-  ) s GROUP BY size
-"""
-
-QUERIES["dedup_cluster_sizes"] = q_dedup_cluster_sizes
-ORACLES["dedup_cluster_sizes"] = SQL_DEDUP_CLUSTER_SIZES
 
 
 ANN_RECALL_K = 3
@@ -3122,40 +2990,6 @@ def _ann_index_gauge(spark, sf_dir):
                 / (F.col("nvec") * (F.col("nvec") - F.lit(1))), 6
             ).alias("admission_rate"),
         )
-    )
-
-
-def q_ann_recall_report(spark, sf_dir):
-    """Recall@k of the bucketed ANN against the exact brute-force ranking,
-    per probe query — the quality gauge every ANN deployment monitors
-    (tests/test_ann_bucketed.py pins it on clustered data; this makes the
-    measurement itself a first-class, oracle-verified operator). The exact
-    side is O(slice x N) on a BOUNDED probe set; the ANN side is the
-    production bucketed kernel; the comparison is a (qid, nid)-keyed left
-    join plus one per-qid aggregation. Every row additionally carries the
-    one-row index-health gauge (_ann_index_gauge): sampled-bucket
-    fraction, candidate-admission rate, geometry."""
-    exact = (
-        q_cosine_topk(spark, sf_dir)
-        .filter(F.col("rank") <= ANN_RECALL_K)
-        .select("qid", "nid")
-    )
-    approx = (
-        q_ann_topk_bucketed(spark, sf_dir)
-        .filter(F.col("qid") < ANN_RECALL_MAX_QID)
-        .select("qid", "nid", F.lit(1).alias("hit"))
-    )
-    return (
-        exact.join(approx, ["qid", "nid"], "left")
-        .groupBy("qid")
-        .agg(
-            F.count("*").alias("n_exact"),
-            F.coalesce(F.sum("hit"), F.lit(0)).alias("n_hit"),
-        )
-        .withColumn(
-            "recall", F.round(F.col("n_hit") / F.col("n_exact"), 6)
-        )
-        .crossJoin(F.broadcast(_ann_index_gauge(spark, sf_dir)))
     )
 
 
@@ -3203,8 +3037,40 @@ SQL_ANN_RECALL_REPORT = f"""
   GROUP BY xtop.qid
 """
 
-QUERIES["ann_recall_report"] = q_ann_recall_report
-ORACLES["ann_recall_report"] = SQL_ANN_RECALL_REPORT
+
+@query("ann_recall_report", oracle=SQL_ANN_RECALL_REPORT)
+def q_ann_recall_report(spark, sf_dir):
+    """Recall@k of the bucketed ANN against the exact brute-force ranking,
+    per probe query — the quality gauge every ANN deployment monitors
+    (tests/test_ann_bucketed.py pins it on clustered data; this makes the
+    measurement itself a first-class, oracle-verified operator). The exact
+    side is O(slice x N) on a BOUNDED probe set; the ANN side is the
+    production bucketed kernel; the comparison is a (qid, nid)-keyed left
+    join plus one per-qid aggregation. Every row additionally carries the
+    one-row index-health gauge (_ann_index_gauge): sampled-bucket
+    fraction, candidate-admission rate, geometry."""
+    exact = (
+        q_cosine_topk(spark, sf_dir)
+        .filter(F.col("rank") <= ANN_RECALL_K)
+        .select("qid", "nid")
+    )
+    approx = (
+        q_ann_topk_bucketed(spark, sf_dir)
+        .filter(F.col("qid") < ANN_RECALL_MAX_QID)
+        .select("qid", "nid", F.lit(1).alias("hit"))
+    )
+    return (
+        exact.join(approx, ["qid", "nid"], "left")
+        .groupBy("qid")
+        .agg(
+            F.count("*").alias("n_exact"),
+            F.coalesce(F.sum("hit"), F.lit(0)).alias("n_hit"),
+        )
+        .withColumn(
+            "recall", F.round(F.col("n_hit") / F.col("n_exact"), 6)
+        )
+        .crossJoin(F.broadcast(_ann_index_gauge(spark, sf_dir)))
+    )
 
 
 # per-predicate max distinct-object cardinality for the KG consistency
@@ -3217,6 +3083,24 @@ KG_PRED_MAX_CARD = [("mentions_System", 1), ("mentions_Entity", 2)]
 _KG_PRED_MAX_CARD_SQL = ", ".join(f"('{p}', {c})" for p, c in KG_PRED_MAX_CARD)
 
 
+SQL_KG_CARDINALITY_CONFLICTS = f"""
+  WITH dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
+  toks AS ({_TOKENS_SQL}),
+  triples AS (SELECT DISTINCT 'doc_' || CAST(doc_id AS VARCHAR) AS subj,
+                     'mentions_' || type_id AS pred, token AS obj
+              FROM toks JOIN dict ON token = surface),
+  card(pred, max_card) AS (VALUES {_KG_PRED_MAX_CARD_SQL}),
+  g AS (SELECT subj, t.pred, max_card,
+               count(DISTINCT obj) AS n_values,
+               list_sort(list(DISTINCT obj)) AS vals
+        FROM triples t JOIN card ON t.pred = card.pred
+        GROUP BY subj, t.pred, max_card)
+  SELECT subj, pred, max_card, n_values, vals[1] AS val_a, vals[2] AS val_b
+  FROM g WHERE n_values > max_card
+"""
+
+
+@query("kg_cardinality_conflicts", oracle=SQL_KG_CARDINALITY_CONFLICTS)
 def q_kg_cardinality_conflicts(spark, sf_dir):
     """KB consistency check: subjects whose (subj, pred) group exceeds the
     predicate's declared max cardinality — the post-hoc form of the slot
@@ -3250,26 +3134,21 @@ def q_kg_cardinality_conflicts(spark, sf_dir):
     )
 
 
-SQL_KG_CARDINALITY_CONFLICTS = f"""
-  WITH dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
+SQL_KG_TYPE_VIOLATIONS = f"""
+  WITH onto(surface, expected_type) AS (VALUES {_DICT_VALUES_SQL}),
+  pred(surface, claimed_type) AS (VALUES {_PRED_DICT_VALUES_SQL}),
   toks AS ({_TOKENS_SQL}),
-  triples AS (SELECT DISTINCT 'doc_' || CAST(doc_id AS VARCHAR) AS subj,
-                     'mentions_' || type_id AS pred, token AS obj
-              FROM toks JOIN dict ON token = surface),
-  card(pred, max_card) AS (VALUES {_KG_PRED_MAX_CARD_SQL}),
-  g AS (SELECT subj, t.pred, max_card,
-               count(DISTINCT obj) AS n_values,
-               list_sort(list(DISTINCT obj)) AS vals
-        FROM triples t JOIN card ON t.pred = card.pred
-        GROUP BY subj, t.pred, max_card)
-  SELECT subj, pred, max_card, n_values, vals[1] AS val_a, vals[2] AS val_b
-  FROM g WHERE n_values > max_card
+  claimed AS (SELECT doc_id, token, claimed_type
+              FROM toks JOIN pred ON token = pred.surface)
+  SELECT token, claimed_type, expected_type,
+         count(*) AS n_triples, count(DISTINCT doc_id) AS n_docs
+  FROM claimed LEFT JOIN onto ON claimed.token = onto.surface
+  WHERE expected_type IS NULL OR claimed_type <> expected_type
+  GROUP BY token, claimed_type, expected_type
 """
 
-QUERIES["kg_cardinality_conflicts"] = q_kg_cardinality_conflicts
-ORACLES["kg_cardinality_conflicts"] = SQL_KG_CARDINALITY_CONFLICTS
 
-
+@query("kg_type_violations", oracle=SQL_KG_TYPE_VIOLATIONS)
 def q_kg_type_violations(spark, sf_dir):
     """Ontology range validation of a NOISY extraction: triples derived
     from the perturbed prediction dictionary (PRED_DICT — the same noisy
@@ -3298,23 +3177,28 @@ def q_kg_type_violations(spark, sf_dir):
     )
 
 
-SQL_KG_TYPE_VIOLATIONS = f"""
-  WITH onto(surface, expected_type) AS (VALUES {_DICT_VALUES_SQL}),
-  pred(surface, claimed_type) AS (VALUES {_PRED_DICT_VALUES_SQL}),
+SQL_KG_SNAPSHOT_DIFF = f"""
+  WITH dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
+  pdict(surface, type_id) AS (VALUES {_PRED_DICT_VALUES_SQL}),
   toks AS ({_TOKENS_SQL}),
-  claimed AS (SELECT doc_id, token, claimed_type
-              FROM toks JOIN pred ON token = pred.surface)
-  SELECT token, claimed_type, expected_type,
-         count(*) AS n_triples, count(DISTINCT doc_id) AS n_docs
-  FROM claimed LEFT JOIN onto ON claimed.token = onto.surface
-  WHERE expected_type IS NULL OR claimed_type <> expected_type
-  GROUP BY token, claimed_type, expected_type
+  base AS (SELECT DISTINCT 'doc_' || CAST(doc_id AS VARCHAR) AS subj,
+                  'mentions_' || type_id AS pred, token AS obj
+           FROM toks JOIN dict ON token = surface),
+  live AS (SELECT DISTINCT 'doc_' || CAST(doc_id AS VARCHAR) AS subj,
+                  'mentions_' || type_id AS pred, token AS obj
+           FROM toks JOIN pdict ON token = surface)
+  SELECT coalesce(base.subj, live.subj) AS subj,
+         coalesce(base.pred, live.pred) AS pred,
+         coalesce(base.obj, live.obj) AS obj,
+         CASE WHEN base.subj IS NOT NULL AND live.subj IS NOT NULL THEN 'unchanged'
+              WHEN base.subj IS NOT NULL THEN 'retracted'
+              ELSE 'added' END AS status
+  FROM base FULL OUTER JOIN live
+    ON base.subj = live.subj AND base.pred = live.pred AND base.obj = live.obj
 """
 
-QUERIES["kg_type_violations"] = q_kg_type_violations
-ORACLES["kg_type_violations"] = SQL_KG_TYPE_VIOLATIONS
 
-
+@query("kg_snapshot_diff", oracle=SQL_KG_SNAPSHOT_DIFF)
 def q_kg_snapshot_diff(spark, sf_dir):
     """Snapshot diff between two extraction runs over the same corpus —
     the incremental-maintenance step of a production KG (Iceberg MERGE
@@ -3352,30 +3236,6 @@ def q_kg_snapshot_diff(spark, sf_dir):
     )
 
 
-SQL_KG_SNAPSHOT_DIFF = f"""
-  WITH dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
-  pdict(surface, type_id) AS (VALUES {_PRED_DICT_VALUES_SQL}),
-  toks AS ({_TOKENS_SQL}),
-  base AS (SELECT DISTINCT 'doc_' || CAST(doc_id AS VARCHAR) AS subj,
-                  'mentions_' || type_id AS pred, token AS obj
-           FROM toks JOIN dict ON token = surface),
-  live AS (SELECT DISTINCT 'doc_' || CAST(doc_id AS VARCHAR) AS subj,
-                  'mentions_' || type_id AS pred, token AS obj
-           FROM toks JOIN pdict ON token = surface)
-  SELECT coalesce(base.subj, live.subj) AS subj,
-         coalesce(base.pred, live.pred) AS pred,
-         coalesce(base.obj, live.obj) AS obj,
-         CASE WHEN base.subj IS NOT NULL AND live.subj IS NOT NULL THEN 'unchanged'
-              WHEN base.subj IS NOT NULL THEN 'retracted'
-              ELSE 'added' END AS status
-  FROM base FULL OUTER JOIN live
-    ON base.subj = live.subj AND base.pred = live.pred AND base.obj = live.obj
-"""
-
-QUERIES["kg_snapshot_diff"] = q_kg_snapshot_diff
-ORACLES["kg_snapshot_diff"] = SQL_KG_SNAPSHOT_DIFF
-
-
 # sequential quality-gate thresholds (Gopher-style funnel); chosen so each
 # stage drops a real fraction of this corpus — the funnel REPORT is the
 # operator, the thresholds are policy
@@ -3385,6 +3245,31 @@ QF_MAX_TOP_TOKEN = 0.15
 QF_MAX_AVG_NLL = 3.43
 
 
+SQL_QUALITY_FUNNEL = f"""
+  WITH qs AS ({SQL_QUALITY_SCORE}), qr AS ({SQL_QUALITY_REPETITION}), qp AS ({SQL_QUALITY_PERPLEXITY}),
+  flags AS (
+    SELECT qs.doc_id,
+           CASE WHEN qs.n_tokens >= {QF_MIN_TOKENS} THEN 1 ELSE 0 END AS g1,
+           CASE WHEN qr.dup_token_frac <= {QF_MAX_DUP_TOKEN} THEN 1 ELSE 0 END AS g2,
+           CASE WHEN qr.top_token_frac <= {QF_MAX_TOP_TOKEN} THEN 1 ELSE 0 END AS g3,
+           CASE WHEN qp.avg_nll <= {QF_MAX_AVG_NLL} THEN 1 ELSE 0 END AS g4
+    FROM qs JOIN qr ON qs.doc_id = qr.doc_id JOIN qp ON qs.doc_id = qp.doc_id),
+  agg AS (
+    SELECT count(*) AS s0,
+           CAST(sum(g1) AS BIGINT) AS s1,
+           CAST(sum(g1 * g2) AS BIGINT) AS s2,
+           CAST(sum(g1 * g2 * g3) AS BIGINT) AS s3,
+           CAST(sum(g1 * g2 * g3 * g4) AS BIGINT) AS s4
+    FROM flags)
+  SELECT stage, gate, n_in, n_pass, n_in - n_pass AS n_drop FROM (
+    SELECT 1 AS stage, 'min_tokens' AS gate, s0 AS n_in, s1 AS n_pass FROM agg
+    UNION ALL SELECT 2, 'dup_token', s1, s2 FROM agg
+    UNION ALL SELECT 3, 'top_token', s2, s3 FROM agg
+    UNION ALL SELECT 4, 'perplexity', s3, s4 FROM agg)
+"""
+
+
+@query("quality_funnel", oracle=SQL_QUALITY_FUNNEL)
 def q_quality_funnel(spark, sf_dir):
     """Quality-gate funnel report — the acceptance dashboard of a
     training-data pipeline: how many documents enter each sequential gate
@@ -3447,40 +3332,36 @@ def q_quality_funnel(spark, sf_dir):
     )
 
 
-SQL_QUALITY_FUNNEL = f"""
-  WITH qs AS ({{QS}}), qr AS ({{QR}}), qp AS ({{QP}}),
-  flags AS (
-    SELECT qs.doc_id,
-           CASE WHEN qs.n_tokens >= {QF_MIN_TOKENS} THEN 1 ELSE 0 END AS g1,
-           CASE WHEN qr.dup_token_frac <= {QF_MAX_DUP_TOKEN} THEN 1 ELSE 0 END AS g2,
-           CASE WHEN qr.top_token_frac <= {QF_MAX_TOP_TOKEN} THEN 1 ELSE 0 END AS g3,
-           CASE WHEN qp.avg_nll <= {QF_MAX_AVG_NLL} THEN 1 ELSE 0 END AS g4
-    FROM qs JOIN qr ON qs.doc_id = qr.doc_id JOIN qp ON qs.doc_id = qp.doc_id),
-  agg AS (
-    SELECT count(*) AS s0,
-           CAST(sum(g1) AS BIGINT) AS s1,
-           CAST(sum(g1 * g2) AS BIGINT) AS s2,
-           CAST(sum(g1 * g2 * g3) AS BIGINT) AS s3,
-           CAST(sum(g1 * g2 * g3 * g4) AS BIGINT) AS s4
-    FROM flags)
-  SELECT stage, gate, n_in, n_pass, n_in - n_pass AS n_drop FROM (
-    SELECT 1 AS stage, 'min_tokens' AS gate, s0 AS n_in, s1 AS n_pass FROM agg
-    UNION ALL SELECT 2, 'dup_token', s1, s2 FROM agg
-    UNION ALL SELECT 3, 'top_token', s2, s3 FROM agg
-    UNION ALL SELECT 4, 'perplexity', s3, s4 FROM agg)
+SQL_MINHASH_EST_ERROR = f"""
+  WITH sh AS (SELECT DISTINCT doc_id, shingle FROM ({_SHINGLES_SQL})),
+  sig AS (
+    SELECT doc_id, {", ".join(f"min(md5('{i}:' || shingle)) AS h{i}" for i in range(N_MINHASH))}
+    FROM sh GROUP BY doc_id),
+  pairs AS (SELECT * FROM ({SQL_DEDUP_MINHASH_LSH})),
+  est AS (
+    SELECT p.doc_a, p.doc_b,
+           round(({" + ".join(f"CASE WHEN a.h{i} = b.h{i} THEN 1 ELSE 0 END" for i in range(N_MINHASH))}) / {N_MINHASH}.0, 6) AS est_jaccard
+    FROM pairs p JOIN sig a ON a.doc_id = p.doc_a JOIN sig b ON b.doc_id = p.doc_b),
+  sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+  inter AS (
+    SELECT p.doc_a, p.doc_b, count(*) AS inter
+    FROM pairs p JOIN sh x ON x.doc_id = p.doc_a
+                 JOIN sh y ON y.doc_id = p.doc_b AND y.shingle = x.shingle
+    GROUP BY p.doc_a, p.doc_b),
+  fin AS (
+    SELECT est.doc_a, est.doc_b, est_jaccard,
+           round(CAST(coalesce(inter, 0) AS DOUBLE)
+                 / (na.n + nb.n - coalesce(inter, 0)), 6) AS exact_jaccard
+    FROM est LEFT JOIN inter ON est.doc_a = inter.doc_a AND est.doc_b = inter.doc_b
+         JOIN sizes na ON na.doc_id = est.doc_a
+         JOIN sizes nb ON nb.doc_id = est.doc_b)
+  SELECT doc_a, doc_b, est_jaccard, exact_jaccard,
+         round(abs(est_jaccard - exact_jaccard), 6) AS abs_err
+  FROM fin
 """
 
-SQL_QUALITY_FUNNEL = (
-    SQL_QUALITY_FUNNEL
-    .replace("{QS}", SQL_QUALITY_SCORE)
-    .replace("{QR}", SQL_QUALITY_REPETITION)
-    .replace("{QP}", SQL_QUALITY_PERPLEXITY)
-)
 
-QUERIES["quality_funnel"] = q_quality_funnel
-ORACLES["quality_funnel"] = SQL_QUALITY_FUNNEL
-
-
+@query("minhash_est_error", oracle=SQL_MINHASH_EST_ERROR)
 def q_minhash_est_error(spark, sf_dir):
     """Sketch-accuracy report for the MinHash dedup path: for every
     LSH-banded candidate pair, the signature-agreement Jaccard ESTIMATE
@@ -3538,38 +3419,25 @@ def q_minhash_est_error(spark, sf_dir):
     )
 
 
-SQL_MINHASH_EST_ERROR = f"""
-  WITH sh AS (SELECT DISTINCT doc_id, shingle FROM ({_SHINGLES_SQL})),
-  sig AS (
-    SELECT doc_id, {", ".join(f"min(md5('{i}:' || shingle)) AS h{i}" for i in range(N_MINHASH))}
-    FROM sh GROUP BY doc_id),
-  pairs AS (SELECT * FROM ({SQL_DEDUP_MINHASH_LSH})),
-  est AS (
-    SELECT p.doc_a, p.doc_b,
-           round(({" + ".join(f"CASE WHEN a.h{i} = b.h{i} THEN 1 ELSE 0 END" for i in range(N_MINHASH))}) / {N_MINHASH}.0, 6) AS est_jaccard
-    FROM pairs p JOIN sig a ON a.doc_id = p.doc_a JOIN sig b ON b.doc_id = p.doc_b),
-  sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-  inter AS (
-    SELECT p.doc_a, p.doc_b, count(*) AS inter
-    FROM pairs p JOIN sh x ON x.doc_id = p.doc_a
-                 JOIN sh y ON y.doc_id = p.doc_b AND y.shingle = x.shingle
-    GROUP BY p.doc_a, p.doc_b),
-  fin AS (
-    SELECT est.doc_a, est.doc_b, est_jaccard,
-           round(CAST(coalesce(inter, 0) AS DOUBLE)
-                 / (na.n + nb.n - coalesce(inter, 0)), 6) AS exact_jaccard
-    FROM est LEFT JOIN inter ON est.doc_a = inter.doc_a AND est.doc_b = inter.doc_b
-         JOIN sizes na ON na.doc_id = est.doc_a
-         JOIN sizes nb ON nb.doc_id = est.doc_b)
-  SELECT doc_a, doc_b, est_jaccard, exact_jaccard,
-         round(abs(est_jaccard - exact_jaccard), 6) AS abs_err
-  FROM fin
+SQL_KG_TRIPLE_SUPPORT = f"""
+  WITH dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
+  pdict(surface, type_id) AS (VALUES {_PRED_DICT_VALUES_SQL}),
+  toks AS ({_TOKENS_SQL}),
+  m AS (SELECT doc_id, pos, token, dict.type_id,
+               CASE WHEN pdict.surface IS NOT NULL THEN 1 ELSE 0 END AS corr
+        FROM toks JOIN dict ON token = dict.surface
+        LEFT JOIN pdict ON token = pdict.surface AND dict.type_id = pdict.type_id)
+  SELECT 'doc_' || CAST(doc_id AS VARCHAR) AS subj,
+         'mentions_' || type_id AS pred,
+         token AS obj,
+         count(*) AS support,
+         CAST(min(pos) AS INT) AS first_pos,
+         CAST(max(corr) AS INT) AS corroborated
+  FROM m GROUP BY doc_id, type_id, token
 """
 
-QUERIES["minhash_est_error"] = q_minhash_est_error
-ORACLES["minhash_est_error"] = SQL_MINHASH_EST_ERROR
 
-
+@query("kg_triple_support", oracle=SQL_KG_TRIPLE_SUPPORT)
 def q_kg_triple_support(spark, sf_dir):
     """Triple provenance/support — the aggregation that turns raw mention
     occurrences into weighted KG assertions (reference: every accepted
@@ -3600,27 +3468,6 @@ def q_kg_triple_support(spark, sf_dir):
     )
 
 
-SQL_KG_TRIPLE_SUPPORT = f"""
-  WITH dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
-  pdict(surface, type_id) AS (VALUES {_PRED_DICT_VALUES_SQL}),
-  toks AS ({_TOKENS_SQL}),
-  m AS (SELECT doc_id, pos, token, dict.type_id,
-               CASE WHEN pdict.surface IS NOT NULL THEN 1 ELSE 0 END AS corr
-        FROM toks JOIN dict ON token = dict.surface
-        LEFT JOIN pdict ON token = pdict.surface AND dict.type_id = pdict.type_id)
-  SELECT 'doc_' || CAST(doc_id AS VARCHAR) AS subj,
-         'mentions_' || type_id AS pred,
-         token AS obj,
-         count(*) AS support,
-         CAST(min(pos) AS INT) AS first_pos,
-         CAST(max(corr) AS INT) AS corroborated
-  FROM m GROUP BY doc_id, type_id, token
-"""
-
-QUERIES["kg_triple_support"] = q_kg_triple_support
-ORACLES["kg_triple_support"] = SQL_KG_TRIPLE_SUPPORT
-
-
 # ------------------------------------------------ HyperLogLog (portable)
 # m = 64 registers (6 index bits) over a 26-bit remainder of a 32-bit
 # md5-derived hash. All arithmetic is integer or dyadic-exact doubles
@@ -3630,6 +3477,41 @@ HLL_M = 64
 HLL_ALPHA = 0.709   # alpha_64 from Flajolet et al. 2007, Table 1
 
 
+_HLL_H32_SQL = " + ".join(
+    f"CAST(ascii(substring(h, {i + 1}, 1)) - CASE WHEN ascii(substring(h, {i + 1}, 1)) >= 97 THEN 87 ELSE 48 END AS BIGINT) * {16 ** (7 - i)}"
+    for i in range(8)
+)
+
+
+SQL_DISTINCT_HLL = f"""
+  WITH toks AS ({_TOKENS_SQL}),
+  t AS (SELECT d.lang, toks.token, md5(toks.token) AS h
+        FROM toks JOIN documents d ON toks.doc_id = d.doc_id),
+  hashed AS (SELECT lang, token, {_HLL_H32_SQL} AS h32 FROM t),
+  regs AS (
+    SELECT lang, h32 % {HLL_M} AS idx,
+           max(CASE WHEN h32 < {HLL_M} THEN 27
+                    ELSE 27 - length(to_base(CAST(floor(h32 / {HLL_M}) AS BIGINT), 2)) END) AS m_j
+    FROM hashed GROUP BY lang, h32 % {HLL_M}),
+  per_lang AS (
+    SELECT lang, sum(pow(2.0, -m_j)) + ({HLL_M} - count(*)) AS s,
+           {HLL_M} - count(*) AS v
+    FROM regs GROUP BY lang),
+  est AS (
+    SELECT lang,
+           CASE WHEN {HLL_ALPHA * HLL_M * HLL_M} / s <= {2.5 * HLL_M} AND v > 0
+                THEN {HLL_M} * ln({HLL_M} / CAST(v AS DOUBLE))
+                ELSE {HLL_ALPHA * HLL_M * HLL_M} / s END AS e
+    FROM per_lang),
+  exact AS (SELECT d.lang, count(DISTINCT toks.token) AS n_exact
+            FROM toks JOIN documents d ON toks.doc_id = d.doc_id GROUP BY d.lang)
+  SELECT est.lang, CAST(n_exact AS BIGINT) AS n_exact, round(e, 4) AS n_est,
+         round(abs(round(e, 4) - n_exact) / n_exact, 4) AS rel_err
+  FROM est JOIN exact ON est.lang = exact.lang
+"""
+
+
+@query("distinct_hll", oracle=SQL_DISTINCT_HLL)
 def q_distinct_hll(spark, sf_dir):
     """Per-language vocabulary size via a portable HyperLogLog sketch,
     reported against the exact distinct count (the gauge that justifies
@@ -3685,48 +3567,39 @@ def q_distinct_hll(spark, sf_dir):
     )
 
 
-_HLL_H32_SQL = " + ".join(
-    f"CAST(ascii(substring(h, {i + 1}, 1)) - CASE WHEN ascii(substring(h, {i + 1}, 1)) >= 97 THEN 87 ELSE 48 END AS BIGINT) * {16 ** (7 - i)}"
-    for i in range(8)
-)
-
-SQL_DISTINCT_HLL = f"""
-  WITH toks AS ({_TOKENS_SQL}),
-  t AS (SELECT d.lang, toks.token, md5(toks.token) AS h
-        FROM toks JOIN documents d ON toks.doc_id = d.doc_id),
-  hashed AS (SELECT lang, token, {_HLL_H32_SQL} AS h32 FROM t),
-  regs AS (
-    SELECT lang, h32 % {HLL_M} AS idx,
-           max(CASE WHEN h32 < {HLL_M} THEN 27
-                    ELSE 27 - length(to_base(CAST(floor(h32 / {HLL_M}) AS BIGINT), 2)) END) AS m_j
-    FROM hashed GROUP BY lang, h32 % {HLL_M}),
-  per_lang AS (
-    SELECT lang, sum(pow(2.0, -m_j)) + ({HLL_M} - count(*)) AS s,
-           {HLL_M} - count(*) AS v
-    FROM regs GROUP BY lang),
-  est AS (
-    SELECT lang,
-           CASE WHEN {HLL_ALPHA * HLL_M * HLL_M} / s <= {2.5 * HLL_M} AND v > 0
-                THEN {HLL_M} * ln({HLL_M} / CAST(v AS DOUBLE))
-                ELSE {HLL_ALPHA * HLL_M * HLL_M} / s END AS e
-    FROM per_lang),
-  exact AS (SELECT d.lang, count(DISTINCT toks.token) AS n_exact
-            FROM toks JOIN documents d ON toks.doc_id = d.doc_id GROUP BY d.lang)
-  SELECT est.lang, CAST(n_exact AS BIGINT) AS n_exact, round(e, 4) AS n_est,
-         round(abs(round(e, 4) - n_exact) / n_exact, 4) AS rel_err
-  FROM est JOIN exact ON est.lang = exact.lang
-"""
-
-QUERIES["distinct_hll"] = q_distinct_hll
-ORACLES["distinct_hll"] = SQL_DISTINCT_HLL
-
-
 # target training-mixture proportions per language (policy); the planner
 # below turns them into per-language keep rates against the actual corpus
 MIXTURE_WEIGHTS = {"en": 0.25, "fr": 0.15, "es": 0.15, "zh": 0.25, "de": 0.20}
 _MIXTURE_SQL = ", ".join(f"('{k}', {v})" for k, v in sorted(MIXTURE_WEIGHTS.items()))
 
 
+SQL_SAMPLE_MIXTURE = f"""
+  WITH w(lang, weight) AS (VALUES {_MIXTURE_SQL}),
+  counts AS (SELECT d.lang, count(*) AS n_avail, CAST(any_value(weight) AS DOUBLE) AS weight
+             FROM documents d JOIN w ON d.lang = w.lang GROUP BY d.lang),
+  t AS (SELECT min(n_avail / weight) AS t FROM counts),
+  rates AS (SELECT lang, n_avail,
+                   least(1.0, t.t * weight / n_avail) AS rate
+            FROM counts, t),
+  u AS (SELECT doc_id, lang, round((
+            (strpos('0123456789abcdef', substring(hh, 1, 1)) - 1) * 4096
+          + (strpos('0123456789abcdef', substring(hh, 2, 1)) - 1) * 256
+          + (strpos('0123456789abcdef', substring(hh, 3, 1)) - 1) * 16
+          + (strpos('0123456789abcdef', substring(hh, 4, 1)) - 1)) / 65536.0, 6) AS u
+        FROM (SELECT doc_id, lang, md5('m' || CAST(doc_id AS VARCHAR)) AS hh
+              FROM documents)),
+  kept AS (SELECT u.lang, count(*) AS n_kept
+           FROM u JOIN rates ON u.lang = rates.lang
+           WHERE u.u < rates.rate GROUP BY u.lang),
+  tot AS (SELECT CAST(sum(n_kept) AS BIGINT) AS tot FROM kept)
+  SELECT rates.lang, n_avail, round(rate, 6) AS rate,
+         CAST(n_kept AS BIGINT) AS n_kept,
+         round(n_kept / tot.tot, 6) AS achieved_frac
+  FROM rates JOIN kept ON rates.lang = kept.lang, tot
+"""
+
+
+@query("sample_mixture", oracle=SQL_SAMPLE_MIXTURE)
 def q_sample_mixture(spark, sf_dir):
     """Training-mixture planner + deterministic apply: given target
     proportions per language, waterfill the largest total sample that
@@ -3773,35 +3646,6 @@ def q_sample_mixture(spark, sf_dir):
     )
 
 
-SQL_SAMPLE_MIXTURE = f"""
-  WITH w(lang, weight) AS (VALUES {_MIXTURE_SQL}),
-  counts AS (SELECT d.lang, count(*) AS n_avail, CAST(any_value(weight) AS DOUBLE) AS weight
-             FROM documents d JOIN w ON d.lang = w.lang GROUP BY d.lang),
-  t AS (SELECT min(n_avail / weight) AS t FROM counts),
-  rates AS (SELECT lang, n_avail,
-                   least(1.0, t.t * weight / n_avail) AS rate
-            FROM counts, t),
-  u AS (SELECT doc_id, lang, round((
-            (strpos('0123456789abcdef', substring(hh, 1, 1)) - 1) * 4096
-          + (strpos('0123456789abcdef', substring(hh, 2, 1)) - 1) * 256
-          + (strpos('0123456789abcdef', substring(hh, 3, 1)) - 1) * 16
-          + (strpos('0123456789abcdef', substring(hh, 4, 1)) - 1)) / 65536.0, 6) AS u
-        FROM (SELECT doc_id, lang, md5('m' || CAST(doc_id AS VARCHAR)) AS hh
-              FROM documents)),
-  kept AS (SELECT u.lang, count(*) AS n_kept
-           FROM u JOIN rates ON u.lang = rates.lang
-           WHERE u.u < rates.rate GROUP BY u.lang),
-  tot AS (SELECT CAST(sum(n_kept) AS BIGINT) AS tot FROM kept)
-  SELECT rates.lang, n_avail, round(rate, 6) AS rate,
-         CAST(n_kept AS BIGINT) AS n_kept,
-         round(n_kept / tot.tot, 6) AS achieved_frac
-  FROM rates JOIN kept ON rates.lang = kept.lang, tot
-"""
-
-QUERIES["sample_mixture"] = q_sample_mixture
-ORACLES["sample_mixture"] = SQL_SAMPLE_MIXTURE
-
-
 # ontology subclass edges over the dictionary's type system (pinned
 # policy table — the analog of the reference ontology's class hierarchy,
 # templates/HierarchyTemplate semantics applied KB-side)
@@ -3836,6 +3680,24 @@ def _type_closure():
     return out
 
 
+SQL_KG_TYPE_CLOSURE = f"""
+  WITH RECURSIVE
+  dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
+  toks AS ({_TOKENS_SQL}),
+  edges(child, parent) AS (VALUES {_KG_TYPE_PARENT_SQL}),
+  closure(type_id, ancestor, depth) AS (
+    SELECT child, parent, 1 FROM edges
+    UNION ALL
+    SELECT c.type_id, e.parent, c.depth + 1
+    FROM closure c JOIN edges e ON c.ancestor = e.child),
+  asserted AS (SELECT DISTINCT token, type_id
+               FROM toks JOIN dict ON token = surface)
+  SELECT token AS obj, a.type_id, ancestor, CAST(depth AS INT) AS depth
+  FROM asserted a JOIN closure ON a.type_id = closure.type_id
+"""
+
+
+@query("kg_type_closure", oracle=SQL_KG_TYPE_CLOSURE)
 def q_kg_type_closure(spark, sf_dir):
     """Ontology type inference over the KG: every asserted (surface, type)
     mention pair gains its ancestor types via the subclass closure — the
@@ -3854,26 +3716,6 @@ def q_kg_type_closure(spark, sf_dir):
         asserted.join(F.broadcast(closure), "type_id")
         .select(F.col("token").alias("obj"), "type_id", "ancestor", "depth")
     )
-
-
-SQL_KG_TYPE_CLOSURE = f"""
-  WITH RECURSIVE
-  dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
-  toks AS ({_TOKENS_SQL}),
-  edges(child, parent) AS (VALUES {_KG_TYPE_PARENT_SQL}),
-  closure(type_id, ancestor, depth) AS (
-    SELECT child, parent, 1 FROM edges
-    UNION ALL
-    SELECT c.type_id, e.parent, c.depth + 1
-    FROM closure c JOIN edges e ON c.ancestor = e.child),
-  asserted AS (SELECT DISTINCT token, type_id
-               FROM toks JOIN dict ON token = surface)
-  SELECT token AS obj, a.type_id, ancestor, CAST(depth AS INT) AS depth
-  FROM asserted a JOIN closure ON a.type_id = closure.type_id
-"""
-
-QUERIES["kg_type_closure"] = q_kg_type_closure
-ORACLES["kg_type_closure"] = SQL_KG_TYPE_CLOSURE
 
 
 # --------------------------------------------------------- IVF-PQ (ADC)
@@ -3899,6 +3741,61 @@ def _l2sq(a, b):
     )
 
 
+SQL_ANN_TOPK_IVFPQ = f"""
+  WITH e AS (
+    SELECT vec_id, CAST(i - 1 AS INT) AS d, CAST(embedding[i] AS DOUBLE) AS v
+    FROM (SELECT vec_id, embedding, unnest(range(1, len(embedding) + 1)) AS i
+          FROM embeddings)),
+  sube AS (SELECT vec_id, CAST(floor(d / {PQ_SUB}) AS INT) AS m,
+                  d % {PQ_SUB} AS r, v FROM e),
+  cb AS (SELECT vec_id AS j, m, r, v AS c FROM sube WHERE vec_id < {PQ_K}),
+  sd AS (SELECT s.vec_id, s.m, cb.j,
+                round(sum((s.v - cb.c) * (s.v - cb.c)), 6) AS sd
+         FROM sube s JOIN cb ON s.m = cb.m AND s.r = cb.r
+         GROUP BY s.vec_id, s.m, cb.j),
+  codes AS (SELECT vec_id, m, j FROM (
+      SELECT vec_id, m, j,
+             row_number() OVER (PARTITION BY vec_id, m ORDER BY sd ASC, j ASC) AS rn
+      FROM sd) WHERE rn = 1),
+  norm AS (SELECT vec_id, sqrt(sum(v * v)) AS norm FROM e GROUP BY vec_id),
+  cent AS (SELECT vec_id AS cid, d, v AS cv FROM e WHERE vec_id < {IVF_K}),
+  cnorm AS (SELECT cid, sqrt(sum(cv * cv)) AS cnorm FROM cent GROUP BY cid),
+  cdot AS (SELECT e.vec_id, cent.cid, sum(e.v * cent.cv) AS dot
+           FROM e JOIN cent ON e.d = cent.d GROUP BY e.vec_id, cent.cid),
+  ac AS (SELECT cdot.vec_id, cdot.cid,
+                CAST(row_number() OVER (PARTITION BY cdot.vec_id
+                     ORDER BY round(cdot.dot / (norm.norm * cnorm.cnorm), 6) DESC,
+                              cdot.cid ASC) AS INT) AS r
+         FROM cdot JOIN norm ON norm.vec_id = cdot.vec_id
+                   JOIN cnorm ON cnorm.cid = cdot.cid),
+  lists AS (SELECT vec_id AS nid, cid FROM ac WHERE r = 1),
+  probes AS (SELECT vec_id AS qid, cid FROM ac
+             WHERE vec_id < {IVF_MAX_QID} AND r <= {IVF_NPROBE}),
+  cand AS (SELECT DISTINCT p.qid, l.nid FROM probes p JOIN lists l ON l.cid = p.cid
+           WHERE p.qid <> l.nid),
+  lut AS (SELECT vec_id AS qid, m, j, sd AS d FROM sd WHERE vec_id < {IVF_MAX_QID}),
+  adc0 AS (SELECT c.qid, c.nid, round(sum(lut.d), 6) AS adc
+           FROM cand c JOIN codes ON codes.vec_id = c.nid
+                       JOIN lut ON lut.qid = c.qid AND lut.m = codes.m AND lut.j = codes.j
+           GROUP BY c.qid, c.nid),
+  short AS (SELECT qid, nid, adc,
+                   CAST(row_number() OVER (PARTITION BY qid ORDER BY adc ASC, nid ASC) AS INT) AS sr
+            FROM adc0),
+  rer AS (SELECT s.qid, s.nid, s.adc,
+                 round(sum((a.v - b.v) * (a.v - b.v)), 6) AS l2
+          FROM short s JOIN e a ON a.vec_id = s.qid
+                       JOIN e b ON b.vec_id = s.nid AND b.d = a.d
+          WHERE s.sr <= {PQ_SHORTLIST}
+          GROUP BY s.qid, s.nid, s.adc),
+  ranked AS (SELECT qid, nid, adc, l2,
+                    CAST(row_number() OVER (PARTITION BY qid ORDER BY l2 ASC, nid ASC) AS INT) AS rank
+             FROM rer)
+  SELECT qid, nid, rank, round(adc, 4) AS adc, round(l2, 4) AS l2
+  FROM ranked WHERE rank <= 3
+"""
+
+
+@query("ann_topk_ivfpq", oracle=SQL_ANN_TOPK_IVFPQ)
 def q_ann_topk_ivfpq(spark, sf_dir):
     """IVF-PQ top-3 ANN with asymmetric distance computation (ADC) and
     exact rerank. Plan at scale: (1) coarse assignment and PQ encoding
@@ -3991,63 +3888,16 @@ def q_ann_topk_ivfpq(spark, sf_dir):
     )
 
 
-SQL_ANN_TOPK_IVFPQ = f"""
-  WITH e AS (
-    SELECT vec_id, CAST(i - 1 AS INT) AS d, CAST(embedding[i] AS DOUBLE) AS v
-    FROM (SELECT vec_id, embedding, unnest(range(1, len(embedding) + 1)) AS i
-          FROM embeddings)),
-  sube AS (SELECT vec_id, CAST(floor(d / {PQ_SUB}) AS INT) AS m,
-                  d % {PQ_SUB} AS r, v FROM e),
-  cb AS (SELECT vec_id AS j, m, r, v AS c FROM sube WHERE vec_id < {PQ_K}),
-  sd AS (SELECT s.vec_id, s.m, cb.j,
-                round(sum((s.v - cb.c) * (s.v - cb.c)), 6) AS sd
-         FROM sube s JOIN cb ON s.m = cb.m AND s.r = cb.r
-         GROUP BY s.vec_id, s.m, cb.j),
-  codes AS (SELECT vec_id, m, j FROM (
-      SELECT vec_id, m, j,
-             row_number() OVER (PARTITION BY vec_id, m ORDER BY sd ASC, j ASC) AS rn
-      FROM sd) WHERE rn = 1),
-  norm AS (SELECT vec_id, sqrt(sum(v * v)) AS norm FROM e GROUP BY vec_id),
-  cent AS (SELECT vec_id AS cid, d, v AS cv FROM e WHERE vec_id < {IVF_K}),
-  cnorm AS (SELECT cid, sqrt(sum(cv * cv)) AS cnorm FROM cent GROUP BY cid),
-  cdot AS (SELECT e.vec_id, cent.cid, sum(e.v * cent.cv) AS dot
-           FROM e JOIN cent ON e.d = cent.d GROUP BY e.vec_id, cent.cid),
-  ac AS (SELECT cdot.vec_id, cdot.cid,
-                CAST(row_number() OVER (PARTITION BY cdot.vec_id
-                     ORDER BY round(cdot.dot / (norm.norm * cnorm.cnorm), 6) DESC,
-                              cdot.cid ASC) AS INT) AS r
-         FROM cdot JOIN norm ON norm.vec_id = cdot.vec_id
-                   JOIN cnorm ON cnorm.cid = cdot.cid),
-  lists AS (SELECT vec_id AS nid, cid FROM ac WHERE r = 1),
-  probes AS (SELECT vec_id AS qid, cid FROM ac
-             WHERE vec_id < {IVF_MAX_QID} AND r <= {IVF_NPROBE}),
-  cand AS (SELECT DISTINCT p.qid, l.nid FROM probes p JOIN lists l ON l.cid = p.cid
-           WHERE p.qid <> l.nid),
-  lut AS (SELECT vec_id AS qid, m, j, sd AS d FROM sd WHERE vec_id < {IVF_MAX_QID}),
-  adc0 AS (SELECT c.qid, c.nid, round(sum(lut.d), 6) AS adc
-           FROM cand c JOIN codes ON codes.vec_id = c.nid
-                       JOIN lut ON lut.qid = c.qid AND lut.m = codes.m AND lut.j = codes.j
-           GROUP BY c.qid, c.nid),
-  short AS (SELECT qid, nid, adc,
-                   CAST(row_number() OVER (PARTITION BY qid ORDER BY adc ASC, nid ASC) AS INT) AS sr
-            FROM adc0),
-  rer AS (SELECT s.qid, s.nid, s.adc,
-                 round(sum((a.v - b.v) * (a.v - b.v)), 6) AS l2
-          FROM short s JOIN e a ON a.vec_id = s.qid
-                       JOIN e b ON b.vec_id = s.nid AND b.d = a.d
-          WHERE s.sr <= {PQ_SHORTLIST}
-          GROUP BY s.qid, s.nid, s.adc),
-  ranked AS (SELECT qid, nid, adc, l2,
-                    CAST(row_number() OVER (PARTITION BY qid ORDER BY l2 ASC, nid ASC) AS INT) AS rank
-             FROM rer)
-  SELECT qid, nid, rank, round(adc, 4) AS adc, round(l2, 4) AS l2
-  FROM ranked WHERE rank <= 3
+SQL_KG_SNAPSHOT_APPLY = f"""
+  WITH pdict(surface, type_id) AS (VALUES {_PRED_DICT_VALUES_SQL}),
+  toks AS ({_TOKENS_SQL})
+  SELECT DISTINCT 'doc_' || CAST(doc_id AS VARCHAR) AS subj,
+         'mentions_' || type_id AS pred, token AS obj
+  FROM toks JOIN pdict ON token = surface
 """
 
-QUERIES["ann_topk_ivfpq"] = q_ann_topk_ivfpq
-ORACLES["ann_topk_ivfpq"] = SQL_ANN_TOPK_IVFPQ
 
-
+@query("kg_snapshot_apply", oracle=SQL_KG_SNAPSHOT_APPLY)
 def q_kg_snapshot_apply(spark, sf_dir):
     """MERGE apply — the other half of incremental KG maintenance: take
     the BASE snapshot and the diff produced by kg_snapshot_diff and
@@ -4067,18 +3917,26 @@ def q_kg_snapshot_apply(spark, sf_dir):
     )
 
 
-SQL_KG_SNAPSHOT_APPLY = f"""
-  WITH pdict(surface, type_id) AS (VALUES {_PRED_DICT_VALUES_SQL}),
-  toks AS ({_TOKENS_SQL})
-  SELECT DISTINCT 'doc_' || CAST(doc_id AS VARCHAR) AS subj,
-         'mentions_' || type_id AS pred, token AS obj
-  FROM toks JOIN pdict ON token = surface
+SQL_SHIPPING_PRIORITY = """
+  WITH g AS (
+    SELECT l_orderkey, o_orderdate, o_orderpriority,
+           round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+    FROM lineitem
+    JOIN orders ON l_orderkey = o_orderkey
+    JOIN customer ON o_custkey = c_custkey
+    WHERE c_mktsegment = 'BUILDING'
+      AND o_orderdate < TIMESTAMP '1998-06-30 00:00:00'
+      AND l_shipdate > TIMESTAMP '1998-06-30 00:00:00'
+    GROUP BY l_orderkey, o_orderdate, o_orderpriority)
+  SELECT l_orderkey,
+         strftime(o_orderdate, '%Y-%m-%d %H:%M:%S') AS o_orderdate,
+         o_orderpriority, revenue,
+         CAST(row_number() OVER (ORDER BY revenue DESC, l_orderkey ASC) AS INT) AS rank
+  FROM g QUALIFY rank <= 10
 """
 
-QUERIES["kg_snapshot_apply"] = q_kg_snapshot_apply
-ORACLES["kg_snapshot_apply"] = SQL_KG_SNAPSHOT_APPLY
 
-
+@query("shipping_priority", oracle=SQL_SHIPPING_PRIORITY)
 def q_shipping_priority(spark, sf_dir):
     """TPC-H Q3 shape — the canonical selective three-way join: both date
     predicates and the segment predicate push down to the parquet scans
@@ -4122,49 +3980,8 @@ def q_shipping_priority(spark, sf_dir):
     )
 
 
-SQL_SHIPPING_PRIORITY = """
-  WITH g AS (
-    SELECT l_orderkey, o_orderdate, o_orderpriority,
-           round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-    FROM lineitem
-    JOIN orders ON l_orderkey = o_orderkey
-    JOIN customer ON o_custkey = c_custkey
-    WHERE c_mktsegment = 'BUILDING'
-      AND o_orderdate < TIMESTAMP '1998-06-30 00:00:00'
-      AND l_shipdate > TIMESTAMP '1998-06-30 00:00:00'
-    GROUP BY l_orderkey, o_orderdate, o_orderpriority)
-  SELECT l_orderkey,
-         strftime(o_orderdate, '%Y-%m-%d %H:%M:%S') AS o_orderdate,
-         o_orderpriority, revenue,
-         CAST(row_number() OVER (ORDER BY revenue DESC, l_orderkey ASC) AS INT) AS rank
-  FROM g QUALIFY rank <= 10
-"""
-
-QUERIES["shipping_priority"] = q_shipping_priority
-ORACLES["shipping_priority"] = SQL_SHIPPING_PRIORITY
-
-
 # ------------------------------------------------ BPE merges (oracled)
 N_BPE_MERGES = 8
-
-
-def q_bpe_merges(spark, sf_dir):
-    """The first N_BPE_MERGES learned BPE merge rules (operators/bpe.py:
-    Sennrich-style training whose loop runs on the vocabulary-bounded
-    word-frequency table — ONE corpus pass total). The merge list is the
-    model artifact (driver-sized by definition); the DuckDB oracle
-    re-learns it with the iterations UNROLLED as generated CTEs (the
-    kg_pagerank convention), symbols kept as delimiter-guarded strings
-    where SQL replace() reproduces BPE's left-to-right non-overlapping
-    merge exactly. Deterministic (freq DESC, pair ASC) tie-breaks on
-    both engines."""
-    from .operators.bpe import learn_bpe
-
-    merges = learn_bpe(_tokens(spark, sf_dir), n_merges=N_BPE_MERGES, min_freq=1)
-    return spark.createDataFrame(
-        [(i + 1, a, b) for i, (a, b) in enumerate(merges)],
-        ["rank", "left", "right"],
-    )
 
 
 def _bpe_oracle_sql(n_merges: int) -> str:
@@ -4197,8 +4014,25 @@ def _bpe_oracle_sql(n_merges: int) -> str:
 
 SQL_BPE_MERGES = _bpe_oracle_sql(N_BPE_MERGES)
 
-QUERIES["bpe_merges"] = q_bpe_merges
-ORACLES["bpe_merges"] = SQL_BPE_MERGES
+
+@query("bpe_merges", oracle=SQL_BPE_MERGES)
+def q_bpe_merges(spark, sf_dir):
+    """The first N_BPE_MERGES learned BPE merge rules (operators/bpe.py:
+    Sennrich-style training whose loop runs on the vocabulary-bounded
+    word-frequency table — ONE corpus pass total). The merge list is the
+    model artifact (driver-sized by definition); the DuckDB oracle
+    re-learns it with the iterations UNROLLED as generated CTEs (the
+    kg_pagerank convention), symbols kept as delimiter-guarded strings
+    where SQL replace() reproduces BPE's left-to-right non-overlapping
+    merge exactly. Deterministic (freq DESC, pair ASC) tie-breaks on
+    both engines."""
+    from .operators.bpe import learn_bpe
+
+    merges = learn_bpe(_tokens(spark, sf_dir), n_merges=N_BPE_MERGES, min_freq=1)
+    return spark.createDataFrame(
+        [(i + 1, a, b) for i, (a, b) in enumerate(merges)],
+        ["rank", "left", "right"],
+    )
 
 
 # ------------------------------------------------ PII scrubbing (oracled)
@@ -4214,6 +4048,28 @@ PII_IP_RE = r"\b\d{1,3}(\.\d{1,3}){3}\b"
 PII_PHONE_RE = r"\b\d{3}-\d{4}\b"
 
 
+SQL_PII_SCRUB = rf"""
+  WITH d AS (
+    SELECT doc_id,
+           text || ' contact user' || CAST(doc_id AS VARCHAR)
+                || '@mail-' || source || '.com from host 10.'
+                || CAST(doc_id % 200 AS VARCHAR) || '.0.'
+                || CAST(doc_id % 250 AS VARCHAR) || ' tel 555-'
+                || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') AS aug
+    FROM documents)
+  SELECT doc_id,
+         CAST(len(regexp_extract_all(aug, '{PII_EMAIL_RE}')) AS INT) AS n_email,
+         CAST(len(regexp_extract_all(aug, '{PII_IP_RE}')) AS INT) AS n_ip,
+         CAST(len(regexp_extract_all(aug, '{PII_PHONE_RE}')) AS INT) AS n_phone,
+         sha256(regexp_replace(regexp_replace(regexp_replace(aug,
+             '{PII_EMAIL_RE}', '<EMAIL>', 'g'),
+             '{PII_IP_RE}', '<IP>', 'g'),
+             '{PII_PHONE_RE}', '<PHONE>', 'g')) AS redacted_sha
+  FROM d
+"""
+
+
+@query("pii_scrub", oracle=SQL_PII_SCRUB)
 def q_pii_scrub(spark, sf_dir):
     """PII redaction: per-category match counts plus the sha256 of the
     fully redacted text (proving byte-identical scrubbing across engines).
@@ -4242,30 +4098,6 @@ def q_pii_scrub(spark, sf_dir):
     )
 
 
-SQL_PII_SCRUB = rf"""
-  WITH d AS (
-    SELECT doc_id,
-           text || ' contact user' || CAST(doc_id AS VARCHAR)
-                || '@mail-' || source || '.com from host 10.'
-                || CAST(doc_id % 200 AS VARCHAR) || '.0.'
-                || CAST(doc_id % 250 AS VARCHAR) || ' tel 555-'
-                || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') AS aug
-    FROM documents)
-  SELECT doc_id,
-         CAST(len(regexp_extract_all(aug, '{PII_EMAIL_RE}')) AS INT) AS n_email,
-         CAST(len(regexp_extract_all(aug, '{PII_IP_RE}')) AS INT) AS n_ip,
-         CAST(len(regexp_extract_all(aug, '{PII_PHONE_RE}')) AS INT) AS n_phone,
-         sha256(regexp_replace(regexp_replace(regexp_replace(aug,
-             '{PII_EMAIL_RE}', '<EMAIL>', 'g'),
-             '{PII_IP_RE}', '<IP>', 'g'),
-             '{PII_PHONE_RE}', '<PHONE>', 'g')) AS redacted_sha
-  FROM d
-"""
-
-QUERIES["pii_scrub"] = q_pii_scrub
-ORACLES["pii_scrub"] = SQL_PII_SCRUB
-
-
 # ------------------------------------- per-line code metrics (oracled)
 # StarCoder/CodeParrot-style structural filters for source-code corpora:
 # max/mean line length, long-line fraction, alphanumeric fraction. The
@@ -4289,6 +4121,27 @@ def _doc_line_agg(line_lens: DataFrame) -> DataFrame:
     )
 
 
+SQL_CODE_LINE_METRICS = f"""
+  WITH toks AS ({_TOKENS_SQL}),
+  lines AS (
+    SELECT doc_id, CAST(pos // {LINE_TOKENS} AS INT) AS line_id,
+           sum(len(token)) + count(*) - 1 AS line_chars
+    FROM toks GROUP BY doc_id, line_id),
+  per_doc AS (
+    SELECT doc_id, count(*) AS n_lines,
+           CAST(max(line_chars) AS BIGINT) AS max_line_chars,
+           round(avg(line_chars), 6) AS avg_line_chars,
+           CAST(sum(CASE WHEN line_chars > {LONG_LINE_CHARS} THEN 1 ELSE 0 END) AS BIGINT)
+             AS n_long_lines
+    FROM lines GROUP BY doc_id)
+  SELECT p.doc_id, n_lines, max_line_chars, avg_line_chars, n_long_lines,
+         round(CAST(len(regexp_replace(text, '[^A-Za-z0-9]', '', 'g')) AS DOUBLE)
+               / n_chars, 6) AS alnum_frac
+  FROM per_doc p JOIN documents d ON p.doc_id = d.doc_id
+"""
+
+
+@query("code_line_metrics", oracle=SQL_CODE_LINE_METRICS)
 def q_code_line_metrics(spark, sf_dir):
     """Line lengths are computed WITHOUT materializing line strings:
     chars(line) = sum(len(token)) + (n_tokens - 1) separators, so the
@@ -4311,29 +4164,6 @@ def q_code_line_metrics(spark, sf_dir):
     )
 
 
-SQL_CODE_LINE_METRICS = f"""
-  WITH toks AS ({_TOKENS_SQL}),
-  lines AS (
-    SELECT doc_id, CAST(pos // {LINE_TOKENS} AS INT) AS line_id,
-           sum(len(token)) + count(*) - 1 AS line_chars
-    FROM toks GROUP BY doc_id, line_id),
-  per_doc AS (
-    SELECT doc_id, count(*) AS n_lines,
-           CAST(max(line_chars) AS BIGINT) AS max_line_chars,
-           round(avg(line_chars), 6) AS avg_line_chars,
-           CAST(sum(CASE WHEN line_chars > {LONG_LINE_CHARS} THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_long_lines
-    FROM lines GROUP BY doc_id)
-  SELECT p.doc_id, n_lines, max_line_chars, avg_line_chars, n_long_lines,
-         round(CAST(len(regexp_replace(text, '[^A-Za-z0-9]', '', 'g')) AS DOUBLE)
-               / n_chars, 6) AS alnum_frac
-  FROM per_doc p JOIN documents d ON p.doc_id = d.doc_id
-"""
-
-QUERIES["code_line_metrics"] = q_code_line_metrics
-ORACLES["code_line_metrics"] = SQL_CODE_LINE_METRICS
-
-
 # --------------------------------- paragraph-level dedup frac (oracled)
 # RefinedWeb-style sub-document dedup signal: the fraction of a document's
 # paragraphs that occur elsewhere in the corpus. Paragraphs here are a
@@ -4345,6 +4175,28 @@ ORACLES["code_line_metrics"] = SQL_CODE_LINE_METRICS
 PARA_TOKENS = 20
 
 
+SQL_DEDUP_PARAGRAPH = f"""
+  WITH d AS (
+    SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS arr
+    FROM documents),
+  p AS (
+    SELECT doc_id,
+           sha256(array_to_string(
+             list_slice(arr, j * {PARA_TOKENS} + 1, j * {PARA_TOKENS} + {PARA_TOKENS}), ' ')) AS psha
+    FROM (SELECT doc_id, arr,
+                 unnest(range(0, CAST(ceil(len(arr) / {PARA_TOKENS}.0) AS INT))) AS j
+          FROM d WHERE len(arr) > 0)),
+  g AS (SELECT psha, count(*) AS n_occ FROM p GROUP BY psha)
+  SELECT doc_id, count(*) AS n_paras,
+         CAST(sum(CASE WHEN n_occ > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_paras,
+         round(CAST(sum(CASE WHEN n_occ > 1 THEN 1 ELSE 0 END) AS DOUBLE) / count(*), 6)
+           AS dup_para_frac
+  FROM p JOIN g USING (psha)
+  GROUP BY doc_id
+"""
+
+
+@query("dedup_paragraph", oracle=SQL_DEDUP_PARAGRAPH)
 def q_dedup_paragraph(spark, sf_dir):
     d = (
         _docs(spark, sf_dir)
@@ -4375,30 +4227,6 @@ def q_dedup_paragraph(spark, sf_dir):
     )
 
 
-SQL_DEDUP_PARAGRAPH = f"""
-  WITH d AS (
-    SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS arr
-    FROM documents),
-  p AS (
-    SELECT doc_id,
-           sha256(array_to_string(
-             list_slice(arr, j * {PARA_TOKENS} + 1, j * {PARA_TOKENS} + {PARA_TOKENS}), ' ')) AS psha
-    FROM (SELECT doc_id, arr,
-                 unnest(range(0, CAST(ceil(len(arr) / {PARA_TOKENS}.0) AS INT))) AS j
-          FROM d WHERE len(arr) > 0)),
-  g AS (SELECT psha, count(*) AS n_occ FROM p GROUP BY psha)
-  SELECT doc_id, count(*) AS n_paras,
-         CAST(sum(CASE WHEN n_occ > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_paras,
-         round(CAST(sum(CASE WHEN n_occ > 1 THEN 1 ELSE 0 END) AS DOUBLE) / count(*), 6)
-           AS dup_para_frac
-  FROM p JOIN g USING (psha)
-  GROUP BY doc_id
-"""
-
-QUERIES["dedup_paragraph"] = q_dedup_paragraph
-ORACLES["dedup_paragraph"] = SQL_DEDUP_PARAGRAPH
-
-
 # ------------------------------------------------- as-of join (oracled)
 # The time-series operator Spark's built-ins lack (DuckDB/kdb/Flink have
 # it natively): for each left event, the single most recent right event
@@ -4414,6 +4242,16 @@ ORACLES["dedup_paragraph"] = SQL_DEDUP_PARAGRAPH
 # with boundary replication — not needed for uniform user traffic.
 
 
+SQL_EVENTS_ASOF_JOIN = """
+  SELECT p.event_id, p.user_id, e.event_id AS err_event_id,
+         epoch_us(p.ts) - epoch_us(e.ts) AS err_lag_us
+  FROM (SELECT * FROM events WHERE event_type = 'purchase') p
+  ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'error') e
+    ON p.user_id = e.user_id AND p.ts >= e.ts
+"""
+
+
+@query("events_asof_join", oracle=SQL_EVENTS_ASOF_JOIN)
 def q_events_asof_join(spark, sf_dir):
     """Each 'purchase' joined to the latest same-user 'error' at-or-before
     it (operators/asof.py); lag reported in exact epoch microseconds
@@ -4437,18 +4275,6 @@ def q_events_asof_join(spark, sf_dir):
     )
 
 
-SQL_EVENTS_ASOF_JOIN = """
-  SELECT p.event_id, p.user_id, e.event_id AS err_event_id,
-         epoch_us(p.ts) - epoch_us(e.ts) AS err_lag_us
-  FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-  ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'error') e
-    ON p.user_id = e.user_id AND p.ts >= e.ts
-"""
-
-QUERIES["events_asof_join"] = q_events_asof_join
-ORACLES["events_asof_join"] = SQL_EVENTS_ASOF_JOIN
-
-
 # -------------------------------------------- code import graph (oracled)
 # The code-payload KG primitive: parse import statements out of source
 # text (JVM-side regex, no Python), build the module dependency edge set,
@@ -4468,6 +4294,27 @@ FROM_RE = r"from (mod_[0-9]+) import"
 MOD_SPACE = 1000
 
 
+SQL_CODE_IMPORT_GRAPH = f"""
+  WITH aug AS (
+    SELECT 'mod_' || CAST(doc_id AS VARCHAR) AS src,
+           'import mod_' || CAST((doc_id * 7 + 1) % {MOD_SPACE} AS VARCHAR)
+           || ' ; import mod_' || CAST((doc_id * 13 + 5) % {MOD_SPACE} AS VARCHAR)
+           || ' ; from mod_' || CAST((doc_id * 31 + 11) % {MOD_SPACE} AS VARCHAR)
+           || ' import util ; def fn_' || CAST(doc_id AS VARCHAR) || ' (): pass' AS content
+    FROM documents),
+  exploded AS (
+    SELECT src, unnest(list_concat(
+             regexp_extract_all(content, 'import (mod_[0-9]+)', 1),
+             regexp_extract_all(content, 'from (mod_[0-9]+) import', 1))) AS dst
+    FROM aug),
+  edges AS (SELECT DISTINCT src, dst FROM exploded),
+  defined AS (SELECT DISTINCT 'mod_' || CAST(doc_id AS VARCHAR) AS dst FROM documents)
+  SELECT e.src, e.dst, CASE WHEN d.dst IS NULL THEN 0 ELSE 1 END AS resolved
+  FROM edges e LEFT JOIN defined d ON e.dst = d.dst
+"""
+
+
+@query("code_import_graph", oracle=SQL_CODE_IMPORT_GRAPH)
 def q_code_import_graph(spark, sf_dir):
     d = _docs(spark, sf_dir)
     content = F.concat(
@@ -4499,29 +4346,6 @@ def q_code_import_graph(spark, sf_dir):
     )
 
 
-SQL_CODE_IMPORT_GRAPH = f"""
-  WITH aug AS (
-    SELECT 'mod_' || CAST(doc_id AS VARCHAR) AS src,
-           'import mod_' || CAST((doc_id * 7 + 1) % {MOD_SPACE} AS VARCHAR)
-           || ' ; import mod_' || CAST((doc_id * 13 + 5) % {MOD_SPACE} AS VARCHAR)
-           || ' ; from mod_' || CAST((doc_id * 31 + 11) % {MOD_SPACE} AS VARCHAR)
-           || ' import util ; def fn_' || CAST(doc_id AS VARCHAR) || ' (): pass' AS content
-    FROM documents),
-  exploded AS (
-    SELECT src, unnest(list_concat(
-             regexp_extract_all(content, 'import (mod_[0-9]+)', 1),
-             regexp_extract_all(content, 'from (mod_[0-9]+) import', 1))) AS dst
-    FROM aug),
-  edges AS (SELECT DISTINCT src, dst FROM exploded),
-  defined AS (SELECT DISTINCT 'mod_' || CAST(doc_id AS VARCHAR) AS dst FROM documents)
-  SELECT e.src, e.dst, CASE WHEN d.dst IS NULL THEN 0 ELSE 1 END AS resolved
-  FROM edges e LEFT JOIN defined d ON e.dst = d.dst
-"""
-
-QUERIES["code_import_graph"] = q_code_import_graph
-ORACLES["code_import_graph"] = SQL_CODE_IMPORT_GRAPH
-
-
 # ------------------------------------------- compaction planner (oracled)
 # Iceberg-maintenance-shaped small-file compaction: given the table's file
 # metadata (file_id, partition, size), assign files to rewrite bins by
@@ -4535,6 +4359,20 @@ ORACLES["code_import_graph"] = SQL_CODE_IMPORT_GRAPH
 COMPACT_TARGET_BYTES = 2000
 
 
+SQL_COMPACTION_PLAN = f"""
+  WITH binned AS (
+    SELECT lang AS part, n_chars AS size_bytes,
+           CAST(floor(coalesce(sum(n_chars) OVER (
+                  PARTITION BY lang ORDER BY doc_id
+                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+                / {COMPACT_TARGET_BYTES}) AS INT) AS bin_id
+    FROM documents)
+  SELECT part, bin_id, count(*) AS n_files, CAST(sum(size_bytes) AS BIGINT) AS bin_bytes
+  FROM binned GROUP BY part, bin_id
+"""
+
+
+@query("compaction_plan", oracle=SQL_COMPACTION_PLAN)
 def q_compaction_plan(spark, sf_dir):
     files = _docs(spark, sf_dir).select(
         F.col("doc_id").alias("file_id"), F.col("lang").alias("part"),
@@ -4550,22 +4388,6 @@ def q_compaction_plan(spark, sf_dir):
         F.count("*").alias("n_files"),
         F.sum("size_bytes").alias("bin_bytes"),
     )
-
-
-SQL_COMPACTION_PLAN = f"""
-  WITH binned AS (
-    SELECT lang AS part, n_chars AS size_bytes,
-           CAST(floor(coalesce(sum(n_chars) OVER (
-                  PARTITION BY lang ORDER BY doc_id
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                / {COMPACT_TARGET_BYTES}) AS INT) AS bin_id
-    FROM documents)
-  SELECT part, bin_id, count(*) AS n_files, CAST(sum(size_bytes) AS BIGINT) AS bin_bytes
-  FROM binned GROUP BY part, bin_id
-"""
-
-QUERIES["compaction_plan"] = q_compaction_plan
-ORACLES["compaction_plan"] = SQL_COMPACTION_PLAN
 
 
 # ------------------------------------------ interval range join (oracled)
@@ -4584,6 +4406,23 @@ RANGE_BUCKET_S = 600
 RANGE_LEN_S = 600
 
 
+SQL_RANGE_JOIN_INTERVALS = f"""
+  WITH iv AS (
+    SELECT event_id AS interval_id, user_id,
+           CAST(epoch_us(ts) // 1000000 AS BIGINT) AS s
+    FROM events WHERE event_type = 'error'),
+  p AS (
+    SELECT user_id, CAST(epoch_us(ts) // 1000000 AS BIGINT) AS t
+    FROM events WHERE event_type = 'purchase')
+  SELECT interval_id, iv.user_id,
+         CAST(count(p.t) AS BIGINT) AS n_points
+  FROM iv LEFT JOIN p
+    ON p.user_id = iv.user_id AND p.t >= iv.s AND p.t < iv.s + {RANGE_LEN_S}
+  GROUP BY interval_id, iv.user_id
+"""
+
+
+@query("range_join_intervals", oracle=SQL_RANGE_JOIN_INTERVALS)
 def q_range_join_intervals(spark, sf_dir):
     e = spark.read.parquet(f"{sf_dir}/events.parquet")
     sec = F.unix_timestamp(F.col("ts").cast("timestamp"))
@@ -4611,25 +4450,6 @@ def q_range_join_intervals(spark, sf_dir):
     )
 
 
-SQL_RANGE_JOIN_INTERVALS = f"""
-  WITH iv AS (
-    SELECT event_id AS interval_id, user_id,
-           CAST(epoch_us(ts) // 1000000 AS BIGINT) AS s
-    FROM events WHERE event_type = 'error'),
-  p AS (
-    SELECT user_id, CAST(epoch_us(ts) // 1000000 AS BIGINT) AS t
-    FROM events WHERE event_type = 'purchase')
-  SELECT interval_id, iv.user_id,
-         CAST(count(p.t) AS BIGINT) AS n_points
-  FROM iv LEFT JOIN p
-    ON p.user_id = iv.user_id AND p.t >= iv.s AND p.t < iv.s + {RANGE_LEN_S}
-  GROUP BY interval_id, iv.user_id
-"""
-
-QUERIES["range_join_intervals"] = q_range_join_intervals
-ORACLES["range_join_intervals"] = SQL_RANGE_JOIN_INTERVALS
-
-
 # ------------------------------------------------- Zipf fit (oracled)
 # Corpus-statistics gauge: fit log(freq) ~ log(rank) over the term
 # frequency table with the built-in regression aggregates (JVM-side).
@@ -4650,6 +4470,21 @@ ORACLES["range_join_intervals"] = SQL_RANGE_JOIN_INTERVALS
 # construction — the DuckDB oracle still computes them the naive way.
 
 
+SQL_TOKENS_ZIPF = f"""
+  WITH toks AS ({_TOKENS_SQL}),
+  freq AS (SELECT token, count(*) AS freq FROM toks GROUP BY token),
+  ranked AS (
+    SELECT freq, row_number() OVER (ORDER BY freq DESC, token ASC) AS rank
+    FROM freq)
+  SELECT round(regr_slope(ln(freq), ln(rank)), 4) AS zipf_slope,
+         round(regr_intercept(ln(freq), ln(rank)), 4) AS zipf_intercept,
+         round(regr_r2(ln(freq), ln(rank)), 4) AS zipf_r2,
+         count(*) AS n_vocab
+  FROM ranked
+"""
+
+
+@query("tokens_zipf", oracle=SQL_TOKENS_ZIPF)
 def q_tokens_zipf(spark, sf_dir):
     freq = _tokens(spark, sf_dir).groupBy("token").agg(F.count("*").alias("freq"))
     banded = freq.withColumn("pfx", F.substring("token", 1, 1))
@@ -4673,34 +4508,11 @@ def q_tokens_zipf(spark, sf_dir):
     )
 
 
-SQL_TOKENS_ZIPF = f"""
-  WITH toks AS ({_TOKENS_SQL}),
-  freq AS (SELECT token, count(*) AS freq FROM toks GROUP BY token),
-  ranked AS (
-    SELECT freq, row_number() OVER (ORDER BY freq DESC, token ASC) AS rank
-    FROM freq)
-  SELECT round(regr_slope(ln(freq), ln(rank)), 4) AS zipf_slope,
-         round(regr_intercept(ln(freq), ln(rank)), 4) AS zipf_intercept,
-         round(regr_r2(ln(freq), ln(rank)), 4) AS zipf_r2,
-         count(*) AS n_vocab
-  FROM ranked
-"""
-
-QUERIES["tokens_zipf"] = q_tokens_zipf
-ORACLES["tokens_zipf"] = SQL_TOKENS_ZIPF
-
-
 # ------------------------------------- lang-ID confusion matrix (oracled)
 # Model-monitoring gauge over the lang_id heuristic: actual label ×
 # predicted label counts — the standard quality dashboard for any
 # classifier stage in the pipeline. One extra exchange over lang_id's
 # plan (the matrix aggregation); matrix size = |langs|² = tiny.
-
-
-def q_lang_id_confusion(spark, sf_dir):
-    pred = q_lang_id(spark, sf_dir)
-    return pred.groupBy("lang", "predicted_lang").agg(
-        F.count("*").alias("n_docs"))
 
 
 SQL_LANG_ID_CONFUSION = f"""
@@ -4709,8 +4521,12 @@ SQL_LANG_ID_CONFUSION = f"""
   FROM pred GROUP BY lang, predicted_lang
 """
 
-QUERIES["lang_id_confusion"] = q_lang_id_confusion
-ORACLES["lang_id_confusion"] = SQL_LANG_ID_CONFUSION
+
+@query("lang_id_confusion", oracle=SQL_LANG_ID_CONFUSION)
+def q_lang_id_confusion(spark, sf_dir):
+    pred = q_lang_id(spark, sf_dir)
+    return pred.groupBy("lang", "predicted_lang").agg(
+        F.count("*").alias("n_docs"))
 
 
 # ------------------------------------------- CUBE event rollup (oracled)
@@ -4722,6 +4538,14 @@ ORACLES["lang_id_confusion"] = SQL_LANG_ID_CONFUSION
 # CUBE as one expand + one partial-aggregated exchange — scale-safe.
 
 
+SQL_EVENTS_ROLLUP = """
+  SELECT event_type, CAST(hour(ts) AS INT) AS hh, count(*) AS n_events,
+         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS sum_value_cents
+  FROM events GROUP BY CUBE (event_type, hour(ts))
+"""
+
+
+@query("events_rollup", oracle=SQL_EVENTS_ROLLUP)
 def q_events_rollup(spark, sf_dir):
     e = spark.read.parquet(f"{sf_dir}/events.parquet").select(
         "event_type", F.hour("ts").alias("hh"),
@@ -4733,16 +4557,6 @@ def q_events_rollup(spark, sf_dir):
     )
 
 
-SQL_EVENTS_ROLLUP = """
-  SELECT event_type, CAST(hour(ts) AS INT) AS hh, count(*) AS n_events,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS sum_value_cents
-  FROM events GROUP BY CUBE (event_type, hour(ts))
-"""
-
-QUERIES["events_rollup"] = q_events_rollup
-ORACLES["events_rollup"] = SQL_EVENTS_ROLLUP
-
-
 # --------------------------------------------- conversion funnel (oracled)
 # Sequential event funnel (view -> click -> purchase, strictly ordered per
 # user): each stage is min(ts) over the PREVIOUS stage's survivors, so a
@@ -4751,22 +4565,6 @@ ORACLES["events_rollup"] = SQL_EVENTS_ROLLUP
 # is co-partitioned — and the final assembly is a cross join of three
 # 1-row aggregates. Scale-safe: state per stage is one row per surviving
 # user.
-
-
-def q_events_funnel(spark, sf_dir):
-    e = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "user_id", "event_type", "ts")
-    v = (e.filter(F.col("event_type") == "view")
-         .groupBy("user_id").agg(F.min("ts").alias("v_t")))
-    c = (e.filter(F.col("event_type") == "click")
-         .join(v, "user_id").filter(F.col("ts") > F.col("v_t"))
-         .groupBy("user_id").agg(F.min("ts").alias("c_t")))
-    p = (e.filter(F.col("event_type") == "purchase")
-         .join(c, "user_id").filter(F.col("ts") > F.col("c_t"))
-         .groupBy("user_id").agg(F.min("ts").alias("p_t")))
-    return (v.agg(F.count("*").alias("n_view"))
-            .crossJoin(c.agg(F.count("*").alias("n_click_after_view")))
-            .crossJoin(p.agg(F.count("*").alias("n_purchase_after_click"))))
 
 
 SQL_EVENTS_FUNNEL = """
@@ -4783,8 +4581,22 @@ SQL_EVENTS_FUNNEL = """
          (SELECT count(*) FROM p) AS n_purchase_after_click
 """
 
-QUERIES["events_funnel"] = q_events_funnel
-ORACLES["events_funnel"] = SQL_EVENTS_FUNNEL
+
+@query("events_funnel", oracle=SQL_EVENTS_FUNNEL)
+def q_events_funnel(spark, sf_dir):
+    e = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+        "user_id", "event_type", "ts")
+    v = (e.filter(F.col("event_type") == "view")
+         .groupBy("user_id").agg(F.min("ts").alias("v_t")))
+    c = (e.filter(F.col("event_type") == "click")
+         .join(v, "user_id").filter(F.col("ts") > F.col("v_t"))
+         .groupBy("user_id").agg(F.min("ts").alias("c_t")))
+    p = (e.filter(F.col("event_type") == "purchase")
+         .join(c, "user_id").filter(F.col("ts") > F.col("c_t"))
+         .groupBy("user_id").agg(F.min("ts").alias("p_t")))
+    return (v.agg(F.count("*").alias("n_view"))
+            .crossJoin(c.agg(F.count("*").alias("n_click_after_view")))
+            .crossJoin(p.agg(F.count("*").alias("n_purchase_after_click"))))
 
 
 # ----------------------------------------------- cohort retention (oracled)
@@ -4793,19 +4605,6 @@ ORACLES["events_funnel"] = SQL_EVENTS_FUNNEL
 # user_id (distinct active days, then first day) plus one cohort-keyed
 # aggregation; output is |cohorts| x |offsets| — bounded by the calendar,
 # never by the corpus.
-
-
-def q_events_retention(spark, sf_dir):
-    e = (spark.read.parquet(f"{sf_dir}/events.parquet")
-         .select("user_id", F.to_date("ts").alias("d")).distinct())
-    f = e.groupBy("user_id").agg(F.min("d").alias("cohort"))
-    return (
-        e.join(f, "user_id")
-        .groupBy("cohort", F.datediff("d", "cohort").alias("day_offset"))
-        .agg(F.count("*").alias("n_users"))
-        .select(F.col("cohort").cast("string").alias("cohort_day"),
-                "day_offset", "n_users")
-    )
 
 
 SQL_EVENTS_RETENTION = """
@@ -4818,8 +4617,19 @@ SQL_EVENTS_RETENTION = """
   GROUP BY cohort, date_diff('day', cohort, d.d)
 """
 
-QUERIES["events_retention"] = q_events_retention
-ORACLES["events_retention"] = SQL_EVENTS_RETENTION
+
+@query("events_retention", oracle=SQL_EVENTS_RETENTION)
+def q_events_retention(spark, sf_dir):
+    e = (spark.read.parquet(f"{sf_dir}/events.parquet")
+         .select("user_id", F.to_date("ts").alias("d")).distinct())
+    f = e.groupBy("user_id").agg(F.min("d").alias("cohort"))
+    return (
+        e.join(f, "user_id")
+        .groupBy("cohort", F.datediff("d", "cohort").alias("day_offset"))
+        .agg(F.count("*").alias("n_users"))
+        .select(F.col("cohort").cast("string").alias("cohort_day"),
+                "day_offset", "n_users")
+    )
 
 
 # --------------------------------------- local supplier volume (oracled)
@@ -4835,6 +4645,23 @@ Q5_REGION = "ASIA"
 Q5_CUTOFF = "1998-06-30"
 
 
+SQL_LOCAL_SUPPLIER_VOLUME = f"""
+  SELECT n_name,
+         round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+         count(*) AS n_lineitems
+  FROM lineitem
+  JOIN orders ON l_orderkey = o_orderkey
+  JOIN customer ON o_custkey = c_custkey
+  JOIN supplier ON l_suppkey = s_suppkey AND s_nationkey = c_nationkey
+  JOIN nation ON s_nationkey = n_nationkey
+  JOIN region ON n_regionkey = r_regionkey
+  WHERE r_name = '{Q5_REGION}'
+    AND o_orderdate < TIMESTAMP '{Q5_CUTOFF} 00:00:00'
+  GROUP BY n_name
+"""
+
+
+@query("local_supplier_volume", oracle=SQL_LOCAL_SUPPLIER_VOLUME)
 def q_local_supplier_volume(spark, sf_dir):
     r = (spark.read.parquet(f"{sf_dir}/region.parquet")
          .filter(F.col("r_name") == Q5_REGION))
@@ -4863,25 +4690,6 @@ def q_local_supplier_volume(spark, sf_dir):
     )
 
 
-SQL_LOCAL_SUPPLIER_VOLUME = f"""
-  SELECT n_name,
-         round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-         count(*) AS n_lineitems
-  FROM lineitem
-  JOIN orders ON l_orderkey = o_orderkey
-  JOIN customer ON o_custkey = c_custkey
-  JOIN supplier ON l_suppkey = s_suppkey AND s_nationkey = c_nationkey
-  JOIN nation ON s_nationkey = n_nationkey
-  JOIN region ON n_regionkey = r_regionkey
-  WHERE r_name = '{Q5_REGION}'
-    AND o_orderdate < TIMESTAMP '{Q5_CUTOFF} 00:00:00'
-  GROUP BY n_name
-"""
-
-QUERIES["local_supplier_volume"] = q_local_supplier_volume
-ORACLES["local_supplier_volume"] = SQL_LOCAL_SUPPLIER_VOLUME
-
-
 # ------------------------------------------- clone-pair detection (oracled)
 # Code-clone candidate pairs via winnowing-fingerprint overlap (the MOSS
 # scheme): documents sharing >= CLONE_MIN_SHARED distinct window-minimum
@@ -4894,21 +4702,6 @@ ORACLES["local_supplier_volume"] = SQL_LOCAL_SUPPLIER_VOLUME
 
 CLONE_MIN_SHARED = 3
 CLONE_FP_DF_CAP = 50
-
-
-def q_clone_pairs_winnow(spark, sf_dir):
-    sh = _shingles(spark, sf_dir).withColumn(
-        "h", F.substring(F.md5("shingle"), 1, 16))
-    w = W.partitionBy("doc_id").orderBy("pos").rowsBetween(0, 3)
-    fps = (sh.withColumn("fp", F.min("h").over(w))
-           .select("doc_id", "fp").distinct())
-    g = _capped_member_docs(fps, ["fp"], "doc_id", CLONE_FP_DF_CAP)
-    return (
-        g.select(F.explode(_intra_bucket_pairs("doc_a", "doc_b")).alias("p"))
-        .groupBy("p.doc_a", "p.doc_b")
-        .agg(F.count("*").alias("n_shared"))
-        .filter(F.col("n_shared") >= CLONE_MIN_SHARED)
-    )
 
 
 SQL_CLONE_PAIRS_WINNOW = f"""
@@ -4927,8 +4720,21 @@ SQL_CLONE_PAIRS_WINNOW = f"""
   HAVING count(*) >= {CLONE_MIN_SHARED}
 """
 
-QUERIES["clone_pairs_winnow"] = q_clone_pairs_winnow
-ORACLES["clone_pairs_winnow"] = SQL_CLONE_PAIRS_WINNOW
+
+@query("clone_pairs_winnow", oracle=SQL_CLONE_PAIRS_WINNOW)
+def q_clone_pairs_winnow(spark, sf_dir):
+    sh = _shingles(spark, sf_dir).withColumn(
+        "h", F.substring(F.md5("shingle"), 1, 16))
+    w = W.partitionBy("doc_id").orderBy("pos").rowsBetween(0, 3)
+    fps = (sh.withColumn("fp", F.min("h").over(w))
+           .select("doc_id", "fp").distinct())
+    g = _capped_member_docs(fps, ["fp"], "doc_id", CLONE_FP_DF_CAP)
+    return (
+        g.select(F.explode(_intra_bucket_pairs("doc_a", "doc_b")).alias("p"))
+        .groupBy("p.doc_a", "p.doc_b")
+        .agg(F.count("*").alias("n_shared"))
+        .filter(F.col("n_shared") >= CLONE_MIN_SHARED)
+    )
 
 
 # --------------------------------------- event transition matrix (oracled)
@@ -4937,21 +4743,6 @@ ORACLES["clone_pairs_winnow"] = SQL_CLONE_PAIRS_WINNOW
 # (the same user_id exchange sessionize uses), then a tiny
 # |types|^2-bounded aggregation; transition probability is an exact
 # integer ratio rounded identically on both engines.
-
-
-def q_events_transitions(spark, sf_dir):
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    s = e.select("user_id", "event_type",
-                 F.lead("event_type").over(w).alias("next_type"))
-    counts = (s.filter(F.col("next_type").isNotNull())
-              .groupBy("event_type", "next_type")
-              .agg(F.count("*").alias("n")))
-    tot = W.partitionBy("event_type")
-    return counts.select(
-        "event_type", "next_type", "n",
-        F.round(F.col("n") / F.sum("n").over(tot), 6).alias("p"),
-    )
 
 
 SQL_EVENTS_TRANSITIONS = """
@@ -4968,8 +4759,21 @@ SQL_EVENTS_TRANSITIONS = """
   FROM c
 """
 
-QUERIES["events_transitions"] = q_events_transitions
-ORACLES["events_transitions"] = SQL_EVENTS_TRANSITIONS
+
+@query("events_transitions", oracle=SQL_EVENTS_TRANSITIONS)
+def q_events_transitions(spark, sf_dir):
+    e = spark.read.parquet(f"{sf_dir}/events.parquet")
+    w = W.partitionBy("user_id").orderBy("ts", "event_id")
+    s = e.select("user_id", "event_type",
+                 F.lead("event_type").over(w).alias("next_type"))
+    counts = (s.filter(F.col("next_type").isNotNull())
+              .groupBy("event_type", "next_type")
+              .agg(F.count("*").alias("n")))
+    tot = W.partitionBy("event_type")
+    return counts.select(
+        "event_type", "next_type", "n",
+        F.round(F.col("n") / F.sum("n").over(tot), 6).alias("p"),
+    )
 
 
 # --------------------------------------- priority semi-join count (oracled)
@@ -4981,6 +4785,15 @@ ORACLES["events_transitions"] = SQL_EVENTS_TRANSITIONS
 # layout).
 
 
+SQL_PRIORITY_SEMI_COUNTS = """
+  SELECT o_orderpriority, count(*) AS n_orders FROM orders
+  WHERE EXISTS (SELECT 1 FROM lineitem
+                WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate)
+  GROUP BY o_orderpriority
+"""
+
+
+@query("priority_semi_counts", oracle=SQL_PRIORITY_SEMI_COUNTS)
 def q_priority_semi_counts(spark, sf_dir):
     o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
         "o_orderkey", "o_orderdate", "o_orderpriority")
@@ -4994,17 +4807,6 @@ def q_priority_semi_counts(spark, sf_dir):
     return hit.groupBy("o_orderpriority").agg(F.count("*").alias("n_orders"))
 
 
-SQL_PRIORITY_SEMI_COUNTS = """
-  SELECT o_orderpriority, count(*) AS n_orders FROM orders
-  WHERE EXISTS (SELECT 1 FROM lineitem
-                WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate)
-  GROUP BY o_orderpriority
-"""
-
-QUERIES["priority_semi_counts"] = q_priority_semi_counts
-ORACLES["priority_semi_counts"] = SQL_PRIORITY_SEMI_COUNTS
-
-
 # ------------------------------------------- table profiler (oracled)
 # The ANALYZE-TABLE primitive: one single-pass aggregate over the fact
 # table producing null counts, exact distinct counts, and min/max for
@@ -5012,25 +4814,6 @@ ORACLES["priority_semi_counts"] = SQL_PRIORITY_SEMI_COUNTS
 # publishes per shard. Map-side partial aggregation, one exchange, one
 # output row; at 100 TB the exact distincts would switch to the
 # distinct_hll sketch (same shape, mergeable).
-
-
-def q_profile_lineitem(spark, sf_dir):
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return li.agg(
-        F.count("*").alias("n_rows"),
-        F.sum(F.col("l_quantity").isNull().cast("bigint")).alias("qty_nulls"),
-        F.countDistinct("l_quantity").alias("qty_distinct"),
-        F.round(F.min("l_quantity"), 2).alias("qty_min"),
-        F.round(F.max("l_quantity"), 2).alias("qty_max"),
-        F.countDistinct("l_partkey").alias("part_distinct"),
-        F.countDistinct("l_returnflag").alias("flag_distinct"),
-        F.min("l_returnflag").alias("flag_min"),
-        F.max("l_returnflag").alias("flag_max"),
-        F.round(F.min("l_extendedprice"), 2).alias("price_min"),
-        F.round(F.max("l_extendedprice"), 2).alias("price_max"),
-        F.min(F.col("l_shipdate").cast("string")).alias("ship_min"),
-        F.max(F.col("l_shipdate").cast("string")).alias("ship_max"),
-    )
 
 
 SQL_PROFILE_LINEITEM = """
@@ -5050,8 +4833,25 @@ SQL_PROFILE_LINEITEM = """
   FROM lineitem
 """
 
-QUERIES["profile_lineitem"] = q_profile_lineitem
-ORACLES["profile_lineitem"] = SQL_PROFILE_LINEITEM
+
+@query("profile_lineitem", oracle=SQL_PROFILE_LINEITEM)
+def q_profile_lineitem(spark, sf_dir):
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    return li.agg(
+        F.count("*").alias("n_rows"),
+        F.sum(F.col("l_quantity").isNull().cast("bigint")).alias("qty_nulls"),
+        F.countDistinct("l_quantity").alias("qty_distinct"),
+        F.round(F.min("l_quantity"), 2).alias("qty_min"),
+        F.round(F.max("l_quantity"), 2).alias("qty_max"),
+        F.countDistinct("l_partkey").alias("part_distinct"),
+        F.countDistinct("l_returnflag").alias("flag_distinct"),
+        F.min("l_returnflag").alias("flag_min"),
+        F.max("l_returnflag").alias("flag_max"),
+        F.round(F.min("l_extendedprice"), 2).alias("price_min"),
+        F.round(F.max("l_extendedprice"), 2).alias("price_max"),
+        F.min(F.col("l_shipdate").cast("string")).alias("ship_min"),
+        F.max(F.col("l_shipdate").cast("string")).alias("ship_max"),
+    )
 
 
 BM25_K1 = 1.2
@@ -5060,6 +4860,39 @@ BM25_QUERY_TERMS = ("join", "hash", "vector")
 BM25_TOPK = 10
 
 
+_BM25_TERMS_SQL = ", ".join(f"'{t}'" for t in BM25_QUERY_TERMS)
+
+
+SQL_BM25_TOPK = f"""
+  WITH toks AS ({_TOKENS_SQL}),
+  dlen AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY doc_id),
+  stats AS (SELECT avg(dl) AS avgdl, count(*) AS n_docs FROM dlen),
+  tf AS (SELECT doc_id, token, count(*) AS tf FROM toks
+         WHERE token IN ({_BM25_TERMS_SQL}) GROUP BY doc_id, token),
+  dfv AS (SELECT token, count(*) AS df FROM tf GROUP BY token),
+  scored AS (
+    SELECT tf.doc_id,
+           CAST(round(
+             ln((n_docs - df + 0.5) / (df + 0.5) + 1.0)
+             * tf * ({BM25_K1} + 1)
+             / (tf + {BM25_K1} * (1 - {BM25_B} + {BM25_B} * dl / avgdl))
+             * 1000000) AS BIGINT) AS w_micro
+    FROM tf JOIN dfv ON tf.token = dfv.token
+         JOIN dlen ON tf.doc_id = dlen.doc_id
+         CROSS JOIN stats),
+  doc AS (SELECT doc_id, sum(w_micro) AS bm25_micro,
+                 count(*) AS n_query_terms
+          FROM scored GROUP BY doc_id)
+  SELECT doc_id, CAST(bm25_micro AS BIGINT) AS bm25_micro, n_query_terms,
+         CAST(row_number() OVER (ORDER BY bm25_micro DESC, doc_id ASC)
+              AS INT) AS rank
+  FROM doc
+  ORDER BY rank
+  LIMIT {BM25_TOPK}
+"""
+
+
+@query("bm25_topk", oracle=SQL_BM25_TOPK)
 def q_bm25_topk(spark, sf_dir):
     """BM25 top-{BM25_TOPK} retrieval for a fixed query over the corpus —
     the classic inverted-index ranking every retrieval/RAG pipeline needs
@@ -5129,44 +4962,33 @@ def q_bm25_topk(spark, sf_dir):
     )
 
 
-_BM25_TERMS_SQL = ", ".join(f"'{t}'" for t in BM25_QUERY_TERMS)
-
-SQL_BM25_TOPK = f"""
-  WITH toks AS ({_TOKENS_SQL}),
-  dlen AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY doc_id),
-  stats AS (SELECT avg(dl) AS avgdl, count(*) AS n_docs FROM dlen),
-  tf AS (SELECT doc_id, token, count(*) AS tf FROM toks
-         WHERE token IN ({_BM25_TERMS_SQL}) GROUP BY doc_id, token),
-  dfv AS (SELECT token, count(*) AS df FROM tf GROUP BY token),
-  scored AS (
-    SELECT tf.doc_id,
-           CAST(round(
-             ln((n_docs - df + 0.5) / (df + 0.5) + 1.0)
-             * tf * ({BM25_K1} + 1)
-             / (tf + {BM25_K1} * (1 - {BM25_B} + {BM25_B} * dl / avgdl))
-             * 1000000) AS BIGINT) AS w_micro
-    FROM tf JOIN dfv ON tf.token = dfv.token
-         JOIN dlen ON tf.doc_id = dlen.doc_id
-         CROSS JOIN stats),
-  doc AS (SELECT doc_id, sum(w_micro) AS bm25_micro,
-                 count(*) AS n_query_terms
-          FROM scored GROUP BY doc_id)
-  SELECT doc_id, CAST(bm25_micro AS BIGINT) AS bm25_micro, n_query_terms,
-         CAST(row_number() OVER (ORDER BY bm25_micro DESC, doc_id ASC)
-              AS INT) AS rank
-  FROM doc
-  ORDER BY rank
-  LIMIT {BM25_TOPK}
-"""
-
-QUERIES["bm25_topk"] = q_bm25_topk
-ORACLES["bm25_topk"] = SQL_BM25_TOPK
-
-
 CHUNK_TOKENS = 256      # tokens per training window
 PACK_BUCKET_DOCS = 64   # docs per prefix-sum bucket (see scale note)
 
 
+SQL_CHUNK_PACK = f"""
+  WITH d AS (
+    SELECT doc_id,
+           len(list_filter(string_split(text, ' '), x -> x <> ''))
+             AS n_tokens
+    FROM documents),
+  c AS (
+    SELECT doc_id, n_tokens,
+           sum(n_tokens) OVER (ORDER BY doc_id
+                               ROWS UNBOUNDED PRECEDING) AS cum_end
+    FROM d WHERE n_tokens > 0)
+  SELECT doc_id, n_tokens,
+         CAST(cum_end - n_tokens AS BIGINT) AS cum_start,
+         CAST((cum_end - n_tokens) // {CHUNK_TOKENS} AS BIGINT)
+           AS first_chunk,
+         CAST((cum_end - 1) // {CHUNK_TOKENS} AS BIGINT) AS last_chunk,
+         CAST((cum_end - n_tokens) // {CHUNK_TOKENS}
+              <> (cum_end - 1) // {CHUNK_TOKENS} AS INT) AS spans_boundary
+  FROM c
+"""
+
+
+@query("chunk_pack", oracle=SQL_CHUNK_PACK)
 def q_chunk_pack(spark, sf_dir):
     """Concatenate-and-chunk sequence packing — the standard pretraining
     step that lays all documents end-to-end in doc_id order and cuts
@@ -5221,31 +5043,6 @@ def q_chunk_pack(spark, sf_dir):
     )
 
 
-SQL_CHUNK_PACK = f"""
-  WITH d AS (
-    SELECT doc_id,
-           len(list_filter(string_split(text, ' '), x -> x <> ''))
-             AS n_tokens
-    FROM documents),
-  c AS (
-    SELECT doc_id, n_tokens,
-           sum(n_tokens) OVER (ORDER BY doc_id
-                               ROWS UNBOUNDED PRECEDING) AS cum_end
-    FROM d WHERE n_tokens > 0)
-  SELECT doc_id, n_tokens,
-         CAST(cum_end - n_tokens AS BIGINT) AS cum_start,
-         CAST((cum_end - n_tokens) // {CHUNK_TOKENS} AS BIGINT)
-           AS first_chunk,
-         CAST((cum_end - 1) // {CHUNK_TOKENS} AS BIGINT) AS last_chunk,
-         CAST((cum_end - n_tokens) // {CHUNK_TOKENS}
-              <> (cum_end - 1) // {CHUNK_TOKENS} AS INT) AS spans_boundary
-  FROM c
-"""
-
-QUERIES["chunk_pack"] = q_chunk_pack
-ORACLES["chunk_pack"] = SQL_CHUNK_PACK
-
-
 CMS_D = 4     # hash rows
 CMS_W = 256   # buckets per row
 CMS_TOPK = 10
@@ -5263,6 +5060,48 @@ def cms_bucket_array(md5_col):
     ])
 
 
+def _cms_h32_sql(expr, r):
+    return " + ".join(
+        f"CAST(ascii(substring({expr}, {8 * r + i + 1}, 1)) - CASE WHEN "
+        f"ascii(substring({expr}, {8 * r + i + 1}, 1)) >= 97 THEN 87 ELSE 48 END "
+        f"AS BIGINT) * {16 ** (7 - i)}"
+        for i in range(8)
+    )
+
+
+_CMS_HASHED_UNION_SQL = " UNION ALL ".join(
+    f"SELECT {r} AS r, ({_cms_h32_sql('h', r)}) % {CMS_W} AS bucket FROM th"
+    for r in range(CMS_D)
+)
+
+
+_CMS_CAND_UNION_SQL = " UNION ALL ".join(
+    f"SELECT token, n_exact, {r} AS r,"
+    f" ({_cms_h32_sql('h', r)}) % {CMS_W} AS bucket FROM toph"
+    for r in range(CMS_D)
+)
+
+
+SQL_TOPK_CMS = f"""
+  WITH toks AS ({_TOKENS_SQL}),
+  exact AS (SELECT token, count(*) AS n_exact FROM toks GROUP BY token),
+  top AS (SELECT token, n_exact FROM exact
+          ORDER BY n_exact DESC, token ASC LIMIT {CMS_TOPK}),
+  th AS (SELECT md5(token) AS h FROM toks),
+  hashed AS ({_CMS_HASHED_UNION_SQL}),
+  sketch AS (SELECT r, bucket, count(*) AS cnt
+             FROM hashed GROUP BY r, bucket),
+  toph AS (SELECT token, n_exact, md5(token) AS h FROM top),
+  cand AS ({_CMS_CAND_UNION_SQL})
+  SELECT cand.token, CAST(n_exact AS BIGINT) AS n_exact,
+         CAST(min(cnt) AS BIGINT) AS n_est,
+         CAST(min(cnt) - n_exact AS BIGINT) AS overcount
+  FROM cand JOIN sketch ON cand.r = sketch.r AND cand.bucket = sketch.bucket
+  GROUP BY cand.token, n_exact
+"""
+
+
+@query("topk_cms", oracle=SQL_TOPK_CMS)
 def q_topk_cms(spark, sf_dir):
     """Count-min-sketch frequency estimation for the exact top-{CMS_TOPK}
     tokens — the sketch that answers "how often does X occur" over a
@@ -5311,48 +5150,6 @@ def q_topk_cms(spark, sf_dir):
             (F.col("n_est") - F.col("n_exact")).alias("overcount"),
         )
     )
-
-
-def _cms_h32_sql(expr, r):
-    return " + ".join(
-        f"CAST(ascii(substring({expr}, {8 * r + i + 1}, 1)) - CASE WHEN "
-        f"ascii(substring({expr}, {8 * r + i + 1}, 1)) >= 97 THEN 87 ELSE 48 END "
-        f"AS BIGINT) * {16 ** (7 - i)}"
-        for i in range(8)
-    )
-
-
-_CMS_HASHED_UNION_SQL = " UNION ALL ".join(
-    f"SELECT {r} AS r, ({_cms_h32_sql('h', r)}) % {CMS_W} AS bucket FROM th"
-    for r in range(CMS_D)
-)
-
-_CMS_CAND_UNION_SQL = " UNION ALL ".join(
-    f"SELECT token, n_exact, {r} AS r,"
-    f" ({_cms_h32_sql('h', r)}) % {CMS_W} AS bucket FROM toph"
-    for r in range(CMS_D)
-)
-
-SQL_TOPK_CMS = f"""
-  WITH toks AS ({_TOKENS_SQL}),
-  exact AS (SELECT token, count(*) AS n_exact FROM toks GROUP BY token),
-  top AS (SELECT token, n_exact FROM exact
-          ORDER BY n_exact DESC, token ASC LIMIT {CMS_TOPK}),
-  th AS (SELECT md5(token) AS h FROM toks),
-  hashed AS ({_CMS_HASHED_UNION_SQL}),
-  sketch AS (SELECT r, bucket, count(*) AS cnt
-             FROM hashed GROUP BY r, bucket),
-  toph AS (SELECT token, n_exact, md5(token) AS h FROM top),
-  cand AS ({_CMS_CAND_UNION_SQL})
-  SELECT cand.token, CAST(n_exact AS BIGINT) AS n_exact,
-         CAST(min(cnt) AS BIGINT) AS n_est,
-         CAST(min(cnt) - n_exact AS BIGINT) AS overcount
-  FROM cand JOIN sketch ON cand.r = sketch.r AND cand.bucket = sketch.bucket
-  GROUP BY cand.token, n_exact
-"""
-
-QUERIES["topk_cms"] = q_topk_cms
-ORACLES["topk_cms"] = SQL_TOPK_CMS
 
 
 # ----------------------------------- bloom-prefiltered decontamination
@@ -5416,6 +5213,17 @@ def bloom_member(shingle_col):
     return cond
 
 
+SQL_DECONTAMINATE_BLOOM = f"""
+  WITH sh AS ({_SHINGLES_SQL}),
+  snips(snippet_id, shingle) AS (VALUES {_SNIPPET_SHINGLES_SQL})
+  SELECT doc_id, count(DISTINCT snippet_id) AS n_snippets,
+         count(*) AS n_hits, min(pos) AS first_pos
+  FROM sh JOIN snips USING (shingle)
+  GROUP BY doc_id
+"""
+
+
+@query("decontaminate_bloom", oracle=SQL_DECONTAMINATE_BLOOM)
 def q_decontaminate_bloom(spark, sf_dir):
     sh = _shingles(spark, sf_dir).filter(bloom_member(F.col("shingle")))
     snips = spark.createDataFrame(_snippet_shingles(), ["snippet_id", "shingle"])
@@ -5428,19 +5236,6 @@ def q_decontaminate_bloom(spark, sf_dir):
             F.min("pos").alias("first_pos"),
         )
     )
-
-
-SQL_DECONTAMINATE_BLOOM = f"""
-  WITH sh AS ({_SHINGLES_SQL}),
-  snips(snippet_id, shingle) AS (VALUES {_SNIPPET_SHINGLES_SQL})
-  SELECT doc_id, count(DISTINCT snippet_id) AS n_snippets,
-         count(*) AS n_hits, min(pos) AS first_pos
-  FROM sh JOIN snips USING (shingle)
-  GROUP BY doc_id
-"""
-
-QUERIES["decontaminate_bloom"] = q_decontaminate_bloom
-ORACLES["decontaminate_bloom"] = SQL_DECONTAMINATE_BLOOM
 
 
 # ------------------------------------------------ license detection (oracled)
@@ -5477,6 +5272,37 @@ def _license_header_col():
     return c.otherwise(F.lit(""))
 
 
+_LICENSE_PATTERNS_SQL = ", ".join(
+    f"('{l}', '{m}', '{f}', {p})" for l, m, f, p in LICENSE_PATTERNS
+)
+
+
+_LICENSE_HEADER_CASE = "CASE CAST(doc_id % 5 AS INT) " + " ".join(
+    f"WHEN {rem} THEN '{LICENSE_PATTERNS[idx][1]}'"
+    for rem, idx in _LICENSE_HEADERS.items()
+) + " ELSE '' END"
+
+
+SQL_LICENSE_DETECT = f"""
+  WITH pats(license, marker, family, prio) AS (VALUES {_LICENSE_PATTERNS_SQL}),
+  files AS (
+    SELECT doc_id, source AS repo,
+           {_LICENSE_HEADER_CASE} || ' ' || text AS content
+    FROM documents),
+  hits AS (
+    SELECT f.doc_id, f.repo, p.license, p.family, p.prio
+    FROM files f LEFT JOIN pats p ON contains(f.content, p.marker)),
+  best AS (
+    SELECT doc_id, repo,
+           coalesce(arg_min(license, prio), 'unlicensed') AS license,
+           coalesce(arg_min(family, prio), 'unknown') AS family
+    FROM hits GROUP BY doc_id, repo)
+  SELECT repo, license, family, count(*) AS n_files
+  FROM best GROUP BY repo, license, family
+"""
+
+
+@query("license_detect", oracle=SQL_LICENSE_DETECT)
 def q_license_detect(spark, sf_dir):
     files = _docs(spark, sf_dir).select(
         "doc_id",
@@ -5510,36 +5336,6 @@ def q_license_detect(spark, sf_dir):
     )
 
 
-_LICENSE_PATTERNS_SQL = ", ".join(
-    f"('{l}', '{m}', '{f}', {p})" for l, m, f, p in LICENSE_PATTERNS
-)
-_LICENSE_HEADER_CASE = "CASE CAST(doc_id % 5 AS INT) " + " ".join(
-    f"WHEN {rem} THEN '{LICENSE_PATTERNS[idx][1]}'"
-    for rem, idx in _LICENSE_HEADERS.items()
-) + " ELSE '' END"
-
-SQL_LICENSE_DETECT = f"""
-  WITH pats(license, marker, family, prio) AS (VALUES {_LICENSE_PATTERNS_SQL}),
-  files AS (
-    SELECT doc_id, source AS repo,
-           {_LICENSE_HEADER_CASE} || ' ' || text AS content
-    FROM documents),
-  hits AS (
-    SELECT f.doc_id, f.repo, p.license, p.family, p.prio
-    FROM files f LEFT JOIN pats p ON contains(f.content, p.marker)),
-  best AS (
-    SELECT doc_id, repo,
-           coalesce(arg_min(license, prio), 'unlicensed') AS license,
-           coalesce(arg_min(family, prio), 'unknown') AS family
-    FROM hits GROUP BY doc_id, repo)
-  SELECT repo, license, family, count(*) AS n_files
-  FROM best GROUP BY repo, license, family
-"""
-
-QUERIES["license_detect"] = q_license_detect
-ORACLES["license_detect"] = SQL_LICENSE_DETECT
-
-
 # ------------------------------------- vendored / generated filter (oracled)
 # The StarCoder-style code-curation gate: drop vendored trees
 # (vendor/, node_modules/), generated artifacts (gen/ dirs, *.min.js,
@@ -5559,6 +5355,54 @@ MINIFIED_LINE_CHARS = 50  # own knob: a *filter* needs survivors; 40 (the
                           # metrics report threshold) would drop ~99% here
 
 
+_VENDOR_DIR_CASE = "CASE CAST(doc_id % 7 AS INT) " + " ".join(
+    f"WHEN {i} THEN '{d}'" for i, d in enumerate(_VENDOR_DIRS)
+) + " ELSE '' END"
+
+
+_VENDOR_EXT_CASE = "CASE CAST(doc_id % 3 AS INT) " + " ".join(
+    f"WHEN {i} THEN '{e}'" for i, e in enumerate(_VENDOR_EXTS)
+) + " ELSE '' END"
+
+
+SQL_CODE_VENDORED_FILTER = f"""
+  WITH ml AS (
+    SELECT doc_id,
+           list_max(list_transform(
+             range(0, CAST(ceil(len(arr) / {LINE_TOKENS}.0) AS INT)),
+             i -> list_aggregate(list_transform(
+                    list_slice(arr, i * {LINE_TOKENS} + 1, i * {LINE_TOKENS} + {LINE_TOKENS}),
+                    t -> len(t)), 'sum')
+                  + len(list_slice(arr, i * {LINE_TOKENS} + 1, i * {LINE_TOKENS} + {LINE_TOKENS})) - 1))
+             AS max_line_chars
+    FROM (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS arr
+          FROM documents)),
+  files AS (
+    SELECT doc_id,
+           {_VENDOR_DIR_CASE} || '/f_' || CAST(doc_id AS VARCHAR)
+             || {_VENDOR_EXT_CASE} AS path,
+           CASE WHEN doc_id % 11 = 0 THEN '{GENERATED_MARKER} ' ELSE '' END
+             || text AS content
+    FROM documents),
+  v AS (
+    SELECT f.doc_id, f.path,
+           CASE
+             WHEN starts_with(path, 'vendor/') OR starts_with(path, 'node_modules/')
+               THEN 'vendored'
+             WHEN starts_with(path, 'gen/') OR starts_with(path, 'dist/') OR path LIKE '%.min.js'
+                  OR contains(content, '{GENERATED_MARKER}')
+               THEN 'generated'
+             WHEN max_line_chars > {MINIFIED_LINE_CHARS} THEN 'minified'
+             ELSE 'keep'
+           END AS verdict
+    FROM files f JOIN ml ON f.doc_id = ml.doc_id)
+  SELECT doc_id, path, verdict,
+         CASE WHEN verdict = 'keep' THEN 1 ELSE 0 END AS keep
+  FROM v
+"""
+
+
+@query("code_vendored_filter", oracle=SQL_CODE_VENDORED_FILTER)
 def q_code_vendored_filter(spark, sf_dir):
     d = _docs(spark, sf_dir)
     dir_c = F.when(F.lit(False), F.lit(""))
@@ -5620,53 +5464,6 @@ def q_code_vendored_filter(spark, sf_dir):
     )
 
 
-_VENDOR_DIR_CASE = "CASE CAST(doc_id % 7 AS INT) " + " ".join(
-    f"WHEN {i} THEN '{d}'" for i, d in enumerate(_VENDOR_DIRS)
-) + " ELSE '' END"
-_VENDOR_EXT_CASE = "CASE CAST(doc_id % 3 AS INT) " + " ".join(
-    f"WHEN {i} THEN '{e}'" for i, e in enumerate(_VENDOR_EXTS)
-) + " ELSE '' END"
-
-SQL_CODE_VENDORED_FILTER = f"""
-  WITH ml AS (
-    SELECT doc_id,
-           list_max(list_transform(
-             range(0, CAST(ceil(len(arr) / {LINE_TOKENS}.0) AS INT)),
-             i -> list_aggregate(list_transform(
-                    list_slice(arr, i * {LINE_TOKENS} + 1, i * {LINE_TOKENS} + {LINE_TOKENS}),
-                    t -> len(t)), 'sum')
-                  + len(list_slice(arr, i * {LINE_TOKENS} + 1, i * {LINE_TOKENS} + {LINE_TOKENS})) - 1))
-             AS max_line_chars
-    FROM (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS arr
-          FROM documents)),
-  files AS (
-    SELECT doc_id,
-           {_VENDOR_DIR_CASE} || '/f_' || CAST(doc_id AS VARCHAR)
-             || {_VENDOR_EXT_CASE} AS path,
-           CASE WHEN doc_id % 11 = 0 THEN '{GENERATED_MARKER} ' ELSE '' END
-             || text AS content
-    FROM documents),
-  v AS (
-    SELECT f.doc_id, f.path,
-           CASE
-             WHEN starts_with(path, 'vendor/') OR starts_with(path, 'node_modules/')
-               THEN 'vendored'
-             WHEN starts_with(path, 'gen/') OR starts_with(path, 'dist/') OR path LIKE '%.min.js'
-                  OR contains(content, '{GENERATED_MARKER}')
-               THEN 'generated'
-             WHEN max_line_chars > {MINIFIED_LINE_CHARS} THEN 'minified'
-             ELSE 'keep'
-           END AS verdict
-    FROM files f JOIN ml ON f.doc_id = ml.doc_id)
-  SELECT doc_id, path, verdict,
-         CASE WHEN verdict = 'keep' THEN 1 ELSE 0 END AS keep
-  FROM v
-"""
-
-QUERIES["code_vendored_filter"] = q_code_vendored_filter
-ORACLES["code_vendored_filter"] = SQL_CODE_VENDORED_FILTER
-
-
 # --------------------------------------------- bounded BFS hops (oracled)
 # Seed-set reachability over the materialized KG: min-hop distance from
 # the System-type entities within BFS_MAX_HOPS, the neighborhood-
@@ -5686,6 +5483,31 @@ BFS_MAX_HOPS = 3
 BFS_SEEDS = ["spark", "query"]  # the System-type dictionary entities
 
 
+_BFS_SEEDS_SQL = ", ".join(f"('{s}')" for s in BFS_SEEDS)
+
+
+SQL_KG_BFS_HOPS = f"""
+  WITH dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
+  toks AS ({_TOKENS_SQL}),
+  triples AS (SELECT DISTINCT 'doc_' || CAST(doc_id AS VARCHAR) AS subj,
+                     token AS obj
+              FROM toks JOIN dict ON token = surface),
+  edges AS (SELECT subj AS a, obj AS b FROM triples
+            UNION SELECT obj AS a, subj AS b FROM triples),
+  h0(node) AS (VALUES {_BFS_SEEDS_SQL}),
+  h1 AS (SELECT DISTINCT e.b AS node FROM h0 JOIN edges e ON h0.node = e.a),
+  h2 AS (SELECT DISTINCT e.b AS node FROM h1 JOIN edges e ON h1.node = e.a),
+  h3 AS (SELECT DISTINCT e.b AS node FROM h2 JOIN edges e ON h2.node = e.a),
+  all_hops AS (
+    SELECT node, 0 AS dist FROM h0
+    UNION ALL SELECT node, 1 FROM h1
+    UNION ALL SELECT node, 2 FROM h2
+    UNION ALL SELECT node, 3 FROM h3)
+  SELECT node, CAST(min(dist) AS INT) AS dist FROM all_hops GROUP BY node
+"""
+
+
+@query("kg_bfs_hops", oracle=SQL_KG_BFS_HOPS)
 def q_kg_bfs_hops(spark, sf_dir):
     t = q_triples_kg(spark, sf_dir)
     und = t.select(F.col("subj").alias("a"), F.col("obj").alias("b"))
@@ -5723,32 +5545,6 @@ def q_kg_bfs_hops(spark, sf_dir):
         if hop < BFS_MAX_HOPS and not nxt.take(1):
             break
     return visited
-
-
-_BFS_SEEDS_SQL = ", ".join(f"('{s}')" for s in BFS_SEEDS)
-
-SQL_KG_BFS_HOPS = f"""
-  WITH dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
-  toks AS ({_TOKENS_SQL}),
-  triples AS (SELECT DISTINCT 'doc_' || CAST(doc_id AS VARCHAR) AS subj,
-                     token AS obj
-              FROM toks JOIN dict ON token = surface),
-  edges AS (SELECT subj AS a, obj AS b FROM triples
-            UNION SELECT obj AS a, subj AS b FROM triples),
-  h0(node) AS (VALUES {_BFS_SEEDS_SQL}),
-  h1 AS (SELECT DISTINCT e.b AS node FROM h0 JOIN edges e ON h0.node = e.a),
-  h2 AS (SELECT DISTINCT e.b AS node FROM h1 JOIN edges e ON h1.node = e.a),
-  h3 AS (SELECT DISTINCT e.b AS node FROM h2 JOIN edges e ON h2.node = e.a),
-  all_hops AS (
-    SELECT node, 0 AS dist FROM h0
-    UNION ALL SELECT node, 1 FROM h1
-    UNION ALL SELECT node, 2 FROM h2
-    UNION ALL SELECT node, 3 FROM h3)
-  SELECT node, CAST(min(dist) AS INT) AS dist FROM all_hops GROUP BY node
-"""
-
-QUERIES["kg_bfs_hops"] = q_kg_bfs_hops
-ORACLES["kg_bfs_hops"] = SQL_KG_BFS_HOPS
 
 
 # ------------------------------------------- repo fork overlap (oracled)
@@ -5790,6 +5586,35 @@ def _repo_paras(spark, sf_dir):
     ).distinct()
 
 
+SQL_REPO_FORK_OVERLAP = f"""
+  WITH d AS (
+    SELECT source AS repo, list_filter(string_split(text, ' '), x -> x <> '') AS arr
+    FROM documents),
+  rp AS (
+    SELECT DISTINCT repo,
+           sha256(array_to_string(
+             list_slice(arr, j * {PARA_TOKENS} + 1, j * {PARA_TOKENS} + {PARA_TOKENS}), ' ')) AS psha
+    FROM (SELECT repo, arr,
+                 unnest(range(0, CAST(ceil(len(arr) / {PARA_TOKENS}.0) AS INT))) AS j
+          FROM d WHERE len(arr) > 0)),
+  df AS (SELECT psha, count(*) AS n_repos FROM rp GROUP BY psha),
+  kept AS (SELECT rp.repo, rp.psha FROM rp JOIN df USING (psha)
+           WHERE n_repos <= {FORK_PARA_DF}),
+  shared AS (
+    SELECT a.repo AS repo_a, b.repo AS repo_b, count(*) AS n_shared
+    FROM kept a JOIN kept b ON a.psha = b.psha AND a.repo < b.repo
+    GROUP BY a.repo, b.repo
+    HAVING count(*) >= {FORK_MIN_SHARED}),
+  sizes AS (SELECT repo, count(*) AS n_paras FROM rp GROUP BY repo)
+  SELECT repo_a, repo_b, n_shared,
+         round(CAST(n_shared AS DOUBLE) / least(sa.n_paras, sb.n_paras), 6)
+           AS containment
+  FROM shared JOIN sizes sa ON repo_a = sa.repo
+              JOIN sizes sb ON repo_b = sb.repo
+"""
+
+
+@query("repo_fork_overlap", oracle=SQL_REPO_FORK_OVERLAP)
 def q_repo_fork_overlap(spark, sf_dir):
     rp = _repo_paras(spark, sf_dir)
     members = _capped_member_docs(rp, ["psha"], "repo", FORK_PARA_DF, min_size=2)
@@ -5820,37 +5645,6 @@ def q_repo_fork_overlap(spark, sf_dir):
     )
 
 
-SQL_REPO_FORK_OVERLAP = f"""
-  WITH d AS (
-    SELECT source AS repo, list_filter(string_split(text, ' '), x -> x <> '') AS arr
-    FROM documents),
-  rp AS (
-    SELECT DISTINCT repo,
-           sha256(array_to_string(
-             list_slice(arr, j * {PARA_TOKENS} + 1, j * {PARA_TOKENS} + {PARA_TOKENS}), ' ')) AS psha
-    FROM (SELECT repo, arr,
-                 unnest(range(0, CAST(ceil(len(arr) / {PARA_TOKENS}.0) AS INT))) AS j
-          FROM d WHERE len(arr) > 0)),
-  df AS (SELECT psha, count(*) AS n_repos FROM rp GROUP BY psha),
-  kept AS (SELECT rp.repo, rp.psha FROM rp JOIN df USING (psha)
-           WHERE n_repos <= {FORK_PARA_DF}),
-  shared AS (
-    SELECT a.repo AS repo_a, b.repo AS repo_b, count(*) AS n_shared
-    FROM kept a JOIN kept b ON a.psha = b.psha AND a.repo < b.repo
-    GROUP BY a.repo, b.repo
-    HAVING count(*) >= {FORK_MIN_SHARED}),
-  sizes AS (SELECT repo, count(*) AS n_paras FROM rp GROUP BY repo)
-  SELECT repo_a, repo_b, n_shared,
-         round(CAST(n_shared AS DOUBLE) / least(sa.n_paras, sb.n_paras), 6)
-           AS containment
-  FROM shared JOIN sizes sa ON repo_a = sa.repo
-              JOIN sizes sb ON repo_b = sb.repo
-"""
-
-QUERIES["repo_fork_overlap"] = q_repo_fork_overlap
-ORACLES["repo_fork_overlap"] = SQL_REPO_FORK_OVERLAP
-
-
 # --------------------------------------- KG negative sampling (oracled)
 # Corrupted-triple generation for KG-embedding training (the TransE /
 # DistMult data op): every positive triple yields NEG_K candidate
@@ -5871,40 +5665,16 @@ NEG_K = 2
 _ENT_LIST = sorted({s for s, _ in DICT})
 
 
-def q_kg_negative_sampling(spark, sf_dir):
-    t = q_triples_kg(spark, sf_dir)
-    ents = spark.createDataFrame(
-        list(enumerate(_ENT_LIST)), ["idx", "obj_neg"]
-    )
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat_ws("|", "subj", "pred", "obj", "k")), 1, 4
-        ),
-        16, 10,
-    ).cast("long")
-    cand = (
-        t.select(
-            "subj", "pred", "obj",
-            F.explode(F.sequence(F.lit(0), F.lit(NEG_K - 1))).alias("k"),
-        )
-        .withColumn("idx", (h % len(_ENT_LIST)).cast("int"))
-        .join(F.broadcast(ents), "idx")
-        .filter(F.col("obj_neg") != F.col("obj"))
-    )
-    return cand.join(
-        t.select("subj", "pred", F.col("obj").alias("obj_neg")),
-        ["subj", "pred", "obj_neg"],
-        "left_anti",
-    ).select("subj", "pred", "obj", "k", "obj_neg")
-
-
 _ENT_VALUES_SQL = ", ".join(f"({i}, '{e}')" for i, e in enumerate(_ENT_LIST))
+
+
 _H16_SQL = (
     "(strpos('0123456789abcdef', substring(hh, 1, 1)) - 1) * 4096"
     " + (strpos('0123456789abcdef', substring(hh, 2, 1)) - 1) * 256"
     " + (strpos('0123456789abcdef', substring(hh, 3, 1)) - 1) * 16"
     " + (strpos('0123456789abcdef', substring(hh, 4, 1)) - 1)"
 )
+
 
 SQL_KG_NEGATIVE_SAMPLING = f"""
   WITH dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
@@ -5932,8 +5702,33 @@ SQL_KG_NEGATIVE_SAMPLING = f"""
                       AND t.obj = j.obj_neg)
 """
 
-QUERIES["kg_negative_sampling"] = q_kg_negative_sampling
-ORACLES["kg_negative_sampling"] = SQL_KG_NEGATIVE_SAMPLING
+
+@query("kg_negative_sampling", oracle=SQL_KG_NEGATIVE_SAMPLING)
+def q_kg_negative_sampling(spark, sf_dir):
+    t = q_triples_kg(spark, sf_dir)
+    ents = spark.createDataFrame(
+        list(enumerate(_ENT_LIST)), ["idx", "obj_neg"]
+    )
+    h = F.conv(
+        F.substring(
+            F.md5(F.concat_ws("|", "subj", "pred", "obj", "k")), 1, 4
+        ),
+        16, 10,
+    ).cast("long")
+    cand = (
+        t.select(
+            "subj", "pred", "obj",
+            F.explode(F.sequence(F.lit(0), F.lit(NEG_K - 1))).alias("k"),
+        )
+        .withColumn("idx", (h % len(_ENT_LIST)).cast("int"))
+        .join(F.broadcast(ents), "idx")
+        .filter(F.col("obj_neg") != F.col("obj"))
+    )
+    return cand.join(
+        t.select("subj", "pred", F.col("obj").alias("obj_neg")),
+        ["subj", "pred", "obj_neg"],
+        "left_anti",
+    ).select("subj", "pred", "obj", "k", "obj_neg")
 
 
 # ------------------------------------------- KG: k-core / communities / SCD2
@@ -5960,6 +5755,34 @@ def _kg_sym_edges(spark, sf_dir):
     return _shared_cache(spark, sf_dir, "kg_sym_edges", build)
 
 
+def _kcore_sql() -> str:
+    head = f"""
+  WITH dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
+  toks AS ({_TOKENS_SQL}),
+  triples AS (SELECT DISTINCT 'doc_' || CAST(doc_id AS VARCHAR) AS subj,
+                     'mentions_' || type_id AS pred, token AS obj
+              FROM toks JOIN dict ON token = surface),
+  edges0 AS (SELECT DISTINCT subj AS a, obj AS b FROM triples
+             UNION SELECT DISTINCT obj AS a, subj AS b FROM triples)"""
+    steps = []
+    for k in range(1, KCORE_ROUNDS + 1):
+        steps.append(f"""
+  alive{k} AS (SELECT a FROM edges{k - 1} GROUP BY a
+               HAVING count(*) >= {KCORE_K}),
+  edges{k} AS (SELECT e.a, e.b FROM edges{k - 1} e
+               JOIN alive{k} x ON e.a = x.a
+               JOIN alive{k} y ON e.b = y.a)"""
+        )
+    return (
+        head + "," + ",".join(steps)
+        + f"\n  SELECT a AS node, count(*) AS deg FROM edges{KCORE_ROUNDS} GROUP BY a"
+    )
+
+
+SQL_KG_KCORE = _kcore_sql()
+
+
+@query("kg_kcore", oracle=SQL_KG_KCORE)
 def q_kg_kcore(spark, sf_dir):
     """k-core decomposition of the undirected KG (k=2, KCORE_ROUNDS
     synchronous pruning rounds): repeatedly drop nodes whose degree over
@@ -6003,39 +5826,41 @@ def q_kg_kcore(spark, sf_dir):
     return edges.groupBy(F.col("a").alias("node")).agg(F.count("*").alias("deg"))
 
 
-def _kcore_sql() -> str:
+LPA_ITERS = 3
+
+
+def _lpa_sql() -> str:
     head = f"""
   WITH dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
   toks AS ({_TOKENS_SQL}),
   triples AS (SELECT DISTINCT 'doc_' || CAST(doc_id AS VARCHAR) AS subj,
                      'mentions_' || type_id AS pred, token AS obj
               FROM toks JOIN dict ON token = surface),
-  edges0 AS (SELECT DISTINCT subj AS a, obj AS b FROM triples
-             UNION SELECT DISTINCT obj AS a, subj AS b FROM triples)"""
+  edges AS (SELECT DISTINCT subj AS a, obj AS b FROM triples
+            UNION SELECT DISTINCT obj AS a, subj AS b FROM triples),
+  lab0 AS (SELECT DISTINCT a AS node, a AS label FROM edges)"""
     steps = []
-    for k in range(1, KCORE_ROUNDS + 1):
+    for k in range(1, LPA_ITERS + 1):
         steps.append(f"""
-  alive{k} AS (SELECT a FROM edges{k - 1} GROUP BY a
-               HAVING count(*) >= {KCORE_K}),
-  edges{k} AS (SELECT e.a, e.b FROM edges{k - 1} e
-               JOIN alive{k} x ON e.a = x.a
-               JOIN alive{k} y ON e.b = y.a)"""
+  n{k} AS (SELECT e.a AS node, l.label, count(*) AS cnt
+           FROM edges e JOIN lab{k - 1} l ON e.b = l.node
+           GROUP BY e.a, l.label),
+  lab{k} AS (SELECT node, label FROM (
+      SELECT node, label,
+             row_number() OVER (PARTITION BY node
+                                ORDER BY cnt DESC, label ASC) AS rn
+      FROM n{k}) WHERE rn = 1)"""
         )
     return (
         head + "," + ",".join(steps)
-        + f"\n  SELECT a AS node, count(*) AS deg FROM edges{KCORE_ROUNDS} GROUP BY a"
+        + f"\n  SELECT node, label AS community FROM lab{LPA_ITERS}"
     )
 
 
-SQL_KG_KCORE = _kcore_sql()
-
-QUERIES["kg_kcore"] = q_kg_kcore
-ORACLES["kg_kcore"] = SQL_KG_KCORE
+SQL_KG_LABEL_PROPAGATION = _lpa_sql()
 
 
-LPA_ITERS = 3
-
-
+@query("kg_label_propagation", oracle=SQL_KG_LABEL_PROPAGATION)
 def q_kg_label_propagation(spark, sf_dir):
     """Synchronous label propagation (LPA_ITERS fixed rounds) over the
     undirected KG — the cheap community-detection pass that groups
@@ -6079,43 +5904,36 @@ def q_kg_label_propagation(spark, sf_dir):
     return _shared_cache(spark, sf_dir, "kg_lpa", build)
 
 
-def _lpa_sql() -> str:
-    head = f"""
-  WITH dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
-  toks AS ({_TOKENS_SQL}),
-  triples AS (SELECT DISTINCT 'doc_' || CAST(doc_id AS VARCHAR) AS subj,
-                     'mentions_' || type_id AS pred, token AS obj
-              FROM toks JOIN dict ON token = surface),
-  edges AS (SELECT DISTINCT subj AS a, obj AS b FROM triples
-            UNION SELECT DISTINCT obj AS a, subj AS b FROM triples),
-  lab0 AS (SELECT DISTINCT a AS node, a AS label FROM edges)"""
-    steps = []
-    for k in range(1, LPA_ITERS + 1):
-        steps.append(f"""
-  n{k} AS (SELECT e.a AS node, l.label, count(*) AS cnt
-           FROM edges e JOIN lab{k - 1} l ON e.b = l.node
-           GROUP BY e.a, l.label),
-  lab{k} AS (SELECT node, label FROM (
-      SELECT node, label,
-             row_number() OVER (PARTITION BY node
-                                ORDER BY cnt DESC, label ASC) AS rn
-      FROM n{k}) WHERE rn = 1)"""
-        )
-    return (
-        head + "," + ",".join(steps)
-        + f"\n  SELECT node, label AS community FROM lab{LPA_ITERS}"
-    )
-
-
-SQL_KG_LABEL_PROPAGATION = _lpa_sql()
-
-QUERIES["kg_label_propagation"] = q_kg_label_propagation
-ORACLES["kg_label_propagation"] = SQL_KG_LABEL_PROPAGATION
-
-
 SCD2_SNAPSHOTS = 4
 
 
+SQL_KG_SCD2 = f"""
+  WITH dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
+  toks AS ({_TOKENS_SQL}),
+  trip AS (SELECT DISTINCT doc_id,
+                  'doc_' || CAST(doc_id AS VARCHAR) AS subj,
+                  'mentions_' || type_id AS pred, token AS obj
+           FROM toks JOIN dict ON token = surface),
+  present AS (SELECT subj, pred, obj, snap
+              FROM trip CROSS JOIN (SELECT unnest(range(1, {SCD2_SNAPSHOTS + 1})) AS snap) s
+              WHERE (doc_id + snap) % 4 <> 0),
+  isl AS (SELECT subj, pred, obj, snap,
+                 CASE WHEN snap - lag(snap) OVER (PARTITION BY subj, pred, obj
+                                                  ORDER BY snap) = 1
+                      THEN 0 ELSE 1 END AS brk
+          FROM present),
+  v AS (SELECT subj, pred, obj, snap,
+               CAST(sum(brk) OVER (PARTITION BY subj, pred, obj ORDER BY snap
+                                   ROWS UNBOUNDED PRECEDING) AS INT) AS version
+        FROM isl)
+  SELECT subj, pred, obj, version,
+         min(snap) AS valid_from, max(snap) AS valid_to,
+         CAST(max(snap) = {SCD2_SNAPSHOTS} AS INT) AS is_current
+  FROM v GROUP BY subj, pred, obj, version
+"""
+
+
+@query("kg_scd2", oracle=SQL_KG_SCD2)
 def q_kg_scd2(spark, sf_dir):
     """Temporal KG maintenance (SCD2 validity intervals): a sequence of
     SCD2_SNAPSHOTS extraction runs over a rotating corpus slice (snapshot
@@ -6165,38 +5983,26 @@ def q_kg_scd2(spark, sf_dir):
     )
 
 
-SQL_KG_SCD2 = f"""
-  WITH dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
-  toks AS ({_TOKENS_SQL}),
-  trip AS (SELECT DISTINCT doc_id,
-                  'doc_' || CAST(doc_id AS VARCHAR) AS subj,
-                  'mentions_' || type_id AS pred, token AS obj
-           FROM toks JOIN dict ON token = surface),
-  present AS (SELECT subj, pred, obj, snap
-              FROM trip CROSS JOIN (SELECT unnest(range(1, {SCD2_SNAPSHOTS + 1})) AS snap) s
-              WHERE (doc_id + snap) % 4 <> 0),
-  isl AS (SELECT subj, pred, obj, snap,
-                 CASE WHEN snap - lag(snap) OVER (PARTITION BY subj, pred, obj
-                                                  ORDER BY snap) = 1
-                      THEN 0 ELSE 1 END AS brk
-          FROM present),
-  v AS (SELECT subj, pred, obj, snap,
-               CAST(sum(brk) OVER (PARTITION BY subj, pred, obj ORDER BY snap
-                                   ROWS UNBOUNDED PRECEDING) AS INT) AS version
-        FROM isl)
-  SELECT subj, pred, obj, version,
-         min(snap) AS valid_from, max(snap) AS valid_to,
-         CAST(max(snap) = {SCD2_SNAPSHOTS} AS INT) AS is_current
-  FROM v GROUP BY subj, pred, obj, version
-"""
-
-QUERIES["kg_scd2"] = q_kg_scd2
-ORACLES["kg_scd2"] = SQL_KG_SCD2
-
-
 NS_K = 5
 
 
+SQL_KG_NEIGHBOR_SAMPLE = f"""
+  WITH dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
+  toks AS ({_TOKENS_SQL}),
+  triples AS (SELECT DISTINCT 'doc_' || CAST(doc_id AS VARCHAR) AS subj,
+                     'mentions_' || type_id AS pred, token AS obj
+              FROM toks JOIN dict ON token = surface),
+  edges AS (SELECT DISTINCT subj AS a, obj AS b FROM triples
+            UNION SELECT DISTINCT obj AS a, subj AS b FROM triples),
+  ranked AS (SELECT a, b,
+                    row_number() OVER (PARTITION BY a
+                                       ORDER BY md5(a || '|' || b)) AS rk
+             FROM edges)
+  SELECT a AS node, b AS nbr, rk FROM ranked WHERE rk <= {NS_K}
+"""
+
+
+@query("kg_neighbor_sample", oracle=SQL_KG_NEIGHBOR_SAMPLE)
 def q_kg_neighbor_sample(spark, sf_dir):
     """GraphSAGE/PinSAGE-style bounded neighbour sampling over the
     undirected KG: every node keeps at most NS_K neighbours, chosen by
@@ -6218,28 +6024,41 @@ def q_kg_neighbor_sample(spark, sf_dir):
     )
 
 
-SQL_KG_NEIGHBOR_SAMPLE = f"""
-  WITH dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
-  toks AS ({_TOKENS_SQL}),
-  triples AS (SELECT DISTINCT 'doc_' || CAST(doc_id AS VARCHAR) AS subj,
-                     'mentions_' || type_id AS pred, token AS obj
-              FROM toks JOIN dict ON token = surface),
-  edges AS (SELECT DISTINCT subj AS a, obj AS b FROM triples
-            UNION SELECT DISTINCT obj AS a, subj AS b FROM triples),
-  ranked AS (SELECT a, b,
-                    row_number() OVER (PARTITION BY a
-                                       ORDER BY md5(a || '|' || b)) AS rk
-             FROM edges)
-  SELECT a AS node, b AS nbr, rk FROM ranked WHERE rk <= {NS_K}
-"""
-
-QUERIES["kg_neighbor_sample"] = q_kg_neighbor_sample
-ORACLES["kg_neighbor_sample"] = SQL_KG_NEIGHBOR_SAMPLE
-
-
 INCR_EST_MIN = 0.5  # >= 4 of 8 minhashes agree => estimated Jaccard >= 0.5
 
 
+SQL_DEDUP_INCREMENTAL = f"""
+  WITH sh AS (SELECT DISTINCT doc_id, shingle FROM ({_SHINGLES_SQL})),
+  sig AS (
+    SELECT doc_id, {", ".join(f"min(md5('{i}:' || shingle)) AS h{i}" for i in range(N_MINHASH))}
+    FROM sh GROUP BY doc_id),
+  bands0 AS (
+    {" UNION ALL ".join(f"SELECT doc_id, {b} AS band, md5(h{2 * b} || '|' || h{2 * b + 1}) AS bucket FROM sig" for b in range(N_MINHASH // 2))}
+  ),
+  bands AS (
+    SELECT bands0.* FROM bands0
+    JOIN (SELECT band, bucket FROM bands0 GROUP BY band, bucket
+          HAVING count(*) <= {MAX_BUCKET_DOCS}) ok USING (band, bucket)),
+  pairs AS (
+    SELECT DISTINCT n.doc_id AS doc_id, o.doc_id AS dup_of
+    FROM bands n JOIN bands o USING (band, bucket)
+    WHERE n.doc_id % 5 = 0 AND o.doc_id % 5 <> 0),
+  scored AS (
+    SELECT p.doc_id, p.dup_of,
+           round(({" + ".join(f"CASE WHEN n.h{i} = o.h{i} THEN 1 ELSE 0 END" for i in range(N_MINHASH))}) / {float(N_MINHASH)}, 6) AS est_jaccard
+    FROM pairs p
+    JOIN sig n ON p.doc_id = n.doc_id
+    JOIN sig o ON p.dup_of = o.doc_id),
+  best AS (
+    SELECT doc_id, dup_of, est_jaccard,
+           row_number() OVER (PARTITION BY doc_id
+                              ORDER BY est_jaccard DESC, dup_of ASC) AS rn
+    FROM scored WHERE est_jaccard >= {INCR_EST_MIN})
+  SELECT doc_id, dup_of, est_jaccard FROM best WHERE rn = 1
+"""
+
+
+@query("dedup_incremental", oracle=SQL_DEDUP_INCREMENTAL)
 def q_dedup_incremental(spark, sf_dir):
     """Incremental near-dup detection: dedup a NEW ingest batch against
     the EXISTING corpus without re-pairing the existing corpus with
@@ -6305,11 +6124,15 @@ def q_dedup_incremental(spark, sf_dir):
     )
 
 
-SQL_DEDUP_INCREMENTAL = f"""
-  WITH sh AS (SELECT DISTINCT doc_id, shingle FROM ({_SHINGLES_SQL})),
+SQL_CURATION_FUNNEL = f"""
+  WITH n0 AS (SELECT count(*) AS n FROM documents),
+  s1 AS (SELECT doc_id FROM (
+           SELECT doc_id, min(doc_id) OVER (PARTITION BY sha256(text)) AS keep
+           FROM documents) WHERE doc_id = keep),
+  sh AS (SELECT DISTINCT doc_id, shingle FROM ({_SHINGLES_SQL})),
   sig AS (
     SELECT doc_id, {", ".join(f"min(md5('{i}:' || shingle)) AS h{i}" for i in range(N_MINHASH))}
-    FROM sh GROUP BY doc_id),
+    FROM sh JOIN s1 USING (doc_id) GROUP BY doc_id),
   bands0 AS (
     {" UNION ALL ".join(f"SELECT doc_id, {b} AS band, md5(h{2 * b} || '|' || h{2 * b + 1}) AS bucket FROM sig" for b in range(N_MINHASH // 2))}
   ),
@@ -6318,27 +6141,31 @@ SQL_DEDUP_INCREMENTAL = f"""
     JOIN (SELECT band, bucket FROM bands0 GROUP BY band, bucket
           HAVING count(*) <= {MAX_BUCKET_DOCS}) ok USING (band, bucket)),
   pairs AS (
-    SELECT DISTINCT n.doc_id AS doc_id, o.doc_id AS dup_of
-    FROM bands n JOIN bands o USING (band, bucket)
-    WHERE n.doc_id % 5 = 0 AND o.doc_id % 5 <> 0),
-  scored AS (
-    SELECT p.doc_id, p.dup_of,
-           round(({" + ".join(f"CASE WHEN n.h{i} = o.h{i} THEN 1 ELSE 0 END" for i in range(N_MINHASH))}) / {float(N_MINHASH)}, 6) AS est_jaccard
-    FROM pairs p
-    JOIN sig n ON p.doc_id = n.doc_id
-    JOIN sig o ON p.dup_of = o.doc_id),
-  best AS (
-    SELECT doc_id, dup_of, est_jaccard,
-           row_number() OVER (PARTITION BY doc_id
-                              ORDER BY est_jaccard DESC, dup_of ASC) AS rn
-    FROM scored WHERE est_jaccard >= {INCR_EST_MIN})
-  SELECT doc_id, dup_of, est_jaccard FROM best WHERE rn = 1
+    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+    FROM bands a JOIN bands b USING (band, bucket)
+    WHERE a.doc_id < b.doc_id),
+  rm2 AS (
+    SELECT DISTINCT p.doc_b AS doc_id
+    FROM pairs p JOIN sig x ON p.doc_a = x.doc_id
+                 JOIN sig y ON p.doc_b = y.doc_id
+    WHERE round(({" + ".join(f"CASE WHEN x.h{i} = y.h{i} THEN 1 ELSE 0 END" for i in range(N_MINHASH))}) / {float(N_MINHASH)}, 6) >= {INCR_EST_MIN}),
+  s2 AS (SELECT doc_id FROM s1 WHERE doc_id NOT IN (SELECT doc_id FROM rm2)),
+  snips(snippet_id, shingle) AS (VALUES {_SNIPPET_SHINGLES_SQL}),
+  rm3 AS (SELECT DISTINCT sh.doc_id FROM sh JOIN snips USING (shingle)
+          JOIN s2 ON sh.doc_id = s2.doc_id),
+  c AS (SELECT (SELECT n FROM n0) AS n0,
+               (SELECT n FROM n0) - (SELECT count(*) FROM s1) AS r1,
+               (SELECT count(*) FROM rm2) AS r2,
+               (SELECT count(*) FROM rm3) AS r3)
+  SELECT '1_exact' AS stage, n0 AS docs_in, r1 AS removed, n0 - r1 AS docs_out FROM c
+  UNION ALL
+  SELECT '2_near_dup', n0 - r1, r2, n0 - r1 - r2 FROM c
+  UNION ALL
+  SELECT '3_decontaminate', n0 - r1 - r2, r3, n0 - r1 - r2 - r3 FROM c
 """
 
-QUERIES["dedup_incremental"] = q_dedup_incremental
-ORACLES["dedup_incremental"] = SQL_DEDUP_INCREMENTAL
 
-
+@query("curation_funnel", oracle=SQL_CURATION_FUNNEL)
 def q_curation_funnel(spark, sf_dir):
     """The curation report a data release actually ships with: how many
     documents each gate of the standard pre-training pipeline removes, in
@@ -6425,50 +6252,6 @@ def q_curation_funnel(spark, sf_dir):
     ).select("s.*")
 
 
-SQL_CURATION_FUNNEL = f"""
-  WITH n0 AS (SELECT count(*) AS n FROM documents),
-  s1 AS (SELECT doc_id FROM (
-           SELECT doc_id, min(doc_id) OVER (PARTITION BY sha256(text)) AS keep
-           FROM documents) WHERE doc_id = keep),
-  sh AS (SELECT DISTINCT doc_id, shingle FROM ({_SHINGLES_SQL})),
-  sig AS (
-    SELECT doc_id, {", ".join(f"min(md5('{i}:' || shingle)) AS h{i}" for i in range(N_MINHASH))}
-    FROM sh JOIN s1 USING (doc_id) GROUP BY doc_id),
-  bands0 AS (
-    {" UNION ALL ".join(f"SELECT doc_id, {b} AS band, md5(h{2 * b} || '|' || h{2 * b + 1}) AS bucket FROM sig" for b in range(N_MINHASH // 2))}
-  ),
-  bands AS (
-    SELECT bands0.* FROM bands0
-    JOIN (SELECT band, bucket FROM bands0 GROUP BY band, bucket
-          HAVING count(*) <= {MAX_BUCKET_DOCS}) ok USING (band, bucket)),
-  pairs AS (
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM bands a JOIN bands b USING (band, bucket)
-    WHERE a.doc_id < b.doc_id),
-  rm2 AS (
-    SELECT DISTINCT p.doc_b AS doc_id
-    FROM pairs p JOIN sig x ON p.doc_a = x.doc_id
-                 JOIN sig y ON p.doc_b = y.doc_id
-    WHERE round(({" + ".join(f"CASE WHEN x.h{i} = y.h{i} THEN 1 ELSE 0 END" for i in range(N_MINHASH))}) / {float(N_MINHASH)}, 6) >= {INCR_EST_MIN}),
-  s2 AS (SELECT doc_id FROM s1 WHERE doc_id NOT IN (SELECT doc_id FROM rm2)),
-  snips(snippet_id, shingle) AS (VALUES {_SNIPPET_SHINGLES_SQL}),
-  rm3 AS (SELECT DISTINCT sh.doc_id FROM sh JOIN snips USING (shingle)
-          JOIN s2 ON sh.doc_id = s2.doc_id),
-  c AS (SELECT (SELECT n FROM n0) AS n0,
-               (SELECT n FROM n0) - (SELECT count(*) FROM s1) AS r1,
-               (SELECT count(*) FROM rm2) AS r2,
-               (SELECT count(*) FROM rm3) AS r3)
-  SELECT '1_exact' AS stage, n0 AS docs_in, r1 AS removed, n0 - r1 AS docs_out FROM c
-  UNION ALL
-  SELECT '2_near_dup', n0 - r1, r2, n0 - r1 - r2 FROM c
-  UNION ALL
-  SELECT '3_decontaminate', n0 - r1 - r2, r3, n0 - r1 - r2 - r3 FROM c
-"""
-
-QUERIES["curation_funnel"] = q_curation_funnel
-ORACLES["curation_funnel"] = SQL_CURATION_FUNNEL
-
-
 # ------------------------------------------------ SemDeDup (oracled)
 # Semantic dedup (Abbas et al. 2023, "SemDeDup: Data-efficient learning
 # at web-scale through semantic deduplication"): cluster the embeddings,
@@ -6493,6 +6276,58 @@ SEM_EPS = 0.30  # within-cluster cosine above which members are duplicates
 SEM_CAP = 200   # per-cluster member cap for the pair stage (sampled)
 
 
+SQL_DEDUP_SEMANTIC = f"""
+  WITH e AS (
+    SELECT vec_id, CAST(i - 1 AS INT) AS d, CAST(embedding[i] AS DOUBLE) AS v
+    FROM (SELECT vec_id, embedding, unnest(range(1, len(embedding) + 1)) AS i
+          FROM embeddings)),
+  norm AS (SELECT vec_id, sqrt(sum(v * v)) AS norm FROM e GROUP BY vec_id),
+  cent AS (SELECT vec_id AS cid, d, v AS cv FROM e WHERE vec_id < {SEM_K}),
+  cnorm AS (SELECT cid, sqrt(sum(cv * cv)) AS cnorm FROM cent GROUP BY cid),
+  cdot AS (SELECT e.vec_id, cent.cid, sum(e.v * cent.cv) AS dot
+           FROM e JOIN cent ON e.d = cent.d GROUP BY e.vec_id, cent.cid),
+  ac AS (SELECT cdot.vec_id, cdot.cid,
+                round(cdot.dot / (norm.norm * cnorm.cnorm), 6) AS cos_c,
+                row_number() OVER (PARTITION BY cdot.vec_id
+                     ORDER BY round(cdot.dot / (norm.norm * cnorm.cnorm), 6) DESC,
+                              cdot.cid ASC) AS r
+         FROM cdot JOIN norm ON norm.vec_id = cdot.vec_id
+                   JOIN cnorm ON cnorm.cid = cdot.cid),
+  assigned AS (SELECT vec_id, cid, cos_c AS centroid_cos FROM ac WHERE r = 1),
+  ranked AS (SELECT vec_id, cid, centroid_cos,
+                    row_number() OVER (PARTITION BY cid
+                         ORDER BY centroid_cos ASC, vec_id ASC) AS rk
+             FROM assigned),
+  admitted AS (SELECT vec_id, cid FROM (
+      SELECT vec_id, cid,
+             row_number() OVER (PARTITION BY cid
+                  ORDER BY md5(CAST(vec_id AS VARCHAR))) AS srn,
+             count(*) OVER (PARTITION BY cid) AS n
+      FROM assigned) WHERE srn <= {SEM_CAP} AND n >= 2),
+  pairs AS (SELECT a.vec_id AS va, b.vec_id AS vb, a.cid
+            FROM admitted a JOIN admitted b
+              ON a.cid = b.cid AND a.vec_id < b.vec_id),
+  pcos AS (SELECT p.va, p.vb,
+                  round(sum(x.v * y.v) / (nx.norm * ny.norm), 6) AS cos
+           FROM pairs p
+           JOIN e x ON x.vec_id = p.va
+           JOIN e y ON y.vec_id = p.vb AND y.d = x.d
+           JOIN norm nx ON nx.vec_id = p.va
+           JOIN norm ny ON ny.vec_id = p.vb
+           GROUP BY p.va, p.vb, nx.norm, ny.norm),
+  removed AS (
+    SELECT DISTINCT CASE WHEN ra.rk < rb.rk THEN pc.vb ELSE pc.va END AS vec_id
+    FROM pcos pc
+    JOIN ranked ra ON ra.vec_id = pc.va
+    JOIN ranked rb ON rb.vec_id = pc.vb
+    WHERE pc.cos >= {SEM_EPS})
+  SELECT r.vec_id, r.cid, r.centroid_cos,
+         CASE WHEN rm.vec_id IS NULL THEN 1 ELSE 0 END AS keep
+  FROM ranked r LEFT JOIN removed rm ON r.vec_id = rm.vec_id
+"""
+
+
+@query("dedup_semantic", oracle=SQL_DEDUP_SEMANTIC)
 def q_dedup_semantic(spark, sf_dir):
     from .operators.ivf import _cos_expr
 
@@ -6552,60 +6387,6 @@ def q_dedup_semantic(spark, sf_dir):
     )
 
 
-SQL_DEDUP_SEMANTIC = f"""
-  WITH e AS (
-    SELECT vec_id, CAST(i - 1 AS INT) AS d, CAST(embedding[i] AS DOUBLE) AS v
-    FROM (SELECT vec_id, embedding, unnest(range(1, len(embedding) + 1)) AS i
-          FROM embeddings)),
-  norm AS (SELECT vec_id, sqrt(sum(v * v)) AS norm FROM e GROUP BY vec_id),
-  cent AS (SELECT vec_id AS cid, d, v AS cv FROM e WHERE vec_id < {SEM_K}),
-  cnorm AS (SELECT cid, sqrt(sum(cv * cv)) AS cnorm FROM cent GROUP BY cid),
-  cdot AS (SELECT e.vec_id, cent.cid, sum(e.v * cent.cv) AS dot
-           FROM e JOIN cent ON e.d = cent.d GROUP BY e.vec_id, cent.cid),
-  ac AS (SELECT cdot.vec_id, cdot.cid,
-                round(cdot.dot / (norm.norm * cnorm.cnorm), 6) AS cos_c,
-                row_number() OVER (PARTITION BY cdot.vec_id
-                     ORDER BY round(cdot.dot / (norm.norm * cnorm.cnorm), 6) DESC,
-                              cdot.cid ASC) AS r
-         FROM cdot JOIN norm ON norm.vec_id = cdot.vec_id
-                   JOIN cnorm ON cnorm.cid = cdot.cid),
-  assigned AS (SELECT vec_id, cid, cos_c AS centroid_cos FROM ac WHERE r = 1),
-  ranked AS (SELECT vec_id, cid, centroid_cos,
-                    row_number() OVER (PARTITION BY cid
-                         ORDER BY centroid_cos ASC, vec_id ASC) AS rk
-             FROM assigned),
-  admitted AS (SELECT vec_id, cid FROM (
-      SELECT vec_id, cid,
-             row_number() OVER (PARTITION BY cid
-                  ORDER BY md5(CAST(vec_id AS VARCHAR))) AS srn,
-             count(*) OVER (PARTITION BY cid) AS n
-      FROM assigned) WHERE srn <= {SEM_CAP} AND n >= 2),
-  pairs AS (SELECT a.vec_id AS va, b.vec_id AS vb, a.cid
-            FROM admitted a JOIN admitted b
-              ON a.cid = b.cid AND a.vec_id < b.vec_id),
-  pcos AS (SELECT p.va, p.vb,
-                  round(sum(x.v * y.v) / (nx.norm * ny.norm), 6) AS cos
-           FROM pairs p
-           JOIN e x ON x.vec_id = p.va
-           JOIN e y ON y.vec_id = p.vb AND y.d = x.d
-           JOIN norm nx ON nx.vec_id = p.va
-           JOIN norm ny ON ny.vec_id = p.vb
-           GROUP BY p.va, p.vb, nx.norm, ny.norm),
-  removed AS (
-    SELECT DISTINCT CASE WHEN ra.rk < rb.rk THEN pc.vb ELSE pc.va END AS vec_id
-    FROM pcos pc
-    JOIN ranked ra ON ra.vec_id = pc.va
-    JOIN ranked rb ON rb.vec_id = pc.vb
-    WHERE pc.cos >= {SEM_EPS})
-  SELECT r.vec_id, r.cid, r.centroid_cos,
-         CASE WHEN rm.vec_id IS NULL THEN 1 ELSE 0 END AS keep
-  FROM ranked r LEFT JOIN removed rm ON r.vec_id = rm.vec_id
-"""
-
-QUERIES["dedup_semantic"] = q_dedup_semantic
-ORACLES["dedup_semantic"] = SQL_DEDUP_SEMANTIC
-
-
 # --------------------------------- quality-aware canonicalization (oracled)
 # Near-dup clusters keep their BEST member, not their smallest id — the
 # policy real data releases use (the longest / highest-quality variant of
@@ -6618,6 +6399,24 @@ ORACLES["dedup_semantic"] = SQL_DEDUP_SEMANTIC
 # report is about the clusters.
 
 
+SQL_CANONICALIZE_QUALITY = f"""
+  WITH toks AS ({_TOKENS_SQL}),
+  stats AS (SELECT doc_id, count(*) AS n_tokens FROM toks GROUP BY doc_id),
+  comp AS ({SQL_CONNECTED_COMPONENTS}),
+  j AS (SELECT comp.doc_id, comp.component, stats.n_tokens
+        FROM comp JOIN stats ON comp.doc_id = stats.doc_id),
+  canon AS (SELECT component, doc_id AS canonical_id FROM (
+              SELECT component, doc_id,
+                     row_number() OVER (PARTITION BY component
+                          ORDER BY n_tokens DESC, doc_id ASC) AS rn
+              FROM j) WHERE rn = 1)
+  SELECT j.doc_id, j.component, j.n_tokens, canon.canonical_id,
+         CAST(j.doc_id = canon.canonical_id AS INT) AS is_canonical
+  FROM j JOIN canon ON j.component = canon.component
+"""
+
+
+@query("canonicalize_quality", oracle=SQL_CANONICALIZE_QUALITY)
 def q_canonicalize_quality(spark, sf_dir):
     comp = q_connected_components(spark, sf_dir)
     stats = (
@@ -6641,26 +6440,6 @@ def q_canonicalize_quality(spark, sf_dir):
     )
 
 
-SQL_CANONICALIZE_QUALITY = f"""
-  WITH toks AS ({_TOKENS_SQL}),
-  stats AS (SELECT doc_id, count(*) AS n_tokens FROM toks GROUP BY doc_id),
-  comp AS ({SQL_CONNECTED_COMPONENTS}),
-  j AS (SELECT comp.doc_id, comp.component, stats.n_tokens
-        FROM comp JOIN stats ON comp.doc_id = stats.doc_id),
-  canon AS (SELECT component, doc_id AS canonical_id FROM (
-              SELECT component, doc_id,
-                     row_number() OVER (PARTITION BY component
-                          ORDER BY n_tokens DESC, doc_id ASC) AS rn
-              FROM j) WHERE rn = 1)
-  SELECT j.doc_id, j.component, j.n_tokens, canon.canonical_id,
-         CAST(j.doc_id = canon.canonical_id AS INT) AS is_canonical
-  FROM j JOIN canon ON j.component = canon.component
-"""
-
-QUERIES["canonicalize_quality"] = q_canonicalize_quality
-ORACLES["canonicalize_quality"] = SQL_CANONICALIZE_QUALITY
-
-
 # ------------------------------------------- KG node similarity (oracled)
 # Neighborhood-overlap similarity between entity nodes — the blocking /
 # candidate-scoring primitive behind entity resolution and "related
@@ -6678,6 +6457,32 @@ ORACLES["canonicalize_quality"] = SQL_CANONICALIZE_QUALITY
 NODE_SIM_HUB_CAP = 50
 
 
+SQL_KG_NODE_SIMILARITY = f"""
+  WITH dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
+  toks AS ({_TOKENS_SQL}),
+  m AS (SELECT DISTINCT doc_id, token FROM toks JOIN dict ON token = surface),
+  edges AS (SELECT DISTINCT a.token AS u, b.token AS v
+            FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.token < b.token),
+  und AS (SELECT u, v FROM edges UNION ALL SELECT v AS u, u AS v FROM edges),
+  deg AS (SELECT u AS node, count(*) AS deg FROM und GROUP BY u),
+  ctr AS (SELECT und.u AS w, und.v, d.deg AS deg_w
+          FROM und JOIN deg d ON d.node = und.u
+          WHERE d.deg <= {NODE_SIM_HUB_CAP}),
+  wed AS (SELECT a.w, a.v AS x, b.v AS y, a.deg_w
+          FROM ctr a JOIN ctr b ON a.w = b.w AND a.v < b.v),
+  agg AS (SELECT x AS u, y AS v, count(*) AS common,
+                 CAST(sum(CAST(round(1.0 / ln(deg_w), 6) AS DECIMAL(18,6)))
+                      AS DOUBLE) AS adamic_adar
+          FROM wed GROUP BY x, y)
+  SELECT agg.u, agg.v, common, du.deg AS deg_u, dv.deg AS deg_v,
+         round(CAST(common AS DOUBLE) / (du.deg + dv.deg - common), 6)
+           AS jaccard,
+         adamic_adar
+  FROM agg JOIN deg du ON du.node = agg.u JOIN deg dv ON dv.node = agg.v
+"""
+
+
+@query("kg_node_similarity", oracle=SQL_KG_NODE_SIMILARITY)
 def q_kg_node_similarity(spark, sf_dir):
     m = q_mentions_dict(spark, sf_dir).select("doc_id", "token").distinct()
     a = m.select("doc_id", F.col("token").alias("u"))
@@ -6724,34 +6529,6 @@ def q_kg_node_similarity(spark, sf_dir):
     )
 
 
-SQL_KG_NODE_SIMILARITY = f"""
-  WITH dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
-  toks AS ({_TOKENS_SQL}),
-  m AS (SELECT DISTINCT doc_id, token FROM toks JOIN dict ON token = surface),
-  edges AS (SELECT DISTINCT a.token AS u, b.token AS v
-            FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.token < b.token),
-  und AS (SELECT u, v FROM edges UNION ALL SELECT v AS u, u AS v FROM edges),
-  deg AS (SELECT u AS node, count(*) AS deg FROM und GROUP BY u),
-  ctr AS (SELECT und.u AS w, und.v, d.deg AS deg_w
-          FROM und JOIN deg d ON d.node = und.u
-          WHERE d.deg <= {NODE_SIM_HUB_CAP}),
-  wed AS (SELECT a.w, a.v AS x, b.v AS y, a.deg_w
-          FROM ctr a JOIN ctr b ON a.w = b.w AND a.v < b.v),
-  agg AS (SELECT x AS u, y AS v, count(*) AS common,
-                 CAST(sum(CAST(round(1.0 / ln(deg_w), 6) AS DECIMAL(18,6)))
-                      AS DOUBLE) AS adamic_adar
-          FROM wed GROUP BY x, y)
-  SELECT agg.u, agg.v, common, du.deg AS deg_u, dv.deg AS deg_v,
-         round(CAST(common AS DOUBLE) / (du.deg + dv.deg - common), 6)
-           AS jaccard,
-         adamic_adar
-  FROM agg JOIN deg du ON du.node = agg.u JOIN deg dv ON dv.node = agg.v
-"""
-
-QUERIES["kg_node_similarity"] = q_kg_node_similarity
-ORACLES["kg_node_similarity"] = SQL_KG_NODE_SIMILARITY
-
-
 # ------------------------------------- leakage-safe split assign (oracled)
 # Train/val/test assignment that CANNOT leak near-duplicates across
 # splits: the split is a deterministic hash of the document's near-dup
@@ -6769,6 +6546,28 @@ SPLIT_TRAIN_UB = 0.8
 SPLIT_VAL_UB = 0.9
 
 
+SQL_SPLIT_LEAKAGE_SAFE = f"""
+  WITH comp AS ({SQL_CONNECTED_COMPONENTS}),
+  j AS (SELECT d.doc_id,
+               CAST(coalesce(c.component, d.doc_id) AS VARCHAR) AS group_key
+        FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id),
+  h AS (SELECT doc_id, group_key, md5('sp:' || group_key) AS hh FROM j),
+  u AS (SELECT doc_id, group_key, round((
+            (strpos('0123456789abcdef', substring(hh, 1, 1)) - 1) * 4096
+          + (strpos('0123456789abcdef', substring(hh, 2, 1)) - 1) * 256
+          + (strpos('0123456789abcdef', substring(hh, 3, 1)) - 1) * 16
+          + (strpos('0123456789abcdef', substring(hh, 4, 1)) - 1)) / 65536.0, 6)
+          AS u
+        FROM h)
+  SELECT doc_id, group_key, u,
+         CASE WHEN u < {SPLIT_TRAIN_UB} THEN 'train'
+              WHEN u < {SPLIT_VAL_UB} THEN 'val'
+              ELSE 'test' END AS split
+  FROM u
+"""
+
+
+@query("split_leakage_safe", oracle=SQL_SPLIT_LEAKAGE_SAFE)
 def q_split_leakage_safe(spark, sf_dir):
     comp = q_connected_components(spark, sf_dir)
     docs = _docs(spark, sf_dir).select("doc_id")
@@ -6792,30 +6591,6 @@ def q_split_leakage_safe(spark, sf_dir):
     )
 
 
-SQL_SPLIT_LEAKAGE_SAFE = f"""
-  WITH comp AS ({SQL_CONNECTED_COMPONENTS}),
-  j AS (SELECT d.doc_id,
-               CAST(coalesce(c.component, d.doc_id) AS VARCHAR) AS group_key
-        FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id),
-  h AS (SELECT doc_id, group_key, md5('sp:' || group_key) AS hh FROM j),
-  u AS (SELECT doc_id, group_key, round((
-            (strpos('0123456789abcdef', substring(hh, 1, 1)) - 1) * 4096
-          + (strpos('0123456789abcdef', substring(hh, 2, 1)) - 1) * 256
-          + (strpos('0123456789abcdef', substring(hh, 3, 1)) - 1) * 16
-          + (strpos('0123456789abcdef', substring(hh, 4, 1)) - 1)) / 65536.0, 6)
-          AS u
-        FROM h)
-  SELECT doc_id, group_key, u,
-         CASE WHEN u < {SPLIT_TRAIN_UB} THEN 'train'
-              WHEN u < {SPLIT_VAL_UB} THEN 'val'
-              ELSE 'test' END AS split
-  FROM u
-"""
-
-QUERIES["split_leakage_safe"] = q_split_leakage_safe
-ORACLES["split_leakage_safe"] = SQL_SPLIT_LEAKAGE_SAFE
-
-
 # --------------------------------------- containment dedup score (oracled)
 # Asymmetric near-dup detection: Jaccard misses a small document wholly
 # CONTAINED in a large one (|A∩B|/|A∪B| is tiny when |B| >> |A| even at
@@ -6828,6 +6603,28 @@ ORACLES["split_leakage_safe"] = SQL_SPLIT_LEAKAGE_SAFE
 # is keyed on (doc_a, doc_b) or doc_id.
 
 
+SQL_DEDUP_CONTAINMENT = f"""
+  WITH sh AS (SELECT DISTINCT doc_id, shingle FROM ({_SHINGLES_SQL})),
+  pairs AS (SELECT * FROM ({SQL_DEDUP_MINHASH_LSH})),
+  sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+  inter AS (
+    SELECT p.doc_a, p.doc_b, count(*) AS inter
+    FROM pairs p JOIN sh x ON x.doc_id = p.doc_a
+                 JOIN sh y ON y.doc_id = p.doc_b AND y.shingle = x.shingle
+    GROUP BY p.doc_a, p.doc_b)
+  SELECT p.doc_a, p.doc_b, coalesce(i.inter, 0) AS inter,
+         na.n AS n_a, nb.n AS n_b,
+         round(CAST(coalesce(i.inter, 0) AS DOUBLE) / na.n, 6)
+           AS containment_a,
+         round(CAST(coalesce(i.inter, 0) AS DOUBLE) / nb.n, 6)
+           AS containment_b
+  FROM pairs p LEFT JOIN inter i ON p.doc_a = i.doc_a AND p.doc_b = i.doc_b
+       JOIN sizes na ON na.doc_id = p.doc_a
+       JOIN sizes nb ON nb.doc_id = p.doc_b
+"""
+
+
+@query("dedup_containment", oracle=SQL_DEDUP_CONTAINMENT)
 def q_dedup_containment(spark, sf_dir):
     pairs = q_dedup_minhash_lsh(spark, sf_dir)
     s = _shingles(spark, sf_dir).select("doc_id", "shingle").distinct()
@@ -6858,30 +6655,6 @@ def q_dedup_containment(spark, sf_dir):
     )
 
 
-SQL_DEDUP_CONTAINMENT = f"""
-  WITH sh AS (SELECT DISTINCT doc_id, shingle FROM ({_SHINGLES_SQL})),
-  pairs AS (SELECT * FROM ({SQL_DEDUP_MINHASH_LSH})),
-  sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-  inter AS (
-    SELECT p.doc_a, p.doc_b, count(*) AS inter
-    FROM pairs p JOIN sh x ON x.doc_id = p.doc_a
-                 JOIN sh y ON y.doc_id = p.doc_b AND y.shingle = x.shingle
-    GROUP BY p.doc_a, p.doc_b)
-  SELECT p.doc_a, p.doc_b, coalesce(i.inter, 0) AS inter,
-         na.n AS n_a, nb.n AS n_b,
-         round(CAST(coalesce(i.inter, 0) AS DOUBLE) / na.n, 6)
-           AS containment_a,
-         round(CAST(coalesce(i.inter, 0) AS DOUBLE) / nb.n, 6)
-           AS containment_b
-  FROM pairs p LEFT JOIN inter i ON p.doc_a = i.doc_a AND p.doc_b = i.doc_b
-       JOIN sizes na ON na.doc_id = p.doc_a
-       JOIN sizes nb ON nb.doc_id = p.doc_b
-"""
-
-QUERIES["dedup_containment"] = q_dedup_containment
-ORACLES["dedup_containment"] = SQL_DEDUP_CONTAINMENT
-
-
 # ------------------------------------- embedding dimension stats (oracled)
 # Per-dimension corpus statistics over the embedding column — the
 # pre-flight diagnostic every vector pipeline runs before indexing (dead
@@ -6896,6 +6669,28 @@ ORACLES["dedup_containment"] = SQL_DEDUP_CONTAINMENT
 # (a plain double sum would be order-dependent).
 
 
+SQL_EMBEDDING_DIM_STATS = """
+  WITH x AS (
+    SELECT CAST(i - 1 AS INT) AS dim,
+           CAST(round(CAST(embedding[i] AS DOUBLE), 6) AS DECIMAL(18,6)) AS v
+    FROM (SELECT embedding, unnest(range(1, len(embedding) + 1)) AS i
+          FROM embeddings)
+  ),
+  agg AS (SELECT dim, count(*) AS n, sum(v) AS s, sum(v * v) AS ss,
+                 min(v) AS vmin, max(v) AS vmax
+          FROM x GROUP BY dim)
+  SELECT dim, n,
+         round(CAST(s AS DOUBLE) / n, 6) AS mean,
+         round((CAST(ss AS DOUBLE)
+                - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / n) / n, 6)
+           AS variance,
+         CAST(vmin AS DOUBLE) AS vmin,
+         CAST(vmax AS DOUBLE) AS vmax
+  FROM agg
+"""
+
+
+@query("embedding_dim_stats", oracle=SQL_EMBEDDING_DIM_STATS)
 def q_embedding_dim_stats(spark, sf_dir):
     x = _emb(spark, sf_dir).select(
         F.posexplode("embedding").alias("dim", "val")
@@ -6921,30 +6716,6 @@ def q_embedding_dim_stats(spark, sf_dir):
     )
 
 
-SQL_EMBEDDING_DIM_STATS = """
-  WITH x AS (
-    SELECT CAST(i - 1 AS INT) AS dim,
-           CAST(round(CAST(embedding[i] AS DOUBLE), 6) AS DECIMAL(18,6)) AS v
-    FROM (SELECT embedding, unnest(range(1, len(embedding) + 1)) AS i
-          FROM embeddings)
-  ),
-  agg AS (SELECT dim, count(*) AS n, sum(v) AS s, sum(v * v) AS ss,
-                 min(v) AS vmin, max(v) AS vmax
-          FROM x GROUP BY dim)
-  SELECT dim, n,
-         round(CAST(s AS DOUBLE) / n, 6) AS mean,
-         round((CAST(ss AS DOUBLE)
-                - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / n) / n, 6)
-           AS variance,
-         CAST(vmin AS DOUBLE) AS vmin,
-         CAST(vmax AS DOUBLE) AS vmax
-  FROM agg
-"""
-
-QUERIES["embedding_dim_stats"] = q_embedding_dim_stats
-ORACLES["embedding_dim_stats"] = SQL_EMBEDDING_DIM_STATS
-
-
 # ------------------------------------- KG link-prediction eval (oracled)
 # Held-out link-prediction evaluation over the entity graph — the
 # standard KG-completion quality gauge (does the graph's local structure
@@ -6961,6 +6732,50 @@ LINKPRED_HOLDOUT_RATE = 0.25
 LINKPRED_HIT_K = 3
 
 
+SQL_KG_LINK_PREDICTION_EVAL = f"""
+  WITH dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
+  toks AS ({_TOKENS_SQL}),
+  m AS (SELECT DISTINCT doc_id, token FROM toks JOIN dict ON token = surface),
+  edges AS (SELECT DISTINCT a.token AS u, b.token AS v
+            FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.token < b.token),
+  hashed AS (SELECT u, v, round((
+            (strpos('0123456789abcdef', substring(hh, 1, 1)) - 1) * 4096
+          + (strpos('0123456789abcdef', substring(hh, 2, 1)) - 1) * 256
+          + (strpos('0123456789abcdef', substring(hh, 3, 1)) - 1) * 16
+          + (strpos('0123456789abcdef', substring(hh, 4, 1)) - 1)) / 65536.0, 6)
+          AS uh
+        FROM (SELECT u, v, md5('lp:' || u || '|' || v) AS hh FROM edges)),
+  held AS (SELECT u, v FROM hashed WHERE uh < {LINKPRED_HOLDOUT_RATE}),
+  rest AS (SELECT u, v FROM hashed WHERE uh >= {LINKPRED_HOLDOUT_RATE}),
+  und AS (SELECT u, v FROM rest UNION ALL SELECT v AS u, u AS v FROM rest),
+  deg AS (SELECT u AS node, count(*) AS deg FROM und GROUP BY u),
+  ctr AS (SELECT und.u AS w, und.v
+          FROM und JOIN deg d ON d.node = und.u
+          WHERE d.deg <= {NODE_SIM_HUB_CAP}),
+  agg AS (SELECT a.v AS x, b.v AS y, count(*) AS common
+          FROM ctr a JOIN ctr b ON a.w = b.w AND a.v < b.v
+          GROUP BY a.v, b.v),
+  cand0 AS (SELECT x AS q, y AS cand, common FROM agg
+            UNION ALL SELECT y AS q, x AS cand, common FROM agg),
+  cand AS (SELECT c.* FROM cand0 c
+           LEFT JOIN und e ON e.u = c.q AND e.v = c.cand
+           WHERE e.u IS NULL),
+  ranked AS (SELECT q, cand, common,
+                    CAST(row_number() OVER (PARTITION BY q
+                         ORDER BY common DESC, cand ASC) AS INT) AS rank
+             FROM cand)
+  SELECT h.u, h.v,
+         coalesce(r.common, 0) AS common,
+         coalesce(r.rank, 0) AS rank,
+         round(CASE WHEN r.rank IS NULL THEN 0.0 ELSE 1.0 / r.rank END, 6)
+           AS rr,
+         CASE WHEN coalesce(r.rank, 1000000000) <= {LINKPRED_HIT_K}
+              THEN 1 ELSE 0 END AS hit{LINKPRED_HIT_K}
+  FROM held h LEFT JOIN ranked r ON r.q = h.u AND r.cand = h.v
+"""
+
+
+@query("kg_link_prediction_eval", oracle=SQL_KG_LINK_PREDICTION_EVAL)
 def q_kg_link_prediction_eval(spark, sf_dir):
     m = q_mentions_dict(spark, sf_dir).select("doc_id", "token").distinct()
     a = m.select("doc_id", F.col("token").alias("u"))
@@ -7031,52 +6846,6 @@ def q_kg_link_prediction_eval(spark, sf_dir):
     )
 
 
-SQL_KG_LINK_PREDICTION_EVAL = f"""
-  WITH dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
-  toks AS ({_TOKENS_SQL}),
-  m AS (SELECT DISTINCT doc_id, token FROM toks JOIN dict ON token = surface),
-  edges AS (SELECT DISTINCT a.token AS u, b.token AS v
-            FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.token < b.token),
-  hashed AS (SELECT u, v, round((
-            (strpos('0123456789abcdef', substring(hh, 1, 1)) - 1) * 4096
-          + (strpos('0123456789abcdef', substring(hh, 2, 1)) - 1) * 256
-          + (strpos('0123456789abcdef', substring(hh, 3, 1)) - 1) * 16
-          + (strpos('0123456789abcdef', substring(hh, 4, 1)) - 1)) / 65536.0, 6)
-          AS uh
-        FROM (SELECT u, v, md5('lp:' || u || '|' || v) AS hh FROM edges)),
-  held AS (SELECT u, v FROM hashed WHERE uh < {LINKPRED_HOLDOUT_RATE}),
-  rest AS (SELECT u, v FROM hashed WHERE uh >= {LINKPRED_HOLDOUT_RATE}),
-  und AS (SELECT u, v FROM rest UNION ALL SELECT v AS u, u AS v FROM rest),
-  deg AS (SELECT u AS node, count(*) AS deg FROM und GROUP BY u),
-  ctr AS (SELECT und.u AS w, und.v
-          FROM und JOIN deg d ON d.node = und.u
-          WHERE d.deg <= {NODE_SIM_HUB_CAP}),
-  agg AS (SELECT a.v AS x, b.v AS y, count(*) AS common
-          FROM ctr a JOIN ctr b ON a.w = b.w AND a.v < b.v
-          GROUP BY a.v, b.v),
-  cand0 AS (SELECT x AS q, y AS cand, common FROM agg
-            UNION ALL SELECT y AS q, x AS cand, common FROM agg),
-  cand AS (SELECT c.* FROM cand0 c
-           LEFT JOIN und e ON e.u = c.q AND e.v = c.cand
-           WHERE e.u IS NULL),
-  ranked AS (SELECT q, cand, common,
-                    CAST(row_number() OVER (PARTITION BY q
-                         ORDER BY common DESC, cand ASC) AS INT) AS rank
-             FROM cand)
-  SELECT h.u, h.v,
-         coalesce(r.common, 0) AS common,
-         coalesce(r.rank, 0) AS rank,
-         round(CASE WHEN r.rank IS NULL THEN 0.0 ELSE 1.0 / r.rank END, 6)
-           AS rr,
-         CASE WHEN coalesce(r.rank, 1000000000) <= {LINKPRED_HIT_K}
-              THEN 1 ELSE 0 END AS hit{LINKPRED_HIT_K}
-  FROM held h LEFT JOIN ranked r ON r.q = h.u AND r.cand = h.v
-"""
-
-QUERIES["kg_link_prediction_eval"] = q_kg_link_prediction_eval
-ORACLES["kg_link_prediction_eval"] = SQL_KG_LINK_PREDICTION_EVAL
-
-
 # ------------------------------------------- secret/credential scan (oracled)
 # The BigCode/StarCoder-style credential gate: source files are scanned
 # for embedded secrets (AWS access-key ids, GitHub personal-access
@@ -7106,28 +6875,6 @@ def _secret_content_col():
     return F.concat(F.col("text"), F.lit(" "), planted)
 
 
-def q_code_secret_scan(spark, sf_dir):
-    c = F.col("content")
-    red = c
-    for pat in (SECRET_AWS_PAT, SECRET_TOKEN_PAT, SECRET_PEM_PAT):
-        red = F.regexp_replace(red, pat, "[SECRET]")
-    return (
-        _docs(spark, sf_dir)
-        .select("doc_id", _secret_content_col().alias("content"))
-        .select(
-            "doc_id",
-            F.size(F.regexp_extract_all(c, F.lit(SECRET_AWS_PAT), 0)).alias("n_aws"),
-            F.size(F.regexp_extract_all(c, F.lit(SECRET_TOKEN_PAT), 0)).alias("n_token"),
-            F.size(F.regexp_extract_all(c, F.lit(SECRET_PEM_PAT), 0)).alias("n_pem"),
-            F.sha2(red, 256).alias("redacted_sha"),
-        )
-        .withColumn(
-            "has_secret",
-            (F.col("n_aws") + F.col("n_token") + F.col("n_pem") > 0).cast("int"),
-        )
-    )
-
-
 SQL_CODE_SECRET_SCAN = f"""
   WITH base AS (
     SELECT doc_id, text || ' ' ||
@@ -7154,8 +6901,28 @@ SQL_CODE_SECRET_SCAN = f"""
   FROM base
 """
 
-QUERIES["code_secret_scan"] = q_code_secret_scan
-ORACLES["code_secret_scan"] = SQL_CODE_SECRET_SCAN
+
+@query("code_secret_scan", oracle=SQL_CODE_SECRET_SCAN)
+def q_code_secret_scan(spark, sf_dir):
+    c = F.col("content")
+    red = c
+    for pat in (SECRET_AWS_PAT, SECRET_TOKEN_PAT, SECRET_PEM_PAT):
+        red = F.regexp_replace(red, pat, "[SECRET]")
+    return (
+        _docs(spark, sf_dir)
+        .select("doc_id", _secret_content_col().alias("content"))
+        .select(
+            "doc_id",
+            F.size(F.regexp_extract_all(c, F.lit(SECRET_AWS_PAT), 0)).alias("n_aws"),
+            F.size(F.regexp_extract_all(c, F.lit(SECRET_TOKEN_PAT), 0)).alias("n_token"),
+            F.size(F.regexp_extract_all(c, F.lit(SECRET_PEM_PAT), 0)).alias("n_pem"),
+            F.sha2(red, 256).alias("redacted_sha"),
+        )
+        .withColumn(
+            "has_secret",
+            (F.col("n_aws") + F.col("n_token") + F.col("n_pem") > 0).cast("int"),
+        )
+    )
 
 
 # ------------------------------------ predicate cardinality mining (oracled)
@@ -7170,31 +6937,6 @@ ORACLES["code_secret_scan"] = SQL_CODE_SECRET_SCAN
 
 FUNC_PRED_MIN_SHARE = 0.5  # single-object share above which a predicate
                            # is flagged candidate-functional
-
-
-def q_kg_predicate_cardinality(spark, sf_dir):
-    t = q_triples_kg(spark, sf_dir)
-    per_sub = t.groupBy("pred", "subj").agg(
-        F.countDistinct("obj").alias("n_obj")
-    )
-    return (
-        per_sub.groupBy("pred")
-        .agg(
-            F.count("*").alias("n_subjects"),
-            F.sum("n_obj").alias("n_pairs"),
-            F.max("n_obj").alias("max_obj"),
-            F.round(F.avg("n_obj"), 6).alias("avg_obj"),
-            F.sum(F.when(F.col("n_obj") == 1, 1).otherwise(0)).alias("n_single"),
-        )
-        .withColumn(
-            "single_share",
-            F.round(F.col("n_single") / F.col("n_subjects"), 6),
-        )
-        .withColumn(
-            "is_functional",
-            (F.col("single_share") >= FUNC_PRED_MIN_SHARE).cast("int"),
-        )
-    )
 
 
 SQL_KG_PREDICATE_CARDINALITY = f"""
@@ -7220,8 +6962,31 @@ SQL_KG_PREDICATE_CARDINALITY = f"""
   FROM per_sub GROUP BY pred
 """
 
-QUERIES["kg_predicate_cardinality"] = q_kg_predicate_cardinality
-ORACLES["kg_predicate_cardinality"] = SQL_KG_PREDICATE_CARDINALITY
+
+@query("kg_predicate_cardinality", oracle=SQL_KG_PREDICATE_CARDINALITY)
+def q_kg_predicate_cardinality(spark, sf_dir):
+    t = q_triples_kg(spark, sf_dir)
+    per_sub = t.groupBy("pred", "subj").agg(
+        F.countDistinct("obj").alias("n_obj")
+    )
+    return (
+        per_sub.groupBy("pred")
+        .agg(
+            F.count("*").alias("n_subjects"),
+            F.sum("n_obj").alias("n_pairs"),
+            F.max("n_obj").alias("max_obj"),
+            F.round(F.avg("n_obj"), 6).alias("avg_obj"),
+            F.sum(F.when(F.col("n_obj") == 1, 1).otherwise(0)).alias("n_single"),
+        )
+        .withColumn(
+            "single_share",
+            F.round(F.col("n_single") / F.col("n_subjects"), 6),
+        )
+        .withColumn(
+            "is_functional",
+            (F.col("single_share") >= FUNC_PRED_MIN_SHARE).cast("int"),
+        )
+    )
 
 
 # ------------------------------------------------ HITS hubs/authorities (oracled)
@@ -7240,6 +7005,46 @@ ORACLES["kg_predicate_cardinality"] = SQL_KG_PREDICATE_CARDINALITY
 HITS_ITERS = 3
 
 
+def _hits_sql() -> str:
+    head = f"""
+  WITH dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
+  toks AS ({_TOKENS_SQL}),
+  triples AS (SELECT DISTINCT 'doc_' || CAST(doc_id AS VARCHAR) AS subj,
+                     'mentions_' || type_id AS pred, token AS obj
+              FROM toks JOIN dict ON token = surface),
+  edges AS (SELECT DISTINCT subj, obj FROM triples),
+  nodes AS (SELECT subj AS node FROM edges UNION SELECT obj FROM edges),
+  h0 AS (SELECT node, CAST(1 AS DECIMAL(38,0)) AS hub FROM nodes)"""
+    steps = []
+    for k in range(1, HITS_ITERS + 1):
+        steps.append(f"""
+  a{k} AS (SELECT n.node, CAST(coalesce(s.s, 0) AS DECIMAL(38,0)) AS auth
+           FROM nodes n LEFT JOIN (
+             SELECT e.obj AS node, sum(h.hub) AS s
+             FROM edges e JOIN h{k - 1} h ON h.node = e.subj
+             GROUP BY e.obj) s USING (node)),
+  h{k} AS (SELECT n.node, CAST(coalesce(s.s, 0) AS DECIMAL(38,0)) AS hub
+           FROM nodes n LEFT JOIN (
+             SELECT e.subj AS node, sum(a.auth) AS s
+             FROM edges e JOIN a{k} a ON a.node = e.obj
+             GROUP BY e.subj) s USING (node))""")
+    tail = f"""
+  j AS (SELECT a.node, a.auth, h.hub
+        FROM a{HITS_ITERS} a JOIN h{HITS_ITERS} h USING (node)),
+  mx AS (SELECT max(auth) AS ma, max(hub) AS mh FROM j)
+  SELECT node,
+         round(CASE WHEN ma > 0 THEN CAST(auth AS DOUBLE) / CAST(ma AS DOUBLE)
+                    ELSE 0.0 END, 6) AS authority,
+         round(CASE WHEN mh > 0 THEN CAST(hub AS DOUBLE) / CAST(mh AS DOUBLE)
+                    ELSE 0.0 END, 6) AS hub_score
+  FROM j CROSS JOIN mx"""
+    return head + "," + ",".join(steps) + "," + tail
+
+
+SQL_KG_HITS = _hits_sql()
+
+
+@query("kg_hits", oracle=SQL_KG_HITS)
 def q_kg_hits(spark, sf_dir):
     # No early-stop here, deliberately (round-4 verdict #7 considered):
     # unlike BFS/k-core there is no EXACT empty-delta signal — the
@@ -7302,48 +7107,6 @@ def q_kg_hits(spark, sf_dir):
     )
 
 
-def _hits_sql() -> str:
-    head = f"""
-  WITH dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
-  toks AS ({_TOKENS_SQL}),
-  triples AS (SELECT DISTINCT 'doc_' || CAST(doc_id AS VARCHAR) AS subj,
-                     'mentions_' || type_id AS pred, token AS obj
-              FROM toks JOIN dict ON token = surface),
-  edges AS (SELECT DISTINCT subj, obj FROM triples),
-  nodes AS (SELECT subj AS node FROM edges UNION SELECT obj FROM edges),
-  h0 AS (SELECT node, CAST(1 AS DECIMAL(38,0)) AS hub FROM nodes)"""
-    steps = []
-    for k in range(1, HITS_ITERS + 1):
-        steps.append(f"""
-  a{k} AS (SELECT n.node, CAST(coalesce(s.s, 0) AS DECIMAL(38,0)) AS auth
-           FROM nodes n LEFT JOIN (
-             SELECT e.obj AS node, sum(h.hub) AS s
-             FROM edges e JOIN h{k - 1} h ON h.node = e.subj
-             GROUP BY e.obj) s USING (node)),
-  h{k} AS (SELECT n.node, CAST(coalesce(s.s, 0) AS DECIMAL(38,0)) AS hub
-           FROM nodes n LEFT JOIN (
-             SELECT e.subj AS node, sum(a.auth) AS s
-             FROM edges e JOIN a{k} a ON a.node = e.obj
-             GROUP BY e.subj) s USING (node))""")
-    tail = f"""
-  j AS (SELECT a.node, a.auth, h.hub
-        FROM a{HITS_ITERS} a JOIN h{HITS_ITERS} h USING (node)),
-  mx AS (SELECT max(auth) AS ma, max(hub) AS mh FROM j)
-  SELECT node,
-         round(CASE WHEN ma > 0 THEN CAST(auth AS DOUBLE) / CAST(ma AS DOUBLE)
-                    ELSE 0.0 END, 6) AS authority,
-         round(CASE WHEN mh > 0 THEN CAST(hub AS DOUBLE) / CAST(mh AS DOUBLE)
-                    ELSE 0.0 END, 6) AS hub_score
-  FROM j CROSS JOIN mx"""
-    return head + "," + ",".join(steps) + "," + tail
-
-
-SQL_KG_HITS = _hits_sql()
-
-QUERIES["kg_hits"] = q_kg_hits
-ORACLES["kg_hits"] = SQL_KG_HITS
-
-
 # ------------------------------------- community conductance report (oracled)
 # Quality gauge for the LPA communities: per community, its node count,
 # volume (sum of member degrees = directed half-edges from members), cut
@@ -7357,6 +7120,35 @@ ORACLES["kg_hits"] = SQL_KG_HITS
 # pattern) — nothing corpus-global, community table stays label-sized.
 
 
+SQL_KG_COMMUNITY_CONDUCTANCE = f"""
+  WITH lpa AS ({SQL_KG_LABEL_PROPAGATION}),
+  dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
+  toks AS ({_TOKENS_SQL}),
+  triples AS (SELECT DISTINCT 'doc_' || CAST(doc_id AS VARCHAR) AS subj,
+                     'mentions_' || type_id AS pred, token AS obj
+              FROM toks JOIN dict ON token = surface),
+  edges AS (SELECT DISTINCT subj AS a, obj AS b FROM triples
+            UNION SELECT DISTINCT obj AS a, subj AS b FROM triples),
+  lab AS (SELECT node, community FROM lpa),
+  e AS (SELECT la.community AS ca, lb.community AS cb
+        FROM edges
+        JOIN lab la ON la.node = edges.a
+        JOIN lab lb ON lb.node = edges.b),
+  per AS (SELECT ca AS community, count(*) AS vol,
+                 CAST(sum(CASE WHEN cb <> ca THEN 1 ELSE 0 END) AS BIGINT) AS cut
+          FROM e GROUP BY ca),
+  nper AS (SELECT community, count(*) AS n_nodes FROM lab GROUP BY community),
+  tot AS (SELECT count(*) AS tot_vol FROM edges)
+  SELECT nper.community, n_nodes, vol, cut,
+         vol - cut AS internal,
+         round(CASE WHEN least(vol, tot_vol - vol) > 0
+                    THEN CAST(cut AS DOUBLE) / least(vol, tot_vol - vol)
+                    ELSE 0.0 END, 6) AS conductance
+  FROM nper JOIN per USING (community) CROSS JOIN tot
+"""
+
+
+@query("kg_community_conductance", oracle=SQL_KG_COMMUNITY_CONDUCTANCE)
 def q_kg_community_conductance(spark, sf_dir, communities=None):
     """Per-community conductance over the KG. ``communities`` (node,
     community) lets a caller feed an already-materialized community table
@@ -7391,37 +7183,6 @@ def q_kg_community_conductance(spark, sf_dir, communities=None):
     )
 
 
-SQL_KG_COMMUNITY_CONDUCTANCE = f"""
-  WITH lpa AS ({SQL_KG_LABEL_PROPAGATION}),
-  dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
-  toks AS ({_TOKENS_SQL}),
-  triples AS (SELECT DISTINCT 'doc_' || CAST(doc_id AS VARCHAR) AS subj,
-                     'mentions_' || type_id AS pred, token AS obj
-              FROM toks JOIN dict ON token = surface),
-  edges AS (SELECT DISTINCT subj AS a, obj AS b FROM triples
-            UNION SELECT DISTINCT obj AS a, subj AS b FROM triples),
-  lab AS (SELECT node, community FROM lpa),
-  e AS (SELECT la.community AS ca, lb.community AS cb
-        FROM edges
-        JOIN lab la ON la.node = edges.a
-        JOIN lab lb ON lb.node = edges.b),
-  per AS (SELECT ca AS community, count(*) AS vol,
-                 CAST(sum(CASE WHEN cb <> ca THEN 1 ELSE 0 END) AS BIGINT) AS cut
-          FROM e GROUP BY ca),
-  nper AS (SELECT community, count(*) AS n_nodes FROM lab GROUP BY community),
-  tot AS (SELECT count(*) AS tot_vol FROM edges)
-  SELECT nper.community, n_nodes, vol, cut,
-         vol - cut AS internal,
-         round(CASE WHEN least(vol, tot_vol - vol) > 0
-                    THEN CAST(cut AS DOUBLE) / least(vol, tot_vol - vol)
-                    ELSE 0.0 END, 6) AS conductance
-  FROM nper JOIN per USING (community) CROSS JOIN tot
-"""
-
-QUERIES["kg_community_conductance"] = q_kg_community_conductance
-ORACLES["kg_community_conductance"] = SQL_KG_COMMUNITY_CONDUCTANCE
-
-
 # --------------------------------- int8 scalar quantization report (oracled)
 # Vector compression for the ANN family: per-dimension affine int8
 # (0..255) scalar quantization — the cheapest 4x shrink of an embedding
@@ -7438,6 +7199,41 @@ ORACLES["kg_community_conductance"] = SQL_KG_COMMUNITY_CONDUCTANCE
 # corpus-sized.
 
 
+SQL_EMBEDDING_QUANTIZE_SQ = """
+  WITH x AS (
+    SELECT CAST(i - 1 AS INT) AS dim,
+           CAST(round(CAST(embedding[i] AS DOUBLE), 6) AS DECIMAL(18,6)) AS v
+    FROM (SELECT embedding, unnest(range(1, len(embedding) + 1)) AS i
+          FROM embeddings)
+  ),
+  stats AS (SELECT dim, min(v) AS vmin, max(v) AS vmax FROM x GROUP BY dim),
+  j AS (
+    SELECT x.dim, x.v, stats.vmin, stats.vmax,
+           CAST(CASE WHEN CAST(vmax AS DOUBLE) > CAST(vmin AS DOUBLE)
+                THEN round((CAST(v AS DOUBLE) - CAST(vmin AS DOUBLE))
+                           / (CAST(vmax AS DOUBLE) - CAST(vmin AS DOUBLE))
+                           * 255.0)
+                ELSE 0.0 END AS INT) AS q
+    FROM x JOIN stats USING (dim)),
+  e AS (
+    SELECT dim, vmin, vmax,
+           CAST(round(abs(CAST(v AS DOUBLE)
+               - (CASE WHEN CAST(vmax AS DOUBLE) > CAST(vmin AS DOUBLE)
+                  THEN CAST(vmin AS DOUBLE)
+                       + CAST(q AS DOUBLE)
+                         * (CAST(vmax AS DOUBLE) - CAST(vmin AS DOUBLE)) / 255.0
+                  ELSE CAST(vmin AS DOUBLE) END)), 9) AS DECIMAL(18,9)) AS e
+    FROM j)
+  SELECT dim, count(*) AS n,
+         CAST(min(vmin) AS DOUBLE) AS vmin,
+         CAST(max(vmax) AS DOUBLE) AS vmax,
+         round(CAST(sum(e) AS DOUBLE) / count(*), 6) AS mean_abs_err,
+         round(CAST(max(e) AS DOUBLE), 6) AS max_abs_err
+  FROM e GROUP BY dim
+"""
+
+
+@query("embedding_quantize_sq", oracle=SQL_EMBEDDING_QUANTIZE_SQ)
 def q_embedding_quantize_sq(spark, sf_dir):
     x = _emb(spark, sf_dir).select(
         F.posexplode("embedding").alias("dim", "val")
@@ -7477,43 +7273,6 @@ def q_embedding_quantize_sq(spark, sf_dir):
     )
 
 
-SQL_EMBEDDING_QUANTIZE_SQ = """
-  WITH x AS (
-    SELECT CAST(i - 1 AS INT) AS dim,
-           CAST(round(CAST(embedding[i] AS DOUBLE), 6) AS DECIMAL(18,6)) AS v
-    FROM (SELECT embedding, unnest(range(1, len(embedding) + 1)) AS i
-          FROM embeddings)
-  ),
-  stats AS (SELECT dim, min(v) AS vmin, max(v) AS vmax FROM x GROUP BY dim),
-  j AS (
-    SELECT x.dim, x.v, stats.vmin, stats.vmax,
-           CAST(CASE WHEN CAST(vmax AS DOUBLE) > CAST(vmin AS DOUBLE)
-                THEN round((CAST(v AS DOUBLE) - CAST(vmin AS DOUBLE))
-                           / (CAST(vmax AS DOUBLE) - CAST(vmin AS DOUBLE))
-                           * 255.0)
-                ELSE 0.0 END AS INT) AS q
-    FROM x JOIN stats USING (dim)),
-  e AS (
-    SELECT dim, vmin, vmax,
-           CAST(round(abs(CAST(v AS DOUBLE)
-               - (CASE WHEN CAST(vmax AS DOUBLE) > CAST(vmin AS DOUBLE)
-                  THEN CAST(vmin AS DOUBLE)
-                       + CAST(q AS DOUBLE)
-                         * (CAST(vmax AS DOUBLE) - CAST(vmin AS DOUBLE)) / 255.0
-                  ELSE CAST(vmin AS DOUBLE) END)), 9) AS DECIMAL(18,9)) AS e
-    FROM j)
-  SELECT dim, count(*) AS n,
-         CAST(min(vmin) AS DOUBLE) AS vmin,
-         CAST(max(vmax) AS DOUBLE) AS vmax,
-         round(CAST(sum(e) AS DOUBLE) / count(*), 6) AS mean_abs_err,
-         round(CAST(max(e) AS DOUBLE), 6) AS max_abs_err
-  FROM e GROUP BY dim
-"""
-
-QUERIES["embedding_quantize_sq"] = q_embedding_quantize_sq
-ORACLES["embedding_quantize_sq"] = SQL_EMBEDDING_QUANTIZE_SQ
-
-
 # --------------------------------------- entity-resolution merge (oracled)
 # The ER step a KG-construction run performs after node similarity:
 # node pairs whose neighborhood Jaccard clears MERGE_MIN_JACCARD AND
@@ -7535,6 +7294,33 @@ ORACLES["embedding_quantize_sq"] = SQL_EMBEDDING_QUANTIZE_SQ
 MERGE_MIN_JACCARD = 0.6
 
 
+SQL_KG_ENTITY_MERGE_APPLY = f"""
+  WITH RECURSIVE sim AS ({SQL_KG_NODE_SIMILARITY}),
+  mdict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
+  mpairs AS (SELECT u, v FROM sim
+             JOIN mdict du ON du.surface = sim.u
+             JOIN mdict dv ON dv.surface = sim.v
+             WHERE jaccard >= {MERGE_MIN_JACCARD}
+               AND du.type_id = dv.type_id),
+  medges AS (SELECT u AS src, v AS dst FROM mpairs
+             UNION SELECT v AS src, u AS dst FROM mpairs),
+  mnodes AS (SELECT DISTINCT src AS id FROM medges),
+  reach AS (
+    SELECT id, id AS r FROM mnodes
+    UNION
+    SELECT reach.id, medges.dst AS r FROM reach JOIN medges ON reach.r = medges.src),
+  comp AS (SELECT id, min(r) AS component FROM reach GROUP BY id),
+  dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
+  toks AS ({_TOKENS_SQL}),
+  triples AS (SELECT DISTINCT 'doc_' || CAST(doc_id AS VARCHAR) AS subj,
+                     'mentions_' || type_id AS pred, token AS obj
+              FROM toks JOIN dict ON token = surface)
+  SELECT DISTINCT t.subj, t.pred, coalesce(c.component, t.obj) AS obj
+  FROM triples t LEFT JOIN comp c ON c.id = t.obj
+"""
+
+
+@query("kg_entity_merge_apply", oracle=SQL_KG_ENTITY_MERGE_APPLY)
 def q_kg_entity_merge_apply(spark, sf_dir):
     from .operators.canonicalize import connected_components
 
@@ -7568,35 +7354,6 @@ def q_kg_entity_merge_apply(spark, sf_dir):
     )
 
 
-SQL_KG_ENTITY_MERGE_APPLY = f"""
-  WITH RECURSIVE sim AS ({SQL_KG_NODE_SIMILARITY}),
-  mdict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
-  mpairs AS (SELECT u, v FROM sim
-             JOIN mdict du ON du.surface = sim.u
-             JOIN mdict dv ON dv.surface = sim.v
-             WHERE jaccard >= {MERGE_MIN_JACCARD}
-               AND du.type_id = dv.type_id),
-  medges AS (SELECT u AS src, v AS dst FROM mpairs
-             UNION SELECT v AS src, u AS dst FROM mpairs),
-  mnodes AS (SELECT DISTINCT src AS id FROM medges),
-  reach AS (
-    SELECT id, id AS r FROM mnodes
-    UNION
-    SELECT reach.id, medges.dst AS r FROM reach JOIN medges ON reach.r = medges.src),
-  comp AS (SELECT id, min(r) AS component FROM reach GROUP BY id),
-  dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
-  toks AS ({_TOKENS_SQL}),
-  triples AS (SELECT DISTINCT 'doc_' || CAST(doc_id AS VARCHAR) AS subj,
-                     'mentions_' || type_id AS pred, token AS obj
-              FROM toks JOIN dict ON token = surface)
-  SELECT DISTINCT t.subj, t.pred, coalesce(c.component, t.obj) AS obj
-  FROM triples t LEFT JOIN comp c ON c.id = t.obj
-"""
-
-QUERIES["kg_entity_merge_apply"] = q_kg_entity_merge_apply
-ORACLES["kg_entity_merge_apply"] = SQL_KG_ENTITY_MERGE_APPLY
-
-
 # ------------------------------------- int8-SQ retrieval recall (oracled)
 # Closes the loop on embedding_quantize_sq: does the 4x-smaller int8
 # index actually retrieve the same neighbors? Recall@K of brute-force
@@ -7615,6 +7372,52 @@ SQ_RECALL_K = 5
 SQ_RECALL_MAX_QID = 20
 
 
+SQL_ANN_SQ_RECALL = f"""
+  WITH raw AS (
+    SELECT vec_id, CAST(i - 1 AS INT) AS d, CAST(embedding[i] AS DOUBLE) AS v
+    FROM (SELECT vec_id, embedding, unnest(range(1, len(embedding) + 1)) AS i
+          FROM embeddings)),
+  nrm AS (SELECT vec_id, sqrt(sum(v * v)) AS norm FROM raw GROUP BY vec_id),
+  edot AS (SELECT a.vec_id AS qid, b.vec_id AS nid, sum(a.v * b.v) AS dot
+           FROM raw a JOIN raw b ON a.d = b.d AND a.vec_id <> b.vec_id
+           WHERE a.vec_id < {SQ_RECALL_MAX_QID}
+           GROUP BY a.vec_id, b.vec_id),
+  ex_pairs AS (SELECT qid, nid, dot / (na.norm * nb.norm) AS cos
+               FROM edot JOIN nrm na ON na.vec_id = qid
+                         JOIN nrm nb ON nb.vec_id = nid),
+  ex_top AS (SELECT qid, nid FROM (
+      SELECT qid, nid, row_number() OVER (PARTITION BY qid
+             ORDER BY round(cos, 6) DESC, nid ASC) AS rk
+      FROM ex_pairs) WHERE rk <= {SQ_RECALL_K}),
+  rv AS (SELECT vec_id, d, round(v, 6) AS v6 FROM raw),
+  stats AS (SELECT d, min(v6) AS mn, max(v6) AS mx FROM rv GROUP BY d),
+  rec AS (SELECT vec_id, rv.d,
+                 CASE WHEN mx > mn
+                 THEN mn + round((v6 - mn) / (mx - mn) * 255.0)
+                      * (mx - mn) / 255.0
+                 ELSE mn END AS rv
+          FROM rv JOIN stats ON stats.d = rv.d),
+  rnrm AS (SELECT vec_id, sqrt(sum(rv * rv)) AS norm FROM rec GROUP BY vec_id),
+  rdot AS (SELECT a.vec_id AS qid, b.vec_id AS nid, sum(a.rv * b.rv) AS dot
+           FROM rec a JOIN rec b ON a.d = b.d AND a.vec_id <> b.vec_id
+           WHERE a.vec_id < {SQ_RECALL_MAX_QID}
+           GROUP BY a.vec_id, b.vec_id),
+  sq_pairs AS (SELECT qid, nid, dot / (na.norm * nb.norm) AS cos
+               FROM rdot JOIN rnrm na ON na.vec_id = qid
+                         JOIN rnrm nb ON nb.vec_id = nid),
+  sq_top AS (SELECT qid, nid FROM (
+      SELECT qid, nid, row_number() OVER (PARTITION BY qid
+             ORDER BY round(cos, 6) DESC, nid ASC) AS rk
+      FROM sq_pairs) WHERE rk <= {SQ_RECALL_K})
+  SELECT e.qid, {SQ_RECALL_K} AS k,
+         CAST(count(s.nid) AS BIGINT) AS n_hits,
+         round(CAST(count(s.nid) AS DOUBLE) / {SQ_RECALL_K}.0, 6) AS recall
+  FROM ex_top e LEFT JOIN sq_top s ON s.qid = e.qid AND s.nid = e.nid
+  GROUP BY e.qid
+"""
+
+
+@query("ann_sq_recall", oracle=SQL_ANN_SQ_RECALL)
 def q_ann_sq_recall(spark, sf_dir):
     from .operators.ivf import _cos_expr
 
@@ -7667,54 +7470,6 @@ def q_ann_sq_recall(spark, sf_dir):
     )
 
 
-SQL_ANN_SQ_RECALL = f"""
-  WITH raw AS (
-    SELECT vec_id, CAST(i - 1 AS INT) AS d, CAST(embedding[i] AS DOUBLE) AS v
-    FROM (SELECT vec_id, embedding, unnest(range(1, len(embedding) + 1)) AS i
-          FROM embeddings)),
-  nrm AS (SELECT vec_id, sqrt(sum(v * v)) AS norm FROM raw GROUP BY vec_id),
-  edot AS (SELECT a.vec_id AS qid, b.vec_id AS nid, sum(a.v * b.v) AS dot
-           FROM raw a JOIN raw b ON a.d = b.d AND a.vec_id <> b.vec_id
-           WHERE a.vec_id < {SQ_RECALL_MAX_QID}
-           GROUP BY a.vec_id, b.vec_id),
-  ex_pairs AS (SELECT qid, nid, dot / (na.norm * nb.norm) AS cos
-               FROM edot JOIN nrm na ON na.vec_id = qid
-                         JOIN nrm nb ON nb.vec_id = nid),
-  ex_top AS (SELECT qid, nid FROM (
-      SELECT qid, nid, row_number() OVER (PARTITION BY qid
-             ORDER BY round(cos, 6) DESC, nid ASC) AS rk
-      FROM ex_pairs) WHERE rk <= {SQ_RECALL_K}),
-  rv AS (SELECT vec_id, d, round(v, 6) AS v6 FROM raw),
-  stats AS (SELECT d, min(v6) AS mn, max(v6) AS mx FROM rv GROUP BY d),
-  rec AS (SELECT vec_id, rv.d,
-                 CASE WHEN mx > mn
-                 THEN mn + round((v6 - mn) / (mx - mn) * 255.0)
-                      * (mx - mn) / 255.0
-                 ELSE mn END AS rv
-          FROM rv JOIN stats ON stats.d = rv.d),
-  rnrm AS (SELECT vec_id, sqrt(sum(rv * rv)) AS norm FROM rec GROUP BY vec_id),
-  rdot AS (SELECT a.vec_id AS qid, b.vec_id AS nid, sum(a.rv * b.rv) AS dot
-           FROM rec a JOIN rec b ON a.d = b.d AND a.vec_id <> b.vec_id
-           WHERE a.vec_id < {SQ_RECALL_MAX_QID}
-           GROUP BY a.vec_id, b.vec_id),
-  sq_pairs AS (SELECT qid, nid, dot / (na.norm * nb.norm) AS cos
-               FROM rdot JOIN rnrm na ON na.vec_id = qid
-                         JOIN rnrm nb ON nb.vec_id = nid),
-  sq_top AS (SELECT qid, nid FROM (
-      SELECT qid, nid, row_number() OVER (PARTITION BY qid
-             ORDER BY round(cos, 6) DESC, nid ASC) AS rk
-      FROM sq_pairs) WHERE rk <= {SQ_RECALL_K})
-  SELECT e.qid, {SQ_RECALL_K} AS k,
-         CAST(count(s.nid) AS BIGINT) AS n_hits,
-         round(CAST(count(s.nid) AS DOUBLE) / {SQ_RECALL_K}.0, 6) AS recall
-  FROM ex_top e LEFT JOIN sq_top s ON s.qid = e.qid AND s.nid = e.nid
-  GROUP BY e.qid
-"""
-
-QUERIES["ann_sq_recall"] = q_ann_sq_recall
-ORACLES["ann_sq_recall"] = SQL_ANN_SQ_RECALL
-
-
 # ------------------------------------- embedding outlier report (oracled)
 # Corpus-cleaning gauge in embedding space: a vector whose cosine to its
 # own nearest centroid sits far below its CLUSTER's mean is an outlier —
@@ -7730,6 +7485,36 @@ ORACLES["ann_sq_recall"] = SQL_ANN_SQ_RECALL
 OUTLIER_MARGIN = 0.15  # below (cluster mean - margin) => outlier
 
 
+SQL_EMBEDDING_OUTLIERS = f"""
+  WITH e AS (
+    SELECT vec_id, CAST(i - 1 AS INT) AS d, CAST(embedding[i] AS DOUBLE) AS v
+    FROM (SELECT vec_id, embedding, unnest(range(1, len(embedding) + 1)) AS i
+          FROM embeddings)),
+  norm AS (SELECT vec_id, sqrt(sum(v * v)) AS norm FROM e GROUP BY vec_id),
+  cent AS (SELECT vec_id AS cid, d, v AS cv FROM e WHERE vec_id < {SEM_K}),
+  cnorm AS (SELECT cid, sqrt(sum(cv * cv)) AS cnorm FROM cent GROUP BY cid),
+  cdot AS (SELECT e.vec_id, cent.cid, sum(e.v * cent.cv) AS dot
+           FROM e JOIN cent ON e.d = cent.d GROUP BY e.vec_id, cent.cid),
+  ac AS (SELECT cdot.vec_id, cdot.cid,
+                round(cdot.dot / (norm.norm * cnorm.cnorm), 6) AS cos_c,
+                row_number() OVER (PARTITION BY cdot.vec_id
+                     ORDER BY round(cdot.dot / (norm.norm * cnorm.cnorm), 6) DESC,
+                              cdot.cid ASC) AS r
+         FROM cdot JOIN norm ON norm.vec_id = cdot.vec_id
+                   JOIN cnorm ON cnorm.cid = cdot.cid),
+  assigned AS (SELECT vec_id, cid, cos_c AS centroid_cos FROM ac WHERE r = 1),
+  stats AS (SELECT cid, count(*) AS n_members,
+                   round(CAST(sum(CAST(centroid_cos AS DECIMAL(18,6)))
+                              AS DOUBLE) / count(*), 6) AS cluster_mean
+            FROM assigned GROUP BY cid)
+  SELECT a.vec_id, a.cid, a.centroid_cos, s.n_members, s.cluster_mean,
+         CAST(CASE WHEN a.centroid_cos < s.cluster_mean - {OUTLIER_MARGIN}
+              THEN 1 ELSE 0 END AS INT) AS is_outlier
+  FROM assigned a JOIN stats s USING (cid)
+"""
+
+
+@query("embedding_outliers", oracle=SQL_EMBEDDING_OUTLIERS)
 def q_embedding_outliers(spark, sf_dir):
     from .operators.ivf import _cos_expr
 
@@ -7768,38 +7553,6 @@ def q_embedding_outliers(spark, sf_dir):
     )
 
 
-SQL_EMBEDDING_OUTLIERS = f"""
-  WITH e AS (
-    SELECT vec_id, CAST(i - 1 AS INT) AS d, CAST(embedding[i] AS DOUBLE) AS v
-    FROM (SELECT vec_id, embedding, unnest(range(1, len(embedding) + 1)) AS i
-          FROM embeddings)),
-  norm AS (SELECT vec_id, sqrt(sum(v * v)) AS norm FROM e GROUP BY vec_id),
-  cent AS (SELECT vec_id AS cid, d, v AS cv FROM e WHERE vec_id < {SEM_K}),
-  cnorm AS (SELECT cid, sqrt(sum(cv * cv)) AS cnorm FROM cent GROUP BY cid),
-  cdot AS (SELECT e.vec_id, cent.cid, sum(e.v * cent.cv) AS dot
-           FROM e JOIN cent ON e.d = cent.d GROUP BY e.vec_id, cent.cid),
-  ac AS (SELECT cdot.vec_id, cdot.cid,
-                round(cdot.dot / (norm.norm * cnorm.cnorm), 6) AS cos_c,
-                row_number() OVER (PARTITION BY cdot.vec_id
-                     ORDER BY round(cdot.dot / (norm.norm * cnorm.cnorm), 6) DESC,
-                              cdot.cid ASC) AS r
-         FROM cdot JOIN norm ON norm.vec_id = cdot.vec_id
-                   JOIN cnorm ON cnorm.cid = cdot.cid),
-  assigned AS (SELECT vec_id, cid, cos_c AS centroid_cos FROM ac WHERE r = 1),
-  stats AS (SELECT cid, count(*) AS n_members,
-                   round(CAST(sum(CAST(centroid_cos AS DECIMAL(18,6)))
-                              AS DOUBLE) / count(*), 6) AS cluster_mean
-            FROM assigned GROUP BY cid)
-  SELECT a.vec_id, a.cid, a.centroid_cos, s.n_members, s.cluster_mean,
-         CAST(CASE WHEN a.centroid_cos < s.cluster_mean - {OUTLIER_MARGIN}
-              THEN 1 ELSE 0 END AS INT) AS is_outlier
-  FROM assigned a JOIN stats s USING (cid)
-"""
-
-QUERIES["embedding_outliers"] = q_embedding_outliers
-ORACLES["embedding_outliers"] = SQL_EMBEDDING_OUTLIERS
-
-
 # ------------------------------------- range-partition planner (oracled)
 # The second half of the explicit-skew story: skew_profile plans SALT
 # buckets for hot categorical keys; this plans RANGE split points for a
@@ -7820,6 +7573,25 @@ RANGE_BUCKET_W = 1000.0  # histogram bucket width (price units)
 RANGE_PARTS = 8          # target partition count
 
 
+SQL_RANGE_SPLIT_POINTS = f"""
+  WITH h AS (
+    SELECT CAST(floor(l_extendedprice / {RANGE_BUCKET_W}) AS BIGINT) AS b,
+           count(*) AS n
+    FROM lineitem GROUP BY 1),
+  cum AS (SELECT b, CAST(sum(n) OVER (ORDER BY b) AS BIGINT) AS cum FROM h),
+  tot AS (SELECT CAST(sum(n) AS BIGINT) AS tot FROM h),
+  parts AS (SELECT CAST(t.k AS INT) AS k,
+                   CAST(ceil(t.k * tot / {float(RANGE_PARTS)}) AS BIGINT) AS target
+            FROM tot, unnest(range(1, {RANGE_PARTS})) AS t(k))
+  SELECT p.k, p.target,
+         (min(c.b) + 1) * {RANGE_BUCKET_W} AS boundary,
+         CAST(arg_min(c.cum, c.b) AS BIGINT) AS rows_below
+  FROM parts p JOIN cum c ON c.cum >= p.target
+  GROUP BY p.k, p.target
+"""
+
+
+@query("range_split_points", oracle=SQL_RANGE_SPLIT_POINTS)
 def q_range_split_points(spark, sf_dir):
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
         F.floor(F.col("l_extendedprice") / F.lit(RANGE_BUCKET_W))
@@ -7859,27 +7631,6 @@ def q_range_split_points(spark, sf_dir):
     )
 
 
-SQL_RANGE_SPLIT_POINTS = f"""
-  WITH h AS (
-    SELECT CAST(floor(l_extendedprice / {RANGE_BUCKET_W}) AS BIGINT) AS b,
-           count(*) AS n
-    FROM lineitem GROUP BY 1),
-  cum AS (SELECT b, CAST(sum(n) OVER (ORDER BY b) AS BIGINT) AS cum FROM h),
-  tot AS (SELECT CAST(sum(n) AS BIGINT) AS tot FROM h),
-  parts AS (SELECT CAST(t.k AS INT) AS k,
-                   CAST(ceil(t.k * tot / {float(RANGE_PARTS)}) AS BIGINT) AS target
-            FROM tot, unnest(range(1, {RANGE_PARTS})) AS t(k))
-  SELECT p.k, p.target,
-         (min(c.b) + 1) * {RANGE_BUCKET_W} AS boundary,
-         CAST(arg_min(c.cum, c.b) AS BIGINT) AS rows_below
-  FROM parts p JOIN cum c ON c.cum >= p.target
-  GROUP BY p.k, p.target
-"""
-
-QUERIES["range_split_points"] = q_range_split_points
-ORACLES["range_split_points"] = SQL_RANGE_SPLIT_POINTS
-
-
 # -------------------------------------- duplicate symbol report (oracled)
 # Symbol-level KG construction over the code corpus: function/class
 # definition names are extracted per file (regexp groups riding in the
@@ -7901,6 +7652,29 @@ SYMBOL_CLASS_PAT = r"class ([A-Za-z_][A-Za-z0-9_]*):"
 SYMBOL_MIN_FILES = 2
 
 
+SQL_CODE_SYMBOL_DUPS = f"""
+  WITH files AS (
+    SELECT doc_id, text || ' ' ||
+      CASE CAST(doc_id % 3 AS INT)
+        WHEN 0 THEN 'def util_' || CAST(doc_id % 20 AS VARCHAR) || '(): pass'
+        WHEN 1 THEN 'class Model_' || CAST(doc_id % 15 AS VARCHAR) || ':'
+        ELSE '' END AS content
+    FROM documents),
+  defs AS (
+    SELECT DISTINCT doc_id, 'func' AS kind, unnest(
+        regexp_extract_all(content, 'def ([a-z_][a-z0-9_]*)\\(', 1)) AS symbol
+    FROM files
+    UNION
+    SELECT DISTINCT doc_id, 'class' AS kind, unnest(
+        regexp_extract_all(content, 'class ([A-Za-z_][A-Za-z0-9_]*):', 1)) AS symbol
+    FROM files)
+  SELECT kind, symbol, count(*) AS n_files, min(doc_id) AS first_doc
+  FROM defs GROUP BY kind, symbol
+  HAVING count(*) >= {SYMBOL_MIN_FILES}
+"""
+
+
+@query("code_symbol_dups", oracle=SQL_CODE_SYMBOL_DUPS)
 def q_code_symbol_dups(spark, sf_dir):
     mod = (F.col("doc_id") % 3).cast("int")
     planted = (
@@ -7937,31 +7711,6 @@ def q_code_symbol_dups(spark, sf_dir):
     )
 
 
-SQL_CODE_SYMBOL_DUPS = f"""
-  WITH files AS (
-    SELECT doc_id, text || ' ' ||
-      CASE CAST(doc_id % 3 AS INT)
-        WHEN 0 THEN 'def util_' || CAST(doc_id % 20 AS VARCHAR) || '(): pass'
-        WHEN 1 THEN 'class Model_' || CAST(doc_id % 15 AS VARCHAR) || ':'
-        ELSE '' END AS content
-    FROM documents),
-  defs AS (
-    SELECT DISTINCT doc_id, 'func' AS kind, unnest(
-        regexp_extract_all(content, 'def ([a-z_][a-z0-9_]*)\\(', 1)) AS symbol
-    FROM files
-    UNION
-    SELECT DISTINCT doc_id, 'class' AS kind, unnest(
-        regexp_extract_all(content, 'class ([A-Za-z_][A-Za-z0-9_]*):', 1)) AS symbol
-    FROM files)
-  SELECT kind, symbol, count(*) AS n_files, min(doc_id) AS first_doc
-  FROM defs GROUP BY kind, symbol
-  HAVING count(*) >= {SYMBOL_MIN_FILES}
-"""
-
-QUERIES["code_symbol_dups"] = q_code_symbol_dups
-ORACLES["code_symbol_dups"] = SQL_CODE_SYMBOL_DUPS
-
-
 # --------------------------------------- SPARQL-style BGP query (oracled)
 # The consumption side of KG construction: a conjunctive triple-pattern
 # query (SPARQL's basic graph pattern) evaluated over the materialized
@@ -7981,17 +7730,6 @@ BGP_PATTERNS = [
 ]
 
 
-def q_kg_bgp_query(spark, sf_dir):
-    from .operators.bgp import bgp_match
-
-    # one materialization of the triple table: the planner's per-pattern
-    # counts and the three pattern scans all read it instead of
-    # re-deriving the extraction subtree (kg_pagerank's lineage-cut idiom)
-    t = q_triples_kg(spark, sf_dir).localCheckpoint()
-    b = bgp_match(t, BGP_PATTERNS)  # distinct bindings (d, op, e)
-    return b.groupBy("op", "e").agg(F.count("*").alias("n_docs"))
-
-
 SQL_KG_BGP_QUERY = f"""
   WITH dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
   toks AS ({_TOKENS_SQL}),
@@ -8009,8 +7747,17 @@ SQL_KG_BGP_QUERY = f"""
   SELECT op, e, count(*) AS n_docs FROM b GROUP BY op, e
 """
 
-QUERIES["kg_bgp_query"] = q_kg_bgp_query
-ORACLES["kg_bgp_query"] = SQL_KG_BGP_QUERY
+
+@query("kg_bgp_query", oracle=SQL_KG_BGP_QUERY)
+def q_kg_bgp_query(spark, sf_dir):
+    from .operators.bgp import bgp_match
+
+    # one materialization of the triple table: the planner's per-pattern
+    # counts and the three pattern scans all read it instead of
+    # re-deriving the extraction subtree (kg_pagerank's lineage-cut idiom)
+    t = q_triples_kg(spark, sf_dir).localCheckpoint()
+    b = bgp_match(t, BGP_PATTERNS)  # distinct bindings (d, op, e)
+    return b.groupBy("op", "e").agg(F.count("*").alias("n_docs"))
 
 
 # ------------------------------------------- N-Triples export (oracled)
@@ -8023,6 +7770,22 @@ ORACLES["kg_bgp_query"] = SQL_KG_BGP_QUERY
 # sort would dominate the job. A planted quote+backslash object
 # exercises the escaping on both engines.
 
+SQL_KG_NTRIPLES = f"""
+  WITH dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
+  toks AS ({_TOKENS_SQL}),
+  triples AS (SELECT DISTINCT 'doc_' || CAST(doc_id AS VARCHAR) AS subj,
+                     'mentions_' || type_id AS pred, token AS obj
+              FROM toks JOIN dict ON token = surface
+              UNION ALL
+              SELECT 'doc_x', 'mentions_System', 'sp"ar\\k')
+  SELECT subj, pred,
+         '<urn:kg:' || subj || '> <urn:kg:' || pred || '> "' ||
+         replace(replace(obj, '\\', '\\\\'), '"', '\\"') || '" .' AS ntriple
+  FROM triples
+"""
+
+
+@query("kg_ntriples", oracle=SQL_KG_NTRIPLES)
 def q_kg_ntriples(spark, sf_dir):
     t = q_triples_kg(spark, sf_dir).unionByName(
         spark.createDataFrame(
@@ -8041,24 +7804,6 @@ def q_kg_ntriples(spark, sf_dir):
             F.col("pred"), F.lit('> "'), esc, F.lit('" .'),
         ).alias("ntriple"),
     )
-
-
-SQL_KG_NTRIPLES = f"""
-  WITH dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
-  toks AS ({_TOKENS_SQL}),
-  triples AS (SELECT DISTINCT 'doc_' || CAST(doc_id AS VARCHAR) AS subj,
-                     'mentions_' || type_id AS pred, token AS obj
-              FROM toks JOIN dict ON token = surface
-              UNION ALL
-              SELECT 'doc_x', 'mentions_System', 'sp"ar\\k')
-  SELECT subj, pred,
-         '<urn:kg:' || subj || '> <urn:kg:' || pred || '> "' ||
-         replace(replace(obj, '\\', '\\\\'), '"', '\\"') || '" .' AS ntriple
-  FROM triples
-"""
-
-QUERIES["kg_ntriples"] = q_kg_ntriples
-ORACLES["kg_ntriples"] = SQL_KG_NTRIPLES
 
 
 # ------------------------------------------- Z-order layout (oracled)
@@ -8088,6 +7833,28 @@ _Z_EXPR = " + ".join(
 )
 
 
+SQL_ZORDER_LAYOUT = f"""
+  WITH mm AS (SELECT min(l_orderkey) AS mino, max(l_orderkey) AS maxo,
+                     min(l_partkey) AS minp, max(l_partkey) AS maxp
+              FROM lineitem),
+  cells AS (SELECT l_orderkey, l_partkey,
+                   CAST(floor((l_orderkey - mino) * {float(2 ** ZBITS)}
+                              / (maxo - mino + 1)) AS BIGINT) AS px,
+                   CAST(floor((l_partkey - minp) * {float(2 ** ZBITS)}
+                              / (maxp - minp + 1)) AS BIGINT) AS sx
+            FROM lineitem CROSS JOIN mm),
+  zed AS (SELECT l_orderkey, l_partkey,
+                 CAST(floor(({_Z_EXPR}) * {float(ZFILES)}
+                            / {float(4 ** ZBITS)}) AS INT) AS zfile
+          FROM cells)
+  SELECT zfile, count(*) AS n_rows,
+         min(l_orderkey) AS min_ok, max(l_orderkey) AS max_ok,
+         min(l_partkey) AS min_pk, max(l_partkey) AS max_pk
+  FROM zed GROUP BY zfile
+"""
+
+
+@query("zorder_layout", oracle=SQL_ZORDER_LAYOUT)
 def q_zorder_layout(spark, sf_dir):
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
         "l_orderkey", "l_partkey"
@@ -8119,30 +7886,6 @@ def q_zorder_layout(spark, sf_dir):
     )
 
 
-SQL_ZORDER_LAYOUT = f"""
-  WITH mm AS (SELECT min(l_orderkey) AS mino, max(l_orderkey) AS maxo,
-                     min(l_partkey) AS minp, max(l_partkey) AS maxp
-              FROM lineitem),
-  cells AS (SELECT l_orderkey, l_partkey,
-                   CAST(floor((l_orderkey - mino) * {float(2 ** ZBITS)}
-                              / (maxo - mino + 1)) AS BIGINT) AS px,
-                   CAST(floor((l_partkey - minp) * {float(2 ** ZBITS)}
-                              / (maxp - minp + 1)) AS BIGINT) AS sx
-            FROM lineitem CROSS JOIN mm),
-  zed AS (SELECT l_orderkey, l_partkey,
-                 CAST(floor(({_Z_EXPR}) * {float(ZFILES)}
-                            / {float(4 ** ZBITS)}) AS INT) AS zfile
-          FROM cells)
-  SELECT zfile, count(*) AS n_rows,
-         min(l_orderkey) AS min_ok, max(l_orderkey) AS max_ok,
-         min(l_partkey) AS min_pk, max(l_partkey) AS max_pk
-  FROM zed GROUP BY zfile
-"""
-
-QUERIES["zorder_layout"] = q_zorder_layout
-ORACLES["zorder_layout"] = SQL_ZORDER_LAYOUT
-
-
 # --------------------------------------------- code call graph (oracled)
 # Symbol-resolution over the code corpus: call sites are extracted in the
 # same scan projection as code_symbol_dups' definitions, then resolved
@@ -8161,6 +7904,36 @@ ORACLES["zorder_layout"] = SQL_ZORDER_LAYOUT
 CALL_SITE_PAT = r"call ([a-z_][a-z0-9_]*)\(\)"
 
 
+SQL_CODE_CALL_GRAPH = f"""
+  WITH files AS (
+    SELECT doc_id, text || ' ' ||
+      CASE CAST(doc_id % 3 AS INT)
+        WHEN 0 THEN 'def util_' || CAST(doc_id % 20 AS VARCHAR) || '(): pass'
+        WHEN 2 THEN 'call util_' || CAST(doc_id % 25 AS VARCHAR) || '()'
+        ELSE '' END AS content
+    FROM documents),
+  defs AS (
+    SELECT symbol, count(*) AS n_def_files, min(doc_id) AS canonical_def
+    FROM (SELECT DISTINCT doc_id, unnest(
+            regexp_extract_all(content, 'def ([a-z_][a-z0-9_]*)\\(', 1)) AS symbol
+          FROM files)
+    GROUP BY symbol),
+  calls AS (
+    SELECT doc_id, unnest(
+        regexp_extract_all(content, 'call ([a-z_][a-z0-9_]*)\\(\\)', 1)) AS symbol
+    FROM files),
+  call_agg AS (
+    SELECT symbol, count(*) AS n_call_sites,
+           count(DISTINCT doc_id) AS n_callers, min(doc_id) AS first_caller
+    FROM calls GROUP BY symbol)
+  SELECT c.symbol, c.n_call_sites, c.n_callers, c.first_caller,
+         coalesce(d.n_def_files, 0) AS n_def_files,
+         coalesce(d.canonical_def, -1) AS canonical_def
+  FROM call_agg c LEFT JOIN defs d ON c.symbol = d.symbol
+"""
+
+
+@query("code_call_graph", oracle=SQL_CODE_CALL_GRAPH)
 def q_code_call_graph(spark, sf_dir):
     mod = (F.col("doc_id") % 3).cast("int")
     planted = (
@@ -8205,38 +7978,6 @@ def q_code_call_graph(spark, sf_dir):
     )
 
 
-SQL_CODE_CALL_GRAPH = f"""
-  WITH files AS (
-    SELECT doc_id, text || ' ' ||
-      CASE CAST(doc_id % 3 AS INT)
-        WHEN 0 THEN 'def util_' || CAST(doc_id % 20 AS VARCHAR) || '(): pass'
-        WHEN 2 THEN 'call util_' || CAST(doc_id % 25 AS VARCHAR) || '()'
-        ELSE '' END AS content
-    FROM documents),
-  defs AS (
-    SELECT symbol, count(*) AS n_def_files, min(doc_id) AS canonical_def
-    FROM (SELECT DISTINCT doc_id, unnest(
-            regexp_extract_all(content, 'def ([a-z_][a-z0-9_]*)\\(', 1)) AS symbol
-          FROM files)
-    GROUP BY symbol),
-  calls AS (
-    SELECT doc_id, unnest(
-        regexp_extract_all(content, 'call ([a-z_][a-z0-9_]*)\\(\\)', 1)) AS symbol
-    FROM files),
-  call_agg AS (
-    SELECT symbol, count(*) AS n_call_sites,
-           count(DISTINCT doc_id) AS n_callers, min(doc_id) AS first_caller
-    FROM calls GROUP BY symbol)
-  SELECT c.symbol, c.n_call_sites, c.n_callers, c.first_caller,
-         coalesce(d.n_def_files, 0) AS n_def_files,
-         coalesce(d.canonical_def, -1) AS canonical_def
-  FROM call_agg c LEFT JOIN defs d ON c.symbol = d.symbol
-"""
-
-QUERIES["code_call_graph"] = q_code_call_graph
-ORACLES["code_call_graph"] = SQL_CODE_CALL_GRAPH
-
-
 # ------------------------- BGP with OPTIONAL + FILTER (oracled)
 # SPARQL's next two algebra operators over the same BGP compiler:
 # OPTIONAL is a left join that keeps bindings whose optional pattern
@@ -8249,25 +7990,6 @@ ORACLES["code_call_graph"] = SQL_CODE_CALL_GRAPH
 # per-op (vocabulary-bounded output).
 
 BGP_OPT_FILTER = "op <> 'merge'"
-
-
-def q_kg_bgp_optional(spark, sf_dir):
-    from .operators.bgp import bgp_match
-
-    t = q_triples_kg(spark, sf_dir).localCheckpoint()
-    b = bgp_match(
-        t,
-        [("?d", "mentions_Operator", "?op")],
-        optional=[("?d", "mentions_Entity", "?e")],
-        filters=[BGP_OPT_FILTER],
-    )
-    return b.groupBy("op").agg(
-        F.countDistinct("d").alias("n_docs"),
-        F.countDistinct(F.when(F.col("e").isNull(), F.col("d"))).alias(
-            "n_docs_no_entity"
-        ),
-        F.count("e").alias("n_entity_bindings"),
-    )
 
 
 SQL_KG_BGP_OPTIONAL = f"""
@@ -8289,8 +8011,25 @@ SQL_KG_BGP_OPTIONAL = f"""
   FROM b GROUP BY op
 """
 
-QUERIES["kg_bgp_optional"] = q_kg_bgp_optional
-ORACLES["kg_bgp_optional"] = SQL_KG_BGP_OPTIONAL
+
+@query("kg_bgp_optional", oracle=SQL_KG_BGP_OPTIONAL)
+def q_kg_bgp_optional(spark, sf_dir):
+    from .operators.bgp import bgp_match
+
+    t = q_triples_kg(spark, sf_dir).localCheckpoint()
+    b = bgp_match(
+        t,
+        [("?d", "mentions_Operator", "?op")],
+        optional=[("?d", "mentions_Entity", "?e")],
+        filters=[BGP_OPT_FILTER],
+    )
+    return b.groupBy("op").agg(
+        F.countDistinct("d").alias("n_docs"),
+        F.countDistinct(F.when(F.col("e").isNull(), F.col("d"))).alias(
+            "n_docs_no_entity"
+        ),
+        F.count("e").alias("n_entity_bindings"),
+    )
 
 
 # --------------------------------- sliding-window aggregation (oracled)
@@ -8310,6 +8049,25 @@ WINDOW_DUR_S = 3600
 WINDOW_SLIDE_S = 1800
 
 
+SQL_EVENTS_SLIDING_WINDOW = f"""
+  WITH ev AS (SELECT CAST(epoch_us(ts) // 1000000 AS BIGINT) AS es, event_type,
+                     CAST(round(value * 100) AS BIGINT) AS cents
+              FROM events),
+  expanded AS (
+    SELECT event_type, cents, es,
+           (CAST(floor(es / {WINDOW_SLIDE_S}) AS BIGINT) - k) * {WINDOW_SLIDE_S}
+             AS w_start
+    FROM ev CROSS JOIN unnest(range(0, {WINDOW_DUR_S // WINDOW_SLIDE_S})) AS t(k)
+    )
+  SELECT w_start, event_type, count(*) AS n,
+         CAST(sum(cents) AS BIGINT) AS sum_cents
+  FROM expanded
+  WHERE es >= w_start AND es < w_start + {WINDOW_DUR_S}
+  GROUP BY w_start, event_type
+"""
+
+
+@query("events_sliding_window", oracle=SQL_EVENTS_SLIDING_WINDOW)
 def q_events_sliding_window(spark, sf_dir):
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
         F.unix_timestamp(F.col("ts").cast("timestamp")).alias("es"), "event_type",
@@ -8334,27 +8092,6 @@ def q_events_sliding_window(spark, sf_dir):
     )
 
 
-SQL_EVENTS_SLIDING_WINDOW = f"""
-  WITH ev AS (SELECT CAST(epoch_us(ts) // 1000000 AS BIGINT) AS es, event_type,
-                     CAST(round(value * 100) AS BIGINT) AS cents
-              FROM events),
-  expanded AS (
-    SELECT event_type, cents, es,
-           (CAST(floor(es / {WINDOW_SLIDE_S}) AS BIGINT) - k) * {WINDOW_SLIDE_S}
-             AS w_start
-    FROM ev CROSS JOIN unnest(range(0, {WINDOW_DUR_S // WINDOW_SLIDE_S})) AS t(k)
-    )
-  SELECT w_start, event_type, count(*) AS n,
-         CAST(sum(cents) AS BIGINT) AS sum_cents
-  FROM expanded
-  WHERE es >= w_start AND es < w_start + {WINDOW_DUR_S}
-  GROUP BY w_start, event_type
-"""
-
-QUERIES["events_sliding_window"] = q_events_sliding_window
-ORACLES["events_sliding_window"] = SQL_EVENTS_SLIDING_WINDOW
-
-
 # ------------------------------------ exact Gram matrix (oracled)
 # The covariance-level embedding diagnostic and the input to
 # distributed PCA (operators/pca.py): G = sum_r x_r x_r^T folded
@@ -8367,16 +8104,6 @@ ORACLES["events_sliding_window"] = SQL_EVENTS_SLIDING_WINDOW
 # recipe lifted to second moments). The driver-side eigendecomposition
 # of the d x d result (PCA) is a constant-cost planning step pinned in
 # tests/test_pca.py.
-
-def q_embedding_gram(spark, sf_dir):
-    from .operators.pca import gram_micro
-
-    g = gram_micro(_emb(spark, sf_dir))
-    return g.select(
-        "i", "j",
-        F.round(F.col("g").cast("double") / F.lit(1e12), 6).alias("gram"),
-    )
-
 
 SQL_EMBEDDING_GRAM = """
   WITH x AS (
@@ -8393,8 +8120,16 @@ SQL_EMBEDDING_GRAM = """
   GROUP BY a.dim, b.dim
 """
 
-QUERIES["embedding_gram"] = q_embedding_gram
-ORACLES["embedding_gram"] = SQL_EMBEDDING_GRAM
+
+@query("embedding_gram", oracle=SQL_EMBEDDING_GRAM)
+def q_embedding_gram(spark, sf_dir):
+    from .operators.pca import gram_micro
+
+    g = gram_micro(_emb(spark, sf_dir))
+    return g.select(
+        "i", "j",
+        F.round(F.col("g").cast("double") / F.lit(1e12), 6).alias("gram"),
+    )
 
 
 # ------------------------------------------- KG time travel (oracled)
@@ -8412,14 +8147,6 @@ ORACLES["embedding_gram"] = SQL_EMBEDDING_GRAM
 TIME_TRAVEL_T = 2
 
 
-def q_kg_time_travel(spark, sf_dir):
-    iv = q_kg_scd2(spark, sf_dir)
-    return iv.filter(
-        (F.col("valid_from") <= TIME_TRAVEL_T)
-        & (F.col("valid_to") >= TIME_TRAVEL_T)
-    ).select("subj", "pred", "obj")
-
-
 SQL_KG_TIME_TRAVEL = f"""
   WITH dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
   toks AS ({_TOKENS_SQL})
@@ -8429,8 +8156,14 @@ SQL_KG_TIME_TRAVEL = f"""
   WHERE (doc_id + {TIME_TRAVEL_T}) % 4 <> 0
 """
 
-QUERIES["kg_time_travel"] = q_kg_time_travel
-ORACLES["kg_time_travel"] = SQL_KG_TIME_TRAVEL
+
+@query("kg_time_travel", oracle=SQL_KG_TIME_TRAVEL)
+def q_kg_time_travel(spark, sf_dir):
+    iv = q_kg_scd2(spark, sf_dir)
+    return iv.filter(
+        (F.col("valid_from") <= TIME_TRAVEL_T)
+        & (F.col("valid_to") >= TIME_TRAVEL_T)
+    ).select("subj", "pred", "obj")
 
 
 # ------------------------------ incremental extraction (oracled)
@@ -8485,6 +8218,16 @@ def _inc_extract(docs):
     )
 
 
+SQL_KG_INCREMENTAL_EXTRACT = f"""
+  WITH dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
+  toks AS ({_TOKENS_SQL})
+  SELECT DISTINCT 'doc_' || CAST(doc_id AS VARCHAR) AS subj,
+         'mentions_' || type_id AS pred, token AS obj
+  FROM toks JOIN dict ON token = surface
+"""
+
+
+@query("kg_incremental_extract", oracle=SQL_KG_INCREMENTAL_EXTRACT)
 def q_kg_incremental_extract(spark, sf_dir):
     new = _docs(spark, sf_dir).select("doc_id", "text")
     prev = _inc_prev_docs(spark, sf_dir)
@@ -8502,18 +8245,6 @@ def q_kg_incremental_extract(spark, sf_dir):
     return carried.unionByName(re_extracted).select("subj", "pred", "obj")
 
 
-SQL_KG_INCREMENTAL_EXTRACT = f"""
-  WITH dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
-  toks AS ({_TOKENS_SQL})
-  SELECT DISTINCT 'doc_' || CAST(doc_id AS VARCHAR) AS subj,
-         'mentions_' || type_id AS pred, token AS obj
-  FROM toks JOIN dict ON token = surface
-"""
-
-QUERIES["kg_incremental_extract"] = q_kg_incremental_extract
-ORACLES["kg_incremental_extract"] = SQL_KG_INCREMENTAL_EXTRACT
-
-
 # ------------------------------- collocation mining (oracled)
 # Dunning log-likelihood-ratio collocations (Dunning 1993 — the
 # statistically sound version of PMI for sparse counts): for each
@@ -8529,6 +8260,29 @@ ORACLES["kg_incremental_extract"] = SQL_KG_INCREMENTAL_EXTRACT
 COLLOC_MIN_C12 = 3
 
 
+SQL_COLLOCATIONS_LLR = f"""
+  WITH docs AS (SELECT doc_id, list_filter(string_split(text, ' '),
+                                           x -> x <> '') AS arr
+                FROM documents),
+  big AS (SELECT arr[i] AS w1, arr[i + 1] AS w2
+          FROM (SELECT arr, unnest(range(1, len(arr))) AS i FROM docs)),
+  c12t AS (SELECT w1, w2, count(*) AS c12 FROM big GROUP BY w1, w2),
+  c1t AS (SELECT w1, CAST(sum(c12) AS BIGINT) AS c1 FROM c12t GROUP BY w1),
+  c2t AS (SELECT w2, CAST(sum(c12) AS BIGINT) AS c2 FROM c12t GROUP BY w2),
+  nt AS (SELECT CAST(sum(c12) AS BIGINT) AS n FROM c12t)
+  SELECT w1, w2, c12,
+         round(2.0 * (
+             CASE WHEN c12 > 0 THEN c12 * ln(c12 / (c1 * CAST(c2 AS DOUBLE) / n)) ELSE 0 END
+           + CASE WHEN c1 - c12 > 0 THEN (c1 - c12) * ln((c1 - c12) / (c1 * (n - CAST(c2 AS DOUBLE)) / n)) ELSE 0 END
+           + CASE WHEN c2 - c12 > 0 THEN (c2 - c12) * ln((c2 - c12) / ((n - CAST(c1 AS DOUBLE)) * c2 / n)) ELSE 0 END
+           + CASE WHEN n - c1 - c2 + c12 > 0 THEN (n - c1 - c2 + c12) * ln((n - c1 - c2 + c12) / ((n - CAST(c1 AS DOUBLE)) * (n - c2) / n)) ELSE 0 END
+         ), 6) AS llr
+  FROM c12t JOIN c1t USING (w1) JOIN c2t USING (w2) CROSS JOIN nt
+  WHERE c12 >= {COLLOC_MIN_C12}
+"""
+
+
+@query("collocations_llr", oracle=SQL_COLLOCATIONS_LLR)
 def q_collocations_llr(spark, sf_dir):
     docs = _docs(spark, sf_dir).select(
         "doc_id", F.expr("filter(split(text, ' '), x -> x <> '')").alias("arr")
@@ -8569,31 +8323,6 @@ def q_collocations_llr(spark, sf_dir):
     return j.select("w1", "w2", "c12", F.round(g2, 6).alias("llr"))
 
 
-SQL_COLLOCATIONS_LLR = f"""
-  WITH docs AS (SELECT doc_id, list_filter(string_split(text, ' '),
-                                           x -> x <> '') AS arr
-                FROM documents),
-  big AS (SELECT arr[i] AS w1, arr[i + 1] AS w2
-          FROM (SELECT arr, unnest(range(1, len(arr))) AS i FROM docs)),
-  c12t AS (SELECT w1, w2, count(*) AS c12 FROM big GROUP BY w1, w2),
-  c1t AS (SELECT w1, CAST(sum(c12) AS BIGINT) AS c1 FROM c12t GROUP BY w1),
-  c2t AS (SELECT w2, CAST(sum(c12) AS BIGINT) AS c2 FROM c12t GROUP BY w2),
-  nt AS (SELECT CAST(sum(c12) AS BIGINT) AS n FROM c12t)
-  SELECT w1, w2, c12,
-         round(2.0 * (
-             CASE WHEN c12 > 0 THEN c12 * ln(c12 / (c1 * CAST(c2 AS DOUBLE) / n)) ELSE 0 END
-           + CASE WHEN c1 - c12 > 0 THEN (c1 - c12) * ln((c1 - c12) / (c1 * (n - CAST(c2 AS DOUBLE)) / n)) ELSE 0 END
-           + CASE WHEN c2 - c12 > 0 THEN (c2 - c12) * ln((c2 - c12) / ((n - CAST(c1 AS DOUBLE)) * c2 / n)) ELSE 0 END
-           + CASE WHEN n - c1 - c2 + c12 > 0 THEN (n - c1 - c2 + c12) * ln((n - c1 - c2 + c12) / ((n - CAST(c1 AS DOUBLE)) * (n - c2) / n)) ELSE 0 END
-         ), 6) AS llr
-  FROM c12t JOIN c1t USING (w1) JOIN c2t USING (w2) CROSS JOIN nt
-  WHERE c12 >= {COLLOC_MIN_C12}
-"""
-
-QUERIES["collocations_llr"] = q_collocations_llr
-ORACLES["collocations_llr"] = SQL_COLLOCATIONS_LLR
-
-
 # ------------------------------- TPC-H Q6 forecast revenue (oracled)
 # The canonical scan-with-pushdown query (completes the repo's TPC-H
 # slice alongside Q1/Q3/Q4/Q5): one fact scan where EVERY predicate
@@ -8603,6 +8332,19 @@ ORACLES["collocations_llr"] = SQL_COLLOCATIONS_LLR
 # difference between reading a year's partition slice and the table.
 # Revenue in exact integer micro-cents (price 2dp x discount 2dp).
 
+SQL_REVENUE_FORECAST = """
+  SELECT count(*) AS n_rows,
+         CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
+                  * CAST(round(l_discount * 100) AS BIGINT)) AS BIGINT)
+           AS revenue_microcents
+  FROM lineitem
+  WHERE l_shipdate >= '1996-01-01' AND l_shipdate < '1997-01-01'
+    AND l_discount >= 0.05 AND l_discount <= 0.07
+    AND l_quantity < 24
+"""
+
+
+@query("revenue_forecast", oracle=SQL_REVENUE_FORECAST)
 def q_revenue_forecast(spark, sf_dir):
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     sel = li.filter(
@@ -8621,21 +8363,6 @@ def q_revenue_forecast(spark, sf_dir):
     )
 
 
-SQL_REVENUE_FORECAST = """
-  SELECT count(*) AS n_rows,
-         CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-                  * CAST(round(l_discount * 100) AS BIGINT)) AS BIGINT)
-           AS revenue_microcents
-  FROM lineitem
-  WHERE l_shipdate >= '1996-01-01' AND l_shipdate < '1997-01-01'
-    AND l_discount >= 0.05 AND l_discount <= 0.07
-    AND l_quantity < 24
-"""
-
-QUERIES["revenue_forecast"] = q_revenue_forecast
-ORACLES["revenue_forecast"] = SQL_REVENUE_FORECAST
-
-
 # --------------------------- prefix-truncation recall (oracled)
 # The Matryoshka-representation question (Kusupati et al. 2022): how
 # much retrieval quality survives if the index stores only the first
@@ -8649,49 +8376,6 @@ ORACLES["revenue_forecast"] = SQL_REVENUE_FORECAST
 # answers the same question for int8, test_pca's gauge for PCA).
 
 PREFIX_D = 16
-
-
-def q_ann_prefix_recall(spark, sf_dir):
-    from .operators.ivf import _cos_expr
-
-    full5 = q_cosine_topk(spark, sf_dir).select("qid", "nid")
-    e = _emb(spark, sf_dir).select(
-        "vec_id",
-        F.expr(f"slice(CAST(embedding AS array<double>), 1, {PREFIX_D})")
-        .alias("v"),
-    )
-    a = e.select(F.col("vec_id").alias("qid"), F.col("v").alias("va")).filter(
-        F.col("qid") < 20
-    )
-    b = e.select(F.col("vec_id").alias("nid"), F.col("v").alias("vb"))
-    pairs = (
-        F.broadcast(a)
-        .crossJoin(b)
-        .filter(F.col("qid") != F.col("nid"))
-        .select("qid", "nid", _cos_expr("va", "vb").alias("cos"))
-    )
-    w = W.partitionBy("qid").orderBy(F.desc(F.round("cos", 6)), F.asc("nid"))
-    pre5 = (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select("qid", "nid")
-    )
-    hits = (
-        full5.join(pre5, ["qid", "nid"], "left_semi")
-        .groupBy("qid")
-        .agg(F.count("*").alias("hits"))
-    )
-    return (
-        full5.groupBy("qid")
-        .agg(F.count("*").alias("k"))
-        .join(hits, "qid", "left")
-        .select(
-            "qid", "k",
-            F.coalesce("hits", F.lit(0)).alias("hits"),
-            F.round(F.coalesce("hits", F.lit(0)) / F.col("k"), 4)
-            .alias("recall"),
-        )
-    )
 
 
 SQL_ANN_PREFIX_RECALL = f"""
@@ -8737,8 +8421,49 @@ SQL_ANN_PREFIX_RECALL = f"""
   GROUP BY f.qid
 """
 
-QUERIES["ann_prefix_recall"] = q_ann_prefix_recall
-ORACLES["ann_prefix_recall"] = SQL_ANN_PREFIX_RECALL
+
+@query("ann_prefix_recall", oracle=SQL_ANN_PREFIX_RECALL)
+def q_ann_prefix_recall(spark, sf_dir):
+    from .operators.ivf import _cos_expr
+
+    full5 = q_cosine_topk(spark, sf_dir).select("qid", "nid")
+    e = _emb(spark, sf_dir).select(
+        "vec_id",
+        F.expr(f"slice(CAST(embedding AS array<double>), 1, {PREFIX_D})")
+        .alias("v"),
+    )
+    a = e.select(F.col("vec_id").alias("qid"), F.col("v").alias("va")).filter(
+        F.col("qid") < 20
+    )
+    b = e.select(F.col("vec_id").alias("nid"), F.col("v").alias("vb"))
+    pairs = (
+        F.broadcast(a)
+        .crossJoin(b)
+        .filter(F.col("qid") != F.col("nid"))
+        .select("qid", "nid", _cos_expr("va", "vb").alias("cos"))
+    )
+    w = W.partitionBy("qid").orderBy(F.desc(F.round("cos", 6)), F.asc("nid"))
+    pre5 = (
+        pairs.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= 5)
+        .select("qid", "nid")
+    )
+    hits = (
+        full5.join(pre5, ["qid", "nid"], "left_semi")
+        .groupBy("qid")
+        .agg(F.count("*").alias("hits"))
+    )
+    return (
+        full5.groupBy("qid")
+        .agg(F.count("*").alias("k"))
+        .join(hits, "qid", "left")
+        .select(
+            "qid", "k",
+            F.coalesce("hits", F.lit(0)).alias("hits"),
+            F.round(F.coalesce("hits", F.lit(0)) / F.col("k"), 4)
+            .alias("recall"),
+        )
+    )
 
 
 # ----------------------------- import-cycle detection (oracled)
@@ -8753,6 +8478,40 @@ ORACLES["ann_prefix_recall"] = SQL_ANN_PREFIX_RECALL
 # exactly once. A planted mod_0 -> mod_1 -> mod_2 -> mod_0 triangle
 # guarantees the 3-cycle branch is exercised at every SF.
 
+SQL_CODE_IMPORT_CYCLES = f"""
+  WITH aug AS (
+    SELECT 'mod_' || CAST(doc_id AS VARCHAR) AS src,
+           'import mod_' || CAST((doc_id * 7 + 1) % {MOD_SPACE} AS VARCHAR)
+           || ' ; import mod_' || CAST((doc_id * 13 + 5) % {MOD_SPACE} AS VARCHAR)
+           || ' ; from mod_' || CAST((doc_id * 31 + 11) % {MOD_SPACE} AS VARCHAR)
+           || ' import util'
+           || CASE WHEN doc_id < 3
+                   THEN ' ; import mod_' || CAST((doc_id + 1) % 3 AS VARCHAR)
+                   ELSE '' END AS content
+    FROM documents),
+  defined AS (SELECT DISTINCT 'mod_' || CAST(doc_id AS VARCHAR) AS m
+              FROM documents),
+  e AS (
+    SELECT DISTINCT src, dst FROM (
+      SELECT src, unnest(list_concat(
+               regexp_extract_all(content, 'import (mod_[0-9]+)', 1),
+               regexp_extract_all(content, 'from (mod_[0-9]+) import', 1))) AS dst
+      FROM aug)
+    WHERE src <> dst AND dst IN (SELECT m FROM defined)),
+  cyc2 AS (
+    SELECT 2 AS clen, a.src AS m1, a.dst AS m2, '-' AS m3
+    FROM e a JOIN e b ON a.dst = b.src AND b.dst = a.src
+    WHERE a.src < a.dst),
+  cyc3 AS (
+    SELECT 3 AS clen, a.src AS m1, a.dst AS m2, b.dst AS m3
+    FROM e a JOIN e b ON a.dst = b.src
+             JOIN e c ON b.dst = c.src AND c.dst = a.src
+    WHERE b.dst <> a.src AND a.src < a.dst AND a.src < b.dst)
+  SELECT * FROM cyc2 UNION ALL SELECT * FROM cyc3
+"""
+
+
+@query("code_import_cycles", oracle=SQL_CODE_IMPORT_CYCLES)
 def q_code_import_cycles(spark, sf_dir):
     d = _docs(spark, sf_dir)
     extra = F.when(
@@ -8809,42 +8568,6 @@ def q_code_import_cycles(spark, sf_dir):
     return cyc2.unionByName(cyc3)
 
 
-SQL_CODE_IMPORT_CYCLES = f"""
-  WITH aug AS (
-    SELECT 'mod_' || CAST(doc_id AS VARCHAR) AS src,
-           'import mod_' || CAST((doc_id * 7 + 1) % {MOD_SPACE} AS VARCHAR)
-           || ' ; import mod_' || CAST((doc_id * 13 + 5) % {MOD_SPACE} AS VARCHAR)
-           || ' ; from mod_' || CAST((doc_id * 31 + 11) % {MOD_SPACE} AS VARCHAR)
-           || ' import util'
-           || CASE WHEN doc_id < 3
-                   THEN ' ; import mod_' || CAST((doc_id + 1) % 3 AS VARCHAR)
-                   ELSE '' END AS content
-    FROM documents),
-  defined AS (SELECT DISTINCT 'mod_' || CAST(doc_id AS VARCHAR) AS m
-              FROM documents),
-  e AS (
-    SELECT DISTINCT src, dst FROM (
-      SELECT src, unnest(list_concat(
-               regexp_extract_all(content, 'import (mod_[0-9]+)', 1),
-               regexp_extract_all(content, 'from (mod_[0-9]+) import', 1))) AS dst
-      FROM aug)
-    WHERE src <> dst AND dst IN (SELECT m FROM defined)),
-  cyc2 AS (
-    SELECT 2 AS clen, a.src AS m1, a.dst AS m2, '-' AS m3
-    FROM e a JOIN e b ON a.dst = b.src AND b.dst = a.src
-    WHERE a.src < a.dst),
-  cyc3 AS (
-    SELECT 3 AS clen, a.src AS m1, a.dst AS m2, b.dst AS m3
-    FROM e a JOIN e b ON a.dst = b.src
-             JOIN e c ON b.dst = c.src AND c.dst = a.src
-    WHERE b.dst <> a.src AND a.src < a.dst AND a.src < b.dst)
-  SELECT * FROM cyc2 UNION ALL SELECT * FROM cyc3
-"""
-
-QUERIES["code_import_cycles"] = q_code_import_cycles
-ORACLES["code_import_cycles"] = SQL_CODE_IMPORT_CYCLES
-
-
 # ------------------------- license compatibility matrix (oracled)
 # Composition of the two compliance primitives: license_detect's
 # marker-argmin classification x code_import_graph's resolved edges —
@@ -8855,39 +8578,6 @@ ORACLES["code_import_cycles"] = SQL_CODE_IMPORT_CYCLES
 # two module-keyed license lookups and rolls up to the bounded
 # (src_family, dst_family) matrix — at 10^12 files this is two
 # doc-keyed joins and a 9-row aggregate.
-
-def q_code_license_compat(spark, sf_dir):
-    d = _docs(spark, sf_dir)
-    pat_arr = F.array(*[
-        F.struct(
-            F.lit(p).alias("prio"), F.lit(l).alias("license"),
-            F.lit(fam).alias("family"), F.lit(m).alias("marker"),
-        )
-        for l, m, fam, p in LICENSE_PATTERNS
-    ])
-    content = F.concat(_license_header_col(), F.lit(" "), F.col("text"))
-    best = F.array_min(F.filter(pat_arr, lambda x: content.contains(x["marker"])))
-    lic = d.select(
-        F.concat(F.lit("mod_"), F.col("doc_id").cast("string")).alias("mod"),
-        F.coalesce(best["family"], F.lit("unknown")).alias("family"),
-    )
-    edges = q_code_import_graph(spark, sf_dir).filter(
-        F.col("resolved") == 1
-    ).select("src", "dst")
-    joined = (
-        edges.join(lic.select(F.col("mod").alias("src"),
-                              F.col("family").alias("src_family")), "src")
-        .join(lic.select(F.col("mod").alias("dst"),
-                         F.col("family").alias("dst_family")), "dst")
-    )
-    return joined.groupBy("src_family", "dst_family").agg(
-        F.count("*").alias("n_edges"),
-        F.max(
-            ((F.col("dst_family") == "copyleft")
-             & (F.col("src_family") != "copyleft")).cast("int")
-        ).alias("conflict"),
-    )
-
 
 SQL_CODE_LICENSE_COMPAT = f"""
   WITH pats(license, marker, family, prio) AS (VALUES {_LICENSE_PATTERNS_SQL}),
@@ -8925,8 +8615,39 @@ SQL_CODE_LICENSE_COMPAT = f"""
   FROM joined GROUP BY src_family, dst_family
 """
 
-QUERIES["code_license_compat"] = q_code_license_compat
-ORACLES["code_license_compat"] = SQL_CODE_LICENSE_COMPAT
+
+@query("code_license_compat", oracle=SQL_CODE_LICENSE_COMPAT)
+def q_code_license_compat(spark, sf_dir):
+    d = _docs(spark, sf_dir)
+    pat_arr = F.array(*[
+        F.struct(
+            F.lit(p).alias("prio"), F.lit(l).alias("license"),
+            F.lit(fam).alias("family"), F.lit(m).alias("marker"),
+        )
+        for l, m, fam, p in LICENSE_PATTERNS
+    ])
+    content = F.concat(_license_header_col(), F.lit(" "), F.col("text"))
+    best = F.array_min(F.filter(pat_arr, lambda x: content.contains(x["marker"])))
+    lic = d.select(
+        F.concat(F.lit("mod_"), F.col("doc_id").cast("string")).alias("mod"),
+        F.coalesce(best["family"], F.lit("unknown")).alias("family"),
+    )
+    edges = q_code_import_graph(spark, sf_dir).filter(
+        F.col("resolved") == 1
+    ).select("src", "dst")
+    joined = (
+        edges.join(lic.select(F.col("mod").alias("src"),
+                              F.col("family").alias("src_family")), "src")
+        .join(lic.select(F.col("mod").alias("dst"),
+                         F.col("family").alias("dst_family")), "dst")
+    )
+    return joined.groupBy("src_family", "dst_family").agg(
+        F.count("*").alias("n_edges"),
+        F.max(
+            ((F.col("dst_family") == "copyleft")
+             & (F.col("src_family") != "copyleft")).cast("int")
+        ).alias("conflict"),
+    )
 
 
 # --------------------------------- KG health report (oracled)
@@ -8939,6 +8660,21 @@ ORACLES["code_license_compat"] = SQL_CODE_LICENSE_COMPAT
 # The oracle is assembled from the components' own oracle SQL as
 # subqueries, so the composed report can never drift from the parts.
 
+SQL_KG_HEALTH_REPORT = f"""
+  SELECT 'triples' AS metric, CAST(count(*) AS BIGINT) AS n
+  FROM ({SQL_TRIPLES_KG})
+  UNION ALL SELECT 'subjects', CAST(count(DISTINCT subj) AS BIGINT)
+  FROM ({SQL_TRIPLES_KG})
+  UNION ALL SELECT 'objects', CAST(count(DISTINCT obj) AS BIGINT)
+  FROM ({SQL_TRIPLES_KG})
+  UNION ALL SELECT 'cardinality_conflicts', CAST(count(*) AS BIGINT)
+  FROM ({SQL_KG_CARDINALITY_CONFLICTS})
+  UNION ALL SELECT 'type_violations', CAST(count(*) AS BIGINT)
+  FROM ({SQL_KG_TYPE_VIOLATIONS})
+"""
+
+
+@query("kg_health_report", oracle=SQL_KG_HEALTH_REPORT)
 def q_kg_health_report(spark, sf_dir):
     def cnt(name, df):
         return df.agg(F.count("*").cast("long").alias("n")).select(
@@ -8959,25 +8695,6 @@ def q_kg_health_report(spark, sf_dir):
     return out
 
 
-def _kg_health_sql() -> str:
-    return f"""
-  SELECT 'triples' AS metric, CAST(count(*) AS BIGINT) AS n
-  FROM ({ORACLES["triples_kg"]})
-  UNION ALL SELECT 'subjects', CAST(count(DISTINCT subj) AS BIGINT)
-  FROM ({ORACLES["triples_kg"]})
-  UNION ALL SELECT 'objects', CAST(count(DISTINCT obj) AS BIGINT)
-  FROM ({ORACLES["triples_kg"]})
-  UNION ALL SELECT 'cardinality_conflicts', CAST(count(*) AS BIGINT)
-  FROM ({ORACLES["kg_cardinality_conflicts"]})
-  UNION ALL SELECT 'type_violations', CAST(count(*) AS BIGINT)
-  FROM ({ORACLES["kg_type_violations"]})
-"""
-
-
-QUERIES["kg_health_report"] = q_kg_health_report
-ORACLES["kg_health_report"] = _kg_health_sql()
-
-
 # ------------------------- pairwise co-occurrence lift (oracled)
 # Market-basket pair mining over order lines (the pairwise core of
 # frequent-itemset mining, and structurally the same operator as
@@ -8991,6 +8708,26 @@ ORACLES["kg_health_report"] = _kg_health_sql()
 BASKET_MIN_N = 3
 
 
+SQL_ORDERS_MARKET_BASKET = f"""
+  WITH items AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
+  n_orders AS (SELECT count(DISTINCT o) AS n_orders FROM items),
+  item_n AS (SELECT p, count(*) AS np FROM items GROUP BY p),
+  pairs AS (
+    SELECT a.p AS pa, b.p AS pb, count(*) AS n
+    FROM items a JOIN items b ON a.o = b.o AND a.p < b.p
+    GROUP BY a.p, b.p
+    HAVING count(*) >= {BASKET_MIN_N})
+  SELECT pa, pb, n,
+         round(n / CAST(n_orders AS DOUBLE), 6) AS support,
+         round(n * n_orders / (na.np * CAST(nb.np AS DOUBLE)), 6) AS lift
+  FROM pairs
+  JOIN item_n na ON na.p = pa
+  JOIN item_n nb ON nb.p = pb
+  CROSS JOIN n_orders
+"""
+
+
+@query("orders_market_basket", oracle=SQL_ORDERS_MARKET_BASKET)
 def q_orders_market_basket(spark, sf_dir):
     items = (
         spark.read.parquet(f"{sf_dir}/lineitem.parquet")
@@ -9023,28 +8760,6 @@ def q_orders_market_basket(spark, sf_dir):
     )
 
 
-SQL_ORDERS_MARKET_BASKET = f"""
-  WITH items AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-  n_orders AS (SELECT count(DISTINCT o) AS n_orders FROM items),
-  item_n AS (SELECT p, count(*) AS np FROM items GROUP BY p),
-  pairs AS (
-    SELECT a.p AS pa, b.p AS pb, count(*) AS n
-    FROM items a JOIN items b ON a.o = b.o AND a.p < b.p
-    GROUP BY a.p, b.p
-    HAVING count(*) >= {BASKET_MIN_N})
-  SELECT pa, pb, n,
-         round(n / CAST(n_orders AS DOUBLE), 6) AS support,
-         round(n * n_orders / (na.np * CAST(nb.np AS DOUBLE)), 6) AS lift
-  FROM pairs
-  JOIN item_n na ON na.p = pa
-  JOIN item_n nb ON nb.p = pb
-  CROSS JOIN n_orders
-"""
-
-QUERIES["orders_market_basket"] = q_orders_market_basket
-ORACLES["orders_market_basket"] = SQL_ORDERS_MARKET_BASKET
-
-
 # --------------------------------- DAU / rolling WAU (oracled)
 # Engagement analytics over the event stream: daily active users and
 # the 7-day rolling distinct-user count. The rolling distinct CANNOT be
@@ -9058,6 +8773,22 @@ ORACLES["orders_market_basket"] = SQL_ORDERS_MARKET_BASKET
 WAU_DAYS = 7
 
 
+SQL_EVENTS_DAU_WAU = f"""
+  WITH ev AS (
+    SELECT CAST(floor(epoch_us(ts) / 1000000 / 86400) AS BIGINT) AS day,
+           user_id
+    FROM events),
+  day_user AS (SELECT DISTINCT day, user_id FROM ev),
+  dau AS (SELECT day, count(DISTINCT user_id) AS dau FROM day_user GROUP BY day),
+  expanded AS (
+    SELECT user_id, day + k AS day
+    FROM day_user CROSS JOIN unnest(range(0, {WAU_DAYS})) AS t(k)),
+  wau AS (SELECT day, count(DISTINCT user_id) AS wau FROM expanded GROUP BY day)
+  SELECT d.day, d.dau, w.wau FROM dau d JOIN wau w ON d.day = w.day
+"""
+
+
+@query("events_dau_wau", oracle=SQL_EVENTS_DAU_WAU)
 def q_events_dau_wau(spark, sf_dir):
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
         F.floor(
@@ -9077,24 +8808,6 @@ def q_events_dau_wau(spark, sf_dir):
     return dau.join(wau, "day").select("day", "dau", "wau")
 
 
-SQL_EVENTS_DAU_WAU = f"""
-  WITH ev AS (
-    SELECT CAST(floor(epoch_us(ts) / 1000000 / 86400) AS BIGINT) AS day,
-           user_id
-    FROM events),
-  day_user AS (SELECT DISTINCT day, user_id FROM ev),
-  dau AS (SELECT day, count(DISTINCT user_id) AS dau FROM day_user GROUP BY day),
-  expanded AS (
-    SELECT user_id, day + k AS day
-    FROM day_user CROSS JOIN unnest(range(0, {WAU_DAYS})) AS t(k)),
-  wau AS (SELECT day, count(DISTINCT user_id) AS wau FROM expanded GROUP BY day)
-  SELECT d.day, d.dau, w.wau FROM dau d JOIN wau w ON d.day = w.day
-"""
-
-QUERIES["events_dau_wau"] = q_events_dau_wau
-ORACLES["events_dau_wau"] = SQL_EVENTS_DAU_WAU
-
-
 # ------------------------- volume anomaly detection (oracled)
 # The monitoring gauge over the event stream (and, at the KG build,
 # over per-crawl extraction volumes): per (event_type, day) volume
@@ -9107,6 +8820,33 @@ ORACLES["events_dau_wau"] = SQL_EVENTS_DAU_WAU
 ANOM_Z = 2.0
 
 
+SQL_EVENTS_ANOMALY = f"""
+  WITH ev AS (
+    SELECT CAST(floor(epoch_us(ts) / 1000000 / 86400) AS BIGINT) AS day,
+           event_type
+    FROM events),
+  daily AS (SELECT event_type, day, count(*) AS n
+            FROM ev GROUP BY event_type, day),
+  stats AS (SELECT event_type, count(*) AS days,
+                   CAST(sum(n) AS BIGINT) AS s,
+                   CAST(sum(n * n) AS BIGINT) AS ss
+            FROM daily GROUP BY event_type),
+  zc AS (SELECT d.event_type, d.day, d.n,
+                s / CAST(days AS DOUBLE) AS mean,
+                ss / CAST(days AS DOUBLE)
+                  - (s / CAST(days AS DOUBLE)) * (s / CAST(days AS DOUBLE))
+                  AS var
+         FROM daily d JOIN stats USING (event_type))
+  SELECT event_type, day, n,
+         CASE WHEN var > 0 THEN round((n - mean) / sqrt(var), 6)
+              ELSE NULL END AS z,
+         CAST(abs(CASE WHEN var > 0 THEN round((n - mean) / sqrt(var), 6)
+                       ELSE NULL END) >= {ANOM_Z} AS INT) AS anomaly
+  FROM zc
+"""
+
+
+@query("events_anomaly", oracle=SQL_EVENTS_ANOMALY)
 def q_events_anomaly(spark, sf_dir):
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
         F.floor(
@@ -9135,51 +8875,12 @@ def q_events_anomaly(spark, sf_dir):
     )
 
 
-SQL_EVENTS_ANOMALY = f"""
-  WITH ev AS (
-    SELECT CAST(floor(epoch_us(ts) / 1000000 / 86400) AS BIGINT) AS day,
-           event_type
-    FROM events),
-  daily AS (SELECT event_type, day, count(*) AS n
-            FROM ev GROUP BY event_type, day),
-  stats AS (SELECT event_type, count(*) AS days,
-                   CAST(sum(n) AS BIGINT) AS s,
-                   CAST(sum(n * n) AS BIGINT) AS ss
-            FROM daily GROUP BY event_type),
-  zc AS (SELECT d.event_type, d.day, d.n,
-                s / CAST(days AS DOUBLE) AS mean,
-                ss / CAST(days AS DOUBLE)
-                  - (s / CAST(days AS DOUBLE)) * (s / CAST(days AS DOUBLE))
-                  AS var
-         FROM daily d JOIN stats USING (event_type))
-  SELECT event_type, day, n,
-         CASE WHEN var > 0 THEN round((n - mean) / sqrt(var), 6)
-              ELSE NULL END AS z,
-         CAST(abs(CASE WHEN var > 0 THEN round((n - mean) / sqrt(var), 6)
-                       ELSE NULL END) >= {ANOM_Z} AS INT) AS anomaly
-  FROM zc
-"""
-
-QUERIES["events_anomaly"] = q_events_anomaly
-ORACLES["events_anomaly"] = SQL_EVENTS_ANOMALY
-
-
 # ------------------------- degree distribution (oracled)
 # The power-law gauge of the extracted KG: log2-binned total-degree
 # histogram — the one-glance diagnostic that says whether the graph has
 # the hub-heavy shape every skew mitigation in this repo (salting, hub
 # caps, neighbor sampling) exists for. One node-keyed degree
 # aggregation (built on kg_degree) and one bounded-bin rollup.
-
-def q_kg_degree_distribution(spark, sf_dir):
-    deg = q_kg_degree(spark, sf_dir).select(
-        (F.col("out_deg") + F.col("in_deg")).alias("d")
-    )
-    binned = deg.select(
-        F.floor(F.log2(F.col("d").cast("double"))).cast("int").alias("log2_bin")
-    )
-    return binned.groupBy("log2_bin").agg(F.count("*").alias("n_nodes"))
-
 
 SQL_KG_DEGREE_DISTRIBUTION = f"""
   WITH dict(surface, type_id) AS (VALUES {_DICT_VALUES_SQL}),
@@ -9196,8 +8897,16 @@ SQL_KG_DEGREE_DISTRIBUTION = f"""
   FROM deg GROUP BY 1
 """
 
-QUERIES["kg_degree_distribution"] = q_kg_degree_distribution
-ORACLES["kg_degree_distribution"] = SQL_KG_DEGREE_DISTRIBUTION
+
+@query("kg_degree_distribution", oracle=SQL_KG_DEGREE_DISTRIBUTION)
+def q_kg_degree_distribution(spark, sf_dir):
+    deg = q_kg_degree(spark, sf_dir).select(
+        (F.col("out_deg") + F.col("in_deg")).alias("d")
+    )
+    binned = deg.select(
+        F.floor(F.log2(F.col("d").cast("double"))).cast("int").alias("log2_bin")
+    )
+    return binned.groupBy("log2_bin").agg(F.count("*").alias("n_nodes"))
 
 
 # --------------------------------------------------------------------------
@@ -9209,8 +8918,9 @@ ORACLES["kg_degree_distribution"] = SQL_KG_DEGREE_DISTRIBUTION
 # time at sf0.01, tools/check_oracles.py methodology) roughly doubles how
 # many queries a fixed budget certifies: the cheap half of the registry
 # costs ~15% of the total. Queries added later (absent from the measured
-# list) keep their definition order at the end. Coverage is unchanged —
-# pinned by tests/test_bench_headline.py::test_registry_reorder_is_lossless.
+# list) keep their definition order at the end. Every listed name must be
+# registered by an ``@query``: a misspelt or renamed one fails the import.
+# Order, names and oracle SQL are pinned by tests/test_registry_contract.py.
 _CHEAP_FIRST = [
     'code_secret_scan', 'sample_stratified', 'token_count_bpe',
     'compaction_plan', 'customers_without_orders', 'revenue_forecast',
@@ -9260,8 +8970,8 @@ _CHEAP_FIRST = [
     'dedup_embedding',
 ]
 
-QUERIES = {
-    **{k: QUERIES[k] for k in _CHEAP_FIRST if k in QUERIES},
-    **{k: v for k, v in QUERIES.items() if k not in _CHEAP_FIRST},
-}
-ORACLES = {k: ORACLES[k] for k in QUERIES if k in ORACLES}
+_unregistered = [k for k in _CHEAP_FIRST if k not in QUERIES]
+if _unregistered:
+    raise ValueError(f"_CHEAP_FIRST names unregistered queries: {_unregistered}")
+QUERIES = {**{k: QUERIES[k] for k in _CHEAP_FIRST}, **QUERIES}
+ORACLES = {k: ORACLES[k] for k in QUERIES}

@@ -8,10 +8,13 @@ time travel for free); this sandbox has no Iceberg runtime, so the
 catalog emulates the same contract over parquet:
 
     <base>/<stage>/data/...            the stage output (optionally
-                                       partitioned), written atomically
-    <base>/<stage>/_MANIFEST.json      schema + row count + user meta;
+                                       partitioned); a re-write of a
+                                       committed stage goes to the other
+                                       side, data_b/ (then data/ again)
+    <base>/<stage>/_MANIFEST.json      schema + row count + user meta +
+                                       the side holding the data;
                                        existence == stage committed
-    <base>/<stage>/_lineage/...        one row per output file:
+    <base>/<stage>/_lineage/<side>/... one row per output file:
                                        (stage, file, rows)
     <base>/_metrics.jsonl              append-only metrics log
 
@@ -52,9 +55,12 @@ class Checkpointer:
     def write(self, stage: str, df: DataFrame, partition_by: list[str] | None = None,
               meta: dict | None = None) -> DataFrame:
         """Write stage output + lineage, then commit the manifest (manifest
-        last = atomic commit point). Returns the re-read DataFrame so
-        downstream stages cut lineage at the checkpoint."""
-        data = f"{self._dir(stage)}/data"
+        last = atomic commit point). A committed stage is re-written on
+        the side its manifest does not name, so a crash before the new
+        manifest leaves the old commit whole. Returns the re-read DataFrame
+        so downstream stages cut lineage at the checkpoint."""
+        side = "data_b" if self.exists(stage) and self._side(stage) == "data" else "data"
+        data = f"{self._dir(stage)}/{side}"
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
@@ -66,7 +72,7 @@ class Checkpointer:
             .agg(F.count(F.lit(1)).alias("rows"))
             .withColumn("stage", F.lit(stage))
         )
-        lineage.write.mode("overwrite").parquet(f"{self._dir(stage)}/_lineage")
+        lineage.write.mode("overwrite").parquet(f"{self._dir(stage)}/_lineage/{side}")
         rows = int(lineage.agg(F.sum("rows")).collect()[0][0] or 0)
 
         manifest = {
@@ -75,13 +81,19 @@ class Checkpointer:
             "schema": back.schema.jsonValue(),
             "partition_by": partition_by or [],
             "meta": meta or {},
+            "data": side,
         }
         commit.write_text(self._manifest(stage), json.dumps(manifest))
         return back
 
     def read(self, stage: str) -> DataFrame:
         assert self.exists(stage), f"stage {stage} not committed"
-        return self.spark.read.parquet(f"{self._dir(stage)}/data")
+        return self.spark.read.parquet(f"{self._dir(stage)}/{self._side(stage)}")
+
+    def _side(self, stage: str) -> str:
+        """The data side the committed manifest names (``data`` for a
+        manifest written before stages had two sides)."""
+        return self.manifest(stage).get("data", "data")
 
     def manifest(self, stage: str) -> dict:
         with open(self._manifest(stage)) as f:

@@ -203,6 +203,15 @@ def test_jpeg_fill_bytes_before_marker_decode():
     assert np.array_equal(dec[..., 0], jpeg_block_pixels(9))
 
 
+def test_jpeg_fill_bytes_before_eoi_decode():
+    """Fill bytes may also pad the EOI marker that ends the entropy-coded
+    segment: ``FF FF D9`` ends the scan, it does not truncate it."""
+    p = encode_jpeg(9)
+    assert p.endswith(b"\xff\xd9")
+    dec = _decode_jpeg(p[:-2] + b"\xff\xff" + p[-2:])
+    assert np.array_equal(dec[..., 0], jpeg_block_pixels(9))
+
+
 def test_jpeg_undefined_table_ids_raise_value_error():
     """A frame or scan that names a quantization table, Huffman table or
     component the file never defined is corrupt: ValueError, like every

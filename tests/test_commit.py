@@ -111,9 +111,18 @@ class _Checkpointer(_Kg):
         return {s: (ck.manifest(s), _rows(ck.read(s))) for s in ("s0", "s1") if ck.exists(s)}
 
 
+class _CheckpointerRewrite(_Checkpointer):
+    """The second write re-writes the stage the first one committed."""
+
+    def commit(self, spark, d, step):
+        df = spark.range(0, 3 + 2 * step).withColumn("sq", F.col("id") * F.col("id"))
+        Checkpointer(spark, d).write("s0", df, meta={"step": step})
+
+
 @pytest.mark.parametrize(
-    "case", [_Kg(), _Cms(), _Gram(), _AnnCompaction(), _Checkpointer()],
-    ids=["kg", "cms", "gram", "ann_compaction", "checkpointer"],
+    "case",
+    [_Kg(), _Cms(), _Gram(), _AnnCompaction(), _Checkpointer(), _CheckpointerRewrite()],
+    ids=["kg", "cms", "gram", "ann_compaction", "checkpointer", "checkpointer_rewrite"],
 )
 def test_crash_before_the_commit_point_keeps_the_previous_commit(
         spark, tmp_path, monkeypatch, case):

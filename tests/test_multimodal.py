@@ -143,6 +143,16 @@ def test_assets_from_documents(spark):
     assert "raw-img" in DECODERS
 
 
+def test_derived_assets_keep_a_wider_source_width(spark):
+    """Assets are spread over at least defaultParallelism partitions, and
+    a source split wider than that keeps its width."""
+    par = spark.sparkContext.defaultParallelism
+    docs = spark.range(0, 8 * par, numPartitions=2 * par).withColumnRenamed("id", "doc_id")
+    assert assets_from_documents(docs, seed=7).rdd.getNumPartitions() == 2 * par
+    one = docs.coalesce(1)
+    assert assets_from_documents(one, seed=7).rdd.getNumPartitions() == par
+
+
 def test_codec_seam_accepts_third_party_decoder(spark):
     """Round-3 verdict (missing #3): the DECODERS seam itself needs a
     contract test — a 'real' codec (here a fake JPEG decoder with its own

@@ -40,13 +40,17 @@ def main(sf_dir: str, only: list[str] | None = None):
     from obiemachinelearningframework_spark.session import get_spark
     import __spark_entry__ as entry_mod
 
+    queries = entry_mod.queries()
+    oracles = entry_mod.oracle_sql()
+    unknown = sorted(set(only or ()) - set(queries))
+    if unknown:
+        raise SystemExit(f"not registry queries: {', '.join(unknown)}")
+
     spark = get_spark("oracle_check", master="local[8]", shuffle_partitions=8)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
 
-    queries = entry_mod.queries()
-    oracles = entry_mod.oracle_sql()
     failures = 0
     for name, fn in queries.items():
         if only and name not in only:
@@ -57,9 +61,6 @@ def main(sf_dir: str, only: list[str] | None = None):
         except Exception as e:
             print(f"{name}: SPARK ERROR {str(e)[:300]}")
             failures += 1
-            continue
-        if name not in oracles:
-            print(f"{name}: rows={len(sdf)} (no oracle — rows-only check)")
             continue
         try:
             odf = con.execute(oracles[name]).fetchdf()
