@@ -5,19 +5,16 @@ Default mode: run the headline queries at $SPARK_GRAFT_SF_DIR (default
   {"metric": ..., "value": total_sec, "unit": "sec",
    "queries": {name: sec, ...}, "sf": ..., "triples_per_sec": ...}
 
---scaling mode: run the SAME job at local[8] and local[32] (the sandbox
-proxy for N vs 4N executors, per BASELINE.md §3) in separate processes and
-write BENCH/BASELINE.md with throughput at both levels + scaling
-efficiency.
+N -> 4N scaling of the submitted extract job is tools/scaling.py.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import subprocess
-import sys
 import time
+
+from tools.scaling import read_cpu_times, steal_pct
 
 
 HEADLINE = [
@@ -171,16 +168,28 @@ OBIE_BENCH_DOCS = int(os.environ.get("OBIE_BENCH_DOCS", "300"))
 OBIE_TRAIN_DOCS = int(os.environ.get("OBIE_TRAIN_DOCS", "60"))
 
 
+def best_of(reps: int, fn, setup=None):
+    """(fastest of ``reps`` timed calls of ``fn``, the last call's result);
+    ``setup`` runs untimed before each call."""
+    times, out = [], None
+    for _ in range(reps):
+        if setup:
+            setup()
+        t0 = time.perf_counter()
+        out = fn()
+        times.append(time.perf_counter() - t0)
+    return min(times), out
+
+
 def run_obie_extract(spark, n_docs: int, train_docs: int = OBIE_TRAIN_DOCS,
-                     relational_too: bool = True):
+                     reps: int = 1):
     """Flagship OBIE job: train the model on a FIXED-size sample (training
     is a constant-cost planning step at production scale — the model does
     not grow with the corpus), then run the extraction over the whole
-    corpus twice:
+    corpus, min of ``reps`` passes each:
 
     * fused kernel (``predict_fused`` — the production hot path: one
-      map-only stage, model broadcast, zero corpus shuffles), the number
-      the scaling gate measures;
+      map-only stage, model broadcast, zero corpus shuffles);
     * relational plan (``predict`` — the composable DataFrame path, same
       triples by tests/test_fused_parity.py), reported alongside.
 
@@ -194,59 +203,22 @@ def run_obie_extract(spark, n_docs: int, train_docs: int = OBIE_TRAIN_DOCS,
     # cluster the instance table by doc_key at the source — the whole
     # extraction plan keys on doc_key prefixes, so this is the only
     # corpus-sized exchange the job ever does. Partition count is sized to
-    # the DATA (~750 docs/partition), not the parallelism: both scaling
-    # configs then run the IDENTICAL plan, and fine granularity smooths
-    # stragglers (a steal-delayed core costs one small task, not 1/cpus of
-    # the corpus) — the same rule a real cluster uses.
+    # the DATA (~750 docs/partition), not the parallelism, and fine
+    # granularity smooths stragglers (a steal-delayed core costs one small
+    # task, not 1/cpus of the corpus) — the same rule a real cluster uses.
     parts = max(cpus, min(512, n_docs // 750))
     inst = pipe.prepare(spark.createDataFrame(c["source"])).repartition(parts, "doc_key").cache()
     inst.count()
 
-    weights_path = os.environ.get("OBIE_WEIGHTS_PATH", "")
-    if weights_path and os.path.exists(weights_path):
-        # scaling mode: the model was trained ONCE by a separate run (it is
-        # a constant-cost planning artifact); every rep measures extraction
-        # with the identical broadcast weights
-        pipe.load_weights(weights_path)
-        fit_s = 0.0
-    else:
-        gold = spark.createDataFrame(c["gold_triples"])
-        train_keys = (
-            inst.select("doc_key").orderBy("doc_key").limit(min(train_docs, n_docs))
-        )
-        t0 = time.perf_counter()
-        pipe.fit(inst.join(train_keys, "doc_key", "left_semi").cache(), gold)
-        fit_s = time.perf_counter() - t0
-        if weights_path:
-            pipe.save_weights(weights_path)
+    gold = spark.createDataFrame(c["gold_triples"])
+    train_keys = inst.select("doc_key").orderBy("doc_key").limit(min(train_docs, n_docs))
+    t0 = time.perf_counter()
+    pipe.fit(inst.join(train_keys, "doc_key", "left_semi").cache(), gold)
+    fit_s = time.perf_counter() - t0
 
-    # steady-state measurement: one untimed warm-up pass brings the JVM to
-    # the state a long-running production job lives in (JIT-compiled hot
-    # paths, grown+settled heap, reused Python workers with pandas already
-    # imported). The first-ever pass pays all of those once; timing it
-    # would measure startup, not throughput.
-    for _ in range(int(os.environ.get("OBIE_WARM_RUNS", "0"))):
-        pipe.predict_fused(inst).count()
-
-    # min-of-reps for the timed passes (same shared-VM noise guard as the
-    # headline loop; scaling mode keeps reps=1 here — it already takes the
-    # min over whole-process repetitions with steal accounting)
-    reps = max(1, int(os.environ.get("OBIE_EXTRACT_REPS", "1")))
-    fused_s = None
-    for _ in range(reps):
-        t0 = time.perf_counter()
-        n_triples = pipe.predict_fused(inst).count()
-        dt = time.perf_counter() - t0
-        fused_s = dt if fused_s is None else min(fused_s, dt)
-
-    relational_s = None
-    if relational_too:
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            pipe.predict(inst)["triples"].count()
-            pipe.release_caches()
-            dt = time.perf_counter() - t0
-            relational_s = dt if relational_s is None else min(relational_s, dt)
+    fused_s, n_triples = best_of(reps, lambda: pipe.predict_fused(inst).count())
+    relational_s, _ = best_of(
+        reps, lambda: (pipe.predict(inst)["triples"].count(), pipe.release_caches()))
     return n_triples, fused_s, fit_s, relational_s
 
 
@@ -268,51 +240,31 @@ def main() -> None:
     timings: dict[str, float] = {}
     total = 0.0
     triple_count = 0
-    scaling_only = os.environ.get("OBIE_SCALING_ONLY") == "1"
-    # min-of-REPS per query: this hypervisor-shared VM sees bursty steal
-    # that moves single-shot wall clocks 1.5-4x (BENCH/BASELINE.md
-    # disclaimer); the min of two runs of an identical plan is the
-    # steady-state number a comparison can trust
+    # min of REPS per query: bursty steal moves single-shot wall clocks,
+    # the min of two runs of an identical plan is what a comparison can trust
     reps = max(1, int(os.environ.get("OBIE_QUERY_REPS", "2")))
-    cpu_before = _read_cpu_times()
-    if not scaling_only:
-        for name in HEADLINE:
-            fn = Q.QUERIES[name]
-            best = None
-            for _ in range(reps):
-                t0 = time.perf_counter()
-                n = fn(spark, sf_dir).count()
-                dt = time.perf_counter() - t0
-                best = dt if best is None else min(best, dt)
-            timings[name] = round(best, 3)
-            total += best
-            if name == "triples_kg":
-                triple_count = n
+    cpu_before = read_cpu_times()
+    for name in HEADLINE:
+        best, n = best_of(reps, lambda: Q.QUERIES[name](spark, sf_dir).count())
+        timings[name] = round(best, 3)
+        total += best
+        if name == "triples_kg":
+            triple_count = n
 
     cold: dict[str, float] = {}
-    if not scaling_only and os.environ.get("OBIE_COLD_PASS", "1") == "1":
+    if os.environ.get("OBIE_COLD_PASS", "1") == "1":
         for name in COLD_FAMILY:
-            fn = Q.QUERIES[name]
-            best = None
-            for _ in range(reps):
-                Q.clear_session_caches()
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).count()
-                dt = time.perf_counter() - t0
-                best = dt if best is None else min(best, dt)
+            best, _ = best_of(reps, lambda: Q.QUERIES[name](spark, sf_dir).count(),
+                              setup=Q.clear_session_caches)
             cold[name] = round(best, 3)
 
-    if not scaling_only:
-        os.environ.setdefault("OBIE_EXTRACT_REPS", str(reps))
     obie_triples, extract_s, fit_s, rel_s = run_obie_extract(
-        spark, OBIE_BENCH_DOCS, relational_too=not scaling_only
+        spark, OBIE_BENCH_DOCS, reps=reps
     )
     timings["obie_fit"] = round(fit_s, 3)
     timings["obie_extract"] = round(extract_s, 3)
-    total += fit_s + extract_s
-    if rel_s is not None:
-        timings["obie_extract_relational"] = round(rel_s, 3)
-        total += rel_s
+    timings["obie_extract_relational"] = round(rel_s, 3)
+    total += fit_s + extract_s + rel_s
 
     out = {
         "metric": "headline_queries_total",
@@ -326,7 +278,7 @@ def main() -> None:
         "obie_triples": obie_triples,
         "obie_triples_per_sec": round(obie_triples / extract_s, 2),
         "query_reps": reps,
-        "steal_pct": _steal_pct(cpu_before, _read_cpu_times()),
+        "steal_pct": steal_pct(cpu_before, read_cpu_times()),
     }
     if cold:
         # dual-regime reporting: "queries" above is the warm/in-harness
@@ -337,268 +289,5 @@ def main() -> None:
     print(json.dumps(out))
 
 
-def _machine_control():
-    """Single source of truth for /proc/stat accounting: the no-Spark
-    machine-capability control and the scaling bench must report steal the
-    same way or the BENCH/BASELINE.md pair justification drifts."""
-    tools_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools")
-    if tools_dir not in sys.path:
-        sys.path.insert(0, tools_dir)
-    import machine_control
-
-    return machine_control
-
-
-def _read_cpu_times() -> dict:
-    return _machine_control().read_cpu_times()
-
-
-def _steal_pct(before: dict, after: dict) -> float:
-    return _machine_control().steal_pct(before, after)
-
-
-def _train_once(weights_path: str, cpus: int) -> None:
-    """Train the model ONCE (constant-cost planning step; the model does
-    not grow with the corpus) and share the weights file across reps."""
-    if os.path.exists(weights_path):
-        return
-    env = dict(
-        os.environ, SPARK_GRAFT_CPUS=str(cpus), OBIE_BENCH_DOCS="60",
-        OBIE_SCALING_ONLY="1", OBIE_WEIGHTS_PATH=weights_path,
-        OBIE_WARM_RUNS="0",
-    )
-    p = subprocess.run(
-        [sys.executable, os.path.abspath(__file__)],
-        env=env, capture_output=True, text=True, timeout=3600,
-        cwd=os.path.dirname(os.path.abspath(__file__)),
-    )
-    assert os.path.exists(weights_path), (
-        f"training run failed (rc={p.returncode}):\n"
-        + "\n".join(p.stderr.strip().splitlines()[-15:])
-    )
-
-
-def _scaling_pair(lo: int, hi: int, scaling_docs: str, repeats: int,
-                  warm_runs: str, weights_path: str) -> dict:
-    """Run the identical extraction at local[lo] and local[hi],
-    interleaved min-of-k; returns {lo: best, hi: best, 'runs': {...}}."""
-    from obiemachinelearningframework_spark.session import driver_memory
-
-    runs: dict[int, list] = {lo: [], hi: []}
-    # interleave the two configs and repeat: the sandbox VM suffers bursty
-    # hypervisor steal (3-4x wall-time swings), so a single A-then-B pass
-    # confounds config with luck; min-of-k per config estimates the
-    # uncontended capability each side actually has
-    for rep in range(repeats):
-        for cpus in (lo, hi):
-            env = dict(
-                os.environ, SPARK_GRAFT_CPUS=str(cpus),
-                OBIE_BENCH_DOCS=scaling_docs, OBIE_SCALING_ONLY="1",
-                OBIE_WEIGHTS_PATH=weights_path, OBIE_WARM_RUNS=warm_runs,
-                # pre-size the heap (-Xms = the child's -Xmx): growing it on
-                # the first allocation storm hits the 32-thread config
-                # hardest (observed 2-3x first-run penalty); a steady-state
-                # job runs at full heap from task 1
-                OBIE_DRIVER_JAVA_OPTS=os.environ.get(
-                    "OBIE_DRIVER_JAVA_OPTS", f"-Xms{driver_memory()}"
-                ),
-            )
-            before = _read_cpu_times()
-            p = subprocess.run(
-                [sys.executable, os.path.abspath(__file__)],
-                env=env, capture_output=True, text=True, timeout=7200,
-                cwd=os.path.dirname(os.path.abspath(__file__)),
-            )
-            steal = _steal_pct(before, _read_cpu_times())
-            lines = [l for l in p.stdout.strip().splitlines() if l.startswith("{")]
-            if not lines:
-                print(f"rep{rep} local[{cpus}] FAILED (rc={p.returncode}):\n"
-                      f"{p.stderr.strip().splitlines()[-15:]}")
-                continue
-            r = json.loads(lines[-1])
-            r["steal_pct"] = round(steal, 2)
-            runs[cpus].append(r)
-            print(f"rep{rep} local[{cpus}] steal={steal:.1f}%: {lines[-1]}", flush=True)
-    assert runs[lo] and runs[hi], "no successful scaling runs on one side"
-    best = {
-        cpus: min(rs, key=lambda r: r["queries"]["obie_extract"])
-        for cpus, rs in runs.items()
-    }
-    return {"lo": lo, "hi": hi, "best": best, "runs": runs}
-
-
-def _pair_section(pr: dict) -> str:
-    lo, hi, best, runs = pr["lo"], pr["hi"], pr["best"], pr["runs"]
-    rlo, rhi = best[lo], best[hi]
-    thr_lo = rlo["obie_triples_per_sec"]
-    thr_hi = rhi["obie_triples_per_sec"]
-    eff = (thr_hi / thr_lo) / (hi / lo)
-    s = (
-        f"### local[{lo}] -> local[{hi}] ({rlo['obie_docs']} docs)\n\n"
-        "| parallelism | obie_extract (s) | triples | triples/sec | steal% during best rep |\n"
-        "|---|---|---|---|---|\n"
-        f"| local[{lo}] | {rlo['queries']['obie_extract']} | {rlo['obie_triples']} | {thr_lo} | {rlo.get('steal_pct')} |\n"
-        f"| local[{hi}] | {rhi['queries']['obie_extract']} | {rhi['obie_triples']} | {thr_hi} | {rhi.get('steal_pct')} |\n\n"
-        f"- **Extraction scaling efficiency (thr{hi}/thr{lo})/{hi / lo:g} = {eff:.3f}**\n"
-        f"- all runs local[{lo}] extract (s): "
-        f"{[r['queries']['obie_extract'] for r in runs[lo]]} "
-        f"(steal% {[r.get('steal_pct') for r in runs[lo]]})\n"
-        f"- all runs local[{hi}] extract (s): "
-        f"{[r['queries']['obie_extract'] for r in runs[hi]]} "
-        f"(steal% {[r.get('steal_pct') for r in runs[hi]]})\n\n"
-        f"raw best local[{lo}]: `{json.dumps(rlo)}`\n\n"
-        f"raw best local[{hi}]: `{json.dumps(rhi)}`\n\n"
-    )
-    return s
-
-
-def scaling() -> None:
-    """Run the identical extraction job at parallelism N and 4N; write
-    BENCH/BASELINE.md with throughput at both levels + scaling efficiency
-    (the BASELINE.json north-rule evidence).
-
-    The measured job is the fused extraction kernel over a saturated
-    corpus (OBIE_SCALING_DOCS docs): a map-only plan whose wall time is
-    dominated by per-document compute, the regime a 1000-executor job runs
-    in. The headline micro-suite is skipped in these subprocesses
-    (OBIE_SCALING_ONLY=1) — 0.2-6 s queries measure fixed per-action
-    latency, not scaling.
-
-    Pair choice: the north rule's N vs 4N cluster sizes are substituted by
-    local-mode parallelism levels (round brief). That substitution is only
-    meaningful while BOTH levels fit inside the VM's actually deliverable
-    compute — tools/machine_control.py measures that ceiling with a pure
-    multiprocessing control (no Spark) and this sandbox saturates well
-    below its 32 advertised vCPUs. The primary pair is therefore taken
-    from OBIE_SCALING_PAIRS (default "2,8;8,32": 2->8 is the in-capacity
-    N->4N evidence, 8->32 is reported alongside with the machine ceiling
-    as context)."""
-    pairs = [
-        tuple(int(x) for x in pair.split(","))
-        for pair in os.environ.get("OBIE_SCALING_PAIRS", "2,8;8,32").split(";")
-    ]
-    # per-pair corpus sizes (";"-separated, matched to OBIE_SCALING_PAIRS;
-    # a single value applies to every pair): the corpus must SATURATE the
-    # higher parallelism of each pair or the ratio measures fixed per-job
-    # latency, not scaling — a production job runs for hours, so the
-    # saturated regime is the honest one. Default doubles the corpus for
-    # the 8->32 pair to hold per-core work comparable across pairs.
-    docs_cfg = os.environ.get("OBIE_SCALING_DOCS", "48000;96000").split(";")
-    if len(docs_cfg) == 1:
-        docs_cfg = docs_cfg * len(pairs)
-    assert len(docs_cfg) == len(pairs), "OBIE_SCALING_DOCS must match OBIE_SCALING_PAIRS"
-    repeats = int(os.environ.get("OBIE_SCALING_REPEATS", "3"))
-    warm_runs = os.environ.get("OBIE_WARM_RUNS", "1")
-
-    weights_path = os.path.abspath("BENCH/scaling_weights.json")
-    os.makedirs("BENCH", exist_ok=True)
-    _train_once(weights_path, max(max(p) for p in pairs))
-
-    control = None
-    if os.path.exists("BENCH/machine_control.json"):
-        with open("BENCH/machine_control.json") as f:
-            control = json.load(f)
-
-    results = [
-        _scaling_pair(lo, hi, pair_docs, repeats, warm_runs, weights_path)
-        for (lo, hi), pair_docs in zip(pairs, docs_cfg)
-    ]
-    scaling_docs = " / ".join(dict.fromkeys(docs_cfg))
-
-    with open("BENCH/BASELINE.md", "w") as f:
-        f.write(
-            "# BENCH — two-parallelism scaling evidence\n\n"
-            "Identical job + input at parallelism N vs 4N (sandbox proxy for N vs 4N\n"
-            "executors per BASELINE.json north_rule and the round brief). Throughput =\n"
-            "triples/sec of the fused extraction kernel (operators/fused.py: the whole\n"
-            "per-document inference — mentions -> candidates -> features -> score ->\n"
-            "fill -> triples — as ONE map stage with the model and fuzzy link map\n"
-            f"broadcast; zero corpus-sized shuffles) over {scaling_docs} generated\n"
-            "source-code docs. The model is trained once on a fixed 60-doc sample\n"
-            "(constant-cost planning step — the model does not grow with the corpus).\n"
-            "The fused kernel emits EXACTLY the triples of the relational predict()\n"
-            "plan (tests/test_fused_parity.py, both fixture domains).\n\n"
-            "## Machine-capability control (why the primary pair is 2 -> 8)\n\n"
-            "The VM advertises 32 vCPUs but is hypervisor-shared: a pure-python\n"
-            "multiprocessing control (tools/machine_control.py — identical\n"
-            "pandas/regex/numpy tasks, NO Spark) shows usable compute saturating\n"
-            "far below 32 workers, so any 8 -> 32 comparison measures host\n"
-            "oversubscription, not the job under test. The N=2 -> 4N=8 pair runs\n"
-            "entirely inside the machine's deliverable parallelism and is the\n"
-            "honest cluster-size proxy; 8 -> 32 is reported alongside with the\n"
-            "hardware ceiling as context.\n\n"
-        )
-        if control:
-            f.write("| workers | best tasks/s (of %d) |\n|---|---|\n" % control["repeats"])
-            for w in control["levels"]:
-                f.write(f"| {w} | {control['best_tasks_per_s'][str(w)] if str(w) in control['best_tasks_per_s'] else control['best_tasks_per_s'][w]} |\n")
-            bt = {int(k): v for k, v in control["best_tasks_per_s"].items()}
-            ws = sorted(bt)
-            for lo, hi in zip(ws, ws[1:]):
-                ratio = bt[hi] / bt[lo]
-                f.write(
-                    f"- machine capability {lo}->{hi}: {ratio:.2f}x "
-                    f"(efficiency {ratio / (hi / lo):.3f})\n"
-                )
-            f.write("\n")
-        f.write("## Job scaling\n\n")
-        for pr in results:
-            f.write(_pair_section(pr))
-        prim = results[0]
-        rlo, rhi = prim["best"][prim["lo"]], prim["best"][prim["hi"]]
-        eff = (rhi["obie_triples_per_sec"] / rlo["obie_triples_per_sec"]) / (
-            prim["hi"] / prim["lo"]
-        )
-        interp = ""
-        if control:
-            bt = {int(k): v for k, v in control["best_tasks_per_s"].items()}
-            for pr in results:
-                lo, hi = pr["lo"], pr["hi"]
-                if lo in bt and hi in bt:
-                    mach = (bt[hi] / bt[lo]) / (hi / lo)
-                    rlo3, rhi3 = pr["best"][lo], pr["best"][hi]
-                    job = (
-                        rhi3["obie_triples_per_sec"] / rlo3["obie_triples_per_sec"]
-                    ) / (hi / lo)
-                    interp += (
-                        f"- {lo}->{hi}: job efficiency {job:.3f} vs machine "
-                        f"capability {mach:.3f} — the job "
-                        + ("MATCHES or exceeds" if job >= mach - 0.05 else "trails")
-                        + " what the host itself can deliver at that worker count;\n"
-                        "  any shortfall from 1.0 is hypervisor/memory-bandwidth "
-                        "ceiling, not parallel overhead in the plan.\n"
-                    )
-        if interp:
-            f.write("## Interpretation\n\n" + interp + "\n")
-        f.write(
-            f"**Primary N->4N evidence: local[{prim['lo']}] -> local[{prim['hi']}], "
-            f"extraction scaling efficiency = {eff:.3f}** (gate: >= 0.8)\n\n"
-            "Method: the model is trained once and shared by every rep (a\n"
-            "constant-cost planning artifact); each rep does ONE untimed warm-up\n"
-            "extraction pass then times the steady-state pass (JIT-compiled,\n"
-            "settled heap, reused Python workers — the state a long-running\n"
-            "production job lives in); the heap is pre-sized (-Xms=-Xmx) so\n"
-            "first-allocation growth is not billed to the timed pass; the\n"
-            "partition count is sized to the data (~750 docs each), identical at\n"
-            "both parallelisms. Configs interleaved and repeated (min-of-"
-            f"{repeats} per config) with hypervisor steal recorded around every\n"
-            "rep, because the VM shows bursty steal with 3-4x wall-time swings;\n"
-            "the minimum estimates each config's uncontended capability.\n"
-            "Caveats: (1) one JVM shares memory bandwidth across threads — a\n"
-            "real 4x executor group scales I/O and memory bandwidth too; (2)\n"
-            "driver heap is 16g, capped at 75% of the machine's memory: a 48g heap\n"
-            "regressed local[32] extraction 4-5x via G1 page churn (kernel time), see session.py.\n"
-        )
-        for pr in results:
-            rlo2, rhi2 = pr["best"][pr["lo"]], pr["best"][pr["hi"]]
-            e2 = (rhi2["obie_triples_per_sec"] / rlo2["obie_triples_per_sec"]) / (
-                pr["hi"] / pr["lo"]
-            )
-            print(f"scaling efficiency local[{pr['lo']}]->local[{pr['hi']}]: {e2:.3f}")
-
-
 if __name__ == "__main__":
-    if "--scaling" in sys.argv:
-        scaling()
-    else:
-        main()
+    main()

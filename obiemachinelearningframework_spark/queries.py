@@ -118,9 +118,9 @@ def invalidate(sf_dir: str) -> None:
 
 def clear_session_caches() -> None:
     """Unpersist + drop EVERY session-scoped intermediate (all sf_dirs).
-    The single implementation behind bench.py's cold pass and
-    tools/scaling_pipeline.py's between-pass clear (code-review r5: three
-    hand-rolled copies of this loop had to track the cache-key shape)."""
+    The single implementation behind bench.py's cold pass (code-review r5:
+    three hand-rolled copies of this loop had to track the cache-key
+    shape)."""
     for df in list(_SHARED.values()):
         try:
             df.unpersist()
@@ -2536,9 +2536,8 @@ PAGERANK_ITERS = 3
 
 def pagerank_kernel(edge_df, iters: int = PAGERANK_ITERS,
                     damping: float = PAGERANK_D):
-    """Iterative-join PageRank over an arbitrary (subj, obj) edge table —
-    shared by the registry query and the scaling-evidence workload
-    (tools/scaling_pipeline.py). Each iteration is one co-partitioned
+    """Iterative-join PageRank over an arbitrary (subj, obj) edge table,
+    behind the registry query. Each iteration is one co-partitioned
     join (edges ⋈ ranks on the source key) plus one keyed aggregation;
     the node count rides as a 1-row broadcast; dangling mass is not
     redistributed (documented simplification, identical on both

@@ -34,8 +34,9 @@ source table) is checked inside ``extract`` and written to the metrics log.
 from __future__ import annotations
 
 import argparse
+import time
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
 def _ontology(domain: str):
@@ -47,6 +48,19 @@ def _ontology(domain: str):
 
     return {"soccer": soccer_ontology, "disease": disease_ontology,
             "code": code_ontology}[domain]()
+
+
+def content_check(source: DataFrame) -> tuple[str | None, int]:
+    """(digest, sha256 mismatches) of ``source`` in one aggregation.
+
+    The digest, an order-insensitive sum over per-row sha256(content), is
+    recomputed by a resumed run and compared with the committed manifest's,
+    so a source swapped or corrupted between attempts is detected. The
+    mismatches are rows whose stored ``sha256`` differs; 0 without one."""
+    h = F.sha2("content", 256)
+    bad = F.count(F.when(h != F.col("sha256"), 1)) if "sha256" in source.columns else F.lit(0)
+    digest = F.sum(F.conv(F.substring(h, 1, 15), 16, 10).cast("decimal(38,0)")).cast("string")
+    return tuple(source.agg(digest, bad).collect()[0])
 
 
 def main() -> None:
@@ -67,6 +81,7 @@ def main() -> None:
 
     # master/executors come from spark-submit flags — never hardcoded here
     spark = SparkSession.builder.appName(f"obie-{args.mode}").getOrCreate()
+    t0 = time.perf_counter()
 
     from obiemachinelearningframework_spark.operators.triples import write_triples
     from obiemachinelearningframework_spark.plans.pipeline import OBIEPipeline
@@ -88,19 +103,6 @@ def main() -> None:
         assert args.prev_source and args.prev_triples, (
             "--prev-source and --prev-triples required for incremental")
 
-    def corpus_digest():
-        """Order-insensitive digest of per-row sha256(content) over the
-        source as THIS run reads it — the per-row invariant's carrier: a
-        resumed/retried run recomputes it and compares against the value
-        the committed manifest recorded, so a swapped or corrupted source
-        between attempts is detected (an in-plan self-comparison would be
-        a tautology: both sides would derive from the same bytes)."""
-        return (
-            source.select(F.conv(F.substring(F.sha2("content", 256), 1, 15), 16, 10)
-                          .cast("decimal(38,0)").alias("h"))
-            .agg(F.sum("h").cast("string")).collect()[0][0]
-        )
-
     ck = None
     if args.checkpoint_dir:
         from obiemachinelearningframework_spark.sources.catalog import Checkpointer
@@ -121,7 +123,7 @@ def main() -> None:
                 "committed triples manifest has no content_digest — refusing "
                 "to resume without source-integrity verification"
             )
-            live = corpus_digest()
+            live = content_check(source)[0]
             assert committed == live, (
                 f"source content changed since the committed run "
                 f"(digest {live} != committed {committed})"
@@ -177,13 +179,8 @@ def main() -> None:
         triples = pipe.predict_fused(inst, carry_cols=("repo", "lang"))
         write_triples(triples, args.output)
 
-    # per-row invariant vs the source table (BASELINE.json): if the source
-    # stores a sha256 column, every row must match the recomputed hash; the
-    # corpus digest is additionally recorded so resumes re-verify it
-    bad = 0
-    if "sha256" in source.columns:
-        bad = source.filter(F.sha2(F.col("content"), 256) != F.col("sha256")).count()
-    digest = corpus_digest()
+    # the per-row content invariant vs the source table (BASELINE.json)
+    digest, bad = content_check(source)
     n_triples = spark.read.parquet(args.output).count()
     print(f"extracted: {n_triples} triples -> {args.output}; sha256 mismatches: {bad}")
     # the invariant must gate the COMMIT: asserting after ck.write would
@@ -197,7 +194,8 @@ def main() -> None:
         ck.write("triples", spark.read.parquet(args.output),
                  meta={"mode": args.mode, "content_digest": digest})
         ck.log_metrics("triples", {"n_triples": n_triples, "sha256_mismatches": bad,
-                                   "content_digest": digest, **extra_metrics})
+                                   "content_digest": digest, **extra_metrics,
+                                   "wall_s": round(time.perf_counter() - t0, 3)})
 
 
 if __name__ == "__main__":

@@ -20,3 +20,21 @@ def test_unregistered_query_name_is_refused_before_spark(monkeypatch):
     with pytest.raises(SystemExit) as exc:
         check_oracles.main("/nonexistent", ["kg_pagerank", "kg_pagernak"])
     assert exc.value.code == "not registry queries: kg_pagernak"
+
+
+def test_spark_starts_at_the_machines_width(monkeypatch):
+    """No fixed master or shuffle width: get_spark's defaults take both
+    from session.local_cpus()."""
+    calls = []
+
+    class Started(Exception):
+        pass
+
+    def record(*args, **kwargs):
+        calls.append((args, kwargs))
+        raise Started
+
+    monkeypatch.setattr(session, "get_spark", record)
+    with pytest.raises(Started):
+        check_oracles.main("/nonexistent", ["kg_pagerank"])
+    assert calls == [(("oracle_check",), {})]

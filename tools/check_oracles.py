@@ -46,7 +46,7 @@ def main(sf_dir: str, only: list[str] | None = None):
     if unknown:
         raise SystemExit(f"not registry queries: {', '.join(unknown)}")
 
-    spark = get_spark("oracle_check", master="local[8]", shuffle_partitions=8)
+    spark = get_spark("oracle_check")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
